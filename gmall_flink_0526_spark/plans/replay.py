@@ -19,18 +19,6 @@ from .catalog import register, register_setup
 from .logs import SESSION_GAP_MIN
 
 
-def _state_buckets(spark: SparkSession) -> int:
-    """Bucket count for the bucketed stateful operators (guide §4: the
-    applyInPandasWithState wall is the per-GROUP Python call, so the
-    state key is hashed into a bounded set of buckets and the per-key
-    logic vectorizes inside each bucket). Scale-adaptive, not a local
-    constant: a few groups per state partition balances the worker
-    pool here and on a cluster; the count is independent of key-space
-    size, which is what keeps the group-call count bounded at 100 TB
-    (state per bucket stays O(active keys / buckets))."""
-    return 4 * min(32, spark.sparkContext.defaultParallelism)
-
-
 @register(
     "uv_first_visit_stream",
     oracle="""
@@ -55,7 +43,7 @@ def uv_first_visit_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_tables(spark, sf_dir, "events")["events"]
     out = replay_stateful(
         spark, events,
-        lambda s: stateful.daily_dedup(s, buckets=_state_buckets(spark)),
+        stateful.daily_dedup,
         order_by=["ts", "event_id"],
         cache_key=f"events:{sf_dir}", n_files=2,
     )
@@ -85,7 +73,7 @@ def is_new_fix_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_tables(spark, sf_dir, "events")["events"]
     out = replay_stateful(
         spark, events,
-        lambda s: stateful.fix_is_new(s, buckets=_state_buckets(spark)),
+        stateful.fix_is_new,
         order_by=["ts", "event_id"],
         cache_key=f"events:{sf_dir}", n_files=2,
     )
@@ -134,9 +122,7 @@ def bounce_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = replay_stateful(
         spark,
         events,
-        lambda src: stateful.sessionize_bounce(
-            src, gap_minutes=SESSION_GAP_MIN, buckets=_state_buckets(spark)
-        ),
+        lambda src: stateful.sessionize_bounce(src, gap_minutes=SESSION_GAP_MIN),
         order_by=["ts", "event_id"],
         cache_key=f"events:{sf_dir}", n_files=2,
     )
@@ -1350,7 +1336,7 @@ def asof_click_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = replay_stateful(
         spark, ev,
-        lambda s: stateful.temporal_join(s, buckets=_state_buckets(spark)),
+        stateful.temporal_join,
         order_by=["ts", "event_id"],
         cache_key=f"events_tspan:{sf_dir}", file_of=file_of, n_files=2,
     )
@@ -1399,7 +1385,7 @@ def _register_funnel_attribution_stream():
         file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
         out = replay_stateful(
             spark, ev,
-            lambda s: stateful.funnel_chain(s, buckets=_state_buckets(spark)),
+            stateful.funnel_chain,
             order_by=["ts", "event_id"],
             cache_key=f"events_funnel_tspan:{sf_dir}", file_of=file_of, n_files=2,
         )
@@ -1450,8 +1436,7 @@ def _register_funnel_attribution_4_stream():
             spark,
             ev,
             lambda df: stateful.funnel_chain_n(
-                df, stages=("signup", "view", "click"), probe_type="purchase",
-                buckets=_state_buckets(spark),
+                df, stages=("signup", "view", "click"), probe_type="purchase"
             ),
             order_by=["ts", "event_id"],
             cache_key=f"events_funnel4_tspan:{sf_dir}",
@@ -1509,7 +1494,7 @@ def _register_funnel_attribution_windowed_stream():
         file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
         out = replay_stateful(
             spark, ev,
-            lambda s: stateful.funnel_chain(s, buckets=_state_buckets(spark)),
+            stateful.funnel_chain,
             order_by=["ts", "event_id"],
             cache_key=f"events_funnel_tspan:{sf_dir}", file_of=file_of, n_files=2,
         ).select(
@@ -1810,7 +1795,7 @@ def _register_behavior_pagerank_stream():
         events = load_tables(spark, sf_dir, "events")["events"]
         pairs = replay_stateful(
             spark, events,
-            lambda s: stateful.transition_pairs(s, buckets=_state_buckets(spark)),
+            stateful.transition_pairs,
             order_by=["ts", "event_id"],
             cache_key=f"events:{sf_dir}", n_files=2,
         )
@@ -2154,22 +2139,12 @@ def _register_dim_enrichment_asof_stream():
         ts_type = ev.schema["ts"].dataType.simpleString()
         cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
         file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        # this replay carries the catalog's largest stateful key space
-        # (every customer): grouping the stateful operator by raw key
-        # pays one Python group call PER ACTIVE KEY per batch (~15k at
-        # sf0.1 — the applyInPandasWithState wall, guide §4). Bucket
-        # the state key by hash instead: group calls drop to `buckets`
-        # per batch and the per-key carry runs as a vectorized
-        # segmented ffill inside each bucket (semantics identical —
-        # value-pinned against the per-key form and the shared oracle).
-        # Buckets scale with the worker pool, not a local constant:
-        # enough groups to spread over every state partition with
-        # slack for balance, independent of key-space size.
+        # the catalog's largest stateful key space (every customer):
+        # spread the replay's state tasks over the worker pool
         fanout = min(32, spark.sparkContext.defaultParallelism)
         op = lambda s: stateful.temporal_enrich(
             s, key="custkey", ts="ts", id_col="o_orderkey",
             val_cols=("acctbal_asof", "version_from"),
-            buckets=4 * fanout,
         )
         out = replay_stateful(
             spark, ev, op, order_by=["ts", "o_orderkey"],

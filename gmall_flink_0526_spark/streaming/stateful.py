@@ -1,6 +1,6 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
-These are the three operators whose semantics Spark's built-ins cannot
+These are the operators whose semantics Spark's built-ins cannot
 express exactly (SURVEY §2.4/§2.9): keyed ValueState with TTL and
 CEP-style timeout emission. Each mirrors a reference operator:
 
@@ -15,31 +15,59 @@ CEP-style timeout emission. Each mirrors a reference operator:
                              times out; a 1-event session is a bounce.
 - :func:`temporal_join` / :func:`temporal_enrich` — the Flink
                              temporal-table (as-of) join as keyed state.
+- :func:`transition_pairs` — consecutive-event pairs per key.
 - :func:`funnel_chain`     — multi-step CEP pattern state (the
                              flink-cep chain beyond the bounce job):
                              view->click->purchase last-touch links.
 
 Semantics note: like the reference's ProcessFunctions, these process
-records in *arrival order* (within a micro-batch we sort by (ts, id)).
-Replayed in timestamp order they converge exactly to the batch twins in
-``operators/filters.py`` / ``plans/logs.py`` — tests/test_streaming.py
-asserts that.
+records in *arrival order* (within a micro-batch we sort by (key, ts,
+id)). Replayed in timestamp order they converge exactly to the batch
+twins in ``operators/filters.py`` / ``plans/logs.py`` —
+tests/test_streaming.py asserts that.
 
-State scale: state lives per key in the state store (RocksDB/HDFS on a
-cluster), partitioned by ``groupBy(key)`` — the same hash partitioning
-as Flink's keyBy. TTLs bound state to ~#active keys.
+State layout: every operator runs through :func:`_keyed_state`. The
+state-store key is not the operator key but its bucket,
+``pmod(xxhash64(key), STATE_BUCKETS)``, so a micro-batch pays at most
+``STATE_BUCKETS`` Python group calls however many keys it touches (the
+applyInPandasWithState wall is the per-group call: state fetch, Arrow
+round trip, pandas fixed cost). A bucket's state row holds its keys'
+per-key state as parallel arrays — ``ks`` (the keys), one array per
+declared state field, and for TTL operators ``um`` (each key's
+last-update processing time). Each operator is only a vectorized step
+over one bucket's batch rows plus the stored entries of the keys that
+batch touches; TTL eviction, timeout emission and type coercion are
+the helper's. TTLs still bound state to ~#active keys, per key.
+
+``STATE_BUCKETS`` is part of the checkpointed layout: a key's state is
+found by its bucket, so a query restarted under another bucket count
+would look in buckets that do not hold its keys and silently lose
+state. It is therefore one module constant, never derived from the
+session (parallelism, shuffle partitions). Changing it, or anything in
+the layout above, invalidates existing checkpoints.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 DAY_MS = 24 * 3600 * 1000
+
+#: Hash buckets of every keyed-state operator — part of the
+#: checkpointed state layout (see the module docstring). 32 matches
+#: the session's default shuffle partitions and the largest replay
+#: fan-out.
+STATE_BUCKETS = 32
+
+_INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
 
 
 def _seed_safe_ids(pdf: pd.DataFrame, id_col: str) -> pd.DataFrame:
@@ -65,134 +93,203 @@ def _exact_ids(ids: pd.Series):
     return ids.to_numpy()
 
 
+def _seed_cast(seed: pd.DataFrame, pdf: pd.DataFrame, cols) -> pd.DataFrame:
+    """Cast seed columns to the batch dtypes where they fit. A None
+    read back from state (a tombstone, a NULL carry) cannot cast into
+    a non-nullable numpy dtype (int64/bool): leave that column and let
+    concat upcast it — the carries are positional, so the dtype only
+    matters for output serialization, which ``.where()`` handles."""
+    for c in cols:
+        try:
+            seed[c] = seed[c].astype(pdf[c].dtype)
+        except (TypeError, ValueError):
+            pass
+    return seed
+
+
+def _py(v):
+    """numpy scalar -> Python scalar (state keys must be plain)."""
+    return v.item() if hasattr(v, "item") else v
+
+
+def _coerce(t: T.DataType, v):
+    """Coerce a pandas value to the DECLARED state type: a nullable
+    batch column arrives float64-upcast, and a float written into a
+    long state slot is silently dropped by the state serializer."""
+    if isinstance(t, T.ArrayType):
+        return [_coerce(t.elementType, x) for x in v]
+    if v is None or pd.isna(v):
+        return None
+    if isinstance(t, _INTEGRAL_T):
+        return int(v)
+    if isinstance(t, (T.DoubleType, T.FloatType)):
+        return float(v)
+    return _py(v)
+
+
+def _entries(key: str, names: list, ks: list, rows: list) -> pd.DataFrame:
+    """Stored entries as a frame: one row per key, one column per
+    state field. A column holding a None stays object dtype so an
+    integral value is never float-upcast here."""
+    cols = {key: pd.Series(ks, dtype=object if not ks else None)}
+    for i, name in enumerate(names):
+        vals = [r[i] for r in rows]
+        cols[name] = pd.Series(vals, dtype=object if None in vals else None)
+    return pd.DataFrame(cols)
+
+
+def _bucket_fn(key: str, fields: T.StructType, step, ttl_ms=None, expire=None):
+    """The per-group function of :func:`_keyed_state`, for one bucket.
+
+    ``step(pdf, seen) -> (out, upd)`` gets the bucket's batch rows and
+    ``seen``, the stored entries (columns ``key`` + ``fields``) of
+    only the keys present in the batch; it returns its output frame
+    and ``upd``, the same columns for each key whose state it sets
+    (``None`` for either when there is nothing). Stored keys the batch
+    does not touch are neither handed to the step nor rewritten.
+
+    With ``ttl_ms`` the TTL is per KEY, checked on every call of the
+    bucket: a stored key absent from the batch and idle (no update)
+    for >= ``ttl_ms`` of processing time is evicted, and ``expire``
+    (if given) turns the evicted entries into output rows. The bucket's
+    timeout is re-armed at its earliest remaining expiry, so a cold key
+    leaves on time even when a hot key keeps the bucket busy. A key in
+    the batch is handed to the step with its state, like Spark's
+    per-key timeout, which never fires for a group that has data."""
+    names = fields.names
+    types = [f.dataType for f in fields]
+
+    def fn(_bucket, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        stored, stamp = {}, {}
+        if state.exists:
+            st = state.get
+            stored = dict(zip(st[0], zip(*st[1 : 1 + len(names)])))
+            if ttl_ms:
+                stamp = dict(zip(st[0], st[-1]))
+        frames = [p for p in pdfs if len(p)]
+        pdf = pd.concat(frames, ignore_index=True) if frames else None
+        batch_keys = pdf[key].unique() if pdf is not None else ()
+        outs, changed = [], False
+        if ttl_ms:
+            now = state.getCurrentProcessingTimeMs()
+            live = set(batch_keys)
+            gone = [k for k, u in stamp.items() if now - u >= ttl_ms and k not in live]
+            if gone:
+                rows = [stored.pop(k) for k in gone]
+                for k in gone:
+                    del stamp[k]
+                changed = True
+                if expire is not None:
+                    outs.append(expire(_entries(key, names, gone, rows)))
+        if pdf is not None:
+            ks = [k for k in batch_keys if k in stored]
+            out, upd = step(pdf, _entries(key, names, ks, [stored[k] for k in ks]))
+            outs.append(out)
+            if upd is not None and len(upd):
+                changed = True
+                for row in upd.itertuples(index=False, name=None):
+                    k = _py(row[0])
+                    stored[k] = tuple(_coerce(t, v) for t, v in zip(types, row[1:]))
+                    if ttl_ms:
+                        stamp[k] = now
+        if not stored:
+            if state.exists:
+                state.remove()
+        else:
+            if changed:
+                packed = [list(stored), *(list(c) for c in zip(*stored.values()))]
+                if ttl_ms:
+                    packed.append([stamp[k] for k in stored])
+                state.update(tuple(packed))
+            if ttl_ms:
+                state.setTimeoutDuration(max(1, min(stamp.values()) + ttl_ms - now))
+        for o in outs:
+            if o is not None and len(o):
+                yield o
+
+    return fn
+
+
+def _keyed_state(
+    events: DataFrame,
+    out_t,
+    key: str,
+    fields: T.StructType,
+    step,
+    ttl_ms: int | None = None,
+    expire=None,
+) -> DataFrame:
+    """Run ``step`` as keyed state over ``STATE_BUCKETS`` hash buckets
+    of ``key`` — the one ``applyInPandasWithState`` call site. The
+    state row of a bucket is the parallel-array layout of the module
+    docstring; ``fields`` declares the per-key state (names and
+    types), ``out_t`` the output schema. ``ttl_ms`` turns on per-key
+    processing-time TTL; see :func:`_bucket_fn` for the step contract.
+    Keys cannot straddle buckets (the bucket is a pure function of the
+    key), so per-key ordering and carries are unaffected."""
+    key_t = events.schema[key].dataType
+    state_t = T.StructType(
+        [T.StructField("ks", T.ArrayType(key_t, False))]
+        + [T.StructField(f"s{i}", T.ArrayType(f.dataType, True)) for i, f in enumerate(fields)]
+        + ([T.StructField("um", T.ArrayType(T.LongType(), False))] if ttl_ms else [])
+    )
+    return (
+        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(STATE_BUCKETS)))
+        .groupBy("_bkt")
+        .applyInPandasWithState(
+            _bucket_fn(key, fields, step, ttl_ms, expire),
+            outputStructType=out_t,
+            stateStructType=state_t,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if ttl_ms
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
+    )
+
+
 def daily_dedup(
     events: DataFrame,
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """First visit per key per calendar day (UV dedup), exact keyed-state
-    form. Output: (user_id, dt, first_event_id)."""
-    if buckets:
-        return _daily_dedup_bucketed(events, key, ts, id_col, buckets)
+    form. State per key: the last visit day, with the reference's 1-day
+    TTL (StateTtlConfig) per key. Output: (user_id, dt, first_event_id,
+    ts)."""
 
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            # TTL expiry == the reference's 1-day StateTtlConfig
-            state.remove()
-            return
-        (last_date,) = state.get if state.exists else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        # vectorized over the whole group (no per-row Python): sorted
-        # by time, days are non-decreasing, so "first row of each new
-        # day" == ~duplicated, minus the state's already-seen day.
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        d = pdf[ts].dt.strftime("%Y-%m-%d")
-        keep = ~d.duplicated()
-        if last_date is not None:
-            keep &= d != last_date
-        state.update((d.iloc[-1],))
-        state.setTimeoutDuration(DAY_MS)
-        out = pdf.loc[keep]
-        if len(out):
-            yield pd.DataFrame(
-                {
-                    key: key_tuple[0],
-                    "dt": d.loc[keep].to_numpy(),
-                    "first_event_id": out[id_col].to_numpy(),
-                    "ts": out[ts].to_numpy(),
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} long, dt string, first_event_id long, ts timestamp",
-        stateStructType="last_date string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _daily_dedup_bucketed(
-    events: DataFrame, key: str, ts: str, id_col: str, buckets: int
-) -> DataFrame:
-    """Bucketed form of :func:`daily_dedup` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_date, last-update processing-time
-    ms) arrays. The per-key 1-day TTL is preserved at key granularity:
-    the bucket re-arms a 1-day processing-time timeout on every update,
-    and when it fires, only keys idle >= 1 day are dropped (the rest
-    re-arm) — so a hot key in the same bucket never extends a cold
-    key's state lifetime. Per-key dedup logic is the vectorized
-    original run per key segment; output rows are identical."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            # evict only the keys whose OWN ttl lapsed; keep the rest
-            if st is not None:
-                keep = [
-                    (k, d, u)
-                    for k, d, u in zip(st[0], st[1], st[2])
-                    if now - u < DAY_MS
-                ]
-                if keep:
-                    ks, ds, us = zip(*keep)
-                    state.update((list(ks), list(ds), list(us)))
-                    state.setTimeoutDuration(DAY_MS)
-                    return
-            state.remove()
-            return
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        upd_ms = dict(zip(st[0], st[2])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
+    def step(pdf, seen):
+        pdf = pdf.sort_values([key, ts, id_col])
         d = pdf[ts].dt.strftime("%Y-%m-%d")
         karr = pdf[key]
         # first row of each (key, day) pair, minus the key's stored day
         keep = ~pd.DataFrame({"k": karr, "d": d}).duplicated().to_numpy()
-        if stored:
-            keep &= (d != karr.map(stored)).to_numpy()
-        # state: last (max) day per key this batch replaces the stored
-        # day; untouched stored keys persist with their old stamps
-        last_rows = ~karr.duplicated(keep="last")
-        for k, dv in zip(karr[last_rows], d[last_rows]):
-            k = int(k) if hasattr(k, "item") else k
-            stored[k] = dv
-            upd_ms[k] = now
-        state.update((list(stored.keys()), [stored[k] for k in stored], [upd_ms[k] for k in stored]))
-        state.setTimeoutDuration(DAY_MS)
+        keep &= (d != karr.map(seen.set_index(key)["last_date"])).to_numpy()
+        # the key's last (max) batch day replaces its stored day
+        last = ~karr.duplicated(keep="last")
         out = pdf.loc[keep]
-        if len(out):
-            yield pd.DataFrame(
+        return (
+            pd.DataFrame(
                 {
                     key: out[key].to_numpy(),
                     "dt": d.loc[keep].to_numpy(),
                     "first_event_id": out[id_col].to_numpy(),
                     "ts": out[ts].to_numpy(),
                 }
-            )
-
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} long, dt string, first_event_id long, ts timestamp",
-            stateStructType=f"ks array<{key_t}>, ld array<string>, um array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            ),
+            pd.DataFrame({key: karr[last], "last_date": d[last]}),
         )
+
+    return _keyed_state(
+        events,
+        f"{key} long, dt string, first_event_id long, ts timestamp",
+        key,
+        T.StructType([T.StructField("last_date", T.StringType())]),
+        step,
+        ttl_ms=DAY_MS,
     )
 
 
@@ -201,99 +298,39 @@ def fix_is_new(
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """is_new flag correction: '1' only on the key's first-seen day.
-    Output: (event_id, user_id, is_new)."""
-    if buckets:
-        return _fix_is_new_bucketed(events, key, ts, id_col, buckets)
+    State per key: the first-seen day, kept forever (the reference's
+    BaseLogApp declares no TTL, unlike UniqueVisitApp). Per key the
+    first-seen day is the stored day if present, else the key's first
+    batch day. Output: (event_id, user_id, is_new)."""
 
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (first_date,) = state.get if state.exists else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        d = pdf[ts].dt.strftime("%Y-%m-%d")
-        if first_date is None:
-            first_date = d.iloc[0]
-        state.update((first_date,))
-        yield pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                key: key_tuple[0],
-                "is_new": (d == first_date).map({True: "1", False: "0"}).to_numpy(),
-            }
-        )
-
-    # NoTimeout: the reference keeps this ValueState forever (BaseLogApp
-    # declares no TTL, unlike UniqueVisitApp) — first-seen must persist.
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{id_col} long, {key} long, is_new string",
-        stateStructType="first_date string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _fix_is_new_bucketed(
-    events: DataFrame, key: str, ts: str, id_col: str, buckets: int
-) -> DataFrame:
-    """Bucketed form of :func:`fix_is_new` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick): state
-    per bucket is the parallel (keys, first_date) arrays; the per-key
-    first-seen resolves as stored-date-if-present else the key's first
-    batch day (rows sorted by key, ts, id), all vectorized via a map
-    + segmented head. State retains stored keys untouched by the
-    batch. Output rows identical to the per-key form."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
+    def step(pdf, seen):
+        pdf = pdf.sort_values([key, ts, id_col])
         d = pdf[ts].dt.strftime("%Y-%m-%d")
         karr = pdf[key]
         # the key's first batch day = d at each key segment's head,
-        # broadcast down the segment; stored first-seen wins where set
+        # broadcast down the segment; the stored first-seen wins
         batch_first = d.groupby(karr.to_numpy()).transform("first")
-        first = karr.map(stored).fillna(batch_first) if stored else batch_first
-        # state = stored keys (unchanged) + this batch's new keys
-        new_keys = karr[~karr.duplicated()]
-        upd = dict(stored)
-        fd_head = first[~karr.duplicated()]
-        for k, fd in zip(new_keys, fd_head):
-            if k not in upd:
-                upd[int(k) if hasattr(k, "item") else k] = fd
-        state.update((list(upd.keys()), list(upd.values())))
-        yield pd.DataFrame(
-            {
-                id_col: pdf[id_col].to_numpy(),
-                key: karr.to_numpy(),
-                "is_new": (d == first).map({True: "1", False: "0"}).to_numpy(),
-            }
+        first = karr.map(seen.set_index(key)["first_date"]).fillna(batch_first)
+        new = ~karr.duplicated() & ~karr.isin(seen[key])
+        return (
+            pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy(),
+                    key: karr.to_numpy(),
+                    "is_new": (d == first).map({True: "1", False: "0"}).to_numpy(),
+                }
+            ),
+            pd.DataFrame({key: karr[new], "first_date": first[new]}),
         )
 
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{id_col} long, {key} long, is_new string",
-            stateStructType=f"ks array<{key_t}>, fd array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_state(
+        events,
+        f"{id_col} long, {key} long, is_new string",
+        key,
+        T.StructType([T.StructField("first_date", T.StringType())]),
+        step,
     )
 
 
@@ -303,197 +340,74 @@ def sessionize_bounce(
     key: str = "user_id",
     ts: str = "ts",
     id_col: str = "event_id",
-    buckets: int | None = None,
 ) -> DataFrame:
     """CEP bounce detection: a session closes when the next event
-    arrives after the gap, or when state times out (the CEP ``within``
-    timeout branch). Emits one row per *closed* session:
+    arrives after the gap, or when the key's state times out (the CEP
+    ``within`` timeout branch: no event for ``gap_minutes`` of
+    processing time). Emits one row per *closed* session:
     (user_id, n_events, is_bounce, end_ts = last event of the session).
-    Open sessions stay in state.
+    Open sessions stay in state as (last event us, event count) per key.
+
+    Sessionization is vectorized over the bucket: a per-key shift for
+    the gap test, session ids from a global entry-cumsum made key-local
+    by pairing with the key; a carried open session continues into its
+    key's first batch session or closes at its own end.
     """
-    if buckets:
-        return _sessionize_bounce_bucketed(
-            events, gap_minutes, key, ts, id_col, buckets
+    gap_us = gap_minutes * 60 * 1_000_000
+
+    def closed(f):
+        # (key, last_us, n) entries -> output rows
+        return pd.DataFrame(
+            {
+                key: f[key].to_numpy(),
+                "n_events": f["n"].to_numpy(),
+                "is_bounce": (f["n"] == 1).to_numpy(),
+                "end_ts": pd.to_datetime(f["last_us"].astype("int64"), unit="us").to_numpy(),
+            }
         )
-    gap_us = gap_minutes * 60 * 1_000_000
 
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            if state.exists:
-                last_us, n = state.get
-                yield pd.DataFrame(
-                    [(key_tuple[0], n, n == 1, pd.Timestamp(last_us * 1000))],
-                    columns=[key, "n_events", "is_bounce", "end_ts"],
-                )
-            state.remove()
-            return
-        last_us, n = state.get if state.exists else (None, 0)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        # vectorized sessionization with state carry-in: entry flags
-        # from time gaps, cumsum -> session ids, per-session (count,
-        # last ts); every session but the batch's last is closed.
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        t_us = pdf[ts].astype("int64") // 1000  # pandas ns -> us
-        prev = t_us.shift(1)
-        if last_us is not None:
-            prev.iloc[0] = last_us
-        entry = prev.isna() | ((t_us - prev) > gap_us)
-        sid = entry.cumsum()
-        agg = t_us.groupby(sid.to_numpy()).agg(["count", "max"])
-        closed = []
-        if last_us is not None:
-            if entry.iloc[0]:
-                # the carried-over open session closes at its own end
-                closed.append((key_tuple[0], n, n == 1, pd.Timestamp(last_us * 1000)))
-            else:
-                # first rows continue the open session
-                agg.iloc[0, agg.columns.get_loc("count")] += n
-        for cnt, end in agg.iloc[:-1].itertuples(index=False):
-            closed.append((key_tuple[0], int(cnt), cnt == 1, pd.Timestamp(int(end) * 1000)))
-        state.update((int(t_us.iloc[-1]), int(agg["count"].iloc[-1])))
-        state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        if closed:
-            yield pd.DataFrame(closed, columns=[key, "n_events", "is_bounce", "end_ts"])
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
-        stateStructType="last_us long, n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _sessionize_bounce_bucketed(
-    events: DataFrame,
-    gap_minutes: int,
-    key: str,
-    ts: str,
-    id_col: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`sessionize_bounce` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_us, n, last-update ms) arrays.
-    Sessionization runs segmented per key (groupby shift for the gap
-    test, global entry-cumsum session ids made key-local by pairing
-    with the key); carried open sessions continue or close exactly as
-    the single-key form decides per key. The CEP ``within`` timeout
-    stays per-KEY: on a bucket timeout only keys idle >= gap emit
-    their open session and leave; the rest re-arm."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    gap_ms = gap_minutes * 60 * 1000
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        now = state.getCurrentProcessingTimeMs()
-        if state.hasTimedOut:
-            if st is not None:
-                expired, kept = [], []
-                for k, lu, n, um in zip(st[0], st[1], st[2], st[3]):
-                    (expired if now - um >= gap_ms else kept).append((k, lu, n, um))
-                if expired:
-                    yield pd.DataFrame(
-                        [
-                            (k, n, n == 1, pd.Timestamp(lu * 1000))
-                            for k, lu, n, um in expired
-                        ],
-                        columns=[key, "n_events", "is_bounce", "end_ts"],
-                    )
-                if kept:
-                    ks, lus, ns, ums = zip(*kept)
-                    state.update((list(ks), list(lus), list(ns), list(ums)))
-                    state.setTimeoutDuration(gap_ms)
-                    return
-            state.remove()
-            return
-        last_map = dict(zip(st[0], st[1])) if st is not None else {}
-        n_map = dict(zip(st[0], st[2])) if st is not None else {}
-        upd_ms = dict(zip(st[0], st[3])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
+    def step(pdf, seen):
+        pdf = pdf.sort_values([key, ts, id_col])
         karr = pdf[key]
+        carried = seen.set_index(key)
         t_us = pdf[ts].astype("int64") // 1000
-        prev = t_us.groupby(karr.to_numpy()).shift(1)
         head = ~karr.duplicated()
-        if last_map:
-            prev = prev.where(~head, karr.map(last_map))
+        prev = t_us.groupby(karr.to_numpy()).shift(1).where(~head, karr.map(carried["last_us"]))
         entry = prev.isna() | ((t_us - prev) > gap_us)
         # (key, global entry-cumsum) is unique per session AND ordered;
         # a key-head continuation row reuses the previous key's final
         # sid, which the key pairing keeps distinct
-        sid = entry.cumsum()
         sess = (
-            pd.DataFrame({"k": karr.to_numpy(), "s": sid.to_numpy(), "t": t_us.to_numpy()})
-            .groupby(["k", "s"], sort=False)
-            .agg(cnt=("t", "size"), end=("t", "max"))
+            pd.DataFrame({key: karr.to_numpy(), "s": entry.cumsum().to_numpy(), "t": t_us.to_numpy()})
+            .groupby([key, "s"], sort=False)
+            .agg(n=("t", "size"), last_us=("t", "max"))
             .reset_index()
         )
-        first_of_key = ~sess["k"].duplicated()
-        last_of_key = ~sess["k"].duplicated(keep="last")
-        closed_rows = []
-        if last_map:
-            in_state = karr.isin(last_map.keys())
-            cont_keys = set(karr[head & ~entry & in_state])
-            open_close_keys = karr[head & entry & in_state]
-            # carried open session continues into the key's first batch
-            # session...
-            if cont_keys:
-                add = (
-                    sess["k"].map(lambda k: n_map.get(k, 0) if k in cont_keys else 0)
-                ).where(first_of_key, 0)
-                sess["cnt"] = sess["cnt"] + add
-            # ...or closes at its own end when the first batch row
-            # opens a new session
-            for k in open_close_keys:
-                k = int(k) if hasattr(k, "item") else k
-                n = n_map[k]
-                closed_rows.append((k, n, n == 1, pd.Timestamp(last_map[k] * 1000)))
+        # a carried open session continues into the key's first batch
+        # session, or closes at its own end when that row opens anew
+        in_state = karr.isin(carried.index)
+        cont = karr[head & ~entry & in_state]
+        first_of_key = ~sess[key].duplicated()
+        add = sess[key].map(carried["n"]).where(first_of_key & sess[key].isin(cont), 0)
+        sess["n"] = (sess["n"] + add).astype("int64")
         # every batch session but each key's last is closed
-        done = sess.loc[~last_of_key]
-        closed_rows.extend(
-            (k, int(c), c == 1, pd.Timestamp(int(e) * 1000))
-            for k, c, e in zip(done["k"], done["cnt"], done["end"])
-        )
-        tail = sess.loc[last_of_key]
-        for k, c, e in zip(tail["k"], tail["cnt"], tail["end"]):
-            k = int(k) if hasattr(k, "item") else k
-            last_map[k] = int(e)
-            n_map[k] = int(c)
-            upd_ms[k] = now
-        state.update(
-            (
-                list(last_map.keys()),
-                [last_map[k] for k in last_map],
-                [n_map[k] for k in last_map],
-                [upd_ms[k] for k in last_map],
-            )
-        )
-        state.setTimeoutDuration(gap_ms)
-        if closed_rows:
-            yield pd.DataFrame(
-                closed_rows, columns=[key, "n_events", "is_bounce", "end_ts"]
-            )
+        last_of_key = ~sess[key].duplicated(keep="last")
+        ends = sess.loc[~last_of_key, [key, "last_us", "n"]]
+        closing = karr[head & entry & in_state]
+        if len(closing):
+            ends = pd.concat([carried.loc[closing].reset_index(), ends], ignore_index=True)
+        return closed(ends), sess.loc[last_of_key, [key, "last_us", "n"]]
 
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
-            stateStructType=f"ks array<{key_t}>, lu array<long>, n array<long>, um array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
+    return _keyed_state(
+        events,
+        f"{key} long, n_events long, is_bounce boolean, end_ts timestamp",
+        key,
+        T.StructType(
+            [T.StructField("last_us", T.LongType()), T.StructField("n", T.LongType())]
+        ),
+        step,
+        ttl_ms=gap_minutes * 60 * 1000,
+        expire=closed,
     )
 
 
@@ -506,7 +420,6 @@ def temporal_enrich(
     build_type: str = "dimchange",
     probe_type: str = "order",
     val_cols: tuple = ("value",),
-    buckets: int | None = None,
 ) -> DataFrame:
     """Multi-value stream-stream backward as-of enrichment — the
     streaming face of point-in-time dimension lookup (the Flink
@@ -524,9 +437,10 @@ def temporal_enrich(
 
     Same mechanics as temporal_join otherwise: one keyed stateful
     operator over a single stream carrying both sides; within a batch
-    rows sort by (ts, build-before-probe) so a same-ts build is
-    visible to its probe, and the carried state re-enters each
-    batch's sort as a synthetic build row. Equal-(key, ts) builds are
+    rows sort by (key, ts, build-before-probe) so a same-ts build is
+    visible to its probe, and each touched key's carried version
+    re-enters the batch's sort as a synthetic build row; the carry is
+    a positional ffill segmented per key. Equal-(key, ts) builds are
     OUT OF CONTRACT (pre-aggregate upstream, as in asof_join) — value
     columns deliberately do not tie-break the sort, since a
     tombstone's NULL has no order against a typed value. State per
@@ -540,213 +454,27 @@ def temporal_enrich(
     tombstone in the same batch — surrogate keys and counters are fine;
     carry 64-bit hashes as strings or split words if exactness matters.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
     val_cols = list(val_cols)
     clash = set(val_cols) & {id_col, key, "probe_ts", "build_ts"}
     if clash:
         raise ValueError(f"temporal_enrich: value columns collide: {sorted(clash)}")
-    if buckets:
-        return _temporal_enrich_bucketed(
-            events, key, ts, id_col, type_col, build_type, probe_type,
-            val_cols, buckets,
-        )
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
-        if not len(pdf):
-            return
-        if st is not None:
-            seed = pd.DataFrame(
-                [
-                    {
-                        ts: pd.Timestamp(st[0], unit="us"),
-                        type_col: build_type,
-                        **{c: st[1 + i] for i, c in enumerate(val_cols)},
-                    }
-                ]
-            )
-            for c in (ts, *val_cols):
-                # a None tombstone value cannot cast into a
-                # non-nullable numpy dtype (int64/bool): leave it and
-                # let concat upcast the column; the carry is
-                # positional, so the dtype only matters for output
-                # serialization, which .where() handles below
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        is_b = pdf[type_col] == build_type
-        # sort by (ts, build-before-probe) ONLY: equal-(key, ts) builds
-        # are out of contract (pre-aggregate upstream), so value
-        # columns never need to tie-break — and must not, since a
-        # tombstone's None does not compare against a typed value
-        pdf = (
-            pdf.assign(_side=(~is_b).astype(int))
-            .sort_values([ts, "_side"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        is_b = (pdf[type_col] == build_type).to_numpy()
-        # positional carry: each row sees the INDEX of the latest build
-        # at or before it — NULL build values ride along faithfully
-        bpos = pd.Series(np.where(is_b, np.arange(len(pdf)), np.nan)).ffill()
-        if is_b.any():
-            lb = pdf.iloc[int(bpos.iloc[-1])]
-            vals = []
-            for c in val_cols:
-                v = lb[c]
-                if pd.isna(v):
-                    vals.append(None)
-                # coerce to the DECLARED state type: a nullable batch
-                # arrives float64-upcast, and a float written into a
-                # long state field is silently dropped by the state
-                # serializer (the r10 review's int-tombstone finding)
-                elif isinstance(field[c], _INTEGRAL_T):
-                    vals.append(int(v))
-                elif isinstance(field[c], (T.DoubleType, T.FloatType)):
-                    vals.append(float(v))
-                else:
-                    vals.append(v.item() if hasattr(v, "item") else v)
-            state.update((int(lb[ts].value // 1000), *vals))
-        probes = ~is_b
-        if not probes.any():
-            return
-        pp = bpos[probes]
-        matched = pp.notna().to_numpy()
-        idx = pp.fillna(0).astype(int).to_numpy()
-        out = {
-            id_col: _exact_ids(pdf.loc[probes, id_col]),
-            key: key_tuple[0],
-            "probe_ts": pdf.loc[probes, ts].to_numpy(),
-        }
-        m = pd.Series(matched)
-        # .where (not masked assignment): upcasts an int64 carry to
-        # float64-with-NaN instead of raising on None — Arrow maps the
-        # integral floats back to the declared long output type
-        out["build_ts"] = pdf[ts].iloc[idx].reset_index(drop=True).where(m).to_numpy()
-        for c in val_cols:
-            out[c] = pdf[c].iloc[idx].reset_index(drop=True).where(m).to_numpy()
-        yield pd.DataFrame(out)
-
-    field = {
-        c: events.schema[c].dataType for c in (key, ts, id_col, *val_cols)
-    }
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
-            T.StructField("build_ts", field[ts]),
-            *[T.StructField(c, field[c]) for c in val_cols],
-        ]
-    )
-    state_t = T.StructType(
-        [T.StructField("bts", T.LongType())]
-        + [T.StructField(f"bv{i}", field[c]) for i, c in enumerate(val_cols)]
-    )
-    # NoTimeout: the latest dim version must persist for the stream's
-    # lifetime (fix_is_new's unbounded ValueState class)
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _temporal_enrich_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    build_type: str,
-    probe_type: str,
-    val_cols: list,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`temporal_enrich`: the stateful operator
-    groups by ``pmod(xxhash64(key), buckets)`` instead of the raw key,
-    so each micro-batch pays ``buckets`` Python group calls instead of
-    one per ACTIVE KEY — the applyInPandasWithState wall is the
-    per-group call (state fetch + Arrow round-trip + pandas fixed
-    cost), not the rows. State per bucket holds the SAME one-version-
-    per-key payload as parallel arrays (keys, build ts, one array per
-    value column); each call re-seeds every stored key as a synthetic
-    build row (exactly the single-key carry rule), sorts the bucket by
-    (key, ts, build-before-probe) and runs the positional carry as a
-    SEGMENTED ffill per key — all vectorized, no per-key Python loop.
-    Row-level semantics are identical to the per-key form (pinned by
-    tests against it and by the shared oracle); only the state-store
-    key granularity changes. Keys cannot straddle buckets (the bucket
-    is a pure function of the key), so per-key ordering and carry are
-    unaffected.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     field = {c: events.schema[c].dataType for c in (key, ts, id_col, *val_cols)}
 
-    def _st_val(c, v):
-        # coerce to the DECLARED state element type (the r10
-        # int-tombstone rule): floats written into long array slots
-        # are silently dropped by the state serializer
-        if pd.isna(v):
-            return None
-        if isinstance(field[c], _INTEGRAL_T):
-            return int(v)
-        if isinstance(field[c], (T.DoubleType, T.FloatType)):
-            return float(v)
-        return v.item() if hasattr(v, "item") else v
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
+    def step(pdf, seen):
         pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
         if not len(pdf):
-            return
-        if st is not None and len(st[0]):
-            # one synthetic build row per stored key — the carried
-            # versions re-enter the sort exactly like the single-key
-            # form's seed
-            seed = pd.DataFrame(
-                {
-                    key: list(st[0]),
-                    ts: pd.to_datetime(pd.Series(list(st[1]), dtype="int64"), unit="us"),
-                    type_col: build_type,
-                    **{
-                        c: pd.Series(list(st[2 + i]), dtype="object")
-                        for i, c in enumerate(val_cols)
-                    },
-                }
-            )
-            for c in (key, ts, *val_cols):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
+            return None, None
+        if len(seen):
+            # the touched keys' carried versions re-enter the sort as
+            # synthetic build rows
+            seed = seen.assign(
+                **{ts: pd.to_datetime(seen["build_ts"].astype("int64"), unit="us"), type_col: build_type}
+            ).drop(columns="build_ts")
+            seed = _seed_cast(seed, pdf, (key, ts, *val_cols))
             pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
         is_b = pdf[type_col] == build_type
-        # (key, ts, build-before-probe): the single-key sort applied
-        # per key segment; mergesort keeps the seed-first tie order
+        # (key, ts, build-before-probe) ONLY; mergesort keeps the
+        # seed-first tie order
         pdf = (
             pdf.assign(_side=(~is_b).astype(int))
             .sort_values([key, ts, "_side"], kind="mergesort")
@@ -754,38 +482,37 @@ def _temporal_enrich_bucketed(
         )
         is_b = (pdf[type_col] == build_type).to_numpy()
         # positional carry SEGMENTED by key: each row sees the index of
-        # the latest build at or before it within its own key
+        # the latest build at or before it within its own key — NULL
+        # build values ride along faithfully
         bpos = (
             pd.Series(np.where(is_b, np.arange(len(pdf)), np.nan))
             .groupby(pdf[key].to_numpy())
             .ffill()
         )
-        builds = pdf.loc[is_b]
-        if len(builds):
-            # last build per key (max ts — rows are key/ts sorted);
-            # every stored key seeded a build row, so no key's carried
-            # version can be dropped by the rewrite
-            lastb = builds.groupby(key, sort=True).tail(1)
-            new_keys = [_st_val(key, v) for v in lastb[key]]
-            bts_list = [int(v) for v in lastb[ts].astype("int64") // 1000]
-            vals_lists = [[_st_val(c, v) for v in lastb[c]] for c in val_cols]
-            state.update((new_keys, bts_list, *vals_lists))
+        # last build per key (max ts — rows are key/ts sorted); every
+        # touched stored key seeded a build row, so none is dropped
+        lastb = pdf.loc[is_b].groupby(key, sort=True).tail(1)
+        upd = lastb[[key]].assign(
+            build_ts=lastb[ts].astype("int64") // 1000, **{c: lastb[c] for c in val_cols}
+        )
         probes = ~is_b
         if not probes.any():
-            return
+            return None, upd
         pp = bpos[probes]
-        matched = pp.notna().to_numpy()
+        m = pd.Series(pp.notna().to_numpy())
         idx = pp.fillna(0).astype(int).to_numpy()
         out = {
             id_col: _exact_ids(pdf.loc[probes, id_col]),
             key: pdf.loc[probes, key].to_numpy(),
             "probe_ts": pdf.loc[probes, ts].to_numpy(),
         }
-        m = pd.Series(matched)
+        # .where (not masked assignment): upcasts an int64 carry to
+        # float64-with-NaN instead of raising on None — Arrow maps the
+        # integral floats back to the declared long output type
         out["build_ts"] = pdf[ts].iloc[idx].reset_index(drop=True).where(m).to_numpy()
         for c in val_cols:
             out[c] = pdf[c].iloc[idx].reset_index(drop=True).where(m).to_numpy()
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out), upd
 
     out_t = T.StructType(
         [
@@ -796,27 +523,13 @@ def _temporal_enrich_bucketed(
             *[T.StructField(c, field[c]) for c in val_cols],
         ]
     )
-    state_t = T.StructType(
-        [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField("bts", T.ArrayType(T.LongType(), False)),
-        ]
-        + [
-            T.StructField(f"bv{i}", T.ArrayType(field[c], True))
-            for i, c in enumerate(val_cols)
-        ]
+    # no TTL: the latest dim version persists for the stream's lifetime
+    # (fix_is_new's unbounded ValueState class)
+    fields = T.StructType(
+        [T.StructField("build_ts", T.LongType())]
+        + [T.StructField(c, field[c]) for c in val_cols]
     )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(events, out_t, key, fields, step)
 
 
 def temporal_join(
@@ -828,7 +541,6 @@ def temporal_join(
     build_type: str = "click",
     probe_type: str = "purchase",
     value_col: str = "value",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Stream-stream backward as-of (temporal) join as ONE keyed
     stateful operator — Flink's temporal/as-of join shape, the
@@ -838,18 +550,22 @@ def temporal_join(
     union-then-keyBy idiom): ``build_type`` rows update the per-key
     state (the latest build row at or before any probe); ``probe_type``
     rows emit enriched with that state at their event-time position.
-    Within a micro-batch rows sort by (ts, build-before-probe, value),
-    so a same-timestamp build is visible to its probe (inclusive
-    backward) and simultaneous builds resolve to the max value — the
-    exact tie rule the batch twin's (key, ts)+MAX pre-aggregation
-    defines. The tie rule holds ACROSS micro-batches too: the carried
-    state re-enters every batch as a synthetic build row and competes
-    in the same sort, so an equal-ts build pair split over two batches
-    resolves to the max value — in the carry the probes see AND in the
-    state update, which is thereby a max-merge rather than
-    last-batch-wins. The carry is a vectorized pandas ffill; no
-    per-row Python. State per key is ONE (ts, value) pair forever
-    (the reference's unbounded ValueState class, like fix_is_new).
+    Within a micro-batch rows sort by (key, ts, build-before-probe,
+    value), so a same-timestamp build is visible to its probe
+    (inclusive backward) and simultaneous builds resolve to the max
+    value — the exact tie rule the batch twin's (key, ts)+MAX
+    pre-aggregation defines. The tie rule holds ACROSS micro-batches
+    too: the carried state re-enters every batch that touches its key
+    as a synthetic build row and competes in the same sort, so an
+    equal-ts build pair split over two batches resolves to the max
+    value — in the carry the probes see AND in the state update, which
+    is thereby a max-merge rather than last-batch-wins. The carry is a
+    vectorized per-key ffill of the value (``where(is_b).ffill()``,
+    which deliberately lets a NULL-valued carried build's value fall
+    through to the previous non-NULL build — part of the operator's
+    contract); no per-row Python. State per key is ONE (ts, value)
+    pair forever (the reference's unbounded ValueState class, like
+    fix_is_new).
 
     Output: (id, key, probe_ts, probe_value, build_ts, build_value) —
     LEFT semantics: probes before any build emit NULL build columns.
@@ -860,176 +576,24 @@ def temporal_join(
     Output and state field TYPES are derived from ``events.schema``
     (the asof_join precedent), so a string key or an integer value
     column round-trips instead of silently miscasting; only the state
-    ``bts`` is pinned long (epoch micros).
+    ``build_ts`` is pinned long (epoch micros).
     """
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    if buckets:
-        return _temporal_join_bucketed(
-            events, key, ts, id_col, type_col, build_type, probe_type,
-            value_col, buckets,
-        )
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        bts_us, bval = state.get if state.exists else (None, None)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
-        if not len(pdf):
-            return
-        if bts_us is not None:
-            seed = pd.DataFrame(
-                [
-                    {
-                        ts: pd.Timestamp(bts_us, unit="us"),
-                        type_col: build_type,
-                        value_col: bval,
-                    }
-                ]
-            )
-            for c in (ts, value_col):
-                # a None read back from state (LEFT output permits a
-                # NULL-valued build carry) cannot cast into a
-                # non-nullable numpy dtype — leave it and let concat
-                # upcast, exactly as temporal_enrich's seed does
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        is_b = pdf[type_col] == build_type
-        pdf = pdf.assign(_side=(~is_b).astype(int))
-        pdf = pdf.sort_values([ts, "_side", value_col], kind="mergesort")
-        is_b = pdf[type_col] == build_type
-        carry_ts = pdf[ts].where(is_b).ffill()
-        carry_val = pdf[value_col].where(is_b).ffill()
-        builds = pdf.loc[is_b]
-        if len(builds):
-            last = builds.iloc[-1]
-            v = last[value_col]
-            # coerce to the DECLARED state type before update: a batch
-            # with any NULL in the value column arrives float64-upcast,
-            # and a float written into a long state field is silently
-            # dropped by the state serializer (temporal_enrich's
-            # r10 int-tombstone finding, applied here too)
-            if pd.isna(v):
-                v = None
-            elif isinstance(field[value_col], _INTEGRAL_T):
-                v = int(v)
-            elif isinstance(field[value_col], (T.DoubleType, T.FloatType)):
-                v = float(v)
-            else:
-                v = v.item() if hasattr(v, "item") else v
-            state.update((int(last[ts].value // 1000), v))
-        probes = ~is_b
-        if probes.any():
-            yield pd.DataFrame(
-                {
-                    id_col: _exact_ids(pdf.loc[probes, id_col]),
-                    key: key_tuple[0],
-                    "probe_ts": pdf.loc[probes, ts].to_numpy(),
-                    "probe_value": pdf.loc[probes, value_col].to_numpy(),
-                    "build_ts": carry_ts.loc[probes].to_numpy(),
-                    "build_value": carry_val.loc[probes].to_numpy(),
-                }
-            )
-
-    # field types follow the input schema; only bts is pinned (micros)
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col, value_col)}
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
-            T.StructField("probe_value", field[value_col]),
-            T.StructField("build_ts", field[ts]),
-            T.StructField("build_value", field[value_col]),
-        ]
-    )
-    state_t = T.StructType(
-        [T.StructField("bts", T.LongType()), T.StructField("bval", field[value_col])]
-    )
-    # NoTimeout: the latest dimension/build version must persist for
-    # the stream's lifetime, exactly like fix_is_new's first-seen state
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _temporal_join_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    build_type: str,
-    probe_type: str,
-    value_col: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`temporal_join` — the
-    :func:`_temporal_enrich_bucketed` group-call-count trick applied to
-    the single-value as-of join. The per-key carry is the SAME
-    value-level ffill as the per-key form (``where(is_b).ffill()``,
-    which deliberately lets a NULL-valued carried build's value fall
-    through to the previous non-NULL build — that quirk is part of the
-    operator's documented contract), run segmented per key with a
-    groupby ffill. Sort adds the value tie-break within (key, ts,
-    side), so simultaneous builds still resolve to the max value, and
-    the per-key state update is the max-merge the single-key form
-    does. Row-level output is identical; only the state-store key
-    granularity changes.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     field = {c: events.schema[c].dataType for c in (key, ts, id_col, value_col)}
 
-    def _st_val(c, v):
-        if pd.isna(v):
-            return None
-        if isinstance(field[c], _INTEGRAL_T):
-            return int(v)
-        if isinstance(field[c], (T.DoubleType, T.FloatType)):
-            return float(v)
-        return v.item() if hasattr(v, "item") else v
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
+    def step(pdf, seen):
         pdf = pdf[pdf[type_col].isin([build_type, probe_type])]
         if not len(pdf):
-            return
-        if st is not None and len(st[0]):
+            return None, None
+        if len(seen):
             seed = pd.DataFrame(
                 {
-                    key: list(st[0]),
-                    ts: pd.to_datetime(pd.Series(list(st[1]), dtype="int64"), unit="us"),
+                    key: seen[key],
+                    ts: pd.to_datetime(seen["build_ts"].astype("int64"), unit="us"),
                     type_col: build_type,
-                    value_col: pd.Series(list(st[2]), dtype="object"),
+                    value_col: seen["build_value"],
                 }
             )
-            for c in (key, ts, value_col):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
+            seed = _seed_cast(seed, pdf, (key, ts, value_col))
             pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
         is_b = pdf[type_col] == build_type
         pdf = (
@@ -1041,17 +605,19 @@ def _temporal_join_bucketed(
         karr = pdf[key].to_numpy()
         carry_ts = pdf[ts].where(is_b).groupby(karr).ffill()
         carry_val = pdf[value_col].where(is_b).groupby(karr).ffill()
-        builds = pdf.loc[is_b]
-        if len(builds):
-            lastb = builds.groupby(key, sort=True).tail(1)
-            new_keys = [_st_val(key, v) for v in lastb[key]]
-            bts_list = [int(v) for v in lastb[ts].astype("int64") // 1000]
-            vals_list = [_st_val(value_col, v) for v in lastb[value_col]]
-            state.update((new_keys, bts_list, vals_list))
-        probes = ~is_b
-        if probes.any():
-            pr = probes.to_numpy()
-            yield pd.DataFrame(
+        lastb = pdf.loc[is_b].groupby(key, sort=True).tail(1)
+        upd = pd.DataFrame(
+            {
+                key: lastb[key],
+                "build_ts": lastb[ts].astype("int64") // 1000,
+                "build_value": lastb[value_col],
+            }
+        )
+        pr = (~is_b).to_numpy()
+        if not pr.any():
+            return None, upd
+        return (
+            pd.DataFrame(
                 {
                     id_col: _exact_ids(pdf.loc[pr, id_col]),
                     key: pdf.loc[pr, key].to_numpy(),
@@ -1060,7 +626,9 @@ def _temporal_join_bucketed(
                     "build_ts": carry_ts.loc[pr].to_numpy(),
                     "build_value": carry_val.loc[pr].to_numpy(),
                 }
-            )
+            ),
+            upd,
+        )
 
     out_t = T.StructType(
         [
@@ -1072,24 +640,15 @@ def _temporal_join_bucketed(
             T.StructField("build_value", field[value_col]),
         ]
     )
-    state_t = T.StructType(
+    # no TTL: the latest dimension/build version must persist for the
+    # stream's lifetime, exactly like fix_is_new's first-seen state
+    fields = T.StructType(
         [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField("bts", T.ArrayType(T.LongType(), False)),
-            T.StructField("bval", T.ArrayType(field[value_col], True)),
+            T.StructField("build_ts", T.LongType()),
+            T.StructField("build_value", field[value_col]),
         ]
     )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    return _keyed_state(events, out_t, key, fields, step)
 
 
 def transition_pairs(
@@ -1098,137 +657,53 @@ def transition_pairs(
     ts: str = "ts",
     id_col: str = "event_id",
     type_col: str = "event_type",
-    buckets: int | None = None,
 ) -> DataFrame:
     """Per-key consecutive-event transition extraction, exact
     keyed-state form — the streaming twin of the batch LAG window
     behind ``behavior_pagerank``'s edge aggregation. State = the key's
-    LAST event type plus the implicit had-any-event flag
-    (``state.exists``), O(1) per key forever; each micro-batch sorts
-    its group rows by (ts, id), shifts the type column down one
-    (vectorized), and fills the first row's predecessor from the
-    carry — so a transition whose two events STRADDLE a micro-batch
-    boundary is emitted exactly once, by the batch that sees the
-    second event. A batch-local lead()/lag() would silently drop
-    exactly those pairs: the cross-batch hazard that makes this an
-    operator, not a window.
+    LAST event type, O(1) per key forever; membership in the stored
+    keys IS the had-any-event flag, so a stored NULL type stays
+    distinct from no-state. Each micro-batch sorts its rows by (key,
+    ts, id), shifts the type column down one per key (vectorized), and
+    fills each key's first row's predecessor from the carry — so a
+    transition whose two events STRADDLE a micro-batch boundary is
+    emitted exactly once, by the batch that sees the second event. A
+    batch-local lead()/lag() would silently drop exactly those pairs:
+    the cross-batch hazard that makes this an operator, not a window.
 
     NULL rule mirrors the batch window EXACTLY: a pair is emitted iff
     the row has a predecessor AND its own type (dst) is non-NULL —
     the batch's lead() filter keeps (NULL -> x) with a NULL src and
-    drops (x -> NULL); a NULL carried type is stored DISTINCTLY from
-    no-state (state.exists disambiguates), so the pair after a NULL
-    event still emits with a NULL src across a batch boundary. The
-    key's output type derives from the input schema (the
-    temporal_join standard), so non-long keys work unchanged.
-    Output: (key, src, dst), one row per transition; replayed in
-    event-time order it converges to the batch lag window exactly
-    (cross-batch + NULL edge test-pinned)."""
-    key_t = {f.name: f.dataType.simpleString() for f in events.schema.fields}[key]
-    if buckets:
-        return _transition_pairs_bucketed(
-            events, key, ts, id_col, type_col, key_t, buckets
-        )
+    drops (x -> NULL); a NULL carried type is stored distinctly from
+    no-state, so the pair after a NULL event still emits with a NULL
+    src across a batch boundary. The key's output type derives from
+    the input schema (the temporal_join standard), so non-long keys
+    work unchanged. Output: (key, src, dst), one row per transition;
+    replayed in event-time order it converges to the batch lag window
+    exactly (cross-batch + NULL edge test-pinned)."""
+    key_t = events.schema[key].dataType.simpleString()
 
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        had_prev = state.exists
-        (last_type,) = state.get if had_prev else (None,)
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([ts, id_col])
-        dst = pdf[type_col].reset_index(drop=True)
-        src = dst.shift(1)
-        if had_prev and last_type is not None:
-            src.iloc[0] = last_type
-        has_prev = pd.Series(True, index=dst.index)
-        if not had_prev:
-            has_prev.iloc[0] = False
-        last = dst.iloc[-1]
-        state.update((None if pd.isna(last) else last,))
-        mask = has_prev & dst.notna()
-        if mask.any():
-            yield pd.DataFrame(
-                {
-                    key: key_tuple[0],
-                    "src": src[mask].to_numpy(),
-                    "dst": dst[mask].to_numpy(),
-                }
-            )
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key} {key_t}, src string, dst string",
-        stateStructType="last_type string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _transition_pairs_bucketed(
-    events: DataFrame,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    key_t: str,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`transition_pairs` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: parallel (keys, last_type) arrays — membership in the
-    keys array IS the had-any-event flag, so a stored NULL type stays
-    distinct from no-state exactly as ``state.exists`` did. The shift
-    runs segmented per key; each key-segment head fills its
-    predecessor from the stored type. Output rows identical."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        stored = dict(zip(st[0], st[1])) if st is not None else {}
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames).sort_values([key, ts, id_col])
-        karr = pdf[key]
-        dst = pdf[type_col]
-        src = dst.groupby(karr.to_numpy()).shift(1)
+    def step(pdf, seen):
+        pdf = pdf.sort_values([key, ts, id_col])
+        karr, dst = pdf[key], pdf[type_col]
+        carried = seen.set_index(key)["last_type"]
         head = ~karr.duplicated()
-        if stored:
-            # key-segment heads read their stored predecessor (NaN for
-            # a stored-NULL type — emitted as a NULL src, like the
-            # single-key form)
-            src = src.where(~head, karr.map(stored))
-            has_prev = ~head | karr.isin(stored.keys())
-        else:
-            has_prev = ~head
-        last_rows = ~karr.duplicated(keep="last")
-        for k, t in zip(karr[last_rows], dst[last_rows]):
-            k = int(k) if hasattr(k, "item") else k
-            stored[k] = None if pd.isna(t) else t
-        state.update((list(stored.keys()), list(stored.values())))
-        mask = (has_prev & dst.notna()).to_numpy()
-        if mask.any():
-            yield pd.DataFrame(
-                {
-                    key: karr.to_numpy()[mask],
-                    "src": src.to_numpy()[mask],
-                    "dst": dst.to_numpy()[mask],
-                }
-            )
-
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=f"{key} {key_t}, src string, dst string",
-            stateStructType=f"ks array<{key_t}>, lt array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        # key-segment heads read their stored predecessor (NaN for a
+        # stored-NULL type — emitted as a NULL src)
+        src = dst.groupby(karr.to_numpy()).shift(1).where(~head, karr.map(carried))
+        mask = (~head | karr.isin(carried.index)) & dst.notna()
+        last = ~karr.duplicated(keep="last")
+        return (
+            pd.DataFrame({key: karr[mask], "src": src[mask], "dst": dst[mask]}),
+            pd.DataFrame({key: karr[last], "last_type": dst[last]}),
         )
+
+    return _keyed_state(
+        events,
+        f"{key} {key_t}, src string, dst string",
+        key,
+        T.StructType([T.StructField("last_type", T.StringType())]),
+        step,
     )
 
 
@@ -1240,7 +715,6 @@ def funnel_chain_n(
     ts: str = "ts",
     id_col: str = "event_id",
     type_col: str = "event_type",
-    buckets: int | None = None,
 ) -> DataFrame:
     """N-stage CEP funnel attribution as ONE keyed stateful operator —
     the generalized pattern chain the reference's flink-cep dependency
@@ -1255,25 +729,21 @@ def funnel_chain_n(
     recomputed from later state).
 
     State per key is M = len(stages) chain vectors, level i holding
-    (own ts, i inherited link timestamps) — M(M+1)/2 scalars total,
-    O(1) forever for a fixed funnel. Within a batch rows sort by
-    (ts, stage order) so a same-instant earlier stage is visible to
-    its successor — the inclusive-backward rule of the chained ASOF
-    oracle; carries are vectorized positional ffills per level (the
-    temporal_enrich idiom), so the per-batch cost is M gathers, not a
-    python loop over rows. Seeded state re-entries keep their STORED
-    vectors. Equal-(key, ts) duplicates within one stage are out of
-    contract — ``distinct()`` the stage streams upstream, as the
-    batch twin does.
+    (own ts, i inherited link timestamps) — M(M+1)/2 scalars total in
+    one flat array, O(1) forever for a fixed funnel. Within a batch
+    rows sort by (key, ts, stage order) so a same-instant earlier
+    stage is visible to its successor — the inclusive-backward rule of
+    the chained ASOF oracle; carries are vectorized positional ffills
+    per level segmented by key (the temporal_enrich idiom), so the
+    per-batch cost is M gathers, not a python loop over rows. Each
+    touched key re-enters the batch as one seed row per non-empty
+    level carrying its STORED vector. Equal-(key, ts) duplicates
+    within one stage are out of contract — ``distinct()`` the stage
+    streams upstream, as the batch twin does.
 
     Output: (id, key, probe_ts, {stages[-1]}_ts, ..., {stages[0]}_ts)
     with LEFT semantics — a NULL suffix where the chain ran out.
     """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
     stages = tuple(stages)
     M = len(stages)
     if M < 1:
@@ -1288,184 +758,22 @@ def funnel_chain_n(
     # the vector [ts_i, link_{i-1}, ..., link_0], all epoch micros
     offs = [i * (i + 1) // 2 for i in range(M + 1)]
     total = offs[M]
-    if buckets:
-        return _funnel_chain_n_bucketed(
-            events, stages, probe_type, key, ts, id_col, type_col,
-            _ORD, offs, total, buckets,
-        )
 
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        flat = (
-            list(state.get[0])
-            if state.exists and state.get[0] is not None
-            else [None] * total
-        )
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
+    def step(pdf, seen):
         pdf = pdf[pdf[type_col].isin(list(_ORD))]
         if not len(pdf):
-            return
+            return None, None
+        flat_by = dict(zip(seen[key], seen["flat"]))
         # _seed: which level this row re-enters from state (-1 = fresh)
         pdf = pdf.assign(_seed=-1)
-        seeds = []
-        for li, stg in enumerate(stages):
-            sts = flat[offs[li]]
-            if sts is not None:
-                seeds.append(
-                    {ts: pd.Timestamp(sts, unit="us"), type_col: stg, "_seed": li}
-                )
-        if seeds:
-            seed = pd.DataFrame(seeds)
-            try:
-                seed[ts] = seed[ts].astype(pdf[ts].dtype)
-            except (TypeError, ValueError):
-                pass
-            pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
-        pdf = (
-            pdf.assign(_ord=pdf[type_col].map(_ORD))
-            .sort_values([ts, "_ord"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        n = len(pdf)
-        types_arr = pdf[type_col].to_numpy()
-        seed_lvl = pdf["_seed"].to_numpy()
-        ts_us = pdf[ts].astype("int64").to_numpy() // 1000  # ns -> us
-        carry = None  # after level li: (n, li+1) vector of last li-row <= pos
-        new_flat = list(flat)
-        for li, stg in enumerate(stages):
-            is_s = types_arr == stg
-            vec = np.full((n, li + 1), np.nan)
-            vec[is_s, 0] = ts_us[is_s]
-            if li > 0:
-                # fresh rows bind the previous level's carry AT their
-                # position — the link resolves at arrival
-                fresh = is_s & (seed_lvl != li)
-                vec[fresh, 1:] = carry[fresh]
-            sr = np.where(is_s & (seed_lvl == li))[0]
-            if len(sr):
-                stored = flat[offs[li] : offs[li + 1]]
-                vec[sr[0]] = [np.nan if v is None else float(v) for v in stored]
-            pos = pd.Series(np.where(is_s, np.arange(n), np.nan)).ffill()
-            has = pos.notna().to_numpy()
-            idx = pos.fillna(0).astype(int).to_numpy()
-            carry = vec[idx]
-            carry[~has] = np.nan
-            if is_s.any():
-                last = vec[np.where(is_s)[0][-1]]
-                new_flat[offs[li] : offs[li + 1]] = [
-                    None if np.isnan(v) else int(v) for v in last
-                ]
-        state.update((new_flat,))
-        is_p = types_arr == probe_type
-        if not is_p.any():
-            return
-        out = {
-            id_col: _exact_ids(pdf.loc[is_p, id_col]),
-            key: key_tuple[0],
-            "probe_ts": pdf.loc[is_p, ts].to_numpy(),
-        }
-        pv = carry[is_p]  # columns: [ts_{M-1}, link_{M-2}, ..., link_0]
-        for j in range(M):
-            # explicit µs->ns (see _funnel_chain_n_bucketed: pandas'
-            # to_datetime float path intermittently raised on valid
-            # NaN-mixed arrays in long-lived reused workers; carries
-            # are integral µs < 2^53, so this is the same value)
-            vals = pv[:, j]
-            mask = np.isnan(vals)
-            ns_v = np.where(mask, 0, vals).astype("int64") * 1000
-            arr = ns_v.view("M8[ns]").copy()
-            arr[mask] = np.datetime64("NaT")
-            out[f"{stages[M - 1 - j]}_ts"] = arr
-        yield pd.DataFrame(out)
-
-    field = {c: events.schema[c].dataType for c in (key, ts, id_col)}
-    out_t = T.StructType(
-        [
-            T.StructField(id_col, field[id_col]),
-            T.StructField(key, field[key]),
-            T.StructField("probe_ts", field[ts]),
+        seeds = [
+            {key: k, ts: pd.Timestamp(flat[offs[li]], unit="us"), type_col: stg, "_seed": li}
+            for k, flat in flat_by.items()
+            for li, stg in enumerate(stages)
+            if flat[offs[li]] is not None
         ]
-        + [T.StructField(f"{s}_ts", field[ts]) for s in reversed(stages)]
-    )
-    state_t = T.StructType(
-        [T.StructField("flat", T.ArrayType(T.LongType(), True))]
-    )
-    # NoTimeout: funnel attribution state must persist for the
-    # stream's lifetime, like the other as-of carries
-    return events.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_t,
-        stateStructType=state_t,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _funnel_chain_n_bucketed(
-    events: DataFrame,
-    stages: tuple,
-    probe_type: str,
-    key: str,
-    ts: str,
-    id_col: str,
-    type_col: str,
-    _ORD: dict,
-    offs: list,
-    total: int,
-    buckets: int,
-) -> DataFrame:
-    """Bucketed form of :func:`funnel_chain_n` (the
-    :func:`_temporal_enrich_bucketed` group-call-count trick). State
-    per bucket: a keys array plus one flat chain-vector array per key
-    (array<array<long>>). Every stored key re-enters each batch as one
-    seed row per non-empty level carrying its STORED vector (the
-    single-key rule), the per-level positional carry ffills SEGMENTED
-    by key, and each key's last stage row per level writes that key's
-    new state slice. Output rows identical; only the state-store key
-    granularity changes."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    M = len(stages)
-
-    def fn(key_tuple, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else None
-        flat_by = (
-            {k: list(v) for k, v in zip(st[0], st[1])} if st is not None else {}
-        )
-        frames = [p for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = pd.concat(frames)
-        pdf = pdf[pdf[type_col].isin(list(_ORD))]
-        if not len(pdf):
-            return
-        pdf = pdf.assign(_seed=-1)
-        seeds = []
-        for k, flat in flat_by.items():
-            for li, stg in enumerate(stages):
-                sts = flat[offs[li]]
-                if sts is not None:
-                    seeds.append(
-                        {
-                            key: k,
-                            ts: pd.Timestamp(sts, unit="us"),
-                            type_col: stg,
-                            "_seed": li,
-                        }
-                    )
         if seeds:
-            seed = pd.DataFrame(seeds)
-            for c in (key, ts):
-                try:
-                    seed[c] = seed[c].astype(pdf[c].dtype)
-                except (TypeError, ValueError):
-                    pass
+            seed = _seed_cast(pd.DataFrame(seeds), pdf, (key, ts))
             pdf = pd.concat([seed, _seed_safe_ids(pdf, id_col)], ignore_index=True)
         pdf = (
             pdf.assign(_ord=pdf[type_col].map(_ORD))
@@ -1475,54 +783,41 @@ def _funnel_chain_n_bucketed(
         n = len(pdf)
         types_arr = pdf[type_col].to_numpy()
         seed_lvl = pdf["_seed"].to_numpy()
-        karr = pdf[key]
-        karr_np = karr.to_numpy()
+        karr = pdf[key].to_numpy()
         ts_us = pdf[ts].astype("int64").to_numpy() // 1000  # ns -> us
-        carry = None
-        new_flat_by = {k: list(v) for k, v in flat_by.items()}
+        carry = None  # after level li: (n, li+1) vector of last li-row <= pos
+        new_flat = {k: [np.nan if v is None else v for v in f] for k, f in flat_by.items()}
         for li, stg in enumerate(stages):
             is_s = types_arr == stg
             vec = np.full((n, li + 1), np.nan)
             vec[is_s, 0] = ts_us[is_s]
             if li > 0:
+                # fresh rows bind the previous level's carry AT their
+                # position — the link resolves at arrival
                 fresh = is_s & (seed_lvl != li)
                 vec[fresh, 1:] = carry[fresh]
             for r in np.where(is_s & (seed_lvl == li))[0]:
-                stored = flat_by[karr_np[r]][offs[li] : offs[li + 1]]
-                vec[r] = [np.nan if v is None else float(v) for v in stored]
-            pos = (
-                pd.Series(np.where(is_s, np.arange(n), np.nan))
-                .groupby(karr_np)
-                .ffill()
-            )
+                vec[r] = new_flat[karr[r]][offs[li] : offs[li + 1]]
+            pos = pd.Series(np.where(is_s, np.arange(n), np.nan)).groupby(karr).ffill()
             has = pos.notna().to_numpy()
-            idx = pos.fillna(0).astype(int).to_numpy()
-            carry = vec[idx]
+            carry = vec[pos.fillna(0).astype(int).to_numpy()]
             carry[~has] = np.nan
             if is_s.any():
                 # each key's LAST stage row writes its state slice
                 srows = np.where(is_s)[0]
-                last_per_key = (
-                    pd.Series(srows).groupby(karr_np[srows]).max()
-                )
-                for k, r in last_per_key.items():
-                    kk = int(k) if hasattr(k, "item") else k
-                    nf = new_flat_by.setdefault(kk, [None] * total)
-                    nf[offs[li] : offs[li + 1]] = [
-                        None if np.isnan(v) else int(v) for v in vec[int(r)]
-                    ]
-        state.update(
-            (list(new_flat_by.keys()), [new_flat_by[k] for k in new_flat_by])
-        )
+                for k, r in pd.Series(srows).groupby(karr[srows]).max().items():
+                    nf = new_flat.setdefault(k, [np.nan] * total)
+                    nf[offs[li] : offs[li + 1]] = vec[int(r)]
+        upd = pd.DataFrame({key: list(new_flat), "flat": list(new_flat.values())})
         is_p = types_arr == probe_type
         if not is_p.any():
-            return
+            return None, upd
         out = {
             id_col: _exact_ids(pdf.loc[is_p, id_col]),
-            key: karr_np[is_p],
+            key: karr[is_p],
             "probe_ts": pdf.loc[is_p, ts].to_numpy(),
         }
-        pv = carry[is_p]
+        pv = carry[is_p]  # columns: [ts_{M-1}, link_{M-2}, ..., link_0]
         for j in range(M):
             # explicit µs->ns conversion instead of pd.to_datetime's
             # float path: carries are integral µs in float64 slots
@@ -1538,15 +833,14 @@ def _funnel_chain_n_bucketed(
             if len(good) and (good.min() < -9.2e15 or good.max() > 9.2e15):
                 # out-of-ns-range carry = corrupted state; never mask
                 raise RuntimeError(
-                    f"funnel bucket {key_tuple[0]}: level {j} carry out "
-                    f"of datetime64[ns] range: min={good.min()} "
-                    f"max={good.max()} n={len(vals)}"
+                    f"funnel_chain_n: level {j} carry out of datetime64[ns] "
+                    f"range: min={good.min()} max={good.max()} n={len(vals)}"
                 )
             ns = np.where(mask, 0, vals).astype("int64") * 1000
             arr = ns.view("M8[ns]").copy()
             arr[mask] = np.datetime64("NaT")
             out[f"{stages[M - 1 - j]}_ts"] = arr
-        yield pd.DataFrame(out)
+        return pd.DataFrame(out), upd
 
     field = {c: events.schema[c].dataType for c in (key, ts, id_col)}
     out_t = T.StructType(
@@ -1557,25 +851,10 @@ def _funnel_chain_n_bucketed(
         ]
         + [T.StructField(f"{s}_ts", field[ts]) for s in reversed(stages)]
     )
-    state_t = T.StructType(
-        [
-            T.StructField("ks", T.ArrayType(field[key], False)),
-            T.StructField(
-                "flats", T.ArrayType(T.ArrayType(T.LongType(), True), False)
-            ),
-        ]
-    )
-    return (
-        events.withColumn("_bkt", F.pmod(F.xxhash64(F.col(key)), F.lit(buckets)))
-        .groupBy("_bkt")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_t,
-            stateStructType=state_t,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    # no TTL: funnel attribution state must persist for the stream's
+    # lifetime, like the other as-of carries
+    fields = T.StructType([T.StructField("flat", T.ArrayType(T.LongType(), True))])
+    return _keyed_state(events, out_t, key, fields, step)
 
 
 def funnel_chain(
@@ -1587,7 +866,6 @@ def funnel_chain(
     view_type: str = "view",
     click_type: str = "click",
     probe_type: str = "purchase",
-    buckets: int | None = None,
 ) -> DataFrame:
     """The 3-stage funnel (view -> click -> purchase) as an instance of
     :func:`funnel_chain_n` — kept as the named operator the certified
@@ -1602,5 +880,4 @@ def funnel_chain(
         ts=ts,
         id_col=id_col,
         type_col=type_col,
-        buckets=buckets,
     )

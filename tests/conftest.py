@@ -28,6 +28,29 @@ def sf_dir():
     return SF_SMOKE
 
 
+def same_bucket_keys(spark, n: int) -> list[int]:
+    """``n`` long keys that the keyed-state operators put in ONE state
+    bucket (Spark's own ``pmod(xxhash64(k), STATE_BUCKETS)``), so a
+    test with few keys still exercises per-key logic inside a shared
+    bucket."""
+    from pyspark.sql import functions as F
+
+    from gmall_flink_0526_spark.streaming.stateful import STATE_BUCKETS
+
+    rows = (
+        spark.range(1, 40 * STATE_BUCKETS * n)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(STATE_BUCKETS)).alias("b"))
+        .collect()
+    )
+    by_bucket: dict[int, list[int]] = {}
+    for r in rows:
+        keys = by_bucket.setdefault(r["b"], [])
+        keys.append(r["id"])
+        if len(keys) == n:
+            return keys
+    raise AssertionError(f"no {n} keys share a bucket")
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with the testdata tables registered as views,
     same as the driver does."""

@@ -23,7 +23,7 @@ from gmall_flink_0526_spark.sources.dimstore import DimStore
 from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
 from gmall_flink_0526_spark.streaming import pipelines
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, same_bucket_keys
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -1347,6 +1347,9 @@ def test_funnel_chain_cross_batch_attachment_edges(spark):
     def T(sec):
         return f"2024-01-01 00:00:{sec:02d}"
 
+    # users 1-4 share one state bucket
+    uid = dict(zip((1, 2, 3, 4), same_bucket_keys(spark, 4)))
+
     rows = [
         # (event_id, ts, user_id, event_type, batch)
         (101, T(1), 1, "view", 0),
@@ -1365,7 +1368,7 @@ def test_funnel_chain_cross_batch_attachment_edges(spark):
         (403, T(7), 4, "purchase", 1),
     ]
     src = spark.createDataFrame(
-        [(e, t, u, y, b) for e, t, u, y, b in rows],
+        [(e, t, uid[u], y, b) for e, t, u, y, b in rows],
         "event_id long, ts_s string, user_id long, event_type string, b int",
     ).select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "event_type", "b"
@@ -2085,6 +2088,9 @@ def test_transition_pairs_cross_batch_boundary(spark):
     def T(sec):
         return f"2024-01-01 00:00:{sec:02d}"
 
+    # users 1-4 share one state bucket
+    uid = dict(zip((1, 2, 3, 4), same_bucket_keys(spark, 4)))
+
     rows = [
         # user 1: a->b inside batch 0, b->c STRADDLING the boundary,
         # c->d inside batch 1
@@ -2104,7 +2110,7 @@ def test_transition_pairs_cross_batch_boundary(spark):
         (403, T(3), 4, "q", 1),
     ]
     src = spark.createDataFrame(
-        rows,
+        [(e, t, uid[u], y, b) for e, t, u, y, b in rows],
         "event_id long, ts_s string, user_id long, event_type string, b int",
     ).select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "event_type", "b"
@@ -2116,13 +2122,15 @@ def test_transition_pairs_cross_batch_boundary(spark):
             file_of=F.col("b"), n_files=2,
         ).collect()
     )
-    assert got == [
-        (1, "a", "b"),
-        (1, "b", "c"),
-        (1, "c", "d"),
-        (2, "x", "y"),
-        (4, None, "q"),
-    ]
+    assert got == sorted(
+        [
+            (uid[1], "a", "b"),
+            (uid[1], "b", "c"),
+            (uid[1], "c", "d"),
+            (uid[2], "x", "y"),
+            (uid[4], None, "q"),
+        ]
+    )
 
 
 def test_funnel_chain_n_four_stage_cross_batch_edges(spark):
@@ -2146,6 +2154,9 @@ def test_funnel_chain_n_four_stage_cross_batch_edges(spark):
     def T(sec):
         return f"2024-01-01 00:00:{sec:02d}"
 
+    # users 1-3 share one state bucket
+    uid = dict(zip((1, 2, 3), same_bucket_keys(spark, 3)))
+
     rows = [
         (101, T(1), 1, "signup", 0),
         (102, T(2), 1, "view", 0),
@@ -2167,7 +2178,7 @@ def test_funnel_chain_n_four_stage_cross_batch_edges(spark):
         (304, T(7), 3, "purchase", 1),
     ]
     src = spark.createDataFrame(
-        [(e, t, u, y, b) for e, t, u, y, b in rows],
+        [(e, t, uid[u], y, b) for e, t, u, y, b in rows],
         "event_id long, ts_s string, user_id long, event_type string, b int",
     ).select(
         "event_id", F.to_timestamp("ts_s").alias("ts"), "user_id", "event_type", "b"

@@ -645,8 +645,13 @@ def test_temporal_enrich_matches_python_asof_model(spark, data):
     from gmall_flink_0526_spark.streaming.replay import replay_stateful
     from gmall_flink_0526_spark.streaming.stateful import temporal_enrich
 
+    from .conftest import same_bucket_keys
+
     n = data.draw(st.integers(4, 16))
-    keys = data.draw(st.lists(st.integers(1, 3), min_size=n, max_size=n))
+    # three keys sharing one state bucket: per-key carries must not
+    # leak between keys stored side by side
+    shared = same_bucket_keys(spark, 3)
+    keys = data.draw(st.lists(st.sampled_from(shared), min_size=n, max_size=n))
     # builds get UNIQUE (key, ts) pairs (the pre-aggregated-ties
     # contract); probes may share any ts
     events, used = [], set()

@@ -282,3 +282,81 @@ def test_watermark_late_drop_boundary_semantics(spark, tmp_path):
     )
     got = {r["tag"] for r in out.filter(F.col("tag") != "_sentinel").collect()}
     assert got == {"on", "spacer", "at_wm", "ok"}, got
+
+
+class _ManualClockState:
+    """GroupState stand-in for one bucket, with a manual processing-time
+    clock: ``now`` is what ``getCurrentProcessingTimeMs`` returns and
+    ``timeout_at`` the absolute time the last ``setTimeoutDuration``
+    armed."""
+
+    def __init__(self):
+        self.value, self.now, self.hasTimedOut, self.timeout_at = None, 0, False, None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+    def getCurrentProcessingTimeMs(self):
+        return self.now
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_at = self.now + ms
+
+
+def test_bucket_ttl_evicts_cold_key_inside_hot_bucket(spark, monkeypatch):
+    """Per-KEY TTL inside one state bucket: a cold key sharing the
+    bucket with a hot key must leave once idle for the TTL, even though
+    the hot key's data keeps calling the bucket and its timeout never
+    fires — and sessionize_bounce must emit the cold key's open session
+    as it leaves. The bucket re-arms at its earliest remaining expiry."""
+    captured = {}
+    monkeypatch.setattr(
+        stateful, "_keyed_state", lambda events, out_t, *a, **kw: captured.update(a=a, kw=kw)
+    )
+    events = spark.createDataFrame([], EVENTS_SCHEMA)
+    stateful.sessionize_bounce(events, gap_minutes=10)
+    fn = stateful._bucket_fn(*captured["a"], **captured["kw"])
+    gap_ms = 10 * 60 * 1000
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+    state = _ManualClockState()
+
+    def call(now, rows):
+        state.now = now
+        pdfs = [
+            pd.DataFrame(
+                [(i, t0 + pd.Timedelta(minutes=m), u) for i, m, u in rows],
+                columns=["event_id", "ts", "user_id"],
+            )
+        ] if rows else []
+        got = list(fn((0,), iter(pdfs), state))
+        return pd.concat(got).to_dict("records") if got else []
+
+    # cold user 1 and hot user 2 open sessions in the same bucket
+    assert call(0, [(1, 0, 1), (2, 0, 2)]) == []
+    assert state.timeout_at == gap_ms
+    # half a gap later only the hot user has data: nothing expires
+    assert call(gap_ms // 2, [(3, 5, 2)]) == []
+    # a full gap after its last update the cold user is evicted while
+    # the hot user's data arrives; its one-event session is a bounce
+    assert call(gap_ms, [(4, 9, 2)]) == [
+        {"user_id": 1, "n_events": 1, "is_bounce": True, "end_ts": t0}
+    ]
+    assert list(state.value[0]) == [2]
+    assert state.timeout_at == 2 * gap_ms
+    # the hot user's own timeout closes its three-event session
+    state.hasTimedOut = True
+    assert call(2 * gap_ms, []) == [
+        {"user_id": 2, "n_events": 3, "is_bounce": False, "end_ts": t0 + pd.Timedelta(minutes=9)}
+    ]
+    assert not state.exists

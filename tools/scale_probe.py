@@ -32,7 +32,10 @@ similarity" contract):
   counts are asserted against the batch numbers), per-epoch wall
   tracking the epoch's own pair output;
 - (r12) the corpus-vertex rank loop's per-iteration wall vs edge
-  count, isolated from the shared pair build.
+  count, isolated from the shared pair build;
+- keyed state costs what the batch touches: temporal_enrich's
+  per-epoch wall at fixed batch rows with 10x and 100x stored keys
+  (``--only enrich_keys``).
 
 Usage:  python tools/scale_probe.py [--docs 50000] [--vecs 20000]
 Prints one JSON line with timings + bucket stats; paste into SCALE.md.
@@ -617,6 +620,93 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dict:
+    """Keys-only scaling of the keyed-state operators, on
+    temporal_enrich: epoch 0 stores one dim version for each of
+    K = ``batch_keys`` x m keys; epochs 1 and 2 each carry the SAME
+    2 x ``batch_keys`` rows (a build and a later probe per touched key,
+    touched keys spread over the whole key space, so over every state
+    bucket). Batch rows are fixed while stored keys grow 10x and 100x:
+    per-epoch wall of epochs 1-2 must stay flat, since a step sees only
+    the stored entries of the keys its batch touches."""
+    from pyspark.sql import functions as F
+
+    from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
+    from gmall_flink_0526_spark.streaming.replay import drain
+    from gmall_flink_0526_spark.streaming.stateful import temporal_enrich
+
+    t0 = 1704067200  # 2024-01-01 UTC
+    out = {"batch_rows": 2 * batch_keys}
+    for m in mults:
+        n_keys = batch_keys * m
+        seed = spark.range(n_keys).select(
+            F.col("id").alias("event_id"),
+            F.lit(0).alias("epoch"),
+            F.col("id").alias("user_id"),
+            F.lit("dimchange").alias("event_type"),
+            F.timestamp_seconds(F.lit(t0)).alias("ts"),
+            F.col("id").cast("double").alias("value"),
+        )
+        j = F.col("id") % (2 * batch_keys)
+        epoch = (F.col("id") / (2 * batch_keys)).cast("long") + 1
+        touched = spark.range(4 * batch_keys).select(
+            (F.col("id") + n_keys).alias("event_id"),
+            epoch.cast("int").alias("epoch"),
+            ((j / 2).cast("long") * m).alias("user_id"),
+            F.when(j % 2 == 0, "dimchange").otherwise("order").alias("event_type"),
+            F.timestamp_seconds(F.lit(t0) + epoch * 3600 + j % 2).alias("ts"),
+            F.when(j % 2 == 0, epoch.cast("double")).alias("value"),
+        )
+        root = tempfile.mkdtemp(prefix="gmall_enrichprobe_")
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        try:
+            reg = ChannelRegistry(root)
+            schema = (
+                "event_id long, epoch int, user_id long, event_type string, "
+                "ts timestamp, value double"
+            )
+            reg.register("ods_enrich", schema=schema)
+            write_replay(
+                seed.unionByName(touched),
+                reg.channels["ods_enrich"].path,
+                n_files=3,
+                order_by=["ts", "event_id"],
+                file_of=F.col("epoch"),
+            )
+            reg.register("enrich_out", kind="memory")
+            # the replay queries' state fan-out (replay_stateful's default)
+            spark.conf.set("spark.sql.shuffle.partitions", "16")
+            src = reg.read_stream(spark, "ods_enrich", max_files_per_trigger=1)
+            q = reg.write_stream(
+                temporal_enrich(src), "enrich_out", os.path.join(root, "ckpt")
+            )
+            try:
+                drain(q, n_files=3)
+                progress = [json.loads(x.json) for x in q.recentProgress]
+            finally:
+                q.stop()
+            out[f"keys_{n_keys}"] = [
+                {
+                    "epoch": p["batchId"],
+                    "rows": p["numInputRows"],
+                    "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
+                    "addBatch_sec": round(p["durationMs"].get("addBatch", 0) / 1000.0, 2),
+                    "state_keys_rows": sum(
+                        s["numRowsTotal"] for s in p["stateOperators"]
+                    ),
+                    "state_bytes": sum(
+                        s["memoryUsedBytes"] for s in p["stateOperators"]
+                    ),
+                }
+                for p in progress
+                if p["numInputRows"] > 0
+            ]
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            shutil.rmtree(root, ignore_errors=True)
+    return out
+
+
 def probe_doc_pagerank(spark, sf_dir: str) -> dict:
     """r12: the corpus-VERTEX rank loop in isolation — the pair-table
     build is shared with the prefix-filter family (corpus-persisted),
@@ -677,7 +767,8 @@ def main() -> None:
     ap.add_argument(
         "--only",
         default=None,
-        help="comma-separated probe subset: tfidf_skew,hot_bucket,incremental "
+        help="comma-separated probe subset: tfidf_skew,hot_bucket,incremental,"
+        "enrich_keys "
         "(default: the full probe)",
     )
     args = ap.parse_args()
@@ -706,6 +797,8 @@ def main() -> None:
                 ).repartition(32).write.mode("overwrite").parquet(
                     os.path.join(sub_sf1, "documents.parquet")
                 )
+            if "enrich_keys" in only:
+                out["enrich_keys"] = probe_enrich_keys(spark)
             if "tfidf_skew" in only:
                 out["tfidf_skew"] = probe_tfidf_skew(spark)
             if "hot_bucket" in only:
@@ -988,11 +1081,10 @@ def main() -> None:
             # corpus (orders envelopes) — per-epoch cost is the
             # config-sized broadcast + the dim-bounded MERGE, so the
             # 2-epoch replay must track the envelope volume
-            # r17: the point-in-time replay now runs the BUCKETED
-            # temporal_enrich (group calls = 4 x pool, independent of
-            # key count) — at 10x customers the replay wall must track
-            # the envelope volume, not the key count x per-group
-            # overhead that the per-key form paid
+            # the point-in-time replay runs the bucketed temporal_enrich
+            # (group calls per micro-batch <= STATE_BUCKETS, independent
+            # of key count) — at 10x customers the replay wall must
+            # track the envelope volume, not the key count
             for name in ("local_supplier_volume", "pricing_summary", "dim_enrichment_asof",
                          "dim_schema_evolution", "dim_enrichment_asof_stream"):
                 for sf_label, sf_dir in (("sf0.1", "/root/testdata/sf0.1"), ("sf1", wh)):
@@ -1043,8 +1135,8 @@ def main() -> None:
                 # per-row filter)
                 "visitor_stats_late_drop",
                 # r17: two bucketed keyed-state replays — group calls
-                # per micro-batch are pinned at the bucket count
-                # (4 x pool), so 10x events and 10x active keys must
+                # per micro-batch are bounded by STATE_BUCKETS, so 10x
+                # events and 10x active keys must
                 # track the replay volume with no per-key overhead term
                 "uv_first_visit_stream",
                 "funnel_attribution_stream",
@@ -1102,6 +1194,9 @@ def main() -> None:
             for label, sf_dir in (("sf0.1", "/root/testdata/sf0.1"), ("sf1", sf1))
         }
 
+        # keyed state at fixed batch rows and 10x / 100x stored keys
+        enrich_keys = probe_enrich_keys(spark)
+
         # connected-components round count is log(diameter): assert the
         # probe corpus (chains via mutation-of-mutation) stays shallow
         out = {
@@ -1119,6 +1214,7 @@ def main() -> None:
             "substring_stream": substr_stream,
             "similarity_graph_stream": simgraph_stream,
             "incremental_stream": inc,
+            "enrich_keys": enrich_keys,
             "hot_buckets_capped": len(dropped),
             "quadratic_pairs_saved": int(saved_pairs),
             "top_buckets": [
