@@ -2139,9 +2139,6 @@ def _register_dim_enrichment_asof_stream():
         ts_type = ev.schema["ts"].dataType.simpleString()
         cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
         file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        # the catalog's largest stateful key space (every customer):
-        # spread the replay's state tasks over the worker pool
-        fanout = min(32, spark.sparkContext.defaultParallelism)
         op = lambda s: stateful.temporal_enrich(
             s, key="custkey", ts="ts", id_col="o_orderkey",
             val_cols=("acctbal_asof", "version_from"),
@@ -2149,7 +2146,6 @@ def _register_dim_enrichment_asof_stream():
         out = replay_stateful(
             spark, ev, op, order_by=["ts", "o_orderkey"],
             cache_key=f"pit_tspan:{sf_dir}", file_of=file_of, n_files=2,
-            shuffle_partitions=fanout,
         )
         return out.select(
             "o_orderkey",

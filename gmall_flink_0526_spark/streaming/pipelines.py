@@ -281,9 +281,10 @@ def unique_visit_app(
     """F2 as a job — UniqueVisitApp (RT/app/dwm/UniqueVisitApp.java:
     24-92): tail the page channel, emit the first visit per user per
     calendar day via the exact keyed-state operator, publish to the
-    unique-visit channel."""
+    unique-visit channel. Starts under :func:`stateful.state_fanout`."""
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    return reg.write_stream(stateful.daily_dedup(src), out_channel, ckpt)
+    with stateful.state_fanout(spark):
+        return reg.write_stream(stateful.daily_dedup(src), out_channel, ckpt)
 
 
 def user_jump_detail_app(
@@ -297,11 +298,12 @@ def user_jump_detail_app(
     """U2 as a job — the reference's planned CEP bounce job (empty stub
     RT/app/dwm/UserJumpDetailApp.java; flink-cep dep declared): close a
     session when the gap passes or state times out; 1-event sessions
-    are bounces."""
+    are bounces. Starts under :func:`stateful.state_fanout`."""
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    return reg.write_stream(
-        stateful.sessionize_bounce(src, gap_minutes=gap_minutes), out_channel, ckpt
-    )
+    with stateful.state_fanout(spark):
+        return reg.write_stream(
+            stateful.sessionize_bounce(src, gap_minutes=gap_minutes), out_channel, ckpt
+        )
 
 
 def payment_wide_app(

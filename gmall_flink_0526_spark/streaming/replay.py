@@ -22,6 +22,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.registry import ChannelRegistry, write_replay
+from .stateful import state_fanout
 
 _SEQ = 0
 # replay channels are immutable once written — share them across the
@@ -132,7 +133,6 @@ def replay_stateful(
     *,
     order_by: list[str],
     n_files: int = 3,
-    shuffle_partitions: int = 16,
     cache_key: str | None = None,
     drain_mode: str = "offsets",
     file_of=None,
@@ -143,13 +143,12 @@ def replay_stateful(
 
     The replay is split into ``n_files`` micro-batches ordered by
     ``order_by`` (event time first), so keyed state observes rows in
-    the same order the batch twin assumes. State fan-out is pinned to
-    ``shuffle_partitions`` for the run (restored after): the dominant
-    cost is the per-GROUP Python function call inside
-    applyInPandasWithState (tens of thousands of keys per batch), so
-    wall clock scales with state partitions up to the worker-pool size
-    (measured at sf0.1: 4 partitions 26 s, 16 partitions 10 s), while
-    hundreds of partitions would just pay empty state-store commits.
+    the same order the batch twin assumes. The query starts under
+    :func:`~.stateful.state_fanout`, one wave of state tasks: each
+    state partition is a Python task with a fixed worker set-up cost,
+    while an epoch makes at most ``STATE_BUCKETS`` group calls in all.
+    Measured on a 4-core host (``is_new_fix_stream``, 30k events,
+    median of 10 runs): 7.2 s at 16 state partitions, 3.7 s at 4.
 
     ``file_of`` (optional Column, int in [0, n_files)) passes through
     to :func:`write_replay`: an EXPLICIT micro-batch assignment for
@@ -169,22 +168,24 @@ def replay_stateful(
         src_root = tempfile.mkdtemp(prefix="gmall_replay_src_")
         src_reg = ChannelRegistry(src_root)
         src_reg.register("replay_src", schema=schema)
-        write_replay(
-            source_df,
-            src_reg.channels["replay_src"].path,
-            n_files=n_files,
-            order_by=order_by,
-            file_of=file_of,
-        )
+        try:
+            write_replay(
+                source_df,
+                src_reg.channels["replay_src"].path,
+                n_files=n_files,
+                order_by=order_by,
+                file_of=file_of,
+            )
+        except BaseException:
+            shutil.rmtree(src_root, ignore_errors=True)
+            raise
         if ck:
             _CHANNEL_CACHE[ck] = src_root
     src_reg = ChannelRegistry(src_root)
     src_reg.register("replay_src", schema=schema)
 
     run_root = tempfile.mkdtemp(prefix="gmall_replay_run_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         src = src_reg.read_stream(spark, "replay_src", max_files_per_trigger=1)
         out_reg = ChannelRegistry(run_root)
         out_reg.register(out_name, kind="memory")
@@ -196,7 +197,8 @@ def replay_stateful(
         # stop() may abort an in-flight EMPTY timeout batch mid
         # state-commit (log noise, harmless — the data batches are done
         # and the checkpoint is discarded).
-        q = out_reg.write_stream(op(src), out_name, os.path.join(run_root, "ckpt"))
+        with state_fanout(spark):
+            q = out_reg.write_stream(op(src), out_name, os.path.join(run_root, "ckpt"))
         try:
             if drain_mode == "all_available":
                 # windowed aggs emit watermark-flushed rows in a batch
@@ -213,7 +215,6 @@ def replay_stateful(
         # the checkpoint scratch dir is gone
         return spark.sql(f"SELECT * FROM {out_name}_mem")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(run_root, ignore_errors=True)
         if not ck:
             shutil.rmtree(src_root, ignore_errors=True)

@@ -360,3 +360,107 @@ def test_bucket_ttl_evicts_cold_key_inside_hot_bucket(spark, monkeypatch):
         {"user_id": 2, "n_events": 3, "is_bounce": False, "end_ts": t0 + pd.Timedelta(minutes=9)}
     ]
     assert not state.exists
+
+
+class _StatePartitions:
+    """``StreamingQueryListener`` probe: the ``numShufflePartitions`` of
+    every state operator in every progress event, by query id."""
+
+    def __init__(self):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.by_query: dict[str, set[int]] = {}
+        outer = self
+
+        class _L(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                pass
+
+            def onQueryProgress(self, event):
+                p = event.progress
+                parts = {s.numShufflePartitions for s in p.stateOperators}
+                if parts:
+                    outer.by_query.setdefault(str(p.id), set()).update(parts)
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        self.listener = _L()
+
+    def wait_for(self, n_queries: int, timeout: float = 60) -> dict[str, set[int]]:
+        """Progress events reach the listener asynchronously."""
+        deadline = time.time() + timeout
+        while len(self.by_query) < n_queries and time.time() < deadline:
+            time.sleep(0.2)
+        return self.by_query
+
+
+def test_state_fanout_is_one_wave_and_restores_the_session(spark, replay, tmp_path):
+    """A keyed-state query starts with one wave of state tasks,
+    min(STATE_BUCKETS, defaultParallelism) shuffle partitions — both a
+    replay_stateful run and a durable app epoch — and the caller's
+    spark.sql.shuffle.partitions is back afterwards, also when the op
+    raises."""
+    from gmall_flink_0526_spark.streaming import pipelines
+    from gmall_flink_0526_spark.streaming.replay import replay_stateful
+
+    reg, _ = replay
+    want = min(stateful.STATE_BUCKETS, spark.sparkContext.defaultParallelism)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    caller = str(want + 3)  # anything but the rule's count
+    spark.conf.set("spark.sql.shuffle.partitions", caller)
+    probe = _StatePartitions()
+    spark.streams.addListener(probe.listener)
+    try:
+        events = load_tables(spark, SF_SMOKE, "events")["events"]
+        out = replay_stateful(
+            spark, events, stateful.fix_is_new, order_by=["ts", "event_id"], n_files=2
+        )
+        assert out.count() == events.count()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == caller
+
+        q = pipelines.unique_visit_app(spark, reg, str(tmp_path / "uv"), source="ods_events")
+        try:
+            # the conf is restored while the query runs
+            assert spark.conf.get("spark.sql.shuffle.partitions") == caller
+            deadline = time.time() + 120
+            while not (q.lastProgress and q.lastProgress["stateOperators"]):
+                assert time.time() < deadline, "no unique_visit_app epoch"
+                time.sleep(0.2)
+        finally:
+            q.stop()
+        seen = probe.wait_for(2)
+        assert len(seen) == 2 and str(q.id) in seen, seen
+        assert all(parts == {want} for parts in seen.values()), seen
+
+        def boom(_):
+            raise RuntimeError("op failed")
+
+        with pytest.raises(RuntimeError, match="op failed"):
+            replay_stateful(spark, events, boom, order_by=["ts", "event_id"], n_files=2)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == caller
+    finally:
+        spark.streams.removeListener(probe.listener)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_replay_write_failure_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """A channel write that raises (here an out-of-range ``file_of``)
+    must not leak its source dir: the replay is neither cached nor
+    left behind."""
+    import tempfile
+
+    from gmall_flink_0526_spark.streaming.replay import replay_stateful
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    df = spark.range(10).select("id", F.col("id").alias("ts"))
+    with pytest.raises(ValueError, match="outside"):
+        replay_stateful(
+            spark, df, lambda s: s, order_by=["ts"], n_files=2, file_of=F.lit(5),
+            cache_key="leak-probe",
+        )
+    assert not list(tmp_path.glob("gmall_replay_src_*"))

@@ -633,7 +633,7 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
 
     from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
     from gmall_flink_0526_spark.streaming.replay import drain
-    from gmall_flink_0526_spark.streaming.stateful import temporal_enrich
+    from gmall_flink_0526_spark.streaming.stateful import state_fanout, temporal_enrich
 
     t0 = 1704067200  # 2024-01-01 UTC
     out = {"batch_rows": 2 * batch_keys}
@@ -658,7 +658,6 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
             F.when(j % 2 == 0, epoch.cast("double")).alias("value"),
         )
         root = tempfile.mkdtemp(prefix="gmall_enrichprobe_")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
         try:
             reg = ChannelRegistry(root)
             schema = (
@@ -674,12 +673,11 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
                 file_of=F.col("epoch"),
             )
             reg.register("enrich_out", kind="memory")
-            # the replay queries' state fan-out (replay_stateful's default)
-            spark.conf.set("spark.sql.shuffle.partitions", "16")
             src = reg.read_stream(spark, "ods_enrich", max_files_per_trigger=1)
-            q = reg.write_stream(
-                temporal_enrich(src), "enrich_out", os.path.join(root, "ckpt")
-            )
+            with state_fanout(spark):
+                q = reg.write_stream(
+                    temporal_enrich(src), "enrich_out", os.path.join(root, "ckpt")
+                )
             try:
                 drain(q, n_files=3)
                 progress = [json.loads(x.json) for x in q.recentProgress]
@@ -702,7 +700,6 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
                 if p["numInputRows"] > 0
             ]
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
             shutil.rmtree(root, ignore_errors=True)
     return out
 
