@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import load_tables
+from ..session import load_tables, local_table
 from ..streaming import stateful
 from ..streaming.replay import replay_stateful, temp_replay_root
 from .catalog import register, register_setup
@@ -658,8 +658,8 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         reg.channels["dwd_order_detail"].path, n_files=2, order_by=["ts", "detail_order_id"],
     )
     reg.register("dwm_order_wide")
-    dim = spark.createDataFrame(
-        [(i, f"bucket_{i}") for i in range(10)], "bucket_id long, bucket_name string"
+    dim = local_table(
+        spark, [(i, f"bucket_{i}") for i in range(10)], "bucket_id long, bucket_name string"
     )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -736,12 +736,13 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "after map<string,string>, type string, k long",
     )
     write_replay(env, reg.channels["ods_base_db"].path, n_files=3, order_by=["type", "k"])
-    config = spark.createDataFrame(
+    config = local_table(
+        spark,
         [
             ("order_info", "insert", "kafka", "dwd_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
             ("order_info", "update", "hbase", "dim_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
         ],
-        schema="sourceTable string, operateType string, sinkType string, sinkTable string, "
+        "sourceTable string, operateType string, sinkType string, sinkTable string, "
         "sinkColumns string, sinkPk string, sinkExtend string",
     )
     store = DimStore(os.path.join(root, "dims"))

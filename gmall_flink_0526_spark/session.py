@@ -113,3 +113,24 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def local_table(spark: SparkSession, rows, schema):
+    """A small driver-built table (``rows`` of tuples or ``Row``s) as a
+    JVM-local relation.
+
+    ``spark.createDataFrame(list)`` plans a Python RDD scan, so every
+    scan of the frame — every micro-batch that broadcasts or joins it —
+    runs a Python-worker job just to read a few rows. Built over pandas
+    with Arrow (on in :func:`get_spark`) the same rows become a
+    ``LocalRelation``, which the planner scans and broadcasts on the
+    driver with no job at all. ``schema`` is a ``StructType`` or a DDL
+    string.
+    """
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    pdf = pd.DataFrame.from_records(list(rows), columns=schema.names)
+    return spark.createDataFrame(pdf, schema)

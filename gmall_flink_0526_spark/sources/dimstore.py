@@ -8,7 +8,9 @@ from routing config (RT/app/func/TableProcessFunction.java:71-131).
 Spark-first replacement: a keyed parquet table per dim, maintained by
 per-micro-batch MERGE semantics — read current, anti-join on pk,
 union the batch, atomically swap. Idempotent by pk, so replays are
-safe (the at-least-once -> exactly-once bridge, X5). On a cluster this
+safe (the at-least-once -> exactly-once bridge, X5). The first MERGE
+into a missing table creates it from the batch's columns — that is
+the K4 auto-DDL; there is no separate create step. On a cluster this
 is literally ``DeltaTable.merge``; plain parquet keeps the same
 semantics in this container (no Delta jars) at the cost of rewriting
 the (small) dim table per batch — dims are the broadcast-sized side by
@@ -43,12 +45,20 @@ class DimStore:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def ensure_table(self, spark: SparkSession, table: str, schema_df: DataFrame) -> None:
-        """K4 — auto-DDL: create the dim table if missing, all-string
-        columns + pk, like the reference's generated Phoenix DDL."""
+    def _published(self, spark: SparkSession, table: str) -> str:
+        """The table's path, after finishing a swap a crash cut short.
+
+        :meth:`merge` writes the merged table to ``<p>.tmp``, deletes
+        ``p`` and renames. A crash between the delete and the rename
+        leaves only a complete ``.tmp`` (its ``_SUCCESS`` marker is
+        written last); publishing it here keeps every earlier row. A
+        ``.tmp`` without ``_SUCCESS`` is a write cut short before ``p``
+        was touched; the next merge overwrites it."""
         p = self.path(table)
-        if not hfs.exists(spark, p):
-            schema_df.limit(0).write.mode("overwrite").parquet(p)
+        tmp = p + ".tmp"
+        if not hfs.exists(spark, p) and hfs.exists(spark, os.path.join(tmp, "_SUCCESS")):
+            hfs.rename(spark, tmp, p)
+        return p
 
     def merge(
         self,
@@ -68,8 +78,13 @@ class DimStore:
         when ``batch`` hasn't been shuffled since it left the source,
         since the id reflects current partition layout, not arrival.
         The seq column is consumed here and not written to the store.
+
+        K4 — a missing table is created by this MERGE with the batch's
+        columns (the reference generates Phoenix DDL first); a batch
+        with a new column widens the stored table, earlier rows reading
+        NULL there.
         """
-        p = self.path(table)
+        p = self._published(spark, table)
         # dedupe the batch on pk (keep the highest-seq = latest CDC row)
         if seq_col is None:
             batch = batch.withColumn("_seq", F.monotonically_increasing_id())
@@ -96,4 +111,4 @@ class DimStore:
         hfs.rename(spark, tmp, p)
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+        return spark.read.parquet(self._published(spark, table))

@@ -168,21 +168,28 @@ def write_replay(
     Chunks are written by Spark itself (a pandas round-trip chokes on
     map/struct columns), and each chunk's files get explicit, strictly
     increasing mtimes — the file stream source picks files oldest-first
-    by modification time, so mtime order IS the replay order.
+    by modification time, so mtime order IS the replay order. There is
+    exactly one file per chunk index, an empty chunk included, so a
+    replay of ``n_files`` always runs ``n_files`` micro-batches.
 
     Chunking is range-partitioned, not row_number over a global window
-    (which would be a single-task sort of the whole table): partition i
-    holds only order-keys <= partition i+1's, and each partition sorts
-    in parallel, so the concatenated replay order is exactly the global
-    sort order. Chunk boundaries come from range sampling and may vary
-    slightly run to run — harmless, because the stateful operators'
-    outputs depend on row ORDER, which is preserved, never on where the
-    micro-batch boundary falls.
+    (which would be a single-task sort of the whole table), and written
+    by ONE write: range partition i holds only order-keys <= partition
+    i+1's and IS chunk i — its part file carries i in its name — and
+    each partition sorts in parallel, so the concatenated replay order
+    is exactly the global sort order. Chunk boundaries come from range
+    sampling and may vary slightly run to run — harmless, because the
+    stateful operators' outputs depend on row ORDER, which is
+    preserved, never on where the micro-batch boundary falls. A range
+    partition with no rows writes no part file; its chunk is published
+    as an empty file with the table's schema.
 
     ``file_of`` (optional Column, int in [0, n_files)) overrides the
     range split with an EXPLICIT batch assignment — for operators whose
     output depends on where the micro-batch boundary falls (incremental
     dedup), so an external oracle can replicate the exact same split."""
+    import shutil
+    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -202,48 +209,49 @@ def write_replay(
                 f"write_replay: file_of assigns {n_oob} row(s) outside "
                 f"[0, {n_files}) — those rows would be dropped from the replay"
             )
-    else:
-        indexed = (
-            df.repartitionByRange(n_files, *[F.col(c) for c in order_by])
-            .sortWithinPartitions(*order_by)
-            .withColumn("_f", F.spark_partition_id())
-            .persist()
-        )
     os.makedirs(path, exist_ok=True)
     base = time.time() - n_files - 60  # strictly in the past
+    tmp = tempfile.mkdtemp(prefix="_replay_chunks_", dir=os.path.dirname(path))
+
+    def parts(d: str) -> list[str]:
+        return [os.path.join(d, n) for n in sorted(os.listdir(d)) if n.startswith("part-")]
+
     try:
-        # the n chunk writes are independent single-partition jobs —
-        # submit them from a small pool so each job's tail back-fills
-        # the others' idle executors (guide §2.6). Each chunk writes to
-        # its OWN scratch dir (concurrent appends into one dir would
-        # race the mtime bookkeeping); the move+utime loop below is
-        # sequential and in chunk order, so the mtime-ordered replay
-        # contract is exactly the serial writer's.
-        from concurrent.futures import ThreadPoolExecutor
+        if file_of is None:
+            out = os.path.join(tmp, "ranges")
+            df.repartitionByRange(n_files, *[F.col(c) for c in order_by]).sortWithinPartitions(
+                *order_by
+            ).write.parquet(out)
+            chunks: list[list[str]] = [[] for _ in range(n_files)]
+            for f in parts(out):  # part-<partition id>-<uuid>-c000...
+                chunks[int(os.path.basename(f).split("-")[1])].append(f)
+            if not all(chunks):
+                empty = os.path.join(tmp, "empty")
+                df.limit(0).coalesce(1).write.parquet(empty)
+                (blank,) = parts(empty)
+                for i in range(n_files):
+                    if not chunks[i]:
+                        chunks[i] = [shutil.copy(blank, os.path.join(tmp, f"empty{i}.parquet"))]
+        else:
+            from concurrent.futures import ThreadPoolExecutor
 
-        import shutil
-        import tempfile
+            # n independent single-partition writes, from a small pool
+            # so each job's tail back-fills the others' idle executors
+            def write_chunk(i: int) -> list[str]:
+                d = os.path.join(tmp, str(i))
+                indexed.filter(F.col("_f") == i).drop("_f").coalesce(1).write.parquet(d)
+                return parts(d)
 
-        tmp = tempfile.mkdtemp(prefix="_replay_chunks_", dir=os.path.dirname(path))
-
-        def _write_chunk(i: int) -> None:
-            indexed.filter(F.col("_f") == i).drop("_f").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(tmp, str(i)))
-
-        try:
             with ThreadPoolExecutor(max_workers=min(4, n_files)) as pool:
                 # list() re-raises the first failed chunk's exception
-                list(pool.map(_write_chunk, range(n_files)))
-            for i in range(n_files):
-                cdir = os.path.join(tmp, str(i))
-                for name in sorted(os.listdir(cdir)):
-                    if name.startswith(("_", ".")):
-                        continue
-                    dst = os.path.join(path, f"chunk{i}_{name}")
-                    shutil.move(os.path.join(cdir, name), dst)
-                    os.utime(dst, (base + i, base + i))
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+                chunks = list(pool.map(write_chunk, range(n_files)))
+        # publish sequentially in chunk order: mtime order is replay order
+        for i, files in enumerate(chunks):
+            for f in files:
+                dst = os.path.join(path, f"chunk{i}_{os.path.basename(f)}")
+                shutil.move(f, dst)
+                os.utime(dst, (base + i, base + i))
     finally:
-        indexed.unpersist(False)
+        shutil.rmtree(tmp, ignore_errors=True)
+        if file_of is not None:
+            indexed.unpersist(False)

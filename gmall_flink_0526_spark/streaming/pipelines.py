@@ -34,6 +34,7 @@ from ..operators.filters import filter_deletes
 from ..operators.joins import interval_join
 from ..operators.parse import parse_json_dead_letter, project_map_columns
 from ..operators.routing import route_by_config, split_by_sink_type, split_stream
+from ..session import local_table
 from ..sources import fs as hfs
 from ..sources.dimstore import DimStore
 from ..sources.registry import ChannelRegistry
@@ -157,32 +158,41 @@ def base_db_app(
     ``config_df`` is a DataFrame (static config) or a ZERO-ARG CALLABLE
     returning one — the table_process CONFIG STREAM (the reference
     tails it with FlinkCDC into broadcast state,
-    RT/app/dwd/BaseDbApp.java:63-75): a provider is re-evaluated at
-    every micro-batch, so a config mutation — including K4's ``extend``
-    case, a sinkColumns update ADDING a column to an existing dim —
-    takes effect from the next micro-batch, exactly Flink's
-    broadcast-state eventual consistency. Schema evolution downstream
-    is free by construction: ``ensure_table`` only creates missing
-    tables, and the MERGE's ``unionByName(allowMissingColumns=True)``
-    widens the stored table with the new column (existing rows read
-    NULL — the ALTER TABLE ADD COLUMN semantics;
-    ``dim_schema_evolution`` certifies the end-to-end path). The fact
-    branch carries a ``topic`` column (K2's per-record dynamic topic);
-    the dim branch MERGEs into the keyed store (K3) after ensure_table
-    (K4).
+    RT/app/dwd/BaseDbApp.java:63-75).
+
+    - A static DataFrame is read ONCE, when the app starts, into a
+      JVM-local relation (:func:`..session.local_table`): the routing
+      join re-plans against its static side every micro-batch, and a
+      config scanned through Python workers would cost a job per epoch.
+      Later changes to the data behind that DataFrame are not seen.
+    - A provider is re-evaluated at every micro-batch, so a config
+      mutation — including K4's ``extend`` case, a sinkColumns update
+      ADDING a column to an existing dim — takes effect from the next
+      micro-batch, exactly Flink's broadcast-state eventual consistency.
+
+    Schema evolution downstream is free by construction: the MERGE
+    creates a missing table (K4) and its
+    ``unionByName(allowMissingColumns=True)`` widens the stored table
+    with a new column (existing rows read NULL — the ALTER TABLE ADD
+    COLUMN semantics; ``dim_schema_evolution`` certifies the end-to-end
+    path). The fact branch carries a ``topic`` column (K2's per-record
+    dynamic topic); the dim branch MERGEs into the keyed store (K3).
     """
+    if not callable(config_df):
+        static_cfg = local_table(spark, config_df.collect(), config_df.schema)
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        cfg = config_df() if callable(config_df) else config_df
+        cfg = config_df() if callable(config_df) else static_cfg
         # Stamp source-arrival order BEFORE any join/shuffle: downstream
-        # the routing broadcast-join and persist can reorder rows, so a
-        # sequence derived later would not be last-writer-wins anymore.
-        batch = batch.withColumn("_seq", F.monotonically_increasing_id()).persist()
+        # the routing broadcast-join can reorder rows, so a sequence
+        # derived later would not be last-writer-wins anymore. Only
+        # `routed` is persisted: every branch below reads it, none reads
+        # `batch` again.
+        live = filter_deletes(batch.withColumn("_seq", F.monotonically_increasing_id()))
+        routed = route_by_config(live, F.broadcast(cfg))
+        routed = project_map_columns(routed, "after", "sinkColumns").persist()
         try:
-            live = filter_deletes(batch)
-            routed = route_by_config(live, F.broadcast(cfg))
-            routed = project_map_columns(routed, "after", "sinkColumns").persist()
             branches = split_by_sink_type(routed)
             # K2: dynamic-topic fact sink — topic is a per-record column
             fact = branches["kafka"].select(
@@ -216,11 +226,9 @@ def base_db_app(
                 dim_flat = dim_rows.select(
                     *[F.col("after").getItem(c).alias(c) for c in cols], "_seq"
                 )
-                dim_store.ensure_table(spark, row["sinkTable"], dim_flat.drop("_seq"))
                 dim_store.merge(spark, dim_flat, row["sinkTable"], pk, seq_col="_seq")
-            routed.unpersist()
         finally:
-            batch.unpersist()
+            routed.unpersist()
 
     return (
         src.writeStream.foreachBatch(process)
@@ -2139,12 +2147,9 @@ def hist_sketch_app(
 
     grid_path = os.path.join(store_root, "hist_grid")
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
+    bounds = local_table(spark, bounds_rows, f"{group} string, vmin double, vmax double")
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        bounds = sess.createDataFrame(
-            bounds_rows, f"{group} string, vmin double, vmax double"
-        )
         hist_counters(
             batch.select(group, value_col), group, value_col, bounds
         ).write.mode("overwrite").parquet(os.path.join(grid_path, f"epoch={epoch_id}"))

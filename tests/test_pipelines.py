@@ -125,8 +125,8 @@ def test_base_log_app_fixture_mode(spark, reg, tmp_path):
     assert start.count() + page.count() + display.count() + dirty.count() == ev.count()
 
 
-def test_base_db_app_routes_facts_and_dims(spark, reg, tmp_path):
-    orders = load_tables(spark, SF_SMOKE, "orders")["orders"]
+def _order_cdc_replay(spark, reg, orders):
+    """The CDC-envelope replay of ``orders`` base_db_app reads, 3 files."""
     env = envelope_from_table(orders, "o_orderkey", "gmall", "order_info").withColumn(
         "k",
         F.coalesce(
@@ -140,14 +140,21 @@ def test_base_db_app_routes_facts_and_dims(spark, reg, tmp_path):
     )
     write_replay(env, reg.channels["ods_base_db"].path, n_files=3, order_by=["type", "k"])
 
-    config = spark.createDataFrame(
-        [
-            ("order_info", "insert", "kafka", "dwd_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
-            ("order_info", "update", "hbase", "dim_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
-        ],
-        schema="sourceTable string, operateType string, sinkType string, sinkTable string, "
-        "sinkColumns string, sinkPk string, sinkExtend string",
-    )
+
+_ORDER_ROUTES = [
+    ("order_info", "insert", "kafka", "dwd_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
+    ("order_info", "update", "hbase", "dim_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
+]
+_TABLE_PROCESS = (
+    "sourceTable string, operateType string, sinkType string, sinkTable string, "
+    "sinkColumns string, sinkPk string, sinkExtend string"
+)
+
+
+def test_base_db_app_routes_facts_and_dims(spark, reg, tmp_path):
+    orders = load_tables(spark, SF_SMOKE, "orders")["orders"]
+    _order_cdc_replay(spark, reg, orders)
+    config = spark.createDataFrame(_ORDER_ROUTES, _TABLE_PROCESS)
     store = DimStore(str(tmp_path / "dims"))
     q = pipelines.base_db_app(spark, reg, store, config, str(tmp_path / "ckpt"))
     q.processAllAvailable()
@@ -182,6 +189,72 @@ def test_dim_merge_last_writer_wins_under_shuffle(spark, tmp_path):
     got = {r["pk"]: r["val"] for r in store.read(spark, "t").collect()}
     assert got == {k: f"v{k + 10}" for k in range(10)}
     assert "seq" not in store.read(spark, "t").columns
+
+
+def test_dim_merge_recovers_swap_cut_by_crash(spark, tmp_path):
+    """A crash between the swap's delete and rename leaves only the
+    complete ``<table>.tmp``: the next MERGE must publish it first and
+    upsert into it, not start a fresh table from its own batch."""
+    store = DimStore(str(tmp_path / "dims"))
+    a = spark.createDataFrame([(1, "a1"), (2, "a2")], "pk long, val string")
+    b = spark.createDataFrame([(2, "b2"), (3, "b3")], "pk long, val string")
+    store.merge(spark, a, "t", "pk")
+    p = store.path("t")
+    os.rename(p, p + ".tmp")  # the delete ran, the rename did not
+    store.merge(spark, b, "t", "pk")
+    got = {r["pk"]: r["val"] for r in store.read(spark, "t").collect()}
+    assert got == {1: "a1", 2: "b2", 3: "b3"}
+    assert not os.path.exists(p + ".tmp")
+
+
+def test_base_db_app_reads_static_config_once(spark, reg, tmp_path):
+    """A static config is read when the app starts, not re-scanned by
+    every micro-batch: an accumulator bumped per config row scanned
+    ends at the row count after a 3-epoch run."""
+    orders = load_tables(spark, SF_SMOKE, "orders")["orders"]
+    _order_cdc_replay(spark, reg, orders)
+    scanned = spark.sparkContext.accumulator(0)
+
+    def bump(row):
+        scanned.add(1)
+        return row
+
+    config = spark.createDataFrame(
+        spark.sparkContext.parallelize(_ORDER_ROUTES, 1).map(bump), _TABLE_PROCESS
+    )
+    store = DimStore(str(tmp_path / "dims"))
+    q = pipelines.base_db_app(spark, reg, store, config, str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+    assert len({p.batchId for p in q.recentProgress if p.numInputRows}) == 3
+    assert scanned.value == len(_ORDER_ROUTES)
+    n_update_keys = orders.filter((F.col("o_orderkey") % 10).isin(1, 2)).count()
+    assert store.read(spark, "dim_order_info").count() == n_update_keys
+
+
+def test_base_db_app_failing_epoch_releases_routed_cache(spark, reg, tmp_path, monkeypatch):
+    """An epoch that raises after its routed rows were cached must
+    still release them."""
+    orders = load_tables(spark, SF_SMOKE, "orders")["orders"]
+    _order_cdc_replay(spark, reg, orders)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(DimStore, "merge", boom)
+    pinned = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = pinned()
+    q = pipelines.base_db_app(
+        spark, reg, DimStore(str(tmp_path / "dims")), spark.createDataFrame(_ORDER_ROUTES, _TABLE_PROCESS),
+        str(tmp_path / "ckpt"),
+    )
+    try:
+        with pytest.raises(Exception, match="merge failed"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert reg.read_batch(spark, "dwd_fact_log").count() > 0  # routed was filled
+    assert pinned() - before == set()
 
 
 def test_base_db_app_null_sink_columns(spark, reg, tmp_path):
@@ -2774,26 +2847,8 @@ def test_base_db_duplicate_delivery_dim_invariant_fact_deduped_downstream(
     at-least-once delta), and the downstream idempotent consumer
     (dedup by message value, the MERGE-by-pk class) erases them."""
     orders = load_tables(spark, SF_SMOKE, "orders")["orders"]
-    env = envelope_from_table(orders, "o_orderkey", "gmall", "order_info").withColumn(
-        "k",
-        F.coalesce(
-            F.element_at("after", "o_orderkey"), F.element_at("before", "o_orderkey")
-        ).cast("long"),
-    )
-    reg.register(
-        "ods_base_db",
-        schema="database string, tableName string, before map<string,string>, "
-        "after map<string,string>, type string, k long",
-    )
-    write_replay(env, reg.channels["ods_base_db"].path, n_files=3, order_by=["type", "k"])
-    config = spark.createDataFrame(
-        [
-            ("order_info", "insert", "kafka", "dwd_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
-            ("order_info", "update", "hbase", "dim_order_info", "o_orderkey,o_totalprice", "o_orderkey", None),
-        ],
-        schema="sourceTable string, operateType string, sinkType string, sinkTable string, "
-        "sinkColumns string, sinkPk string, sinkExtend string",
-    )
+    _order_cdc_replay(spark, reg, orders)
+    config = spark.createDataFrame(_ORDER_ROUTES, _TABLE_PROCESS)
     store = DimStore(str(tmp_path / "dims"))
     q = pipelines.base_db_app(spark, reg, store, config, str(tmp_path / "ckpt"))
     q.processAllAvailable()

@@ -464,3 +464,27 @@ def test_replay_write_failure_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
             cache_key="leak-probe",
         )
     assert not list(tmp_path.glob("gmall_replay_src_*"))
+
+
+def test_write_replay_publishes_every_chunk_in_order(spark, tmp_path):
+    """One file per chunk index, empty chunks included, mtime order =
+    chunk order = sort order: with fewer distinct order keys than
+    files a range split leaves chunks empty, and a replay drained by
+    ``n_files`` would wait forever for a file that was never written."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "chan")
+    df = spark.range(100).select((F.col("id") % 2).alias("k"), "id")
+    write_replay(df, path, n_files=4, order_by=["k"])
+    files = sorted(
+        (f for f in os.listdir(path) if f.endswith(".parquet")),
+        key=lambda f: os.path.getmtime(os.path.join(path, f)),
+    )
+    assert [f.split("_")[0] for f in files] == ["chunk0", "chunk1", "chunk2", "chunk3"]
+    mtimes = [os.path.getmtime(os.path.join(path, f)) for f in files]
+    assert mtimes == sorted(set(mtimes))
+    tables = [pq.read_table(os.path.join(path, f)) for f in files]
+    assert all(t.column_names == ["k", "id"] for t in tables)
+    keys = [k for t in tables for k in t.column("k").to_pylist()]
+    assert len(keys) == 100 and keys == sorted(keys)
+    assert sum(t.num_rows == 0 for t in tables) == 2

@@ -9,10 +9,15 @@ Usage::
 Builds the same session as bench.py (local[$SPARK_GRAFT_CPUS]), warms
 the JVM/worker pool exactly like bench.py does, runs each named query
 ``--reps`` times through the noop sink (guide §1.4) and prints per-rep
-wall seconds plus the median. With ``--explain-dir`` the
-``explain("formatted")`` output of each query's returned DataFrame is
-written to ``<dir>/<query>.txt`` (captured from the FIRST rep, before
-its noop write). Jobs are labelled (guide §1.5).
+wall seconds plus the median, then each rep's Spark job count. With
+``--explain-dir`` the ``explain("formatted")`` output of each query's
+returned DataFrame is written to ``<dir>/<query>.txt`` (captured from
+the FIRST rep, before its noop write). Jobs are labelled (guide §1.5).
+
+A rep's job count is every job of its job group, every job of the
+streaming runs started during the rep (a micro-batch's jobs carry its
+query's run id as group), and every new ungrouped job (writer-pool
+threads carry no group).
 """
 
 from __future__ import annotations
@@ -23,6 +28,48 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+class _JobCounter:
+    """Counts the Spark jobs of one rep from ``statusTracker`` job groups."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.sc = spark.sparkContext
+        self.tracker = self.sc.statusTracker()
+        self.run_ids: list[str] = []
+        runs = self.run_ids
+
+        class _Started(StreamingQueryListener):
+            # query-started events reach listeners before start() returns
+            def onQueryStarted(self, event):
+                runs.append(str(event.runId))
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                pass
+
+        spark.streams.addListener(_Started())
+
+    def start(self, group: str, label: str) -> None:
+        self.group = group
+        self.ungrouped = set(self.tracker.getJobIdsForGroup(None))
+        self.first_run = len(self.run_ids)
+        self.sc.setJobGroup(group, label)
+
+    def stop(self) -> int:
+        self.sc.setJobGroup(None, None)
+        ids = set(self.tracker.getJobIdsForGroup(self.group))
+        ids |= set(self.tracker.getJobIdsForGroup(None)) - self.ungrouped
+        for run in self.run_ids[self.first_run :]:
+            ids |= set(self.tracker.getJobIdsForGroup(run))
+        return len(ids)
 
 
 def main() -> None:
@@ -73,10 +120,11 @@ def main() -> None:
     if args.explain_dir:
         os.makedirs(args.explain_dir, exist_ok=True)
 
+    counter = _JobCounter(spark)
     for name in args.queries:
-        reps = []
+        reps, jobs = [], []
         for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
+            counter.start(f"profile-{name}-{i}", f"profile:{name}#{i}")
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf)
             if i == 0 and args.explain_dir:
@@ -87,11 +135,13 @@ def main() -> None:
                     fh.write(plan)
             df.write.format("noop").mode("overwrite").save()
             reps.append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
+            jobs.append(counter.stop())
         med = sorted(reps)[len(reps) // 2]
         print(
             f"{name:36s} median {med:7.3f}s  reps "
-            + " ".join(f"{r:.3f}" for r in reps),
+            + " ".join(f"{r:.3f}" for r in reps)
+            + "  jobs "
+            + " ".join(str(j) for j in jobs),
             flush=True,
         )
 
