@@ -19,33 +19,63 @@ def parse_json(df: DataFrame, col: str, schema: T.StructType, out: str = "data")
     return df.withColumn(out, F.from_json(F.col(col), schema))
 
 
+#: The boolean column :func:`flag_dead_letter` adds.
+DEAD_LETTER = "_dead_letter"
+
+
+def flag_dead_letter(df: DataFrame, col: str, schema: T.StructType, out: str = "data") -> DataFrame:
+    """P1 — try-parse with a dead-letter flag: the one definition of
+    dirty input.
+
+    Parses ``col`` once into the struct ``out`` and adds the boolean
+    column :data:`DEAD_LETTER`, true where the payload is present but is not valid
+    JSON of ``schema`` (malformed or truncated text, a non-object, a
+    field of the wrong type). A NULL payload is clean, with NULL
+    ``out``. The flag is never NULL. On dirty rows ``out`` carries
+    nothing usable. Consumers either split on the flag
+    (:func:`parse_json_dead_letter`) or aggregate keyed by it, which
+    keeps the parse to one per row either way.
+    """
+    # PERMISSIVE from_json maps malformed input to an all-null struct,
+    # not a null struct — the corrupt-record column is the reliable
+    # dirty signal (same trick as the JSON file reader). Naming it as an
+    # explicit option also keeps the optimizer from pruning the parse
+    # schema down to the fields a consumer reads: a consumer of the flag
+    # alone would otherwise parse without ``schema``'s fields and miss
+    # every wrong-typed one.
+    with_corrupt = T.StructType(
+        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
+    )
+    parsed = df.withColumn(
+        out,
+        F.from_json(
+            F.col(col), with_corrupt, {"columnNameOfCorruptRecord": "_corrupt_record"}
+        ),
+    )
+    dirty = F.col(col).isNotNull() & (
+        F.col(out).isNull() | F.col(f"{out}._corrupt_record").isNotNull()
+    )
+    return parsed.withColumn(DEAD_LETTER, dirty).withColumn(
+        out, F.col(out).dropFields("_corrupt_record")
+    )
+
+
 def parse_json_dead_letter(
     df: DataFrame, col: str, schema: T.StructType, out: str = "data"
 ) -> tuple[DataFrame, DataFrame]:
     """P1 — try-parse with dirty-data side output.
 
     Reference diverts unparseable lines to a ``Dirty`` OutputTag
-    (RT/app/dwd/BaseLogApp.java:35-56). ``from_json`` yields NULL on
-    malformed input, so the split is two filters over one parsed scan —
-    Catalyst computes the parse once per branch consumer and pushes the
-    null test down; in streaming both branches share the source.
+    (RT/app/dwd/BaseLogApp.java:35-56). The split is the two halves of
+    :func:`flag_dead_letter`'s flag: ``clean`` keeps the parsed ``out``
+    struct (NULL payloads included), ``dead_letter`` keeps the input
+    columns only. In streaming both branches share the source.
 
     Returns ``(clean, dead_letter)``.
     """
-    # PERMISSIVE from_json maps malformed input to an all-null struct,
-    # not a null struct — the corrupt-record column is the reliable
-    # dirty signal (same trick as the JSON file reader).
-    with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    parsed = df.withColumn(out, F.from_json(F.col(col), with_corrupt))
-    dirty_pred = F.col(col).isNotNull() & (
-        F.col(out).isNull() | F.col(f"{out}._corrupt_record").isNotNull()
-    )
-    clean = parsed.filter(~dirty_pred | F.col(col).isNull()).withColumn(
-        out, F.col(out).dropFields("_corrupt_record")
-    )
-    dirty = parsed.filter(dirty_pred).drop(out)
+    flagged = flag_dead_letter(df, col, schema, out)
+    clean = flagged.filter(~F.col(DEAD_LETTER)).drop(DEAD_LETTER)
+    dirty = flagged.filter(F.col(DEAD_LETTER)).drop(out, DEAD_LETTER)
     return clean, dirty
 
 

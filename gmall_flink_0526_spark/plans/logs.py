@@ -42,32 +42,30 @@ PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
     """,
     doc="P1 — try-parse JSON with dirty-data side output "
     "(RT/app/dwd/BaseLogApp.java:35-56): every 50th payload is truncated "
-    "to simulate corrupt input; from_json yields NULL -> dead-letter "
-    "branch; clean branch extracts the typed field.",
+    "to simulate corrupt input. The payload is parsed once and flagged "
+    "dirty where from_json finds no valid record; one aggregation keyed "
+    "by event_type counts each side of the flag and sums the typed field "
+    "over the clean rows.",
     tags=("parse", "deadletter"),
 )
 def json_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, "events")
-    from ..operators.parse import parse_json_dead_letter
+    from ..operators.parse import DEAD_LETTER, flag_dead_letter
     from ..operators.partitioning import spread
 
-    # both branches re-parse the scan; spread so from_json parallelizes
+    # spread so from_json parallelizes
     raw = spread(t["events"], "event_id").withColumn(
         "payload",
         F.when(F.col("event_id") % 50 == 0, F.substring("props", 1, 5)).otherwise(F.col("props")),
     )
-    clean, dirty = parse_json_dead_letter(raw, "payload", PROPS_SCHEMA, out="data")
-    clean_agg = clean.groupBy("event_type").agg(
-        F.count("*").alias("clean_ct"), F.sum(F.col("data.k")).alias("k_sum")
-    )
-    dirty_agg = dirty.groupBy("event_type").agg(F.count("*").alias("dirty_ct"))
+    dirty = F.col(DEAD_LETTER)
     return (
-        clean_agg.join(dirty_agg, "event_type", "full_outer")
-        .select(
-            "event_type",
-            F.coalesce("clean_ct", F.lit(0)).alias("clean_ct"),
-            F.coalesce("dirty_ct", F.lit(0)).alias("dirty_ct"),
-            "k_sum",
+        flag_dead_letter(raw, "payload", PROPS_SCHEMA, out="data")
+        .groupBy("event_type")
+        .agg(
+            F.count_if(~dirty).alias("clean_ct"),
+            F.count_if(dirty).alias("dirty_ct"),
+            F.sum(F.when(~dirty, F.col("data.k"))).alias("k_sum"),
         )
     )
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import load_tables, local_table
+from ..session import load_tables, local_table, shuffle_partitions
 from ..streaming import stateful
 from ..streaming.replay import replay_stateful, temp_replay_root
 from .catalog import register, register_setup
@@ -263,18 +263,14 @@ def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_of=F.col("doc_id") % _N_DEDUP_BATCHES,
     )
     reg.register("dwd_documents_unique")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # foreachBatch LSH joins are JVM-side: 8 commit/shuffle units,
         # not the Python-state replays' 16 (same trade as the join apps)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = doc_incremental_dedup_app(
             spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return reg.read_batch(spark, "dwd_documents_unique").select("doc_id")
 
 
@@ -661,12 +657,10 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = local_table(
         spark, [(i, f"bucket_{i}") for i in range(10)], "bucket_id long, bucket_name string"
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # 8, not the Python-state replays' 16: stream-stream join state is
         # JVM-side, so fewer state-store commit units win at replay scale
         # (measured 16.1 s @16 -> 7.0 s @8, identical output)
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = order_wide_app(
             spark,
             reg,
@@ -675,8 +669,6 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         reg.read_batch(spark, "dwm_order_wide")
         .filter(F.col("order_id") >= 0)
@@ -746,15 +738,11 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sinkColumns string, sinkPk string, sinkExtend string",
     )
     store = DimStore(os.path.join(root, "dims"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # foreachBatch routing/MERGE is JVM-side: 8 units, not 16
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = base_db_app(spark, reg, store, config, os.path.join(root, "ckpt"))
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     fact = reg.read_batch(spark, "dwd_fact_log").agg(
         F.lit("fact").alias("branch"),
         F.count("*").alias("ct"),
@@ -823,15 +811,11 @@ def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         reg.channels["dwm_order_wide"].path, n_files=2, order_by=["ts", "order_id"],
     )
     reg.register("dwm_payment_wide")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # see order_wide_stream: JVM join state, 8 commit units not 16
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = payment_wide_app(spark, reg, os.path.join(root, "ckpt"))
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         reg.read_batch(spark, "dwm_payment_wide")
         .filter(F.col("order_id") >= 0)
@@ -915,18 +899,14 @@ def doc_quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files=2,
         order_by=["ts", "doc_id"],
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # dropDuplicates state partitions are commit units, not compute
         # (the r4 replay lesson): 8, not the session default — in a
         # vanilla 200-partition session the replay otherwise pays
         # hundreds of state-store commits
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = doc_quality_gate_app(spark, reg, os.path.join(root, "ckpt"))
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = textops.with_tokens(reg.read_batch(spark, "dwd_documents_quality"))
     per_digest = (
         out.select(
@@ -1080,16 +1060,12 @@ def embedding_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_of=F.col("vec_id") % _N_EMB_BATCHES,
     )
     reg.register("dwd_embeddings_unique")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+    with shuffle_partitions(spark, 8):
         q = emb_incremental_dedup_app(
             spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return reg.read_batch(spark, "dwd_embeddings_unique").select("vec_id")
 
 
@@ -1137,9 +1113,7 @@ def _register_decon_semantic_stream():
         write_replay(
             train, reg.channels["ods_embeddings"].path, n_files=3, order_by=["vec_id"]
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = decon_screen_app(
                 spark,
                 reg,
@@ -1150,8 +1124,6 @@ def _register_decon_semantic_stream():
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         return merged_decon_flags(spark, os.path.join(root, "store"))
 
 
@@ -1204,9 +1176,7 @@ def _register_contrastive_triplets_stream():
         write_replay(
             emb, reg.channels["ods_embeddings"].path, n_files=3, order_by=["vec_id"]
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = triplet_mine_app(
                 spark,
                 reg,
@@ -1216,8 +1186,6 @@ def _register_contrastive_triplets_stream():
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         scored = scoped_persist(merged_triplet_scored(spark, os.path.join(root, "store")))
         return triplets_from_scored(scored)
 
@@ -1268,9 +1236,7 @@ def _register_quality_perceptron_stream():
         write_replay(
             docs, reg.channels["ods_documents"].path, n_files=3, order_by=["doc_id"]
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = ptron_gate_app(
                 spark,
                 reg,
@@ -1280,8 +1246,6 @@ def _register_quality_perceptron_stream():
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         return merged_ptron_gate(spark, os.path.join(root, "store"))
 
 
@@ -1553,16 +1517,12 @@ def _register_doc_pagerank_stream():
             order_by=["doc_id"],
             file_of=F.col("doc_id") % 2,
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = similarity_graph_app(
                 spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         pairs = spark.read.parquet(os.path.join(root, "store", "pairs")).select(
             "doc_a", "doc_b"
         )
@@ -1672,18 +1632,14 @@ def substring_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         file_of=F.col("doc_id") % _N_SUBSTR_BATCHES,
     )
     reg.register("dwd_documents_cut")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    with shuffle_partitions(spark, 8):
         # JVM-side window-hash joins: 8 commit/shuffle units, the
         # incremental-dedup trade
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
         q = substring_dedup_app(
             spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return reg.read_batch(spark, "dwd_documents_cut").select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -1735,19 +1691,15 @@ def _register_heavy_hitters_stream():
             n_files=2,
             order_by=["ts", "doc_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch grids are <= depth*width rows: 8 shuffle
             # partitions, not a vanilla session's 200, keeps the
             # 3-batch replay's commit count honest (the r4 lesson)
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = cms_sketch_app(
                 spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         grid = merged_cms_grid(spark, os.path.join(root, "store"))
         toks = docs.select(F.explode(textops.tokenize(F.col("text"))).alias("tok"))
         topk = (
@@ -1849,18 +1801,14 @@ def _register_approx_distinct_hll_stream():
             lines, reg.channels["ods_events"].path, n_files=2,
             order_by=["ts", "event_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch grids are <= types*m rows: 8 shuffle partitions
             # keeps the replay's commit count honest (the r4 lesson)
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = hll_sketch_app(
                 spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         regs = merged_hll_registers(spark, os.path.join(root, "store"))
         return hll_audit_from_regs(spark, regs)
 
@@ -1915,11 +1863,9 @@ def _register_decontaminate_bloom_stream():
             n_files=2,
             order_by=["ts", "doc_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch word grids are <= bits/BLOOM_WORD rows: keep
             # the 3-batch replay's commit count honest (the r4 lesson)
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = bloom_filter_app(
                 spark,
                 reg,
@@ -1930,8 +1876,6 @@ def _register_decontaminate_bloom_stream():
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         words = merged_bloom_words(spark, os.path.join(root, "store"))
         from .llmprep import corpus_decon_grams
 
@@ -1989,18 +1933,14 @@ def _register_perplexity_gate_stream():
             n_files=2,
             order_by=["ts", "doc_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch grids are batch-distinct-bigram-sized: 8
             # shuffle partitions keeps the replay's commit count honest
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = lm_counts_app(
                 spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         model = merged_lm_model(spark, os.path.join(root, "store"))
         # the batch family's staging, shared — not re-implemented here
         # (self-review r13): one staged token frame, one gram frame
@@ -2054,18 +1994,14 @@ def _register_events_gapfill_stream():
             lines, reg.channels["ods_events"].path, n_files=2,
             order_by=["ts", "event_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch grids are entity x hour rows: 8 shuffle
             # partitions keeps the replay's commit count honest
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = events_rollup_app(
                 spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         roll = merged_events_rollup(spark, os.path.join(root, "store"))
         return locf_output(dense_from_rollup(roll))
 
@@ -2217,19 +2153,15 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
             order_by=["event_id"],
             file_of=F.pmod(F.col("event_id"), F.lit(HIST_EPOCHS)),
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-batch grids are <= types*bins rows: keep the replay's
             # commit count honest (the r4 lesson)
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = hist_sketch_app(
                 spark, reg, os.path.join(root, "ckpt"),
                 os.path.join(root, "store"), bounds_rows,
             )
             q.processAllAvailable()
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         return root, bounds_rows
 
     # ONE memo holds (root, bounds): they are a unit — the bounds the
@@ -2519,9 +2451,7 @@ def _register_dsir_gate_stream():
             n_files=2,
             order_by=["ts", "doc_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q_raw = lm_counts_app(
                 spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
             )
@@ -2536,8 +2466,6 @@ def _register_dsir_gate_stream():
             )
             q_tgt.processAllAvailable()
             q_tgt.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         raw_model = merged_lm_model(spark, os.path.join(root, "raw"))
         tgt_model = merged_lm_model(spark, os.path.join(root, "tgt"))
         # target ingredient frames from the merged model: seen-bigram
@@ -2618,11 +2546,9 @@ def _register_dsir_hashed_stream():
             n_files=2,
             order_by=["ts", "doc_id"],
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
+        with shuffle_partitions(spark, 8):
             # per-epoch grids are <= DSIR_HASH_B rows: 8 shuffle
             # partitions keeps the replay's commit count honest
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q_raw = dsir_grid_app(
                 spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
             )
@@ -2637,8 +2563,6 @@ def _register_dsir_hashed_stream():
             )
             q_tgt.processAllAvailable()
             q_tgt.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         raw = merged_dsir_grid(spark, os.path.join(root, "raw"))
         tgt = merged_dsir_grid(spark, os.path.join(root, "tgt")).select(
             "b", F.col("ct").alias("tct")

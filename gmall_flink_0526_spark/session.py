@@ -16,11 +16,21 @@ tuned for a *Spark* deployment instead:
   about their zone, so the session TZ stays neutral.
 - Arrow enabled for every pandas interchange (Pandas UDFs,
   ``applyInPandas``, ``toPandas``).
+
+:func:`load_tables` also keeps a process-level memo of each input
+table's inferred schema, keyed on the file version (size and mtime,
+read through Hadoop's FileSystem) and on the parquet read settings
+that shape the schema. Inferring reads the parquet footer in a Spark
+job of its own, so only the first load of each file version pays one;
+later loads of the same version pass the memoized schema and run none.
+Only these static input tables use the memo: channel and dim-store
+reads open a fresh path on every call, where it would never hit.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -72,6 +82,21 @@ def get_spark(
     return spark
 
 
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: int):
+    """Run the block with ``spark.sql.shuffle.partitions`` set to ``n``
+    and restore the caller's value on exit, also when the block raises.
+    A streaming query reads the count when it starts and keeps it in its
+    checkpoint, so restoring the session value does not touch a query
+    that is still running."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -86,12 +111,71 @@ TESTDATA_TABLES = (
 )
 
 
+# Parquet read settings that change the schema Spark infers from a footer.
+_PARQUET_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+# path -> ((file fingerprint, schema settings), inferred StructType); one
+# entry per path, replaced when either half of the key changes. Two
+# concurrent loads of one path at worst both infer; either entry is valid.
+_SCHEMA_MEMO: dict = {}
+
+
+def _fingerprint(spark: SparkSession, path: str):
+    """``(path, size, mtime)`` of the file, or of every data file under
+    the directory, read through Hadoop's FileSystem; None if absent."""
+    from .sources.fs import _fs_and_path
+
+    fs, p = _fs_and_path(spark, path)
+    if not fs.exists(p):
+        return None
+    files, it = [], fs.listFiles(p, True)
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith((".", "_")):
+            files.append((st.getPath().toString(), st.getLen(), st.getModificationTime()))
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)``, reusing the schema inferred by an
+    earlier read of the same file version under the same settings."""
+    fp = _fingerprint(spark, path)
+    if fp is None:
+        return spark.read.parquet(path)  # Spark's own path-not-found error
+    key = (fp, tuple(spark.conf.get(k) for k in _PARQUET_SCHEMA_CONFS))
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[path] = (key, df.schema)
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
     """Load driver testdata parquet tables and register temp views.
 
     Returns ``{name: DataFrame}``. Registering views means operators can
     be written in either the DataFrame dialect or ``spark.sql`` — the
     plan is the same after Catalyst.
+
+    ``spark.read.parquet(path)`` infers the schema from the file footer,
+    which costs one Spark job per call. The schema of each path is kept
+    in a process-level memo keyed on the file version (size and mtime of
+    the file, or of every data file under a directory, via Hadoop's
+    FileSystem) and on the parquet read settings that shape the inferred
+    schema. The first load of each file version still pays the footer
+    job; a later load passes the schema and runs none. A rewritten file
+    or a changed setting is inferred again. The memo holds a plain
+    ``StructType``, so it outlives ``spark.stop()``; it never caches
+    data, and every call still scans its input. Only these static input
+    tables use it: channel and dim-store reads open a fresh path on
+    every call, where a memo would never hit.
     """
     from pyspark.sql import functions as F
 
@@ -103,7 +187,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
 
     out = {}
     for name in names or TESTDATA_TABLES:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         # Nanosecond timestamps arrive as epoch-nanos longs (see
         # nanosAsLong in get_spark); truncate to micros like every
         # µs-resolution engine (DuckDB included) does on read.

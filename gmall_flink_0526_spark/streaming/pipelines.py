@@ -59,6 +59,17 @@ def _overlap_writes(*thunks) -> None:
             f.result()
 
 
+def _release_checkpoint(df: DataFrame | None) -> None:
+    """Drop the blocks of a ``localCheckpoint``-ed frame now.
+    ``DataFrame.unpersist()`` does not reach them: the checkpoint RDD
+    is otherwise released only when the JVM garbage-collects it, so an
+    epoch's blocks would stay pinned for as long as GC takes. Call it
+    once nothing reads the frame any more (after the epoch's writes);
+    ``None`` is a no-op, for an epoch that failed before checkpointing."""
+    if df is not None:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def base_log_app(
     spark: SparkSession,
     reg: ChannelRegistry,
@@ -657,6 +668,7 @@ def doc_incremental_dedup_app(
         sess = batch.sparkSession
         sh = D.doc_shingles(batch, "doc_id", "text").persist()
         bands = D.lsh_band_keys(sh).persist()
+        kept = None
         try:
             self_dup = (
                 D.jaccard_verify(sh, D.lsh_pairs_from_bands(bands))
@@ -702,6 +714,7 @@ def doc_incremental_dedup_app(
                 ),
             )
         finally:
+            _release_checkpoint(kept)
             sh.unpersist()
             bands.unpersist()
 
@@ -761,6 +774,7 @@ def substring_dedup_app(
         sess = batch.sparkSession
         toks = D.doc_tokens(batch, "doc_id", "text").persist()
         grams = D.gram_positions_from(toks, L).persist()
+        cut = None
         try:
             grid = grams.groupBy("gh").agg(
                 F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
@@ -793,6 +807,7 @@ def substring_dedup_app(
                 ),
             )
         finally:
+            _release_checkpoint(cut)
             grams.unpersist()
             toks.unpersist()
 
@@ -931,7 +946,7 @@ def similarity_graph_app(
         bucketed = _resolve_layout(sess, batch)
         bsh = D.doc_shingles(batch, "doc_id", "text").persist()
         bpref = D.prefix_rows(bsh, jaccard_min, order="hash").persist()
-        cand = None
+        cand = new_pairs = None
         try:
             if hfs.exists(sess, pref_path):
                 all_pref = read_epoch_store(sess, pref_path, epoch_id).union(bpref)
@@ -1007,6 +1022,7 @@ def similarity_graph_app(
                 _write_sh,
             )
         finally:
+            _release_checkpoint(new_pairs)
             if cand is not None:
                 cand.unpersist()
             bpref.unpersist()
@@ -1074,7 +1090,7 @@ def emb_incremental_dedup_app(
 
         sess = batch.sparkSession
         batch = batch.persist()
-        assigned = None
+        assigned = kept = None
         try:
             if hfs.exists(sess, cent_path):
                 cents = sorted(
@@ -1156,6 +1172,7 @@ def emb_incremental_dedup_app(
                 ),
             )
         finally:
+            _release_checkpoint(kept)
             if assigned is not None:
                 assigned.unpersist()
             batch.unpersist()
@@ -1285,9 +1302,12 @@ def decon_screen_app(
             .select("vec_id", "eid", "cos_sim")
             .localCheckpoint()
         )
-        flags.write.mode("overwrite").parquet(
-            os.path.join(flags_path, f"epoch={epoch_id}")
-        )
+        try:
+            flags.write.mode("overwrite").parquet(
+                os.path.join(flags_path, f"epoch={epoch_id}")
+            )
+        finally:
+            _release_checkpoint(flags)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         with cache_scope(f"stream:decon_screen:{scope_token}"):
@@ -1437,9 +1457,12 @@ def triplet_mine_app(
             .select("qid", "cid", "cos_sim")
             .localCheckpoint()
         )
-        scored.write.mode("overwrite").parquet(
-            os.path.join(scored_path, f"epoch={epoch_id}")
-        )
+        try:
+            scored.write.mode("overwrite").parquet(
+                os.path.join(scored_path, f"epoch={epoch_id}")
+            )
+        finally:
+            _release_checkpoint(scored)
 
     def _fit_probes(sess: SparkSession, allv: DataFrame, cents) -> None:
         sess.createDataFrame(
@@ -1584,9 +1607,12 @@ def ptron_gate_app(
             )
             .localCheckpoint()
         )
-        grid.write.mode("overwrite").parquet(
-            os.path.join(grid_path, f"epoch={epoch_id}")
-        )
+        try:
+            grid.write.mode("overwrite").parquet(
+                os.path.join(grid_path, f"epoch={epoch_id}")
+            )
+        finally:
+            _release_checkpoint(grid)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         with cache_scope(f"stream:ptron_gate:{scope_token}"):

@@ -67,6 +67,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import shuffle_partitions
+
 DAY_MS = 24 * 3600 * 1000
 
 #: Hash buckets of every keyed-state operator — part of the
@@ -92,13 +94,8 @@ def state_fanout(spark: SparkSession):
     cost. A query reads the count when it starts and keeps it in its
     checkpoint, so restoring the session value does not touch a
     running query."""
-    n = min(STATE_BUCKETS, spark.sparkContext.defaultParallelism)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with shuffle_partitions(spark, min(STATE_BUCKETS, spark.sparkContext.defaultParallelism)):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)

@@ -385,7 +385,7 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     compaction time + resulting generation count."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables
+    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
     from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
     from gmall_flink_0526_spark.streaming.pipelines import (
         compact_signature_store,
@@ -406,11 +406,9 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         )
         reg.register("dwd_documents_unique")
         store = os.path.join(root, "store")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
         t0 = time.time()
-        try:
+        with shuffle_partitions(spark, 8):
             # same state-partition trade as the certified replay query
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
             q = doc_incremental_dedup_app(
                 spark, reg, os.path.join(root, "ckpt"), store
             )
@@ -425,8 +423,6 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
                 if p["numInputRows"] > 0
             ]
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         total_s = round(time.time() - t0, 2)
         bands = spark.read.parquet(os.path.join(store, "sig_bands"))
         growth = {
@@ -484,7 +480,7 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     distinct window cell."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables
+    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
     from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
     from gmall_flink_0526_spark.streaming.pipelines import (
         compact_signature_store,
@@ -505,10 +501,8 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         )
         reg.register("dwd_documents_cut")
         store = os.path.join(root, "store")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
         t0 = time.time()
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = substring_dedup_app(spark, reg, os.path.join(root, "ckpt"), store)
             q.processAllAvailable()
             progress = [
@@ -521,8 +515,6 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
                 if p["numInputRows"] > 0
             ]
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         total_s = round(time.time() - t0, 2)
         idx = spark.read.parquet(os.path.join(store, "win_index"))
         growth = {
@@ -569,7 +561,7 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     disjoint per-epoch discoveries."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables
+    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
     from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
     from gmall_flink_0526_spark.streaming.pipelines import similarity_graph_app
 
@@ -586,10 +578,8 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
             file_of=F.col("doc_id") % n_epochs,
         )
         store = os.path.join(root, "store")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
         t0 = time.time()
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+        with shuffle_partitions(spark, 8):
             q = similarity_graph_app(spark, reg, os.path.join(root, "ckpt"), store)
             q.processAllAvailable()
             progress = [
@@ -602,8 +592,6 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
                 if p["numInputRows"] > 0
             ]
             q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         total_s = round(time.time() - t0, 2)
         pairs = spark.read.parquet(os.path.join(store, "pairs"))
         per_epoch_pairs = {
@@ -724,7 +712,7 @@ def probe_doc_pagerank(spark, sf_dir: str) -> dict:
         PAGERANK_ITERS,
         PAGERANK_RESET,
     )
-    from gmall_flink_0526_spark.session import load_tables
+    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     pairs = prefix_filter_pairs(spark, sf_dir).select("doc_a", "doc_b")

@@ -18,15 +18,22 @@ Exit code 0 iff every selected query matches.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
+
+    # Spark's Python workers import the package too: give them this checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
 
     from tests.conftest import assert_matches_oracle, duck_con  # noqa: F401
 
