@@ -666,23 +666,22 @@ def synth_behavior_log(events: DataFrame, corrupt_mod: int | None = None) -> Dat
 def log_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import base_log_app
-    from ..streaming.replay import temp_replay_root
+    from ..streaming.replay import replay_registry, run_to_end
 
     ev = load_tables(spark, sf_dir, "events")["events"].filter(
         F.col("event_id") % REPLAY_MOD == 0
     )
     lines = synth_behavior_log(ev, corrupt_mod=CORRUPT_MOD)
-    root = temp_replay_root("gmall_logsplit_")
-    reg = ChannelRegistry(root)
-    reg.register("ods_base_log", schema="event_id long, ts timestamp, log string")
-    write_replay(
-        lines, reg.channels["ods_base_log"].path, n_files=3, order_by=["ts", "event_id"]
+    reg = replay_registry("gmall_logsplit_", ods_base_log=(lines, 3, ["ts", "event_id"]))
+    # the session's fan-out, not JVM_PARTITIONS: 8 measured no faster
+    # here (tools/profile_query.py, sf0.1, 4 cores)
+    run_to_end(
+        spark,
+        reg,
+        lambda: base_log_app(spark, reg, os.path.join(reg.root, "ckpt")),
+        partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
-    q = base_log_app(spark, reg, os.path.join(root, "ckpt"))
-    q.processAllAvailable()
-    q.stop()
     zero = F.lit(0).cast("long")
     outs = [
         reg.read_batch(spark, "dwd_start_log").agg(

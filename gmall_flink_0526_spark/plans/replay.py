@@ -12,9 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..session import load_tables, local_table, shuffle_partitions
+from ..session import load_tables, local_table
 from ..streaming import stateful
-from ..streaming.replay import replay_stateful, temp_replay_root
+from ..streaming.replay import replay_registry, replay_stateful, run_to_end
 from .catalog import register, register_setup
 from .logs import SESSION_GAP_MIN
 
@@ -248,29 +248,15 @@ kept{f} AS (
 def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import doc_incremental_dedup_app
 
     docs = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    root = temp_replay_root("gmall_incdedup_")
-    reg = ChannelRegistry(root)
-    reg.register("ods_documents", schema="doc_id long, text string")
-    write_replay(
-        docs,
-        reg.channels["ods_documents"].path,
-        n_files=_N_DEDUP_BATCHES,
-        order_by=["doc_id"],
-        file_of=F.col("doc_id") % _N_DEDUP_BATCHES,
+    reg = replay_registry(
+        "gmall_incdedup_",
+        ods_documents=(docs, _N_DEDUP_BATCHES, ["doc_id"], F.col("doc_id") % _N_DEDUP_BATCHES),
     )
-    reg.register("dwd_documents_unique")
-    with shuffle_partitions(spark, 8):
-        # foreachBatch LSH joins are JVM-side: 8 commit/shuffle units,
-        # not the Python-state replays' 16 (same trade as the join apps)
-        q = doc_incremental_dedup_app(
-            spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-        )
-        q.processAllAvailable()
-        q.stop()
+    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+    run_to_end(spark, reg, lambda: doc_incremental_dedup_app(spark, reg, ckpt, store))
     return reg.read_batch(spark, "dwd_documents_unique").select("doc_id")
 
 
@@ -616,7 +602,6 @@ _register_visitor_stats_sliding_stream()
 def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import order_wide_app
 
     # deterministic 1-in-2 sample: bounds the replay-harness cost of
@@ -641,34 +626,28 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             far = far.withColumn(name, F.lit(val))
         return df.unionByName(far.select(*df.columns))
 
-    root = temp_replay_root("gmall_owstream_")
-    reg = ChannelRegistry(root)
-    reg.register("dwd_order_info", schema="order_id long, ts timestamp")
-    reg.register("dwd_order_detail", schema="detail_order_id long, ts timestamp, value double")
-    write_replay(
-        with_sentinel(orders, {"order_id": -1}),
-        reg.channels["dwd_order_info"].path, n_files=2, order_by=["ts", "order_id"],
+    reg = replay_registry(
+        "gmall_owstream_",
+        dwd_order_info=(with_sentinel(orders, {"order_id": -1}), 2, ["ts", "order_id"]),
+        dwd_order_detail=(
+            with_sentinel(details, {"detail_order_id": -2, "value": 0.0}),
+            2,
+            ["ts", "detail_order_id"],
+        ),
     )
-    write_replay(
-        with_sentinel(details, {"detail_order_id": -2, "value": 0.0}),
-        reg.channels["dwd_order_detail"].path, n_files=2, order_by=["ts", "detail_order_id"],
-    )
-    reg.register("dwm_order_wide")
     dim = local_table(
         spark, [(i, f"bucket_{i}") for i in range(10)], "bucket_id long, bucket_name string"
     )
-    with shuffle_partitions(spark, 8):
-        # 8, not the Python-state replays' 16: stream-stream join state is
-        # JVM-side, so fewer state-store commit units win at replay scale
-        # (measured 16.1 s @16 -> 7.0 s @8, identical output)
-        q = order_wide_app(
+    run_to_end(
+        spark,
+        reg,
+        lambda: order_wide_app(
             spark,
             reg,
-            os.path.join(root, "ckpt"),
+            os.path.join(reg.root, "ckpt"),
             dims=[(dim, F.col("order_id") % 10 == F.col("bucket_id"), ["bucket_id", "bucket_name"])],
-        )
-        q.processAllAvailable()
-        q.stop()
+        ),
+    )
     return (
         reg.read_batch(spark, "dwm_order_wide")
         .filter(F.col("order_id") >= 0)
@@ -700,13 +679,10 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cdc", "routing", "streaming", "dim"),
 )
 def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import atexit
     import os
-    import tempfile
 
     from ..sources.cdc import envelope_from_table
     from ..sources.dimstore import DimStore
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import base_db_app
 
     # deterministic 1-in-2 sample, same predicate in the oracle —
@@ -720,14 +696,7 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("after", "o_orderkey"), F.element_at("before", "o_orderkey")
         ).cast("long"),
     )
-    root = temp_replay_root("gmall_basedb_")
-    reg = ChannelRegistry(root)
-    reg.register(
-        "ods_base_db",
-        schema="database string, tableName string, before map<string,string>, "
-        "after map<string,string>, type string, k long",
-    )
-    write_replay(env, reg.channels["ods_base_db"].path, n_files=3, order_by=["type", "k"])
+    reg = replay_registry("gmall_basedb_", ods_base_db=(env, 3, ["type", "k"]))
     config = local_table(
         spark,
         [
@@ -737,12 +706,8 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sourceTable string, operateType string, sinkType string, sinkTable string, "
         "sinkColumns string, sinkPk string, sinkExtend string",
     )
-    store = DimStore(os.path.join(root, "dims"))
-    with shuffle_partitions(spark, 8):
-        # foreachBatch routing/MERGE is JVM-side: 8 units, not 16
-        q = base_db_app(spark, reg, store, config, os.path.join(root, "ckpt"))
-        q.processAllAvailable()
-        q.stop()
+    store, ckpt = DimStore(os.path.join(reg.root, "dims")), os.path.join(reg.root, "ckpt")
+    run_to_end(spark, reg, lambda: base_db_app(spark, reg, store, config, ckpt))
     fact = reg.read_batch(spark, "dwd_fact_log").agg(
         F.lit("fact").alias("branch"),
         F.count("*").alias("ct"),
@@ -777,7 +742,6 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import payment_wide_app
 
     events = load_tables(spark, sf_dir, "events")["events"].filter(
@@ -798,24 +762,14 @@ def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             far = far.withColumn(name, F.lit(val))
         return df.unionByName(far.select(*df.columns))
 
-    root = temp_replay_root("gmall_pwstream_")
-    reg = ChannelRegistry(root)
-    reg.register("dwd_payment_info", schema="payment_order_id long, ts timestamp")
-    reg.register("dwm_order_wide", schema="order_id long, ts timestamp, value double")
-    write_replay(
-        with_sentinel(payments, {"payment_order_id": -1}),
-        reg.channels["dwd_payment_info"].path, n_files=2, order_by=["ts", "payment_order_id"],
+    reg = replay_registry(
+        "gmall_pwstream_",
+        dwd_payment_info=(
+            with_sentinel(payments, {"payment_order_id": -1}), 2, ["ts", "payment_order_id"]
+        ),
+        dwm_order_wide=(with_sentinel(wide, {"order_id": -2, "value": 0.0}), 2, ["ts", "order_id"]),
     )
-    write_replay(
-        with_sentinel(wide, {"order_id": -2, "value": 0.0}),
-        reg.channels["dwm_order_wide"].path, n_files=2, order_by=["ts", "order_id"],
-    )
-    reg.register("dwm_payment_wide")
-    with shuffle_partitions(spark, 8):
-        # see order_wide_stream: JVM join state, 8 commit units not 16
-        q = payment_wide_app(spark, reg, os.path.join(root, "ckpt"))
-        q.processAllAvailable()
-        q.stop()
+    run_to_end(spark, reg, lambda: payment_wide_app(spark, reg, os.path.join(reg.root, "ckpt")))
     return (
         reg.read_batch(spark, "dwm_payment_wide")
         .filter(F.col("order_id") >= 0)
@@ -879,34 +833,19 @@ def doc_quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import textops
     from ..operators.partitioning import spread
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import doc_quality_gate_app
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     lines = spread(docs, "doc_id").withColumn(
         "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
     )
-    root = temp_replay_root("gmall_qgate_")
-    reg = ChannelRegistry(root)
-    reg.register(
-        "ods_documents",
-        schema="doc_id long, text string, lang string, source string, "
-        "n_chars long, ts timestamp",
+    reg = replay_registry(
+        "gmall_qgate_",
+        ods_documents=(
+            lines.select("doc_id", "text", "lang", "source", "n_chars", "ts"), 2, ["ts", "doc_id"]
+        ),
     )
-    write_replay(
-        lines.select("doc_id", "text", "lang", "source", "n_chars", "ts"),
-        reg.channels["ods_documents"].path,
-        n_files=2,
-        order_by=["ts", "doc_id"],
-    )
-    with shuffle_partitions(spark, 8):
-        # dropDuplicates state partitions are commit units, not compute
-        # (the r4 replay lesson): 8, not the session default — in a
-        # vanilla 200-partition session the replay otherwise pays
-        # hundreds of state-store commits
-        q = doc_quality_gate_app(spark, reg, os.path.join(root, "ckpt"))
-        q.processAllAvailable()
-        q.stop()
+    run_to_end(spark, reg, lambda: doc_quality_gate_app(spark, reg, os.path.join(reg.root, "ckpt")))
     out = textops.with_tokens(reg.read_batch(spark, "dwd_documents_quality"))
     per_digest = (
         out.select(
@@ -1043,29 +982,17 @@ kept{f} AS (
 def embedding_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import emb_incremental_dedup_app
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
         "vec_id", "embedding"
     )
-    root = temp_replay_root("gmall_embinc_")
-    reg = ChannelRegistry(root)
-    reg.register("ods_embeddings", schema="vec_id long, embedding array<float>")
-    write_replay(
-        emb,
-        reg.channels["ods_embeddings"].path,
-        n_files=_N_EMB_BATCHES,
-        order_by=["vec_id"],
-        file_of=F.col("vec_id") % _N_EMB_BATCHES,
+    reg = replay_registry(
+        "gmall_embinc_",
+        ods_embeddings=(emb, _N_EMB_BATCHES, ["vec_id"], F.col("vec_id") % _N_EMB_BATCHES),
     )
-    reg.register("dwd_embeddings_unique")
-    with shuffle_partitions(spark, 8):
-        q = emb_incremental_dedup_app(
-            spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-        )
-        q.processAllAvailable()
-        q.stop()
+    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+    run_to_end(spark, reg, lambda: emb_incremental_dedup_app(spark, reg, ckpt, store))
     return reg.read_batch(spark, "dwd_embeddings_unique").select("vec_id")
 
 
@@ -1098,7 +1025,6 @@ def _register_decon_semantic_stream():
     def decontaminate_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
 
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import decon_screen_app, merged_decon_flags
 
         emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
@@ -1107,24 +1033,14 @@ def _register_decon_semantic_stream():
         train = emb.filter(F.col("vec_id") % EVAL_MOD != 0)
         ev = emb.filter(F.col("vec_id") % EVAL_MOD == 0)
         n_train = train.count()
-        root = temp_replay_root("gmall_deconstream_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_embeddings", schema="vec_id long, embedding array<float>")
-        write_replay(
-            train, reg.channels["ods_embeddings"].path, n_files=3, order_by=["vec_id"]
+        reg = replay_registry("gmall_deconstream_", ods_embeddings=(train, 3, ["vec_id"]))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(
+            spark,
+            reg,
+            lambda: decon_screen_app(spark, reg, ckpt, store, eval_df=ev, expected_train=n_train),
         )
-        with shuffle_partitions(spark, 8):
-            q = decon_screen_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt"),
-                os.path.join(root, "store"),
-                eval_df=ev,
-                expected_train=n_train,
-            )
-            q.processAllAvailable()
-            q.stop()
-        return merged_decon_flags(spark, os.path.join(root, "store"))
+        return merged_decon_flags(spark, store)
 
 
 _register_decon_semantic_stream()
@@ -1162,7 +1078,6 @@ def _register_contrastive_triplets_stream():
         import os
 
         from ..operators.cache import scoped_persist
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import merged_triplet_scored, triplet_mine_app
         from .similarity import triplets_from_scored
 
@@ -1170,23 +1085,12 @@ def _register_contrastive_triplets_stream():
             "vec_id", "embedding"
         )
         n_corpus = emb.count()
-        root = temp_replay_root("gmall_tripstream_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_embeddings", schema="vec_id long, embedding array<float>")
-        write_replay(
-            emb, reg.channels["ods_embeddings"].path, n_files=3, order_by=["vec_id"]
+        reg = replay_registry("gmall_tripstream_", ods_embeddings=(emb, 3, ["vec_id"]))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(
+            spark, reg, lambda: triplet_mine_app(spark, reg, ckpt, store, expected_corpus=n_corpus)
         )
-        with shuffle_partitions(spark, 8):
-            q = triplet_mine_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt"),
-                os.path.join(root, "store"),
-                expected_corpus=n_corpus,
-            )
-            q.processAllAvailable()
-            q.stop()
-        scored = scoped_persist(merged_triplet_scored(spark, os.path.join(root, "store")))
+        scored = scoped_persist(merged_triplet_scored(spark, store))
         return triplets_from_scored(scored)
 
 
@@ -1223,30 +1127,18 @@ def _register_quality_perceptron_stream():
     def quality_perceptron_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
 
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import merged_ptron_gate, ptron_gate_app
 
         docs = load_tables(spark, sf_dir, "documents")["documents"].select(
             "doc_id", "text", "lang"
         )
         n_docs = docs.count()
-        root = temp_replay_root("gmall_ptronstream_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string, lang string")
-        write_replay(
-            docs, reg.channels["ods_documents"].path, n_files=3, order_by=["doc_id"]
+        reg = replay_registry("gmall_ptronstream_", ods_documents=(docs, 3, ["doc_id"]))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(
+            spark, reg, lambda: ptron_gate_app(spark, reg, ckpt, store, expected_docs=n_docs)
         )
-        with shuffle_partitions(spark, 8):
-            q = ptron_gate_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt"),
-                os.path.join(root, "store"),
-                expected_docs=n_docs,
-            )
-            q.processAllAvailable()
-            q.stop()
-        return merged_ptron_gate(spark, os.path.join(root, "store"))
+        return merged_ptron_gate(spark, store)
 
 
 _register_quality_perceptron_stream()
@@ -1502,28 +1394,17 @@ def _register_doc_pagerank_stream():
         import os
 
         from ..operators.graph import pagerank_partitioned
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import similarity_graph_app
         from .logs import PAGERANK_D, PAGERANK_ITERS, PAGERANK_RESET
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
-        root = temp_replay_root("gmall_simgraph_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string")
-        write_replay(
-            docs.select("doc_id", "text"),
-            reg.channels["ods_documents"].path,
-            n_files=2,
-            order_by=["doc_id"],
-            file_of=F.col("doc_id") % 2,
+        reg = replay_registry(
+            "gmall_simgraph_",
+            ods_documents=(docs.select("doc_id", "text"), 2, ["doc_id"], F.col("doc_id") % 2),
         )
-        with shuffle_partitions(spark, 8):
-            q = similarity_graph_app(
-                spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-            )
-            q.processAllAvailable()
-            q.stop()
-        pairs = spark.read.parquet(os.path.join(root, "store", "pairs")).select(
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: similarity_graph_app(spark, reg, ckpt, store))
+        pairs = spark.read.parquet(os.path.join(store, "pairs")).select(
             "doc_a", "doc_b"
         )
         edges = (
@@ -1615,31 +1496,17 @@ def _sql_substring_incremental(n_epochs: int) -> str:
 def substring_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import substring_dedup_app
 
     docs = load_tables(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "text"
     )
-    root = temp_replay_root("gmall_substr_")
-    reg = ChannelRegistry(root)
-    reg.register("ods_documents", schema="doc_id long, text string")
-    write_replay(
-        docs,
-        reg.channels["ods_documents"].path,
-        n_files=_N_SUBSTR_BATCHES,
-        order_by=["doc_id"],
-        file_of=F.col("doc_id") % _N_SUBSTR_BATCHES,
+    reg = replay_registry(
+        "gmall_substr_",
+        ods_documents=(docs, _N_SUBSTR_BATCHES, ["doc_id"], F.col("doc_id") % _N_SUBSTR_BATCHES),
     )
-    reg.register("dwd_documents_cut")
-    with shuffle_partitions(spark, 8):
-        # JVM-side window-hash joins: 8 commit/shuffle units, the
-        # incremental-dedup trade
-        q = substring_dedup_app(
-            spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-        )
-        q.processAllAvailable()
-        q.stop()
+    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+    run_to_end(spark, reg, lambda: substring_dedup_app(spark, reg, ckpt, store))
     return reg.read_batch(spark, "dwd_documents_cut").select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -1675,32 +1542,18 @@ def _register_heavy_hitters_stream():
         from ..operators import textops
         from ..operators.aggregates import cms_estimate
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import cms_sketch_app, merged_cms_grid
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         lines = spread(docs, "doc_id").withColumn(
             "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
         )
-        root = temp_replay_root("gmall_cms_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string, ts timestamp")
-        write_replay(
-            lines.select("doc_id", "text", "ts"),
-            reg.channels["ods_documents"].path,
-            n_files=2,
-            order_by=["ts", "doc_id"],
+        reg = replay_registry(
+            "gmall_cms_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
         )
-        with shuffle_partitions(spark, 8):
-            # per-batch grids are <= depth*width rows: 8 shuffle
-            # partitions, not a vanilla session's 200, keeps the
-            # 3-batch replay's commit count honest (the r4 lesson)
-            q = cms_sketch_app(
-                spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-            )
-            q.processAllAvailable()
-            q.stop()
-        grid = merged_cms_grid(spark, os.path.join(root, "store"))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: cms_sketch_app(spark, reg, ckpt, store))
+        grid = merged_cms_grid(spark, store)
         toks = docs.select(F.explode(textops.tokenize(F.col("text"))).alias("tok"))
         topk = (
             toks.groupBy("tok")
@@ -1787,29 +1640,14 @@ def _register_approx_distinct_hll_stream():
         import os
 
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import hll_sketch_app, merged_hll_registers
 
         ev = load_tables(spark, sf_dir, "events")["events"]
         lines = spread(ev, "event_id").select("event_id", "ts", "event_type")
-        root = temp_replay_root("gmall_hll_")
-        reg = ChannelRegistry(root)
-        reg.register(
-            "ods_events", schema="event_id long, ts timestamp, event_type string"
-        )
-        write_replay(
-            lines, reg.channels["ods_events"].path, n_files=2,
-            order_by=["ts", "event_id"],
-        )
-        with shuffle_partitions(spark, 8):
-            # per-batch grids are <= types*m rows: 8 shuffle partitions
-            # keeps the replay's commit count honest (the r4 lesson)
-            q = hll_sketch_app(
-                spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-            )
-            q.processAllAvailable()
-            q.stop()
-        regs = merged_hll_registers(spark, os.path.join(root, "store"))
+        reg = replay_registry("gmall_hll_", ods_events=(lines, 2, ["ts", "event_id"]))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: hll_sketch_app(spark, reg, ckpt, store))
+        regs = merged_hll_registers(spark, store)
         return hll_audit_from_regs(spark, regs)
 
 
@@ -1845,7 +1683,6 @@ def _register_decontaminate_bloom_stream():
 
         from ..operators import dedup as D
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import bloom_filter_app, merged_bloom_words
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
@@ -1854,29 +1691,17 @@ def _register_decontaminate_bloom_stream():
         lines = spread(docs.filter(is_eval), "doc_id").withColumn(
             "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
         )
-        root = temp_replay_root("gmall_bloom_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_eval_docs", schema="doc_id long, text string, ts timestamp")
-        write_replay(
-            lines.select("doc_id", "text", "ts"),
-            reg.channels["ods_eval_docs"].path,
-            n_files=2,
-            order_by=["ts", "doc_id"],
+        reg = replay_registry(
+            "gmall_bloom_",
+            ods_eval_docs=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"]),
         )
-        with shuffle_partitions(spark, 8):
-            # per-batch word grids are <= bits/BLOOM_WORD rows: keep
-            # the 3-batch replay's commit count honest (the r4 lesson)
-            q = bloom_filter_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt"),
-                os.path.join(root, "store"),
-                bits=bits,
-                ngram=DECON_NGRAM,
-            )
-            q.processAllAvailable()
-            q.stop()
-        words = merged_bloom_words(spark, os.path.join(root, "store"))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(
+            spark,
+            reg,
+            lambda: bloom_filter_app(spark, reg, ckpt, store, bits=bits, ngram=DECON_NGRAM),
+        )
+        words = merged_bloom_words(spark, store)
         from .llmprep import corpus_decon_grams
 
         return D.bloom_decontaminate(
@@ -1917,31 +1742,18 @@ def _register_perplexity_gate_stream():
 
         from ..operators import lm
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import lm_counts_app, merged_lm_model
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         lines = spread(docs, "doc_id").withColumn(
             "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
         )
-        root = temp_replay_root("gmall_lm_")
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string, ts timestamp")
-        write_replay(
-            lines.select("doc_id", "text", "ts"),
-            reg.channels["ods_documents"].path,
-            n_files=2,
-            order_by=["ts", "doc_id"],
+        reg = replay_registry(
+            "gmall_lm_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
         )
-        with shuffle_partitions(spark, 8):
-            # per-batch grids are batch-distinct-bigram-sized: 8
-            # shuffle partitions keeps the replay's commit count honest
-            q = lm_counts_app(
-                spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-            )
-            q.processAllAvailable()
-            q.stop()
-        model = merged_lm_model(spark, os.path.join(root, "store"))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: lm_counts_app(spark, reg, ckpt, store))
+        model = merged_lm_model(spark, store)
         # the batch family's staging, shared — not re-implemented here
         # (self-review r13): one staged token frame, one gram frame
         t, _staged, grams = _staged_grams(spark, sf_dir)
@@ -1979,30 +1791,14 @@ def _register_events_gapfill_stream():
         import os
 
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import events_rollup_app, merged_events_rollup
 
         ev = load_tables(spark, sf_dir, "events")["events"]
         lines = spread(ev, "event_id").select("event_id", "ts", "event_type", "value")
-        root = temp_replay_root("gmall_roll_")
-        reg = ChannelRegistry(root)
-        reg.register(
-            "ods_events",
-            schema="event_id long, ts timestamp, event_type string, value double",
-        )
-        write_replay(
-            lines, reg.channels["ods_events"].path, n_files=2,
-            order_by=["ts", "event_id"],
-        )
-        with shuffle_partitions(spark, 8):
-            # per-batch grids are entity x hour rows: 8 shuffle
-            # partitions keeps the replay's commit count honest
-            q = events_rollup_app(
-                spark, reg, os.path.join(root, "ckpt"), os.path.join(root, "store")
-            )
-            q.processAllAvailable()
-            q.stop()
-        roll = merged_events_rollup(spark, os.path.join(root, "store"))
+        reg = replay_registry("gmall_roll_", ods_events=(lines, 2, ["ts", "event_id"]))
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: events_rollup_app(spark, reg, ckpt, store))
+        roll = merged_events_rollup(spark, store)
         return locf_output(dense_from_rollup(roll))
 
 
@@ -2121,7 +1917,6 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.cache import corpus_value
     from ..operators.partitioning import spread
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import hist_sketch_app
 
     ev = load_tables(spark, sf_dir, "events")["events"]
@@ -2142,27 +1937,15 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
         lines = spread(ev, "event_id").select(
             "event_id", "ts", "event_type", "value"
         )
-        root = temp_replay_root("gmall_hist_")
-        reg = ChannelRegistry(root)
-        reg.register(
-            "ods_events",
-            schema="event_id long, ts timestamp, event_type string, value double",
+        reg = replay_registry(
+            "gmall_hist_",
+            ods_events=(
+                lines, HIST_EPOCHS, ["event_id"], F.pmod(F.col("event_id"), F.lit(HIST_EPOCHS))
+            ),
         )
-        write_replay(
-            lines, reg.channels["ods_events"].path, n_files=HIST_EPOCHS,
-            order_by=["event_id"],
-            file_of=F.pmod(F.col("event_id"), F.lit(HIST_EPOCHS)),
-        )
-        with shuffle_partitions(spark, 8):
-            # per-batch grids are <= types*bins rows: keep the replay's
-            # commit count honest (the r4 lesson)
-            q = hist_sketch_app(
-                spark, reg, os.path.join(root, "ckpt"),
-                os.path.join(root, "store"), bounds_rows,
-            )
-            q.processAllAvailable()
-            q.stop()
-        return root, bounds_rows
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
+        run_to_end(spark, reg, lambda: hist_sketch_app(spark, reg, ckpt, store, bounds_rows))
+        return reg.root, bounds_rows
 
     # ONE memo holds (root, bounds): they are a unit — the bounds the
     # store was provisioned with are the only bounds its readers may use
@@ -2337,7 +2120,6 @@ def dim_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.cdc import envelope_from_table
     from ..sources.dimstore import DimStore
-    from ..sources.registry import ChannelRegistry, write_replay
     from ..streaming.pipelines import base_db_app
 
     orders = load_tables(spark, sf_dir, "orders")["orders"]
@@ -2347,15 +2129,8 @@ def dim_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("after", "o_orderkey"), F.element_at("before", "o_orderkey")
         ).cast("long"),
     )
-    root = temp_replay_root("gmall_dimevolve_")
-    reg = ChannelRegistry(root)
-    reg.register(
-        "ods_base_db",
-        schema="database string, tableName string, before map<string,string>, "
-        "after map<string,string>, type string, k long",
-    )
-    src_path = reg.channels["ods_base_db"].path
-    write_replay(env, src_path, n_files=2, order_by=["type", "k"], file_of=F.col("k") % 2)
+    reg = replay_registry("gmall_dimevolve_", ods_base_db=(env, 2, ["type", "k"], F.col("k") % 2))
+    root, src_path = reg.root, reg.channels["ods_base_db"].path
 
     cfg_schema = (
         "sourceTable string, operateType string, sinkType string, sinkTable string, "
@@ -2382,17 +2157,17 @@ def dim_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = DimStore(os.path.join(root, "dims"))
     provider = lambda: spark.read.parquet(cfg_dir)  # noqa: E731
+    ckpt = os.path.join(root, "ckpt")
+    # the session's fan-out, not JVM_PARTITIONS: at 8 this replay
+    # measured slower (tools/profile_query.py, sf0.1, 4 cores)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     set_config("o_orderkey,o_totalprice")
-    q = base_db_app(spark, reg, store, provider, os.path.join(root, "ckpt"))
-    q.processAllAvailable()
-    q.stop()
+    run_to_end(spark, reg, lambda: base_db_app(spark, reg, store, provider, ckpt), partitions=parts)
 
     # the table_process update lands; epoch 1 arrives after it
     set_config("o_orderkey,o_totalprice,o_orderstatus")
     shutil.move(os.path.join(root, "hidden.parquet"), os.path.join(src_path, hidden))
-    q2 = base_db_app(spark, reg, store, provider, os.path.join(root, "ckpt"))
-    q2.processAllAvailable()
-    q2.stop()
+    run_to_end(spark, reg, lambda: base_db_app(spark, reg, store, provider, ckpt), partitions=parts)
 
     return store.read(spark, "dim_order_info").select(
         F.col("o_orderkey").cast("long").alias("o_orderkey"),
@@ -2433,39 +2208,35 @@ def _register_dsir_gate_stream():
         import os
 
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import lm_counts_app, merged_lm_model
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         lines = spread(docs, "doc_id").withColumn(
             "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
         )
-        root = temp_replay_root("gmall_dsir_")
-        reg = ChannelRegistry(root)
-        reg.register(
-            "ods_documents", schema="doc_id long, text string, lang string, ts timestamp"
+        reg = replay_registry(
+            "gmall_dsir_",
+            ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
         )
-        write_replay(
-            lines.select("doc_id", "text", "lang", "ts"),
-            reg.channels["ods_documents"].path,
-            n_files=2,
-            order_by=["ts", "doc_id"],
-        )
-        with shuffle_partitions(spark, 8):
-            q_raw = lm_counts_app(
+        root = reg.root
+        run_to_end(
+            spark,
+            reg,
+            lambda: lm_counts_app(
                 spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
-            )
-            q_raw.processAllAvailable()
-            q_raw.stop()
-            q_tgt = lm_counts_app(
+            ),
+        )
+        run_to_end(
+            spark,
+            reg,
+            lambda: lm_counts_app(
                 spark,
                 reg,
                 os.path.join(root, "ckpt_tgt"),
                 os.path.join(root, "tgt"),
                 doc_filter=F.col("lang") == DSIR_TARGET_LANG,
-            )
-            q_tgt.processAllAvailable()
-            q_tgt.stop()
+            ),
+        )
         raw_model = merged_lm_model(spark, os.path.join(root, "raw"))
         tgt_model = merged_lm_model(spark, os.path.join(root, "tgt"))
         # target ingredient frames from the merged model: seen-bigram
@@ -2528,41 +2299,35 @@ def _register_dsir_hashed_stream():
         import os
 
         from ..operators.partitioning import spread
-        from ..sources.registry import ChannelRegistry, write_replay
         from ..streaming.pipelines import dsir_grid_app, merged_dsir_grid
 
         docs = load_tables(spark, sf_dir, "documents")["documents"]
         lines = spread(docs, "doc_id").withColumn(
             "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
         )
-        root = temp_replay_root("gmall_dsirh_")
-        reg = ChannelRegistry(root)
-        reg.register(
-            "ods_documents", schema="doc_id long, text string, lang string, ts timestamp"
+        reg = replay_registry(
+            "gmall_dsirh_",
+            ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
         )
-        write_replay(
-            lines.select("doc_id", "text", "lang", "ts"),
-            reg.channels["ods_documents"].path,
-            n_files=2,
-            order_by=["ts", "doc_id"],
-        )
-        with shuffle_partitions(spark, 8):
-            # per-epoch grids are <= DSIR_HASH_B rows: 8 shuffle
-            # partitions keeps the replay's commit count honest
-            q_raw = dsir_grid_app(
+        root = reg.root
+        run_to_end(
+            spark,
+            reg,
+            lambda: dsir_grid_app(
                 spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
-            )
-            q_raw.processAllAvailable()
-            q_raw.stop()
-            q_tgt = dsir_grid_app(
+            ),
+        )
+        run_to_end(
+            spark,
+            reg,
+            lambda: dsir_grid_app(
                 spark,
                 reg,
                 os.path.join(root, "ckpt_tgt"),
                 os.path.join(root, "tgt"),
                 doc_filter=F.col("lang") == DSIR_TARGET_LANG,
-            )
-            q_tgt.processAllAvailable()
-            q_tgt.stop()
+            ),
+        )
         raw = merged_dsir_grid(spark, os.path.join(root, "raw"))
         tgt = merged_dsir_grid(spark, os.path.join(root, "tgt")).select(
             "b", F.col("ct").alias("tct")

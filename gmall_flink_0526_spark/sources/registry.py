@@ -131,11 +131,12 @@ class ChannelRegistry:
         """Start a streaming write to a channel; returns the query.
 
         ``available_now=True`` uses Trigger.AvailableNow: the query
-        consumes everything currently in the source and terminates
-        cleanly on its own (``q.awaitTermination()``), which replay
-        harnesses prefer over drain-then-stop — stopping a live query
-        can interrupt an in-flight timeout-evaluation batch mid
-        state-commit (noisy, though harmless after a drain)."""
+        consumes everything currently in the source and terminates on
+        its own (``q.awaitTermination()``). The catalog replays do not
+        use it: they run through ``streaming.replay.run_to_end``, which
+        drains and then stops, because under ``ProcessingTimeTimeout``
+        state an AvailableNow query keeps scheduling timeout batches
+        and never terminates."""
         ch = self._get(name)
         writer = df.writeStream.option(
             "checkpointLocation", os.path.join(checkpoint_root, name)

@@ -94,8 +94,14 @@ def state_fanout(spark: SparkSession):
     cost. A query reads the count when it starts and keeps it in its
     checkpoint, so restoring the session value does not touch a
     running query."""
-    with shuffle_partitions(spark, min(STATE_BUCKETS, spark.sparkContext.defaultParallelism)):
+    with shuffle_partitions(spark, state_partitions(spark)):
         yield
+
+
+def state_partitions(spark: SparkSession) -> int:
+    """The shuffle partitions of one wave of state tasks, the count
+    :func:`state_fanout` starts keyed-state queries with."""
+    return min(STATE_BUCKETS, spark.sparkContext.defaultParallelism)
 
 
 _INTEGRAL_T = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)

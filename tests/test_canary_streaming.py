@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
+from gmall_flink_0526_spark.streaming.replay import run_to_end
 
 
 def test_session_window_bounds_and_merge_pinned(spark):
@@ -67,22 +68,21 @@ def _counting_fn(key, pdf_iter, state: GroupState):
 def test_apply_in_pandas_with_state_persists_and_timeout_quiet_in_drain(
     spark, tmp_path
 ):
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
-        reg = ChannelRegistry(str(tmp_path))
-        reg.register("ods_canary", schema="uid long, v long")
-        rows = spark.createDataFrame(
-            [(u, b) for b in range(3) for u in (1, 2)], "uid long, v long"
-        )
-        # 3 micro-batch files, each carrying one row per uid
-        write_replay(
-            rows,
-            reg.channels["ods_canary"].path,
-            n_files=3,
-            order_by=["v", "uid"],
-            file_of=F.col("v"),
-        )
+    reg = ChannelRegistry(str(tmp_path))
+    rows = spark.createDataFrame(
+        [(u, b) for b in range(3) for u in (1, 2)], "uid long, v long"
+    )
+    reg.register("ods_canary", schema="uid long, v long")
+    # 3 micro-batch files, each carrying one row per uid
+    write_replay(
+        rows,
+        reg.channels["ods_canary"].path,
+        n_files=3,
+        order_by=["v", "uid"],
+        file_of=F.col("v"),
+    )
+
+    def start():
         src = reg.read_stream(spark, "ods_canary", max_files_per_trigger=1)
         out = (
             src.groupBy("uid")
@@ -94,28 +94,18 @@ def test_apply_in_pandas_with_state_persists_and_timeout_quiet_in_drain(
                 GroupStateTimeout.ProcessingTimeTimeout,
             )
         )
-        reg.register("dwd_canary")
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", reg.channels["dwd_canary"].path)
-            .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt"))
-            .start()
-        )
-        from .test_streaming import drain
+        return reg.write_stream(out, "dwd_canary", os.path.join(str(tmp_path), "ckpt"))
 
-        drain(q, timeout=120, settle_s=3.0)
-        q.stop()
-        got = reg.read_batch(spark, "dwd_canary")
-        # state accumulated across the three micro-batches...
-        per_uid = {
-            r["uid"]: r["mx"]
-            for r in got.filter(F.col("src") == "data")
-            .groupBy("uid")
-            .agg(F.max("n").alias("mx"))
-            .collect()
-        }
-        assert per_uid == {1: 3, 2: 3}
-        # ...and the processing-time timeout stayed quiet during the drain
-        assert got.filter(F.col("src") == "timeout").count() == 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    run_to_end(spark, reg, start, partitions=2, n_files=3)
+    got = reg.read_batch(spark, "dwd_canary")
+    # state accumulated across the three micro-batches...
+    per_uid = {
+        r["uid"]: r["mx"]
+        for r in got.filter(F.col("src") == "data")
+        .groupBy("uid")
+        .agg(F.max("n").alias("mx"))
+        .collect()
+    }
+    assert per_uid == {1: 3, 2: 3}
+    # ...and the processing-time timeout stayed quiet during the drain
+    assert got.filter(F.col("src") == "timeout").count() == 0

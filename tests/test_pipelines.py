@@ -561,21 +561,22 @@ def test_visitor_stats_union_chain(spark, reg, tmp_path):
     )
     write_replay(full, reg.channels["ods_events"].path, n_files=3, order_by=["ts", "event_id"])
 
-    from .test_streaming import drain
+    from gmall_flink_0526_spark.streaming.replay import run_to_end
 
     # both stateful apps use ProcessingTimeTimeout -> processAllAvailable
-    # would never return; drain() instead
-    q = pipelines.unique_visit_app(spark, reg, str(tmp_path / "c1"), source="ods_events")
-    try:
-        drain(q)
-    finally:
-        q.stop()
-
-    q = pipelines.user_jump_detail_app(spark, reg, str(tmp_path / "c2"), source="ods_events")
-    try:
-        drain(q)
-    finally:
-        q.stop()
+    # would never return; the runner's offsets drain instead
+    run_to_end(
+        spark,
+        reg,
+        lambda: pipelines.unique_visit_app(spark, reg, str(tmp_path / "c1"), source="ods_events"),
+        n_files=3,
+    )
+    run_to_end(
+        spark,
+        reg,
+        lambda: pipelines.user_jump_detail_app(spark, reg, str(tmp_path / "c2"), source="ods_events"),
+        n_files=3,
+    )
 
     # page channel: view/click real rows + both sentinels
     page = full.filter(F.col("event_type").isin("view", "click"))

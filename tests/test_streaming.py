@@ -15,12 +15,14 @@ from pyspark.sql import functions as F
 from gmall_flink_0526_spark.session import load_tables
 from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
 from gmall_flink_0526_spark.streaming import stateful
+from gmall_flink_0526_spark.streaming.replay import drain
 
 from .conftest import SF_SMOKE
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 )
+REPLAY_FILES = 6  # micro-batches of the module's events replay
 
 
 @pytest.fixture(scope="module")
@@ -33,42 +35,21 @@ def replay(spark, tmp_path_factory):
     reg = ChannelRegistry(root)
     reg.register("ods_events", schema=EVENTS_SCHEMA)
     events = load_tables(spark, SF_SMOKE, "events")["events"]
-    write_replay(events, reg.channels["ods_events"].path, n_files=6, order_by=["ts", "event_id"])
+    write_replay(
+        events, reg.channels["ods_events"].path, n_files=REPLAY_FILES, order_by=["ts", "event_id"]
+    )
     yield reg, root
     spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def drain(q, timeout=300, settle_s=5.0):
-    """Wait until the file source is exhausted, then return.
-
-    ``q.processAllAvailable()`` never returns for queries using
-    ``ProcessingTimeTimeout``: the engine keeps scheduling empty batches
-    to evaluate state timeouts, which resets the no-new-data latch. So
-    instead: drained == no data available AND the last observed progress
-    has been stable-or-empty for ``settle_s`` seconds.
-    """
-    deadline = time.time() + timeout
-    stable_since = None
-    last_batch = -1
-    while time.time() < deadline:
-        lp = q.lastProgress or {}
-        batch, n_in = lp.get("batchId", -1), lp.get("numInputRows")
-        if lp and not q.status["isDataAvailable"] and (batch == last_batch or n_in == 0):
-            stable_since = stable_since or time.time()
-            if time.time() - stable_since >= settle_s:
-                return
-        else:
-            stable_since = None
-        last_batch = batch
-        time.sleep(0.5)
-    raise TimeoutError(f"stream {q.name} did not drain in {timeout}s")
-
-
 def run_to_memory(spark, df, reg, name, checkpoint_root):
+    # the keyed-state operators use ProcessingTimeTimeout, so
+    # processAllAvailable would never return: wait for the last of the
+    # fixture's REPLAY_FILES offsets instead
     reg.register(name, kind="memory")
     q = reg.write_stream(df, name, checkpoint_root)
     try:
-        drain(q)
+        drain(q, n_files=REPLAY_FILES)
     finally:
         q.stop()
     return spark.sql(f"SELECT * FROM {name}_mem")
@@ -178,7 +159,7 @@ def test_unique_visit_and_user_jump_apps(spark, replay, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("app_ckpt"))
     q1 = pipelines.unique_visit_app(spark, reg, ckpt, source="ods_events")
     try:
-        drain(q1)
+        drain(q1, n_files=REPLAY_FILES)
     finally:
         q1.stop()
     uv = reg.read_batch(spark, "dwm_unique_visit")
@@ -189,7 +170,7 @@ def test_unique_visit_and_user_jump_apps(spark, replay, tmp_path_factory):
 
     q2 = pipelines.user_jump_detail_app(spark, reg, ckpt, source="ods_events")
     try:
-        drain(q2)
+        drain(q2, n_files=REPLAY_FILES)
     finally:
         q2.stop()
     jumps = reg.read_batch(spark, "dwm_user_jump_detail")
@@ -464,6 +445,54 @@ def test_replay_write_failure_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
             cache_key="leak-probe",
         )
     assert not list(tmp_path.glob("gmall_replay_src_*"))
+
+
+def test_replay_runner_failed_epoch_leaves_no_query_conf_or_root(spark, monkeypatch):
+    """An epoch that raises inside a foreachBatch app (the dim MERGE of
+    base_db_stream) propagates its error, leaves no active query,
+    restores the caller's shuffle partitions and removes the replay's
+    temp root instead of keeping it until the process exits."""
+    import glob
+    import tempfile
+
+    from gmall_flink_0526_spark import plans
+    from gmall_flink_0526_spark.sources.dimstore import DimStore
+
+    calls = []
+
+    def merge_fails_first(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("dim merge failed")
+
+    monkeypatch.setattr(DimStore, "merge", merge_fails_first)
+    roots = os.path.join(tempfile.gettempdir(), "gmall_basedb_*")
+    before = set(glob.glob(roots))
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(Exception, match="dim merge failed"):
+        plans.queries()["base_db_stream"](spark, SF_SMOKE).collect()
+    assert calls == [1]
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert set(glob.glob(roots)) - before == set()
+
+
+def test_replay_lifecycle_only_in_the_runner():
+    """Catalog plans and tools start, drain and stop their stream
+    replays only through streaming.replay.run_to_end, which owns the
+    fan-out, the drain, the stop and the cleanup on error."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    files = sorted((repo / "gmall_flink_0526_spark" / "plans").glob("*.py"))
+    files += sorted((repo / "tools").glob("*.py"))
+    offending = [
+        f"{f.relative_to(repo)}:{i}"
+        for f in files
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if ".processAllAvailable(" in line or "shuffle_partitions(spark, 8)" in line
+    ]
+    assert not offending, "hand-rolled replay lifecycle, use run_to_end: " + ", ".join(offending)
 
 
 def test_write_replay_publishes_every_chunk_in_order(spark, tmp_path):

@@ -375,6 +375,28 @@ def probe_hot_bucket_rep(spark, sf1_dir: str) -> dict:
     }
 
 
+def _data_epochs(q, state: bool = False) -> list[dict]:
+    """One entry per data epoch of a stopped query, from its own
+    progress events: batch id, input rows and trigger seconds; with
+    ``state``, also ``addBatch`` seconds and the state rows and bytes
+    summed over its state operators."""
+    out = []
+    for p in (json.loads(x.json) for x in q.recentProgress):
+        if p["numInputRows"] == 0:
+            continue
+        e = {
+            "epoch": p["batchId"],
+            "rows": p["numInputRows"],
+            "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
+        }
+        if state:
+            e["addBatch_sec"] = round(p["durationMs"].get("addBatch", 0) / 1000.0, 2)
+            e["state_keys_rows"] = sum(s["numRowsTotal"] for s in p["stateOperators"])
+            e["state_bytes"] = sum(s["memoryUsedBytes"] for s in p["stateOperators"])
+        out.append(e)
+    return out
+
+
 def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     """Replay ``sf_dir``'s documents through the REAL streaming
     incremental-dedup app in ``n_epochs`` micro-batches (doc_id %
@@ -385,44 +407,23 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     compaction time + resulting generation count."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
-    from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
+    from gmall_flink_0526_spark.session import load_tables
     from gmall_flink_0526_spark.streaming.pipelines import (
         compact_signature_store,
         doc_incremental_dedup_app,
     )
+    from gmall_flink_0526_spark.streaming.replay import replay_registry, run_to_end
 
     docs = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="gmall_incprobe_")
+    reg = replay_registry(
+        "gmall_incprobe_",
+        ods_documents=(docs, n_epochs, ["doc_id"], F.col("doc_id") % n_epochs),
+    )
     try:
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string")
-        write_replay(
-            docs,
-            reg.channels["ods_documents"].path,
-            n_files=n_epochs,
-            order_by=["doc_id"],
-            file_of=F.col("doc_id") % n_epochs,
-        )
-        reg.register("dwd_documents_unique")
-        store = os.path.join(root, "store")
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
         t0 = time.time()
-        with shuffle_partitions(spark, 8):
-            # same state-partition trade as the certified replay query
-            q = doc_incremental_dedup_app(
-                spark, reg, os.path.join(root, "ckpt"), store
-            )
-            q.processAllAvailable()
-            progress = [
-                {
-                    "epoch": p["batchId"],
-                    "rows": p["numInputRows"],
-                    "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
-                }
-                for p in (json.loads(x.json) for x in q.recentProgress)
-                if p["numInputRows"] > 0
-            ]
-            q.stop()
+        q = run_to_end(spark, reg, lambda: doc_incremental_dedup_app(spark, reg, ckpt, store))
+        progress = _data_epochs(q)
         total_s = round(time.time() - t0, 2)
         bands = spark.read.parquet(os.path.join(store, "sig_bands"))
         growth = {
@@ -466,7 +467,7 @@ def probe_incremental_stream(spark, sf_dir: str, n_epochs: int) -> dict:
             "generations_after_compaction": gens,
         }
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(reg.root, ignore_errors=True)
 
 
 def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
@@ -480,41 +481,23 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     distinct window cell."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
-    from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
+    from gmall_flink_0526_spark.session import load_tables
     from gmall_flink_0526_spark.streaming.pipelines import (
         compact_signature_store,
         substring_dedup_app,
     )
+    from gmall_flink_0526_spark.streaming.replay import replay_registry, run_to_end
 
     docs = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="gmall_substrprobe_")
+    reg = replay_registry(
+        "gmall_substrprobe_",
+        ods_documents=(docs, n_epochs, ["doc_id"], F.col("doc_id") % n_epochs),
+    )
     try:
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string")
-        write_replay(
-            docs,
-            reg.channels["ods_documents"].path,
-            n_files=n_epochs,
-            order_by=["doc_id"],
-            file_of=F.col("doc_id") % n_epochs,
-        )
-        reg.register("dwd_documents_cut")
-        store = os.path.join(root, "store")
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
         t0 = time.time()
-        with shuffle_partitions(spark, 8):
-            q = substring_dedup_app(spark, reg, os.path.join(root, "ckpt"), store)
-            q.processAllAvailable()
-            progress = [
-                {
-                    "epoch": p["batchId"],
-                    "rows": p["numInputRows"],
-                    "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
-                }
-                for p in (json.loads(x.json) for x in q.recentProgress)
-                if p["numInputRows"] > 0
-            ]
-            q.stop()
+        q = run_to_end(spark, reg, lambda: substring_dedup_app(spark, reg, ckpt, store))
+        progress = _data_epochs(q)
         total_s = round(time.time() - t0, 2)
         idx = spark.read.parquet(os.path.join(store, "win_index"))
         growth = {
@@ -548,7 +531,7 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
             ),
         }
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(reg.root, ignore_errors=True)
 
 
 def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
@@ -561,37 +544,20 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     disjoint per-epoch discoveries."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
-    from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
+    from gmall_flink_0526_spark.session import load_tables
     from gmall_flink_0526_spark.streaming.pipelines import similarity_graph_app
+    from gmall_flink_0526_spark.streaming.replay import replay_registry, run_to_end
 
     docs = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="gmall_simgraphprobe_")
+    reg = replay_registry(
+        "gmall_simgraphprobe_",
+        ods_documents=(docs, n_epochs, ["doc_id"], F.col("doc_id") % n_epochs),
+    )
     try:
-        reg = ChannelRegistry(root)
-        reg.register("ods_documents", schema="doc_id long, text string")
-        write_replay(
-            docs,
-            reg.channels["ods_documents"].path,
-            n_files=n_epochs,
-            order_by=["doc_id"],
-            file_of=F.col("doc_id") % n_epochs,
-        )
-        store = os.path.join(root, "store")
+        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
         t0 = time.time()
-        with shuffle_partitions(spark, 8):
-            q = similarity_graph_app(spark, reg, os.path.join(root, "ckpt"), store)
-            q.processAllAvailable()
-            progress = [
-                {
-                    "epoch": p["batchId"],
-                    "rows": p["numInputRows"],
-                    "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
-                }
-                for p in (json.loads(x.json) for x in q.recentProgress)
-                if p["numInputRows"] > 0
-            ]
-            q.stop()
+        q = run_to_end(spark, reg, lambda: similarity_graph_app(spark, reg, ckpt, store))
+        progress = _data_epochs(q)
         total_s = round(time.time() - t0, 2)
         pairs = spark.read.parquet(os.path.join(store, "pairs"))
         per_epoch_pairs = {
@@ -605,7 +571,7 @@ def probe_similarity_graph_stream(spark, sf_dir: str, n_epochs: int) -> dict:
             "total_pairs": int(sum(per_epoch_pairs.values())),
         }
     finally:
-        shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(reg.root, ignore_errors=True)
 
 
 def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dict:
@@ -619,9 +585,8 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
     the stored entries of the keys its batch touches."""
     from pyspark.sql import functions as F
 
-    from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
-    from gmall_flink_0526_spark.streaming.replay import drain
-    from gmall_flink_0526_spark.streaming.stateful import state_fanout, temporal_enrich
+    from gmall_flink_0526_spark.streaming.replay import replay_registry, run_to_end
+    from gmall_flink_0526_spark.streaming.stateful import state_partitions, temporal_enrich
 
     t0 = 1704067200  # 2024-01-01 UTC
     out = {"batch_rows": 2 * batch_keys}
@@ -645,50 +610,26 @@ def probe_enrich_keys(spark, batch_keys: int = 1_000, mults=(1, 10, 100)) -> dic
             F.timestamp_seconds(F.lit(t0) + epoch * 3600 + j % 2).alias("ts"),
             F.when(j % 2 == 0, epoch.cast("double")).alias("value"),
         )
-        root = tempfile.mkdtemp(prefix="gmall_enrichprobe_")
+        reg = replay_registry(
+            "gmall_enrichprobe_",
+            ods_enrich=(seed.unionByName(touched), 3, ["ts", "event_id"], F.col("epoch")),
+        )
         try:
-            reg = ChannelRegistry(root)
-            schema = (
-                "event_id long, epoch int, user_id long, event_type string, "
-                "ts timestamp, value double"
-            )
-            reg.register("ods_enrich", schema=schema)
-            write_replay(
-                seed.unionByName(touched),
-                reg.channels["ods_enrich"].path,
-                n_files=3,
-                order_by=["ts", "event_id"],
-                file_of=F.col("epoch"),
-            )
             reg.register("enrich_out", kind="memory")
-            src = reg.read_stream(spark, "ods_enrich", max_files_per_trigger=1)
-            with state_fanout(spark):
-                q = reg.write_stream(
-                    temporal_enrich(src), "enrich_out", os.path.join(root, "ckpt")
-                )
-            try:
-                drain(q, n_files=3)
-                progress = [json.loads(x.json) for x in q.recentProgress]
-            finally:
-                q.stop()
-            out[f"keys_{n_keys}"] = [
-                {
-                    "epoch": p["batchId"],
-                    "rows": p["numInputRows"],
-                    "sec": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
-                    "addBatch_sec": round(p["durationMs"].get("addBatch", 0) / 1000.0, 2),
-                    "state_keys_rows": sum(
-                        s["numRowsTotal"] for s in p["stateOperators"]
-                    ),
-                    "state_bytes": sum(
-                        s["memoryUsedBytes"] for s in p["stateOperators"]
-                    ),
-                }
-                for p in progress
-                if p["numInputRows"] > 0
-            ]
+            q = run_to_end(
+                spark,
+                reg,
+                lambda: reg.write_stream(
+                    temporal_enrich(reg.read_stream(spark, "ods_enrich", max_files_per_trigger=1)),
+                    "enrich_out",
+                    os.path.join(reg.root, "ckpt"),
+                ),
+                partitions=state_partitions(spark),
+                n_files=3,
+            )
+            out[f"keys_{n_keys}"] = _data_epochs(q, state=True)
         finally:
-            shutil.rmtree(root, ignore_errors=True)
+            shutil.rmtree(reg.root, ignore_errors=True)
     return out
 
 
@@ -712,7 +653,7 @@ def probe_doc_pagerank(spark, sf_dir: str) -> dict:
         PAGERANK_ITERS,
         PAGERANK_RESET,
     )
-    from gmall_flink_0526_spark.session import load_tables, shuffle_partitions
+    from gmall_flink_0526_spark.session import load_tables
 
     docs = load_tables(spark, sf_dir, "documents")["documents"]
     pairs = prefix_filter_pairs(spark, sf_dir).select("doc_a", "doc_b")
