@@ -1,24 +1,66 @@
 """Streaming pipelines — the reference's job topology, Spark-first.
 
-One function per reference app, each wiring named channels (the
-Kafka-topic IR) through the pure operators in ``operators/``:
+One function per app, each wiring named channels (the Kafka-topic IR)
+through the pure operators in ``operators/``. The warehouse jobs are
+independently runnable (read channel, write channel) query pairs,
+which preserves the reference's topic-per-layer decoupling:
 
 - :func:`base_log_app`   — BaseLogApp (RT/app/dwd/BaseLogApp.java:25-161):
   parse + dead-letter, stateful is_new fix, 3-way split, multi-sink.
 - :func:`base_db_app`    — BaseDbApp (RT/app/dwd/BaseDbApp.java:24-94):
   CDC envelope in, delete filter, broadcast-config routing, dim MERGE
   (K3/K4) + dynamic-topic fact sink (K2).
-- :func:`order_wide_app` — OrderWideApp (RT/app/dwm/OrderWideApp.java:21-99):
-  watermarked stream-stream interval join + dim enrichment (finishing
-  the reference's TODO 5/6 with broadcast joins).
-- :func:`payment_wide_app` — PaymentWideApp (RT/app/dwm/PaymentWideApp.java:24-96).
-- :func:`visitor_stats_app` — the DWS windowed aggregation the beans
-  specify (RT/bean/VisitorStats.java).
+- :func:`order_wide_app`, :func:`payment_wide_app` — OrderWideApp /
+  PaymentWideApp (RT/app/dwm/OrderWideApp.java:21-99,
+  PaymentWideApp.java:24-96): watermarked stream-stream interval joins
+  + broadcast dim enrichment (the reference's TODO 5/6).
+- :func:`unique_visit_app`, :func:`user_jump_detail_app` — the DWM
+  keyed-state jobs (``stateful.py``).
+- :func:`visitor_stats_app`, :func:`visitor_stats_union_app`,
+  :func:`product_stats_app`, :func:`session_window_app` — the DWS
+  windowed aggregations the beans specify (RT/bean/VisitorStats.java).
+- :func:`doc_dedup_app`, :func:`doc_quality_gate_app` — ingest gates on
+  Spark's native watermarked ``dropDuplicates`` state.
 
 Checkpointing (X4): every query takes a checkpoint root; Spark resumes
 from it — the analogue of the reference's (commented-out) Flink
-checkpoint config. Topic-per-layer decoupling is preserved: each app is
-an independently runnable query pair of (read channel, write channel).
+checkpoint config.
+
+Epoch-addressed stores. Fourteen foreachBatch apps keep their state
+as ``epoch=<id>`` directories: the incremental dedup/similarity apps
+(``doc_incremental_dedup``, ``substring_dedup``, ``similarity_graph``,
+``emb_incremental_dedup``), the bootstrap-fit apps (``decon_screen``,
+``triplet_mine``, ``ptron_gate``) and the sketches (``cms_sketch``,
+``bloom_filter``, ``hll_sketch``, ``lm_counts``, ``dsir_grid``,
+``events_rollup``, ``hist_sketch``). Each ``merged_*`` reader folds a
+store with its family's merge; :func:`compact_signature_store` folds
+old epochs into one base generation. All fourteen keep one contract,
+the epoch-keyed idempotent sink of exactly-once Structured Streaming,
+implemented once by ``_epoch_query``, :class:`EpochScope` and
+``_bootstrap_fit``:
+
+- Crash rule: an epoch writes only its own ``epoch=<id>`` directories,
+  with overwrite. A foreachBatch retry, or a redelivery after a
+  checkpoint rewind, runs with the same id and rewrites them instead of
+  appending a second copy, so a replayed batch never double-counts and
+  a poisoned half-written attempt never survives the restart.
+- Reads: an epoch reads its stores through :func:`read_epoch_store`,
+  pruned to ``epoch < current``, so a half-written current epoch never
+  feeds its own decision.
+- Lineage cut: a frame whose plan scans a store the epoch is about to
+  write is ``localCheckpoint``-ed before any store write. Without the
+  cut, the writes invalidate cached file listings and the frame is
+  recomputed against a store that already holds the batch.
+- Release: on exit, success or failure, the epoch releases every frame
+  it persisted or checkpointed, and its stream-owned cache scope drains
+  the ``scoped_persist`` guards it created.
+- Bootstrap-fit redelivery: pre-fit epochs stash their rows. The epoch
+  whose cumulative arrival reaches the fit target fits on the backlog,
+  writes the model, then a ``_FIT_EPOCH`` marker (atomic rename),
+  scrubs its own stash dir and scores the whole backlog. A redelivered
+  fit epoch is detected through the marker and scores the backlog with
+  the stored model, which equals the deterministic refit bit-for-bit;
+  a pre-fit epoch scrubs its own output dir before stashing.
 """
 
 from __future__ import annotations
@@ -26,6 +68,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -39,35 +83,6 @@ from ..sources import fs as hfs
 from ..sources.dimstore import DimStore
 from ..sources.registry import ChannelRegistry
 from . import stateful
-
-
-def _overlap_writes(*thunks) -> None:
-    """Run an epoch's INDEPENDENT store writes concurrently (guide
-    §2.6: submit independent jobs from a small pool so each job's tail
-    back-fills the others' idle executors). Callers pass writes whose
-    inputs are persisted or localCheckpoint'd above and whose targets
-    are distinct epoch-idempotent directories, so ordering is
-    irrelevant; the first failure re-raises, matching the serial
-    behavior a foreachBatch retry depends on."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
-
-
-def _release_checkpoint(df: DataFrame | None) -> None:
-    """Drop the blocks of a ``localCheckpoint``-ed frame now.
-    ``DataFrame.unpersist()`` does not reach them: the checkpoint RDD
-    is otherwise released only when the JVM garbage-collects it, so an
-    epoch's blocks would stay pinned for as long as GC takes. Call it
-    once nothing reads the frame any more (after the epoch's writes);
-    ``None`` is a no-op, for an epoch that failed before checkpointing."""
-    if df is not None:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def base_log_app(
@@ -601,9 +616,171 @@ def read_store(sess: SparkSession, path: str) -> DataFrame:
 def read_epoch_store(sess: SparkSession, path: str, epoch_id: int) -> DataFrame:
     """Read an epoch-addressed store pruned to STRICTLY earlier epochs
     (partition pruning on the epoch=<id> dirs): a retried epoch never
-    sees its own first-attempt output — the crash contract both
-    incremental-dedup apps and the compactor share."""
+    sees its own first-attempt output — the crash contract every
+    epoch-store app and the compactor share."""
     return read_store(sess, path).filter(F.col("epoch") < epoch_id).drop("epoch")
+
+
+class EpochScope:
+    """One micro-batch of an epoch-store app. It pins what the epoch
+    reads more than once and releases all of it on exit, success or
+    failure, in reverse order:
+
+    - :meth:`persist` — a frame the epoch reuses;
+    - :meth:`checkpoint` — ``localCheckpoint``, the lineage cut taken
+      before any store write. ``DataFrame.unpersist()`` does not reach
+      a checkpoint's blocks (they would stay pinned until the JVM
+      garbage-collects the RDD), so the release unpersists its RDD;
+    - :meth:`write` — publishes frames to their stores' own
+      ``epoch=<id>`` directories."""
+
+    def __init__(self, epoch_id: int):
+        self.epoch_id = epoch_id
+        self._releases: list = []
+
+    def __enter__(self) -> EpochScope:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        while self._releases:
+            self._releases.pop()()
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._releases.append(df.unpersist)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint()
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        self._releases.append(lambda: rdd.unpersist(False))
+        return df
+
+    def path(self, root: str) -> str:
+        """This epoch's directory in the store at ``root``."""
+        return os.path.join(root, f"epoch={self.epoch_id}")
+
+    def write(self, *parts) -> None:
+        """Publish each ``(frame, root)`` part to ``<root>/epoch=<id>``
+        with overwrite. A part's frame may instead be a writer
+        ``f(path)``, for a partitioned layout. Parts must be
+        independent — distinct targets, and no part's plan scans a
+        store another part writes (checkpoint such inputs first) — so
+        several run at once from a small pool: each job's tail
+        back-fills the others' idle executors. The first failure
+        re-raises, as a serial write would."""
+
+        def publish(frame, root: str) -> None:
+            if isinstance(frame, DataFrame):
+                frame.write.mode("overwrite").parquet(self.path(root))
+            else:
+                frame(self.path(root))
+
+        if len(parts) == 1:
+            publish(*parts[0])
+            return
+        with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+            for f in [pool.submit(publish, *p) for p in parts]:
+                f.result()
+
+
+def _epoch_query(
+    spark: SparkSession, reg: ChannelRegistry, source: str, ckpt: str, name: str, epoch_fn
+):
+    """Start the epoch-store query ``name``: read ``source`` one file
+    per trigger, run each micro-batch as ``epoch_fn(batch, scope)`` in
+    a fresh :class:`EpochScope`, checkpoint at ``<ckpt>/<name>``.
+
+    Each epoch also runs in a STREAM-OWNED cache scope, which drains
+    the epoch's ``bounded_broadcast`` guards at exit and never a
+    concurrent stream's or an enclosing batch query's. Its token is
+    per INSTANCE, so two concurrent instances of one app (parallel
+    tests, parallel corpora) never drain each other's frames."""
+    src = reg.read_stream(spark, source, max_files_per_trigger=1)
+    scope = f"stream:{name}:{uuid.uuid4().hex[:12]}"
+
+    def process(batch: DataFrame, epoch_id: int) -> None:
+        with cache_scope(scope), EpochScope(epoch_id) as ep:
+            epoch_fn(batch, ep)
+
+    return (
+        src.writeStream.foreachBatch(process)
+        .option("checkpointLocation", os.path.join(ckpt, name))
+        .start()
+    )
+
+
+def _bootstrap_fit(store_root: str, out: str, cols, fit_target: int, fit, load, score):
+    """The epoch body of a bootstrap-fit app, whose store holds
+    ``stash``, the ``out`` epochs and a ``_FIT_EPOCH`` marker:
+
+    - ``fit(rows)`` fits on the stashed + current ``cols`` rows, writes
+      the model files and returns the model;
+    - ``load(sess)`` reads the stored model back;
+    - ``score(rows, model)`` returns the frame written to
+      ``out/epoch=<id>``, checkpointed here before the write."""
+    stash_path = os.path.join(store_root, "stash")
+    out_path = os.path.join(store_root, out)
+    fit_marker = os.path.join(store_root, "_FIT_EPOCH")
+
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
+        sess = batch.sparkSession
+        batch = ep.persist(batch)
+        fit_ep = (
+            int(hfs.read_text(sess, fit_marker).strip())
+            if hfs.exists(sess, fit_marker)
+            else None
+        )
+        if fit_ep is not None and ep.epoch_id > fit_ep:
+            rows, model = batch, load(sess)
+        else:
+            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
+            rows = batch.select(*cols)
+            if hfs.exists(sess, stash_path):
+                rows = read_epoch_store(sess, stash_path, ep.epoch_id).unionByName(rows)
+            rows = ep.persist(rows)
+            if fit_ep == ep.epoch_id:
+                model = load(sess)
+            elif rows.count() >= fit_target:
+                model = fit(rows)
+                hfs.write_text_atomic(sess, fit_marker, str(ep.epoch_id))
+                # a crashed first attempt of this epoch can only have
+                # taken THIS branch (the branch choice is a pure
+                # function of the prior stores), but scrub the other
+                # branch's dir anyway — the overwrite-own-epoch rule
+                # holds across branches, not per-branch
+                hfs.delete(sess, ep.path(stash_path))
+            else:
+                hfs.delete(sess, ep.path(out_path))
+                ep.write((batch.select(*cols), stash_path))
+                return
+        ep.write((ep.checkpoint(score(rows, model)), out_path))
+
+    return epoch
+
+
+def _read_centroids(sess: SparkSession, path: str) -> list:
+    """Stored k-means centroids as sorted ``(c, [float])`` pairs — the
+    form :func:`_fit_centroids` returns, so a stored model and a refit
+    compare bit-equal."""
+    return sorted(
+        (int(r["c"]), [float(x) for x in r["cv"]])
+        for r in sess.read.parquet(path).collect()
+    )
+
+
+def _fit_centroids(rows: DataFrame, k: int, fit_limit: int, path: str) -> list:
+    """Fit the k-means quantizer on ``rows`` (vec_id, embedding) —
+    deterministic seeds and sample, so a refit is bit-equal — and store
+    the centroids at ``path`` with overwrite."""
+    from ..operators.similarity import kmeans_fit
+    from ..plans.similarity import KM_ITERS
+
+    cents = kmeans_fit(rows, "embedding", "vec_id", k=k, iters=KM_ITERS, fit_limit=fit_limit)
+    rows.sparkSession.createDataFrame(
+        [(c, cv) for c, cv in cents], "c int, cv array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    return cents
 
 
 def doc_incremental_dedup_app(
@@ -628,101 +805,51 @@ def doc_incremental_dedup_app(
     each verified pair); full transitive clustering is the periodic
     batch ``dedup_clusters`` job, the standard lambda split.
 
-    Store maintenance is EPOCH-IDEMPOTENT: each micro-batch writes its
-    survivors' bands/shingles to an ``epoch=<id>`` subdirectory with
-    ``mode("overwrite")``, so a foreachBatch retry rewrites the same
-    directory instead of double-appending, and the corpus read prunes
-    to ``epoch < current`` — a half-written current epoch can never
-    feed its own dedup decision. ``kept`` is materialized with
-    ``localCheckpoint`` BEFORE any store write: its plan (via the
-    cross-corpus join) scans the store paths, and an un-cut lineage
-    would be re-resolved against the post-append store when the writes
-    invalidate cached file listings — recomputing ``kept`` against a
-    corpus containing the batch itself.
+    The kept output and both signature stores are epoch-addressed
+    (the module's crash rule); ``kept`` is the lineage cut — its plan
+    scans the store paths through the cross-corpus join.
     """
     from ..operators import dedup as D
 
     bands_path = os.path.join(store_root, "sig_bands")
     sh_path = os.path.join(store_root, "sig_shingles")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    # per-INSTANCE scope token: channel name alone is process-global,
-    # so two concurrent instances of the same app (parallel tests,
-    # parallel corpora sharing a channel name against different
-    # registries) would share one scope and drain each other's
-    # mid-flight pinned frames at epoch exit (r10 advice)
-    scope_token = uuid.uuid4().hex[:12]
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        # the epoch's guard frames (bounded_broadcast routes through
-        # scoped_persist) live in a STREAM-OWNED scope, drained by
-        # cache_scope when the epoch exits — a concurrently running
-        # stream (or an enclosing batch query holding scoped frames)
-        # is never drained by this stream's epochs. Epochs are serial
-        # per stream and the epoch's writes are done at exit, so the
-        # per-epoch drain is safe; without it each micro-batch of a
-        # continuous stream would pin one hot-table frame forever.
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         sess = batch.sparkSession
-        sh = D.doc_shingles(batch, "doc_id", "text").persist()
-        bands = D.lsh_band_keys(sh).persist()
-        kept = None
-        try:
-            self_dup = (
-                D.jaccard_verify(sh, D.lsh_pairs_from_bands(bands))
+        sh = ep.persist(D.doc_shingles(batch, "doc_id", "text"))
+        bands = ep.persist(D.lsh_band_keys(sh))
+        self_dup = (
+            D.jaccard_verify(sh, D.lsh_pairs_from_bands(bands))
+            .filter(F.col("jaccard") >= jaccard_min)
+            .select(F.col("doc_b").alias("doc_id"))
+        )
+        if hfs.exists(sess, bands_path):
+            corp_bands = read_epoch_store(sess, bands_path, ep.epoch_id)
+            corp_sh = read_epoch_store(sess, sh_path, ep.epoch_id)
+            # the new side is batch-bounded by contract — broadcast
+            # it so the corpus signature table is map-side joined,
+            # never shuffled (the asymmetry that holds at 100 TB:
+            # corpus grows without bound, a micro-batch does not)
+            cross = D.lsh_candidates_against(F.broadcast(bands), corp_bands)
+            cross_dup = (
+                D.jaccard_verify(sh, cross, sh_b=corp_sh)
                 .filter(F.col("jaccard") >= jaccard_min)
-                .select(F.col("doc_b").alias("doc_id"))
+                .select(F.col("doc_a").alias("doc_id"))
             )
-            if hfs.exists(sess, bands_path):
-                corp_bands = read_epoch_store(sess, bands_path, epoch_id)
-                corp_sh = read_epoch_store(sess, sh_path, epoch_id)
-                # the new side is batch-bounded by contract — broadcast
-                # it so the corpus signature table is map-side joined,
-                # never shuffled (the asymmetry that holds at 100 TB:
-                # corpus grows without bound, a micro-batch does not)
-                cross = D.lsh_candidates_against(F.broadcast(bands), corp_bands)
-                cross_dup = (
-                    D.jaccard_verify(sh, cross, sh_b=corp_sh)
-                    .filter(F.col("jaccard") >= jaccard_min)
-                    .select(F.col("doc_a").alias("doc_id"))
-                )
-                dups = self_dup.union(cross_dup)
-            else:
-                dups = self_dup
-            # cut lineage NOW: after this, no plan references the store
-            kept = batch.join(dups.distinct(), "doc_id", "left_anti").localCheckpoint()
-            # output is epoch-idempotent too: a foreachBatch retry
-            # overwrites its own epoch directory instead of appending a
-            # second copy of the kept set (readers drop/ignore `epoch`)
-            out_ch = reg._get(out_channel)
-            # kept_ids is batch-bounded: broadcast the semi-join filter
-            # so the persisted band/shingle frames are filtered map-side
-            kept_ids = F.broadcast(kept.select("doc_id"))
-            # the three writes all hang off the checkpointed `kept` and
-            # persisted sh/bands — independent, so overlap them
-            _overlap_writes(
-                lambda: kept.write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: bands.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
-                    os.path.join(bands_path, f"epoch={epoch_id}")
-                ),
-                lambda: sh.join(kept_ids, "doc_id").write.mode("overwrite").parquet(
-                    os.path.join(sh_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            _release_checkpoint(kept)
-            sh.unpersist()
-            bands.unpersist()
+            dups = self_dup.union(cross_dup)
+        else:
+            dups = self_dup
+        kept = ep.checkpoint(batch.join(dups.distinct(), "doc_id", "left_anti"))
+        # kept_ids is batch-bounded: broadcast the semi-join filter
+        # so the persisted band/shingle frames are filtered map-side
+        kept_ids = F.broadcast(kept.select("doc_id"))
+        ep.write(
+            (kept, reg._get(out_channel).path),
+            (bands.join(kept_ids, "doc_id"), bands_path),
+            (sh.join(kept_ids, "doc_id"), sh_path),
+        )
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "doc_incremental_dedup"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "doc_incremental_dedup", epoch)
 
 
 def substring_dedup_app(
@@ -746,11 +873,7 @@ def substring_dedup_app(
     cross-epoch merge is a min/max groupBy: fixed-width per window,
     IDEMPOTENT under replay (the HLL max-merge class — even an honest
     double write could not corrupt it), mergeable map-side, and never
-    a doc-pair join. Store writes still follow the incremental apps'
-    crash rule (a foreachBatch retry OVERWRITES its own ``epoch=<id>``
-    directory; reads prune to ``epoch < current``), and the cut rows
-    are ``localCheckpoint``-ed before any store write so their lineage
-    never re-resolves against the post-append store.
+    a doc-pair join. The cut rows are the epoch's lineage cut.
 
     Incremental semantics, documented like ``doc_incremental_dedup``'s:
     an early doc keeps runs that only LATER become duplicated — the
@@ -763,59 +886,33 @@ def substring_dedup_app(
 
     L = run_len or D.SUBSTR_RUN
     idx_path = os.path.join(store_root, "win_index")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         sess = batch.sparkSession
-        toks = D.doc_tokens(batch, "doc_id", "text").persist()
-        grams = D.gram_positions_from(toks, L).persist()
-        cut = None
-        try:
-            grid = grams.groupBy("gh").agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            )
-            if hfs.exists(sess, idx_path):
-                merged = read_epoch_store(sess, idx_path, epoch_id).union(grid)
-            else:
-                merged = grid
-            dup = (
-                merged.groupBy("gh")
-                .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
-                .filter(F.col("lo") != F.col("hi"))
-                .select("gh")
-            )
-            starts = (
-                grams.join(dup, "gh")
-                .groupBy("doc_id")
-                .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
-            )
-            cut = D.substring_cut_rows(toks, starts, L).localCheckpoint()
-            out_ch = reg._get(out_channel)
-            # cut is checkpointed and grid hangs off the persisted
-            # grams — independent writes, overlap them (§2.6)
-            _overlap_writes(
-                lambda: cut.write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: grid.write.mode("overwrite").parquet(
-                    os.path.join(idx_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            _release_checkpoint(cut)
-            grams.unpersist()
-            toks.unpersist()
+        toks = ep.persist(D.doc_tokens(batch, "doc_id", "text"))
+        grams = ep.persist(D.gram_positions_from(toks, L))
+        grid = grams.groupBy("gh").agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        )
+        if hfs.exists(sess, idx_path):
+            merged = read_epoch_store(sess, idx_path, ep.epoch_id).union(grid)
+        else:
+            merged = grid
+        dup = (
+            merged.groupBy("gh")
+            .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
+            .filter(F.col("lo") != F.col("hi"))
+            .select("gh")
+        )
+        starts = (
+            grams.join(dup, "gh")
+            .groupBy("doc_id")
+            .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
+        )
+        cut = ep.checkpoint(D.substring_cut_rows(toks, starts, L))
+        ep.write((cut, reg._get(out_channel).path), (grid, idx_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "substring_dedup"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "substring_dedup", epoch)
 
 
 # Doc-id bucket fanout for the similarity-graph shingle store: the
@@ -863,8 +960,7 @@ def similarity_graph_app(
     identical-copy blocks never reach this join, the documented
     lsh_recall_post_dedup contract.
 
-    Stores (all epoch-addressed, overwrite-own-epoch crash rule, reads
-    pruned to ``epoch < current``): ``pref`` (doc_id, g, n) prefix
+    Stores (all epoch-addressed): ``pref`` (doc_id, g, n) prefix
     rows, ``sh`` (doc_id, s) shingle arrays for the exact verify, and
     ``pairs`` (doc_a, doc_b) — the graph itself, disjoint across
     epochs by the later-doc rule so the accumulated union needs no
@@ -900,12 +996,6 @@ def similarity_graph_app(
     sh_path = os.path.join(store_root, "sh")
     pairs_path = os.path.join(store_root, "pairs")
     layout_path = os.path.join(store_root, "_SH_LAYOUT")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:simgraph:{scope_token}"):
-            _epoch(batch, epoch_id)
 
     def _bkt(col_name: str):
         return F.pmod(F.xxhash64(F.col(col_name)), F.lit(SIM_SH_BUCKETS))
@@ -941,98 +1031,62 @@ def similarity_graph_app(
         hfs.write_text_atomic(sess, layout_path, "bucketed" if bucketed else "flat")
         return bucketed
 
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         sess = batch.sparkSession
         bucketed = _resolve_layout(sess, batch)
-        bsh = D.doc_shingles(batch, "doc_id", "text").persist()
-        bpref = D.prefix_rows(bsh, jaccard_min, order="hash").persist()
-        cand = new_pairs = None
-        try:
-            if hfs.exists(sess, pref_path):
-                all_pref = read_epoch_store(sess, pref_path, epoch_id).union(bpref)
-            else:
-                all_pref = bpref
-            cand = D.prefix_filter_candidates_against(
-                F.broadcast(bpref), all_pref, jaccard_min
-            ).persist()
-            if hfs.exists(sess, sh_path):
-                if bucketed:
-                    # index-shaped verify: read ONLY the store buckets
-                    # a candidate doc lives in (<= SIM_SH_BUCKETS ids —
-                    # a constant-bounded collect; partition-pruned read)
-                    touched = [
-                        r["bkt"]
-                        for r in cand.select(
-                            F.explode(
-                                F.array(_bkt("doc_a"), _bkt("doc_b"))
-                            ).alias("bkt")
-                        )
-                        .distinct()
-                        .collect()
-                    ]
-                    all_sh = (
-                        read_epoch_store(sess, sh_path, epoch_id)
-                        .filter(F.col("bkt").isin(touched))
-                        .drop("bkt")
-                        .union(bsh)
+        bsh = ep.persist(D.doc_shingles(batch, "doc_id", "text"))
+        bpref = ep.persist(D.prefix_rows(bsh, jaccard_min, order="hash"))
+        if hfs.exists(sess, pref_path):
+            all_pref = read_epoch_store(sess, pref_path, ep.epoch_id).union(bpref)
+        else:
+            all_pref = bpref
+        cand = ep.persist(
+            D.prefix_filter_candidates_against(F.broadcast(bpref), all_pref, jaccard_min)
+        )
+        if hfs.exists(sess, sh_path):
+            # flat layout: the store is small by the gate's
+            # construction — a whole read beats the bucketed write it
+            # would take to avoid it (measured, see SIM_SH_BUCKET_MIN_DOCS)
+            all_sh = read_epoch_store(sess, sh_path, ep.epoch_id)
+            if bucketed:
+                # index-shaped verify: read ONLY the store buckets a
+                # candidate doc lives in (<= SIM_SH_BUCKETS ids — a
+                # constant-bounded collect; partition-pruned read)
+                touched = [
+                    r["bkt"]
+                    for r in cand.select(
+                        F.explode(F.array(_bkt("doc_a"), _bkt("doc_b"))).alias("bkt")
                     )
-                else:
-                    # flat layout: the store is small by the gate's
-                    # construction — a whole read beats the bucketed
-                    # write it would take to avoid it (measured, see
-                    # SIM_SH_BUCKET_MIN_DOCS)
-                    all_sh = read_epoch_store(sess, sh_path, epoch_id).union(bsh)
-            else:
-                all_sh = bsh
-            new_pairs = (
-                D.jaccard_verify(all_sh, cand)
-                .filter(F.col("jaccard") >= jaccard_min)
-                .select("doc_a", "doc_b")
-                .localCheckpoint()  # cut lineage before the store writes
-            )
-            def _write_sh():
-                if bucketed:
-                    # repartition ON the bucket key before the
-                    # partitioned write: without it every input task
-                    # fans out to every bucket dir (tasks x
-                    # SIM_SH_BUCKETS small files per epoch — measured
-                    # 2x the whole replay at sf0.1, r13 VERDICT #2);
-                    # with it each bucket is written by exactly one
-                    # task, so the epoch adds at most SIM_SH_BUCKETS
-                    # files
-                    bsh.withColumn("bkt", _bkt("doc_id")).repartition(
-                        F.col("bkt")
-                    ).write.partitionBy("bkt").mode("overwrite").parquet(
-                        os.path.join(sh_path, f"epoch={epoch_id}")
-                    )
-                else:
-                    bsh.write.mode("overwrite").parquet(
-                        os.path.join(sh_path, f"epoch={epoch_id}")
-                    )
+                    .distinct()
+                    .collect()
+                ]
+                all_sh = all_sh.filter(F.col("bkt").isin(touched)).drop("bkt")
+            all_sh = all_sh.union(bsh)
+        else:
+            all_sh = bsh
+        new_pairs = ep.checkpoint(
+            D.jaccard_verify(all_sh, cand)
+            .filter(F.col("jaccard") >= jaccard_min)
+            .select("doc_a", "doc_b")
+        )
+        def write_bucketed_sh(path: str) -> None:
+            # repartition ON the bucket key before the partitioned
+            # write: without it every input task fans out to every
+            # bucket dir (tasks x SIM_SH_BUCKETS small files per epoch
+            # — measured 2x the whole replay at sf0.1, r13 VERDICT #2);
+            # with it each bucket is written by exactly one task, so
+            # the epoch adds at most SIM_SH_BUCKETS files
+            bsh.withColumn("bkt", _bkt("doc_id")).repartition(
+                F.col("bkt")
+            ).write.partitionBy("bkt").mode("overwrite").parquet(path)
 
-            # pairs are checkpointed, bpref/bsh persisted — the three
-            # epoch writes are independent, overlap them (§2.6)
-            _overlap_writes(
-                lambda: new_pairs.write.mode("overwrite").parquet(
-                    os.path.join(pairs_path, f"epoch={epoch_id}")
-                ),
-                lambda: bpref.write.mode("overwrite").parquet(
-                    os.path.join(pref_path, f"epoch={epoch_id}")
-                ),
-                _write_sh,
-            )
-        finally:
-            _release_checkpoint(new_pairs)
-            if cand is not None:
-                cand.unpersist()
-            bpref.unpersist()
-            bsh.unpersist()
+        ep.write(
+            (new_pairs, pairs_path),
+            (bpref, pref_path),
+            (write_bucketed_sh if bucketed else bsh, sh_path),
+        )
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "similarity_graph"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "similarity_graph", epoch)
 
 
 def emb_incremental_dedup_app(
@@ -1053,135 +1107,78 @@ def emb_incremental_dedup_app(
     batch is checked against the accumulated KEPT-vector store within
     shared clusters (corpus-side rep cap: a hot stored cluster keeps
     pairing new vectors against its min-id row). Survivors append to
-    the epoch-idempotent store — ``mode("overwrite")`` into
-    ``epoch=<id>`` dirs with ``epoch < current`` pruning, the same
-    crash contract as the MinHash app; ``kept`` is localCheckpoint-ed
-    before any store write for the same lineage reason. Cost per
-    batch is batch x cluster-overlap; the stored corpus is touched
-    only through its cluster-keyed rows, never rescanned."""
+    the epoch-addressed store; ``kept`` is the lineage cut, as in the
+    MinHash app. Cost per batch is batch x cluster-overlap; the stored
+    corpus is touched only through its cluster-keyed rows, never
+    rescanned."""
     from ..operators import similarity as S
 
     vec_path = os.path.join(store_root, "vec_store")
     cent_path = os.path.join(store_root, "centroids")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    # per-instance token, same reason as doc_incremental_dedup_app
-    scope_token = uuid.uuid4().hex[:12]
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        # same stream-owned scope as doc_incremental_dedup_app: the
-        # store-side keep_cluster_reps guard persists one frame per
-        # micro-batch, drained at epoch exit without touching any
-        # concurrent stream's (or enclosing batch query's) frames
-        with cache_scope(f"stream:{out_channel}:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         # runtime import: plans.similarity owns the SemDeDup constants
         # and already imports streaming modules transitively
         from ..operators import dedup as D
         from ..plans.similarity import (
             FIT_PER_CLUSTER,
             KM_FIT_N,
-            KM_ITERS,
             SEMDEDUP_MAX_CLUSTER,
             SEMDEDUP_T,
             _semdedup_k,
         )
 
         sess = batch.sparkSession
-        batch = batch.persist()
-        assigned = kept = None
-        try:
-            if hfs.exists(sess, cent_path):
-                cents = sorted(
-                    (int(r["c"]), [float(x) for x in r["cv"]])
-                    for r in sess.read.parquet(cent_path).collect()
-                )
-            else:
-                # bootstrap on the first batch; idempotent overwrite
-                k = _semdedup_k(batch.count())
-                cents = S.kmeans_fit(
-                    batch, "embedding", "vec_id", k=k, iters=KM_ITERS,
-                    fit_limit=max(KM_FIT_N, FIT_PER_CLUSTER * k),
-                )
-                sess.createDataFrame(
-                    [(c, cv) for c, cv in cents], "c int, cv array<double>"
-                ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-            assigned = S.with_cluster(batch, "embedding", cents).persist()
-            nrm = F.sqrt(S.norm_sq(F.col("embedding")))
-            ck = assigned.select(F.col("c").cast("int").alias("c"), "vec_id")
-            pairs = D.lsh_pairs_from_bands(
-                ck, max_bucket=SEMDEDUP_MAX_CLUSTER,
-                keys=("c",), id_col="vec_id", out=("ida", "idb"),
-            )
-            a = assigned.select(
-                F.col("vec_id").alias("ida"), F.col("embedding").alias("va"), nrm.alias("na")
-            )
-            b = assigned.select(
-                F.col("vec_id").alias("idb"), F.col("embedding").alias("vb"), nrm.alias("nb")
-            )
-            self_dup = (
-                pairs.join(a, "ida")
-                .join(b, "idb")
-                .filter(
-                    S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-                    >= SEMDEDUP_T
-                )
-                .select(F.col("idb").alias("vec_id"))
-            )
-            if hfs.exists(sess, vec_path):
-                store = read_epoch_store(sess, vec_path, epoch_id)
-                store_k = S.keep_cluster_reps(store, SEMDEDUP_MAX_CLUSTER).select(
-                    "c",
-                    F.col("vec_id").alias("idb"),
-                    F.col("embedding").alias("vb"),
-                    nrm.alias("nb"),
-                )
-                new_s = assigned.select(
-                    F.col("c").cast("int").alias("c"),
-                    F.col("vec_id").alias("ida"),
-                    F.col("embedding").alias("va"),
-                    nrm.alias("na"),
-                )
-                # batch side broadcast: the stored corpus is joined
-                # map-side, never shuffled (the asymmetry that holds
-                # at scale — the store grows, a micro-batch does not)
-                cross_dup = (
-                    F.broadcast(new_s)
-                    .join(store_k, "c")
-                    .filter(
-                        S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-                        >= SEMDEDUP_T
-                    )
-                    .select(F.col("ida").alias("vec_id"))
-                )
-                dups = self_dup.union(cross_dup)
-            else:
-                dups = self_dup
-            kept = assigned.join(dups.distinct(), "vec_id", "left_anti").localCheckpoint()
-            out_ch = reg._get(out_channel)
-            # both writes hang off the checkpointed kept — overlap (§2.6)
-            _overlap_writes(
-                lambda: kept.select("vec_id").write.mode("overwrite").parquet(
-                    os.path.join(out_ch.path, f"epoch={epoch_id}")
-                ),
-                lambda: kept.select(
-                    "vec_id", "embedding", F.col("c").cast("int").alias("c")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(vec_path, f"epoch={epoch_id}")
-                ),
-            )
-        finally:
-            _release_checkpoint(kept)
-            if assigned is not None:
-                assigned.unpersist()
-            batch.unpersist()
+        batch = ep.persist(batch)
+        if hfs.exists(sess, cent_path):
+            cents = _read_centroids(sess, cent_path)
+        else:
+            # bootstrap on the first batch; idempotent overwrite
+            k = _semdedup_k(batch.count())
+            cents = _fit_centroids(batch, k, max(KM_FIT_N, FIT_PER_CLUSTER * k), cent_path)
+        assigned = ep.persist(S.with_cluster(batch, "embedding", cents))
+        nrm = F.sqrt(S.norm_sq(F.col("embedding")))
+        ck = assigned.select(F.col("c").cast("int").alias("c"), "vec_id")
+        pairs = D.lsh_pairs_from_bands(
+            ck, max_bucket=SEMDEDUP_MAX_CLUSTER,
+            keys=("c",), id_col="vec_id", out=("ida", "idb"),
+        )
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "emb_incremental_dedup"))
-        .start()
-    )
+        def side(df: DataFrame, x: str, *keys) -> DataFrame:
+            return df.select(
+                *keys,
+                F.col("vec_id").alias(f"id{x}"),
+                F.col("embedding").alias(f"v{x}"),
+                nrm.alias(f"n{x}"),
+            )
+
+        close = S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")) >= SEMDEDUP_T
+        self_dup = (
+            pairs.join(side(assigned, "a"), "ida")
+            .join(side(assigned, "b"), "idb")
+            .filter(close)
+            .select(F.col("idb").alias("vec_id"))
+        )
+        if hfs.exists(sess, vec_path):
+            store = read_epoch_store(sess, vec_path, ep.epoch_id)
+            store_k = side(S.keep_cluster_reps(store, SEMDEDUP_MAX_CLUSTER), "b", "c")
+            new_s = side(assigned, "a", F.col("c").cast("int").alias("c"))
+            # batch side broadcast: the stored corpus is joined
+            # map-side, never shuffled (the asymmetry that holds at
+            # scale — the store grows, a micro-batch does not)
+            cross_dup = (
+                F.broadcast(new_s).join(store_k, "c").filter(close).select(F.col("ida").alias("vec_id"))
+            )
+            dups = self_dup.union(cross_dup)
+        else:
+            dups = self_dup
+        kept = ep.checkpoint(assigned.join(dups.distinct(), "vec_id", "left_anti"))
+        ep.write(
+            (kept.select("vec_id"), reg._get(out_channel).path),
+            (kept.select("vec_id", "embedding", F.col("c").cast("int").alias("c")), vec_path),
+        )
+
+    return _epoch_query(spark, reg, source, ckpt, "emb_incremental_dedup", epoch)
 
 
 def decon_screen_app(
@@ -1198,31 +1195,23 @@ def decon_screen_app(
     incrementally as train embeddings arrive; the eval benchmark
     (``eval_df``) is the STATIC side, snapshotted into the store at
     app start (atomic rename) so every epoch across restarts screens
-    against one pinned benchmark. Composes
-    ``emb_incremental_dedup_app``'s bootstrap-fit/epoch-store
-    machinery with ``plans.similarity.decontaminate_semantic``'s
-    screen, bit-identically to the batch query:
+    against one pinned benchmark. A bootstrap-fit app (module
+    docstring) with ``plans.similarity.decontaminate_semantic``'s
+    screen, bit-identical to the batch query:
 
     - ``expected_train`` provisions the adaptive k up front (the
       Bloom-width contract: capacity is provisioned, not discovered);
       the fit TARGET is ``min(expected_train, max(KM_FIT_N,
       FIT_PER_CLUSTER*k))`` — the batch fit's exact sample size.
-    - Pre-fit epochs STASH their vectors (epoch-addressed). The epoch
-      whose cumulative arrival reaches the target FITS on the
-      ``fit_target`` lowest-id vectors seen (= the batch fit sample
-      when arrival is id-ordered, the bootstrap contract), persists
-      the centroids + a ``_FIT_EPOCH`` marker (atomic rename), and
-      screens the whole backlog into ``flags/epoch=<fit>``.
+    - The fit epoch fits on the ``fit_target`` lowest-id vectors seen
+      (= the batch fit sample when arrival is id-ordered, the
+      bootstrap contract), persists the centroids, and screens the
+      whole backlog into ``flags/epoch=<fit>``.
     - Post-fit epochs assign with the stored centroids and screen
       against the broadcast eval side only — per-train-row
       INDEPENDENT, so no cross-train state exists beyond the
       centroids; the accumulated flag store IS the batch flag set.
 
-    Crash/redelivery contract (both tested): a retried or redelivered
-    pre-fit epoch rewrites its own stash dir; a redelivered FIT epoch
-    is detected via the marker, reuses the stored centroids (the
-    deterministic refit would be bit-equal) and rewrites the same
-    backlog flags; post-fit epochs overwrite their own flags dir.
     Scale: the screen joins each batch map-side against the broadcast
     (benchmark-sized by contract) assigned eval frame — cost is
     sum_c(batch_ct x eval_ct) per epoch, eval-bounded, the store
@@ -1232,18 +1221,15 @@ def decon_screen_app(
         DECON_COS_T,
         FIT_PER_CLUSTER,
         KM_FIT_N,
-        KM_ITERS,
         _semdedup_k,
     )
 
-    stash_path = os.path.join(store_root, "stash")
-    flags_path = os.path.join(store_root, "flags")
     cent_path = os.path.join(store_root, "centroids")
     eval_path = os.path.join(store_root, "eval_side")
     eval_asg_path = os.path.join(store_root, "eval_assigned")
-    fit_marker = os.path.join(store_root, "_FIT_EPOCH")
     k = _semdedup_k(expected_train)
     fit_target = min(expected_train, max(KM_FIT_N, FIT_PER_CLUSTER * k))
+    nrm = F.sqrt(S.norm_sq(F.col("embedding")))
     # SNAPSHOT the static eval side into the store before the stream
     # starts (temp dir + rename, atomic publish): every epoch — across
     # restarts, retries and redeliveries — screens against ONE pinned
@@ -1254,14 +1240,6 @@ def decon_screen_app(
         hfs.delete(spark, tmp)
         eval_df.select("vec_id", "embedding").write.mode("overwrite").parquet(tmp)
         hfs.rename(spark, tmp, eval_path)
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
-
-    def _read_cents(sess: SparkSession):
-        return sorted(
-            (int(r["c"]), [float(x) for x in r["cv"]])
-            for r in sess.read.parquet(cent_path).collect()
-        )
 
     def _eval_assigned(sess: SparkSession, cents) -> DataFrame:
         # the eval side is static and the centroids are fixed after the
@@ -1273,7 +1251,6 @@ def decon_screen_app(
         # keeps a crashed first writer redelivery-safe, and floats
         # round-trip parquet exactly, so stored == recomputed bits.
         if not hfs.exists(sess, eval_asg_path):
-            nrm = F.sqrt(S.norm_sq(F.col("embedding")))
             tmp = eval_asg_path + ".tmp"
             hfs.delete(sess, tmp)
             S.with_cluster(sess.read.parquet(eval_path), "embedding", cents).select(
@@ -1285,14 +1262,12 @@ def decon_screen_app(
             hfs.rename(sess, tmp, eval_asg_path)
         return sess.read.parquet(eval_asg_path)
 
-    def _screen_and_write(train: DataFrame, cents, epoch_id: int) -> None:
-        sess = train.sparkSession
-        nrm = F.sqrt(S.norm_sq(F.col("embedding")))
-        ev = _eval_assigned(sess, cents)
+    def screen(train: DataFrame, cents) -> DataFrame:
+        ev = _eval_assigned(train.sparkSession, cents)
         tr = S.with_cluster(train, "embedding", cents).select(
             "c", "vec_id", F.col("embedding").alias("vt"), nrm.alias("nt")
         )
-        flags = (
+        return (
             tr.join(F.broadcast(ev), "c")
             .withColumn(
                 "cos_sim",
@@ -1300,76 +1275,15 @@ def decon_screen_app(
             )
             .filter(F.col("cos_sim") >= DECON_COS_T)
             .select("vec_id", "eid", "cos_sim")
-            .localCheckpoint()
         )
-        try:
-            flags.write.mode("overwrite").parquet(
-                os.path.join(flags_path, f"epoch={epoch_id}")
-            )
-        finally:
-            _release_checkpoint(flags)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:decon_screen:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        batch = batch.persist()
-        allv = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
-            )
-            if fit_ep is not None and epoch_id > fit_ep:
-                _screen_and_write(batch, _read_cents(sess), epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("vec_id", "embedding")
-                )
-            else:
-                allv = batch.select("vec_id", "embedding")
-            allv = allv.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored centroids equal the
-                # deterministic refit bit-for-bit — rewrite the same
-                # backlog flags
-                _screen_and_write(allv, _read_cents(sess), epoch_id)
-            elif allv.count() >= fit_target:
-                cents = S.kmeans_fit(
-                    allv, "embedding", "vec_id", k=k, iters=KM_ITERS,
-                    fit_limit=fit_target,
-                )
-                sess.createDataFrame(
-                    [(c, cv) for c, cv in cents], "c int, cv array<double>"
-                ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                # a crashed first attempt of this epoch can only have
-                # taken THIS branch (the branch choice is a pure
-                # function of the prior stores), but scrub the other
-                # branch's dir anyway — the overwrite-own-epoch rule
-                # held across branches, not per-branch
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _screen_and_write(allv, cents, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(flags_path, f"epoch={epoch_id}"))
-                batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
-                    os.path.join(stash_path, f"epoch={epoch_id}")
-                )
-        finally:
-            if allv is not None:
-                allv.unpersist()
-            batch.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "decon_screen"))
-        .start()
+    epoch = _bootstrap_fit(
+        store_root, "flags", ("vec_id", "embedding"), fit_target,
+        lambda rows: _fit_centroids(rows, k, fit_target, cent_path),
+        lambda sess: _read_centroids(sess, cent_path),
+        screen,
     )
+    return _epoch_query(spark, reg, source, ckpt, "decon_screen", epoch)
 
 
 def merged_decon_flags(spark: SparkSession, store_root: str) -> DataFrame:
@@ -1394,143 +1308,65 @@ def triplet_mine_app(
 ):
     """Streaming contrastive-triplet mining — the candidate store for
     ``plans.similarity.contrastive_triplets`` maintained incrementally
-    as corpus vectors arrive (the decon_screen_app deployment shape
-    with the PROBE set as the pinned static side):
+    as corpus vectors arrive, a bootstrap-fit app (module docstring)
+    with the PROBE set as the pinned static side:
 
     - the fit target is ``min(expected_corpus, KM_FIT_N)`` — the batch
       quantizer's exact deterministic sample (capacity provisioned up
-      front, the Bloom-width contract); pre-fit epochs STASH their
-      vectors (epoch-addressed).
-    - the epoch whose cumulative arrival reaches the target fits the
-      FIXED-k quantizer on the fit-target lowest-id vectors seen (= the
-      batch fit sample under id-ordered arrival), persists centroids +
-      the assigned PROBE frame (vec_id < N_PROBES — inside the fit
-      sample by construction, so already arrived) + a ``_FIT_EPOCH``
-      marker, and scores the whole backlog into ``scored/epoch=<fit>``.
+      front, the Bloom-width contract).
+    - the fit epoch fits the FIXED-k quantizer on the fit-target
+      lowest-id vectors seen (= the batch fit sample under id-ordered
+      arrival), persists centroids + the assigned PROBE frame (vec_id
+      < N_PROBES — inside the fit sample by construction, so already
+      arrived), and scores the whole backlog into
+      ``scored/epoch=<fit>``.
     - post-fit epochs assign with the stored centroids and score
       map-side against the broadcast probe frame — each scored row is a
       pure function of (centroids, probes, the one corpus vector), so
       the accumulated epoch store IS the batch query's scored frame and
       the merged read shares SQL_CONTRASTIVE_TRIPLETS verbatim.
 
-    Crash/redelivery contract (tested): pre-fit retries rewrite their
-    own stash dir; a redelivered FIT epoch is marker-detected, reuses
-    the stored centroids/probes (the deterministic refit would be
-    bit-equal) and rewrites the same backlog scores; post-fit epochs
-    overwrite their own scored dir. Scale: per-epoch cost is
-    batch x broadcast-probes within shared cells (probe-bounded, the
-    hard_negative_mining class); the store accumulates candidates and
-    is never rescanned by the app itself.
+    Scale: per-epoch cost is batch x broadcast-probes within shared
+    cells (probe-bounded, the hard_negative_mining class); the store
+    accumulates candidates and is never rescanned by the app itself.
     """
     from ..operators import similarity as S
-    from ..plans.similarity import KM_FIT_N, KM_ITERS, KM_K, N_PROBES
+    from ..plans.similarity import KM_FIT_N, KM_K, N_PROBES
 
-    stash_path = os.path.join(store_root, "stash")
-    scored_path = os.path.join(store_root, "scored")
     cent_path = os.path.join(store_root, "centroids")
     probe_path = os.path.join(store_root, "probes")
-    fit_marker = os.path.join(store_root, "_FIT_EPOCH")
     fit_target = min(expected_corpus, KM_FIT_N)
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
 
-    def _read_cents(sess: SparkSession):
-        return sorted(
-            (int(r["c"]), [float(x) for x in r["cv"]])
-            for r in sess.read.parquet(cent_path).collect()
-        )
+    def fit(rows: DataFrame):
+        cents = _fit_centroids(rows, KM_K, fit_target, cent_path)
+        S.with_cluster(
+            rows.filter(F.col("vec_id") < N_PROBES), "embedding", cents
+        ).select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("qv"),
+            F.col("c").alias("qlabel"),
+        ).coalesce(1).write.mode("overwrite").parquet(probe_path)
+        return cents
 
-    def _score_and_write(vecs: DataFrame, cents, epoch_id: int) -> None:
-        sess = vecs.sparkSession
-        probes = sess.read.parquet(probe_path).select(
-            F.col("qid"), F.col("qv"), F.col("qlabel")
-        )
+    def score(vecs: DataFrame, cents) -> DataFrame:
+        probes = vecs.sparkSession.read.parquet(probe_path).select("qid", "qv", "qlabel")
         assigned = S.with_cluster(
             vecs.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")),
             "cv",
             cents,
         ).withColumnRenamed("c", "clabel")
-        scored = (
+        return (
             assigned.join(F.broadcast(probes), F.col("clabel") == F.col("qlabel"))
             .filter(F.col("cid") != F.col("qid"))
             .withColumn("cos_sim", S.cosine(F.col("qv"), F.col("cv")))
             .select("qid", "cid", "cos_sim")
-            .localCheckpoint()
         )
-        try:
-            scored.write.mode("overwrite").parquet(
-                os.path.join(scored_path, f"epoch={epoch_id}")
-            )
-        finally:
-            _release_checkpoint(scored)
 
-    def _fit_probes(sess: SparkSession, allv: DataFrame, cents) -> None:
-        sess.createDataFrame(
-            [(c, cv) for c, cv in cents], "c int, cv array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-        probes = S.with_cluster(
-            allv.filter(F.col("vec_id") < N_PROBES), "embedding", cents
-        ).select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            F.col("c").alias("qlabel"),
-        )
-        probes.coalesce(1).write.mode("overwrite").parquet(probe_path)
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:triplet_mine:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        batch = batch.persist()
-        allv = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
-            )
-            if fit_ep is not None and epoch_id > fit_ep:
-                _score_and_write(batch, _read_cents(sess), epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allv = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("vec_id", "embedding")
-                )
-            else:
-                allv = batch.select("vec_id", "embedding")
-            allv = allv.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored centroids/probes
-                # equal the deterministic refit bit-for-bit — rewrite
-                # the same backlog scores
-                _score_and_write(allv, _read_cents(sess), epoch_id)
-            elif allv.count() >= fit_target:
-                cents = S.kmeans_fit(
-                    allv, "embedding", "vec_id", k=KM_K, iters=KM_ITERS,
-                    fit_limit=fit_target,
-                )
-                _fit_probes(sess, allv, cents)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _score_and_write(allv, cents, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(scored_path, f"epoch={epoch_id}"))
-                batch.select("vec_id", "embedding").write.mode("overwrite").parquet(
-                    os.path.join(stash_path, f"epoch={epoch_id}")
-                )
-        finally:
-            if allv is not None:
-                allv.unpersist()
-            batch.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "triplet_mine"))
-        .start()
+    epoch = _bootstrap_fit(
+        store_root, "scored", ("vec_id", "embedding"), fit_target,
+        fit, lambda sess: _read_centroids(sess, cent_path), score,
     )
+    return _epoch_query(spark, reg, source, ckpt, "triplet_mine", epoch)
 
 
 def merged_triplet_scored(spark: SparkSession, store_root: str) -> DataFrame:
@@ -1554,15 +1390,15 @@ def ptron_gate_app(
     """Streaming perceptron quality gate — the in-engine classifier
     (operators/classifier.py) trained at bootstrap from the document
     stream itself and then EXECUTED continuously (the dsir_gate_stream
-    deployment shape with a model fit instead of count grids):
+    deployment shape with a model fit instead of count grids), a
+    bootstrap-fit app (module docstring):
 
-    - pre-fit epochs STASH their (doc_id, text) rows; the epoch whose
-      cumulative arrival reaches ``min(expected_docs, PTRON_FIT_N)``
-      takes the fit-target lowest doc_ids seen (= the batch fit sample
-      under id-ordered arrival), derives the centering stats + teacher
-      threshold, runs the full perceptron loop, persists the ONE-ROW
-      model card (stats + final weights) + a ``_FIT_EPOCH`` marker,
-      and scores the whole backlog into ``grid/epoch=<fit>``.
+    - the fit epoch, reached at ``min(expected_docs, PTRON_FIT_N)``
+      docs, takes the fit-target lowest doc_ids seen (= the batch fit
+      sample under id-ordered arrival), derives the centering stats +
+      teacher threshold, runs the full perceptron loop, persists the
+      ONE-ROW model card (stats + final weights), and scores the whole
+      backlog into ``grid/epoch=<fit>``.
     - post-fit epochs read the model card (a 1-row bounded collect),
       score their batch map-side (literal stats/weights — the batch
       query's joinless shape) and write a per-language
@@ -1571,115 +1407,50 @@ def ptron_gate_app(
       summed store equals the batch filter's counts exactly and the
       merged read shares quality_perceptron_filter's oracle VERBATIM.
 
-    Crash/redelivery contract (tested): pre-fit retries rewrite their
-    own stash dir; a redelivered FIT epoch is marker-detected, reuses
-    the stored model card (the deterministic refit would be bit-equal)
-    and rewrites the same backlog grid; post-fit epochs overwrite
-    their own grid dir. Scale: every store write is <= n_languages
-    rows + the one-row model card, regardless of corpus size — the
-    sample-bounded fit is what makes the gate runnable continuously.
+    Scale: every store write is <= n_languages rows + the one-row
+    model card, regardless of corpus size — the sample-bounded fit is
+    what makes the gate runnable continuously.
     """
     from ..operators import classifier as PC
 
-    stash_path = os.path.join(store_root, "stash")
-    grid_path = os.path.join(store_root, "grid")
     model_path = os.path.join(store_root, "model")
-    fit_marker = os.path.join(store_root, "_FIT_EPOCH")
     fit_target = min(expected_docs, PC.PTRON_FIT_N)
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    scope_token = uuid.uuid4().hex[:12]
+    stat_keys = ("ns", "s1", "s2", "s3", "thr")
 
-    def _read_model(sess: SparkSession):
+    def load(sess: SparkSession):
         r = sess.read.parquet(model_path).collect()[0]
-        stats = {k: r[k] for k in ("ns", "s1", "s2", "s3", "thr")}
-        return stats, [int(r[f"w{j}"]) for j in range(4)]
+        return {k: r[k] for k in stat_keys}, [int(r[f"w{j}"]) for j in range(4)]
 
-    def _score_and_write(docs: DataFrame, stats, w, epoch_id: int) -> None:
+    def fit(rows: DataFrame):
+        sample = rows.orderBy("doc_id").limit(fit_target).select("doc_id", "text")
+        raw = PC.ptron_raw_features(sample).persist()
+        try:
+            stats = PC.ptron_stats(raw)
+            w = PC.final_weights(PC.perceptron_fit(PC.ptron_centered(raw, stats)))
+        finally:
+            raw.unpersist()
+        rows.sparkSession.createDataFrame(
+            [tuple([stats[k] for k in stat_keys] + w)],
+            "ns long, s1 long, s2 long, s3 long, thr double, "
+            "w0 long, w1 long, w2 long, w3 long",
+        ).coalesce(1).write.mode("overwrite").parquet(model_path)
+        return stats, w
+
+    def score(docs: DataFrame, model) -> DataFrame:
+        stats, w = model
         raw = PC.ptron_raw_features(docs, extra=("lang",))
         feats = PC.ptron_centered(raw, stats, extra=("lang",))
         xs = [F.col(f"x{j}") for j in range(4)]
         kept = (PC.margin_expr(w, xs) >= 0).cast("long")
-        grid = (
-            feats.groupBy("lang")
-            .agg(
-                F.count(F.lit(1)).alias("total_ct"),
-                F.sum(kept).alias("kept_ct"),
-            )
-            .localCheckpoint()
+        return feats.groupBy("lang").agg(
+            F.count(F.lit(1)).alias("total_ct"),
+            F.sum(kept).alias("kept_ct"),
         )
-        try:
-            grid.write.mode("overwrite").parquet(
-                os.path.join(grid_path, f"epoch={epoch_id}")
-            )
-        finally:
-            _release_checkpoint(grid)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        with cache_scope(f"stream:ptron_gate:{scope_token}"):
-            _epoch(batch, epoch_id)
-
-    def _epoch(batch: DataFrame, epoch_id: int) -> None:
-        sess = batch.sparkSession
-        batch = batch.persist()
-        allr = None
-        try:
-            fit_ep = (
-                int(hfs.read_text(sess, fit_marker).strip())
-                if hfs.exists(sess, fit_marker)
-                else None
-            )
-            if fit_ep is not None and epoch_id > fit_ep:
-                stats, w = _read_model(sess)
-                _score_and_write(batch, stats, w, epoch_id)
-                return
-            # pre-fit epochs, the fit epoch, or a REDELIVERED fit epoch
-            if hfs.exists(sess, stash_path):
-                allr = read_epoch_store(sess, stash_path, epoch_id).unionByName(
-                    batch.select("doc_id", "text", "lang")
-                )
-            else:
-                allr = batch.select("doc_id", "text", "lang")
-            allr = allr.persist()
-            if fit_ep == epoch_id:
-                # redelivered fit epoch: the stored model card equals
-                # the deterministic refit bit-for-bit — rewrite the
-                # same backlog grid
-                stats, w = _read_model(sess)
-                _score_and_write(allr, stats, w, epoch_id)
-            elif allr.count() >= fit_target:
-                sample = allr.orderBy("doc_id").limit(fit_target).select(
-                    "doc_id", "text"
-                )
-                raw = PC.ptron_raw_features(sample).persist()
-                try:
-                    stats = PC.ptron_stats(raw)
-                    rows = PC.perceptron_fit(PC.ptron_centered(raw, stats))
-                finally:
-                    raw.unpersist()
-                w = PC.final_weights(rows)
-                sess.createDataFrame(
-                    [tuple([stats[k] for k in ("ns", "s1", "s2", "s3", "thr")] + w)],
-                    "ns long, s1 long, s2 long, s3 long, thr double, "
-                    "w0 long, w1 long, w2 long, w3 long",
-                ).coalesce(1).write.mode("overwrite").parquet(model_path)
-                hfs.write_text_atomic(sess, fit_marker, str(epoch_id))
-                hfs.delete(sess, os.path.join(stash_path, f"epoch={epoch_id}"))
-                _score_and_write(allr, stats, w, epoch_id)
-            else:
-                hfs.delete(sess, os.path.join(grid_path, f"epoch={epoch_id}"))
-                batch.select("doc_id", "text", "lang").write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(stash_path, f"epoch={epoch_id}"))
-        finally:
-            if allr is not None:
-                allr.unpersist()
-            batch.unpersist()
-
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "ptron_gate"))
-        .start()
+    epoch = _bootstrap_fit(
+        store_root, "grid", ("doc_id", "text", "lang"), fit_target, fit, load, score
     )
+    return _epoch_query(spark, reg, source, ckpt, "ptron_gate", epoch)
 
 
 def merged_ptron_gate(spark: SparkSession, store_root: str) -> DataFrame:
@@ -1783,28 +1554,18 @@ def cms_sketch_app(
     plain counter addition, which is exactly why CMS is *the*
     streaming frequency sketch. There is no per-key state anywhere:
     the sketch IS the state, bounded at depth*width rows no matter how
-    many distinct tokens ever flow. Store writes follow the
-    incremental-dedup apps' crash contract — a foreachBatch retry
-    OVERWRITES its own ``epoch=<id>`` directory, so a replayed batch
-    can never double-count into the sketch.
+    many distinct tokens ever flow.
     """
     from ..operators.aggregates import cms_counters
     from ..operators.textops import tokenize
 
     grid_path = os.path.join(store_root, "cms_grid")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         toks = batch.select(F.explode(tokenize(F.col("text"))).alias("tok"))
-        cms_counters(toks, "tok").write.mode("overwrite").parquet(
-            os.path.join(grid_path, f"epoch={epoch_id}")
-        )
+        ep.write((cms_counters(toks, "tok"), grid_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "cms_sketch"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "cms_sketch", epoch)
 
 
 def bloom_filter_app(
@@ -1828,40 +1589,22 @@ def bloom_filter_app(
     ``bits`` is fixed at provisioning time (size it for the
     benchmark's expected scale via ``operators.dedup.bloom_width``);
     re-provisioning a saturated filter is a batch rebuild, the
-    standard Bloom operational contract. Store writes follow the
-    incremental apps' crash rule — a foreachBatch retry OVERWRITES its
-    own ``epoch=<id>`` directory: bit_or would make an honest double
-    write harmless anyway, but the overwrite is what keeps a poisoned
-    half-written attempt from surviving the restart.
+    standard Bloom operational contract.
     """
     from ..operators import dedup as D
 
     path = os.path.join(store_root, "bloom_words")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         # persist before the explode: without the plan barrier Catalyst
         # collapses the staged projections and the shingle lambda
         # re-runs its inlined tokenize per element (textops.tokenize's
         # lambda-inlining note; measured 3.3 s -> sub-second per epoch)
-        sh = D.doc_shingles(batch, "doc_id", "text", ngram=ngram).persist()
-        try:
-            ev = (
-                sh.select(F.explode("s").alias("g"))
-                .select(F.md5("g").alias("gh"))
-                .distinct()
-            )
-            D.bloom_word_table(ev, bits).write.mode("overwrite").parquet(
-                os.path.join(path, f"epoch={epoch_id}")
-            )
-        finally:
-            sh.unpersist(False)
+        sh = ep.persist(D.doc_shingles(batch, "doc_id", "text", ngram=ngram))
+        ev = sh.select(F.explode("s").alias("g")).select(F.md5("g").alias("gh")).distinct()
+        ep.write((D.bloom_word_table(ev, bits), path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "bloom_filter"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "bloom_filter", epoch)
 
 
 def merged_bloom_words(spark: SparkSession, store_root: str) -> DataFrame:
@@ -1894,27 +1637,17 @@ def hll_sketch_app(
     sketch is the per-(group, j) MAX over epochs
     (:func:`merged_hll_registers`). MAX merge is IDEMPOTENT — the one
     member of the family where even an appended double-write of an
-    epoch could not corrupt the sketch — but store writes still follow
-    the incremental apps' crash contract (a foreachBatch retry
-    OVERWRITES its own ``epoch=<id>`` directory) so a poisoned
-    half-written attempt never survives a restart. No per-key state:
-    the registers ARE the state, groups*m rows however many distinct
-    keys ever flow."""
+    epoch could not corrupt the sketch. No per-key state: the
+    registers ARE the state, groups*m rows however many distinct keys
+    ever flow."""
     from ..operators.aggregates import hll_registers
 
     grid_path = os.path.join(store_root, "hll_regs")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        hll_registers(batch, group, key).write.mode("overwrite").parquet(
-            os.path.join(grid_path, f"epoch={epoch_id}")
-        )
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
+        ep.write((hll_registers(batch, group, key), grid_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "hll_sketch"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "hll_sketch", epoch)
 
 
 def merged_hll_registers(
@@ -1952,8 +1685,7 @@ def lm_counts_app(
     totals from the merged grid (c1 = sum of c2 over the prefix — the
     derivation commutes with the merge), and DISTINCTs the token sets
     (idempotent). Per-epoch store cost is batch-distinct-bigram-sized,
-    never corpus-sized; same overwrite-own-epoch crash rule as the
-    CMS app (pinned by the poison-epoch/restart test).
+    never corpus-sized.
 
     ``doc_filter`` (optional Column) admits only matching documents
     into the model — how a DSIR deployment maintains its TARGET-domain
@@ -1963,26 +1695,17 @@ def lm_counts_app(
 
     grams_path = os.path.join(store_root, "lm_grams")
     toks_path = os.path.join(store_root, "lm_toks")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         if doc_filter is not None:
             batch = batch.filter(doc_filter)
         staged = textops.with_tokens(batch)
-        lm.doc_bigrams(staged).groupBy("w1", "g").agg(
-            F.count("*").alias("ct")
-        ).write.mode("overwrite").parquet(
-            os.path.join(grams_path, f"epoch={epoch_id}")
+        ep.write(
+            (lm.doc_bigrams(staged).groupBy("w1", "g").agg(F.count("*").alias("ct")), grams_path),
+            (staged.select(F.explode("toks").alias("tok")).distinct(), toks_path),
         )
-        staged.select(F.explode("toks").alias("tok")).distinct().write.mode(
-            "overwrite"
-        ).parquet(os.path.join(toks_path, f"epoch={epoch_id}"))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "lm_counts"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "lm_counts", epoch)
 
 
 def merged_lm_model(spark: SparkSession, store_root: str) -> DataFrame:
@@ -2033,30 +1756,23 @@ def dsir_grid_app(
     vocabulary. ``doc_filter`` admits only matching documents: two app
     instances one admission predicate apart maintain the raw and the
     TARGET-domain grids from the same stream (`dsir_hashed_stream`),
-    exactly the dsir_gate_stream deployment shape. Same
-    overwrite-own-epoch crash rule as the CMS app (a foreachBatch
-    retry overwrites its own ``epoch=<id>`` directory, so a replayed
-    batch can never double-count)."""
+    exactly the dsir_gate_stream deployment shape."""
     from ..operators import lm, textops
 
     grid_path = os.path.join(store_root, "dsir_grid")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
         if doc_filter is not None:
             batch = batch.filter(doc_filter)
-        staged = textops.with_tokens(batch)
-        lm.doc_bigrams(staged).select(
-            lm.hash_bucket(F.col("g"), lm.DSIR_HASH_B).alias("b")
-        ).groupBy("b").agg(F.count("*").alias("ct")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(grid_path, f"epoch={epoch_id}"))
+        grid = (
+            lm.doc_bigrams(textops.with_tokens(batch))
+            .select(lm.hash_bucket(F.col("g"), lm.DSIR_HASH_B).alias("b"))
+            .groupBy("b")
+            .agg(F.count("*").alias("ct"))
+        )
+        ep.write((grid, grid_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "dsir_grid"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "dsir_grid", epoch)
 
 
 def merged_dsir_grid(spark: SparkSession, store_root: str) -> DataFrame:
@@ -2088,31 +1804,24 @@ def events_rollup_app(
     (:func:`merged_events_rollup`) is bit-identical to the one-shot
     batch rollup — decimal addition is exact and associative, the
     same argument that makes exact_sum order-insensitive. Per-epoch
-    store cost is grid-sized, never row-sized; same
-    overwrite-own-epoch crash rule as the CMS app."""
-    grid_path = os.path.join(store_root, "roll_grid")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-
+    store cost is grid-sized, never row-sized."""
     # the SAME per-row decimal quantum exact_sum uses — a drifting
     # literal here would silently break the bit-identical-merge
     # contract the gapfill stream twin certifies (self-review r13)
     from ..functions.exact import _DEC as _EXACT_DEC
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        batch.groupBy(
+    grid_path = os.path.join(store_root, "roll_grid")
+
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
+        grid = batch.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         ).agg(
             F.count("*").alias("ct"),
             F.sum(F.col("value").cast(_EXACT_DEC)).alias("vsum"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(grid_path, f"epoch={epoch_id}")
         )
+        ep.write((grid, grid_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "events_rollup"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "events_rollup", epoch)
 
 
 def merged_events_rollup(spark: SparkSession, store_root: str) -> DataFrame:
@@ -2168,23 +1877,17 @@ def hist_sketch_app(
     in the grid as the re-provision signal, never silently dropped
     (the r10 review finding; quantile readers exclude the sentinel).
     No per-key state: the grid IS the state, groups*bins(+1) rows
-    forever. Same overwrite-own-epoch crash rule as the CMS app."""
+    forever."""
     from ..operators.aggregates import hist_counters
 
     grid_path = os.path.join(store_root, "hist_grid")
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
     bounds = local_table(spark, bounds_rows, f"{group} string, vmin double, vmax double")
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        hist_counters(
-            batch.select(group, value_col), group, value_col, bounds
-        ).write.mode("overwrite").parquet(os.path.join(grid_path, f"epoch={epoch_id}"))
+    def epoch(batch: DataFrame, ep: EpochScope) -> None:
+        grid = hist_counters(batch.select(group, value_col), group, value_col, bounds)
+        ep.write((grid, grid_path))
 
-    return (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", os.path.join(ckpt, "hist_sketch"))
-        .start()
-    )
+    return _epoch_query(spark, reg, source, ckpt, "hist_sketch", epoch)
 
 
 def merged_hist_grid(
@@ -2224,10 +1927,7 @@ def compact_signature_store(
     only once fully written, and then the merged directories are
     dropped. Nothing is pinned in executor or driver memory — at a
     100 TB store the compaction cost tracks the store's size on disk,
-    like any table OPTIMIZE. (An earlier design ``localCheckpoint``-ed
-    the merged frame to break lineage before overwriting the dirs it
-    read from; the temp-generation commit removes both the lineage
-    trap and the memory pin.)
+    like any table OPTIMIZE.
 
     Crash safety, in order of failure point: a crash while writing the
     temp directory leaves an orphan the next compaction sweeps before

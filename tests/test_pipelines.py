@@ -1298,13 +1298,20 @@ def test_compaction_sweeps_orphan_tmp_then_commits(spark, tmp_path):
     assert got == {tuple(r) for r in rows.collect()}
 
 
-def test_incremental_apps_bound_checkpoint_retention(spark, reg, tmp_path):
+def test_incremental_apps_bound_checkpoint_retention(spark, reg, tmp_path, monkeypatch):
     """Each micro-batch localCheckpoints its kept frame to cut lineage
     from the store it is about to write, and releases that checkpoint
-    explicitly once the epoch's writes are done — not when the JVM
-    happens to garbage-collect it. Pin it: after an N-epoch replay no
-    RDD the replay created remains pinned; a regression to GC-timed or
-    per-epoch retention fails this."""
+    and its persisted frames explicitly when the epoch exits — not
+    when the JVM happens to garbage-collect them. Pin it: after an
+    N-epoch replay no RDD the replay created remains pinned; a
+    regression to GC-timed or per-epoch retention fails this. Three
+    runs: doc_incremental_dedup_app's success path, ptron_gate_app's
+    bootstrap-fit path (stash epochs, then the fit epoch), and a
+    doc_incremental_dedup_app epoch whose store writes fail after the
+    checkpoint — the error propagates, the query terminates and the
+    epoch still releases what it pinned."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     docs = load_tables(spark, SF_SMOKE, "documents")["documents"].select(
         "doc_id", "text"
     )
@@ -1329,6 +1336,39 @@ def test_incremental_apps_bound_checkpoint_retention(spark, reg, tmp_path):
     assert pinned() - pinned_before == set()
     # and the stream still produced its kept output
     assert spark.read.parquet(reg.channels["dwd_documents_unique"].path).count() > 0
+
+    reg_p, n = _ptron_replay(spark, tmp_path / "ptron")
+    pinned_before = pinned()
+    q = pipelines.ptron_gate_app(
+        spark, reg_p, str(tmp_path / "ptron" / "ckpt"), str(tmp_path / "ptron" / "store"),
+        expected_docs=n,
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert pinned() - pinned_before == set()
+    assert os.path.exists(str(tmp_path / "ptron" / "store" / "_FIT_EPOCH"))
+
+    parquet = DataFrameWriter.parquet
+
+    def fail_epoch_1(self, path, *args, **kwargs):
+        if os.path.basename(path) == "epoch=1":
+            raise RuntimeError("store write failed at epoch 1")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail_epoch_1)
+    pinned_before = pinned()
+    q = pipelines.doc_incremental_dedup_app(
+        spark, reg, str(tmp_path / "ckpt_fail"), str(tmp_path / "store_fail")
+    )
+    try:
+        with pytest.raises(Exception, match="store write failed at epoch 1"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.streams.active == []
+    assert pinned() - pinned_before == set()
+    # the failure hit epoch 1 after epoch 0 committed its stores
+    assert os.path.isdir(str(tmp_path / "store_fail" / "sig_bands" / "epoch=0"))
 
 
 def test_asof_join_matches_python_model(spark):
@@ -2891,8 +2931,6 @@ def test_cms_app_duplicate_delivery_no_double_count(spark, tmp_path):
     an already-committed micro-batch re-runs it with the SAME epoch
     id, the overwrite-own-epoch rule rewrites (not appends) that
     epoch's grid, and the merged sketch is bit-unchanged."""
-    import shutil
-
     from gmall_flink_0526_spark.operators.aggregates import cms_counters
     from gmall_flink_0526_spark.operators.textops import tokenize
 
@@ -2996,7 +3034,6 @@ def test_decon_screen_app_poison_epoch_and_batch_parity(spark, tmp_path):
     the raw pair level, finer than the driver's aggregated row)."""
     import shutil
 
-    from gmall_flink_0526_spark import plans
     from gmall_flink_0526_spark.plans.similarity import corpus_decon_semantic_hits
 
     regA, train, ev = _decon_train_replay(spark, tmp_path / "A")

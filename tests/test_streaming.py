@@ -495,6 +495,32 @@ def test_replay_lifecycle_only_in_the_runner():
     assert not offending, "hand-rolled replay lifecycle, use run_to_end: " + ", ".join(offending)
 
 
+def test_epoch_store_contract_only_in_the_family_helpers():
+    """The epoch-addressed store apps in streaming/pipelines.py write
+    their ``epoch=<id>`` directories, cut lineage and open their
+    stream-owned cache scopes only through the family helpers
+    (EpochScope, _epoch_query, _bootstrap_fit), which own the
+    overwrite, the release on exit and the per-instance scope."""
+    import ast
+    import re
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "gmall_flink_0526_spark" / "streaming" / "pipelines.py"
+    src = path.read_text()
+    owner = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            owner.update(dict.fromkeys(range(node.lineno, node.end_lineno + 1), node.name))
+    contract = re.compile(r"epoch=\{[^}]*epoch_id\}|\.localCheckpoint\(|cache_scope\(")
+    offending = [
+        f"pipelines.py:{i} ({owner.get(i, '<module>')}): {line.strip()}"
+        for i, line in enumerate(src.splitlines(), 1)
+        if contract.search(line)
+        and owner.get(i) not in {"EpochScope", "_epoch_query", "_bootstrap_fit"}
+    ]
+    assert not offending, "hand-rolled epoch-store contract, use EpochScope:\n" + "\n".join(offending)
+
+
 def test_write_replay_publishes_every_chunk_in_order(spark, tmp_path):
     """One file per chunk index, empty chunks included, mtime order =
     chunk order = sort order: with fewer distinct order keys than
