@@ -10,13 +10,139 @@ file-channel analogue of offset-ordered Kafka consumption (see
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.exact import exact_sum
+from ..operators import dedup as D, lm, textops
+from ..operators.aggregates import cms_estimate, hist_quantiles
+from ..operators.cache import corpus_value, scoped_persist
+from ..operators.dedup import MAX_BUCKET
+from ..operators.graph import pagerank_partitioned
+from ..operators.partitioning import spread
 from ..session import load_tables, local_table
+from ..sources.cdc import envelope_from_table
+from ..sources.dimstore import DimStore
 from ..streaming import stateful
+from ..streaming.pipelines import (
+    base_db_app,
+    bloom_filter_app,
+    cms_sketch_app,
+    decon_screen_app,
+    doc_incremental_dedup_app,
+    doc_quality_gate_app,
+    dsir_grid_app,
+    emb_incremental_dedup_app,
+    events_rollup_app,
+    hist_sketch_app,
+    hll_sketch_app,
+    lm_counts_app,
+    merged_decon_flags,
+    merged_events_rollup,
+    merged_lm_model,
+    merged_ptron_gate,
+    merged_store,
+    order_wide_app,
+    payment_wide_app,
+    ptron_gate_app,
+    read_store,
+    session_window_agg,
+    similarity_graph_app,
+    substring_dedup_app,
+    triplet_mine_app,
+)
 from ..streaming.replay import replay_registry, replay_stateful, run_to_end
 from .catalog import register, register_setup
-from .logs import SESSION_GAP_MIN
+from .cdc import PIT_T0, PIT_T1, sql_dim_enrichment_asof
+from .dedup import (
+    DOC_PR_PARTITIONS,
+    JACCARD_THRESHOLD,
+    SQL_LSH_BANDS,
+    SQL_SHINGLES3,
+    _sql_doc_pagerank,
+    _sql_substr_res_tail,
+)
+from .llmprep import (
+    DECON_NGRAM,
+    EVAL_MOD,
+    corpus_decon_grams,
+    decon_bloom_bits,
+    sql_decontaminate_bloom,
+)
+from .lmquality import (
+    DSIR_TARGET_LANG,
+    SQL_DSIR_HASHED_Q,
+    SQL_DSIR_SELECT_AUDIT,
+    SQL_PERPLEXITY_FILTER,
+    SQL_PTRON_FILTER,
+    _dsir_hash_bucket,
+    _staged_grams,
+    dsir_audit_output,
+    dsir_hashed_scores_from_grid,
+    dsir_scores_from,
+    gate_output,
+)
+from .logs import (
+    PAGERANK_D,
+    PAGERANK_ITERS,
+    PAGERANK_RESET,
+    SESSION_GAP_MIN,
+    _SQL_FUNNEL_ATTR,
+    _SQL_FUNNEL_ATTR4,
+    _SQL_FUNNEL_ATTR_WINDOWED,
+    _SQL_VISITOR_SLIDING,
+    _exact_disc_long,
+    _sql_behavior_pagerank,
+    _sql_drift_chi2,
+    _sql_hll_audit,
+    _windowed_funnel_select,
+    drift_chi2_from_grid,
+    hll_audit_from_regs,
+    pagerank_ranks,
+    sql_quantile_hist_audit,
+)
+from .similarity import (
+    SEMDEDUP_MAX_CLUSTER,
+    SEMDEDUP_T,
+    SQL_CONTRASTIVE_TRIPLETS,
+    SQL_DECON_SEMANTIC,
+    SQL_DOT,
+    _sql_kmeans_ctes_subset,
+    triplets_from_scored,
+)
+from .text import CMS_TOP, SQL_STOPS, SQL_TOKS, _sql_cms_audit
+from .timeseries import SQL_GAPFILL_LOCF, dense_from_rollup, locf_output
+
+
+def _run_store_app(spark, reg, app, store="store", ckpt="ckpt", **kw) -> str:
+    """Run the epoch-store app ``app`` over ``reg``'s channels to the
+    end, with its checkpoint at ``<reg.root>/<ckpt>`` and its store at
+    ``<reg.root>/<store>``; returns the store root."""
+    store, ckpt = os.path.join(reg.root, store), os.path.join(reg.root, ckpt)
+    run_to_end(spark, reg, lambda: app(spark, reg, ckpt, store, **kw))
+    return store
+
+
+def _time_halves(ev: DataFrame):
+    """Each row's file in a 2-file replay of ``ev``, cut at the middle
+    of its event-time span. The cut is on event-time VALUE, not row
+    count: a row-count split could land between two rows sharing one
+    timestamp, and the as-of tie rules (a same-instant build visible to
+    its probe) are decided in-batch. Monotone in ts, so the replay
+    stays event-ordered; costs one tiny min/max agg."""
+    mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
+    ts_type = ev.schema["ts"].dataType.simpleString()
+    return F.when(F.col("ts") <= F.lit(mn + (mx - mn) / 2).cast(ts_type), 0).otherwise(1)
+
+
+def _doc_lines(docs: DataFrame) -> DataFrame:
+    """``docs`` spread by doc_id, with a synthetic event time ``ts`` one
+    second per doc_id, for a time-ordered document replay."""
+    return spread(docs, "doc_id").withColumn(
+        "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
+    )
 
 
 @register(
@@ -154,8 +280,6 @@ def _incdedup_oracle() -> str:
     near-dup copies keep being dropped against the representative at
     batch x 1 cost.
     """
-    from ..operators.dedup import MAX_BUCKET
-    from .dedup import JACCARD_THRESHOLD, SQL_LSH_BANDS, SQL_SHINGLES3
 
     n = _N_DEDUP_BATCHES
 
@@ -246,17 +370,12 @@ kept{f} AS (
     tags=("dedup", "lsh", "streaming", "incremental"),
 )
 def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..streaming.pipelines import doc_incremental_dedup_app
-
     docs = load_tables(spark, sf_dir, "documents")["documents"].select("doc_id", "text")
     reg = replay_registry(
         "gmall_incdedup_",
         ods_documents=(docs, _N_DEDUP_BATCHES, ["doc_id"], F.col("doc_id") % _N_DEDUP_BATCHES),
     )
-    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-    run_to_end(spark, reg, lambda: doc_incremental_dedup_app(spark, reg, ckpt, store))
+    _run_store_app(spark, reg, doc_incremental_dedup_app)
     return reg.read_batch(spark, "dwd_documents_unique").select("doc_id")
 
 
@@ -301,9 +420,6 @@ SESSION_WM_H = 1  # session replay watermark (hours)
     tags=("session", "streaming", "events", "agg"),
 )
 def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipelines import session_window_agg
-    from .logs import SESSION_GAP_MIN as GAP
-
     events = load_tables(spark, sf_dir, "events")["events"]
     # withWatermark requires TIMESTAMP (LTZ); parquet may surface NTZ.
     # Session TZ is UTC either way, so the wall-clock value is identical.
@@ -319,7 +435,9 @@ def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = replay_stateful(
         spark,
         src.unionByName(sentinel),
-        lambda s: session_window_agg(s, gap_minutes=GAP, watermark=f"{SESSION_WM_H} hour"),
+        lambda s: session_window_agg(
+            s, gap_minutes=SESSION_GAP_MIN, watermark=f"{SESSION_WM_H} hour"
+        ),
         order_by=["ts", "event_id"],
         drain_mode="all_available",
     )
@@ -354,8 +472,6 @@ def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "agg", "window"),
 )
 def visitor_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.exact import exact_sum
-
     events = load_tables(spark, sf_dir, "events")["events"]
     src = events.select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
@@ -443,8 +559,6 @@ def visitor_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "agg", "window", "watermark"),
 )
 def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.exact import exact_sum
-
     events = load_tables(spark, sf_dir, "events")["events"]
     src = events.select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
@@ -508,66 +622,58 @@ def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("event_type") != "_sentinel")
 
 
-def _register_visitor_stats_sliding_stream():
-    from .logs import _SQL_VISITOR_SLIDING
-
-    @register(
-        "visitor_stats_sliding_stream",
-        oracle=_SQL_VISITOR_SLIDING,
-        doc="A1, streaming SLIDING windows — completes the streaming "
-        "window-family trio (tumbling = visitor_stats_stream, "
-        "session = session_stats_stream): the real watermarked "
-        "hop-window aggregate (window(ts, '2 hours', '1 hour')) over "
-        "a time-ordered replay, flushed by a sentinel row 4 hours "
-        "past the data (every real window end then trails the "
-        "watermark). Per-row fan-out is the fixed window/slide = 2; "
-        "state is one row per (open window, type), bounded by "
-        "window-count x types regardless of event volume. Shares the "
-        "batch query's unnested-hops oracle verbatim.",
-        tags=("streaming", "events", "agg", "window"),
+@register(
+    "visitor_stats_sliding_stream",
+    oracle=_SQL_VISITOR_SLIDING,
+    doc="A1, streaming SLIDING windows — completes the streaming "
+    "window-family trio (tumbling = visitor_stats_stream, "
+    "session = session_stats_stream): the real watermarked "
+    "hop-window aggregate (window(ts, '2 hours', '1 hour')) over "
+    "a time-ordered replay, flushed by a sentinel row 4 hours "
+    "past the data (every real window end then trails the "
+    "watermark). Per-row fan-out is the fixed window/slide = 2; "
+    "state is one row per (open window, type), bounded by "
+    "window-count x types regardless of event volume. Shares the "
+    "batch query's unnested-hops oracle verbatim.",
+    tags=("streaming", "events", "agg", "window"),
+)
+def visitor_stats_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    src = events.select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
     )
-    def visitor_stats_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..functions.exact import exact_sum
+    sentinel = src.agg(
+        F.lit(-1).cast("long").alias("event_id"),
+        (F.max("ts") + F.expr("INTERVAL 4 HOURS")).alias("ts"),
+        F.lit("_sentinel").alias("event_type"),
+        F.lit(0.0).alias("value"),
+    )
 
-        events = load_tables(spark, sf_dir, "events")["events"]
-        src = events.select(
-            "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
-        )
-        sentinel = src.agg(
-            F.lit(-1).cast("long").alias("event_id"),
-            (F.max("ts") + F.expr("INTERVAL 4 HOURS")).alias("ts"),
-            F.lit("_sentinel").alias("event_type"),
-            F.lit(0.0).alias("value"),
-        )
-
-        def op(s):
-            return (
-                s.withWatermark("ts", "1 hour")
-                .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-                .agg(
-                    F.count("*").alias("pv_ct"),
-                    exact_sum(F.col("value")).alias("value_sum"),
-                )
-                .select(
-                    F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                    "event_type",
-                    "pv_ct",
-                    "value_sum",
-                )
+    def op(s):
+        return (
+            s.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
+            .agg(
+                F.count("*").alias("pv_ct"),
+                exact_sum(F.col("value")).alias("value_sum"),
             )
-
-        out = replay_stateful(
-            spark,
-            src.unionByName(sentinel),
-            op,
-            order_by=["ts", "event_id"],
-            n_files=2,
-            drain_mode="all_available",
+            .select(
+                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
+                "event_type",
+                "pv_ct",
+                "value_sum",
+            )
         )
-        return out.filter(F.col("event_type") != "_sentinel")
 
-
-_register_visitor_stats_sliding_stream()
+    out = replay_stateful(
+        spark,
+        src.unionByName(sentinel),
+        op,
+        order_by=["ts", "event_id"],
+        n_files=2,
+        drain_mode="all_available",
+    )
+    return out.filter(F.col("event_type") != "_sentinel")
 
 
 @register(
@@ -600,10 +706,6 @@ _register_visitor_stats_sliding_stream()
     tags=("join", "interval", "streaming", "events"),
 )
 def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..streaming.pipelines import order_wide_app
-
     # deterministic 1-in-2 sample: bounds the replay-harness cost of
     # the two-sided join state; the app's semantics are id-agnostic and
     # the oracle applies the identical predicate
@@ -679,12 +781,6 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("cdc", "routing", "streaming", "dim"),
 )
 def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..sources.cdc import envelope_from_table
-    from ..sources.dimstore import DimStore
-    from ..streaming.pipelines import base_db_app
-
     # deterministic 1-in-2 sample, same predicate in the oracle —
     # bounds the per-batch MERGE cost of the replay harness
     orders = load_tables(spark, sf_dir, "orders")["orders"].filter(
@@ -740,10 +836,6 @@ def base_db_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "interval", "streaming", "events"),
 )
 def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..streaming.pipelines import payment_wide_app
-
     events = load_tables(spark, sf_dir, "events")["events"].filter(
         F.col("event_id") % 4 < 2
     )
@@ -781,17 +873,14 @@ def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .text import SQL_STOPS as _SQL_STOPS, SQL_TOKS as _SQL_TOKS  # noqa: E402
-
-
 @register(
     "doc_quality_gate_stream",
     oracle=f"""
-    WITH t AS (SELECT doc_id, text, {_SQL_TOKS} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, text, {SQL_TOKS} AS toks FROM documents),
     c AS (
       SELECT doc_id, text,
              CAST(len(toks) AS DOUBLE) AS n,
-             CAST(len(list_filter(toks, x -> x IN {_SQL_STOPS})) AS DOUBLE)
+             CAST(len(list_filter(toks, x -> x IN {SQL_STOPS})) AS DOUBLE)
                / len(toks) AS stop_score,
              CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
                / len(toks) AS mean_len
@@ -829,16 +918,8 @@ from .text import SQL_STOPS as _SQL_STOPS, SQL_TOKS as _SQL_TOKS  # noqa: E402
     tags=("streaming", "llm-prep", "replay", "quality"),
 )
 def doc_quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..operators import textops
-    from ..operators.partitioning import spread
-    from ..streaming.pipelines import doc_quality_gate_app
-
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    lines = spread(docs, "doc_id").withColumn(
-        "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-    )
+    lines = _doc_lines(docs)
     reg = replay_registry(
         "gmall_qgate_",
         ods_documents=(
@@ -889,7 +970,6 @@ def _emb_incdedup_oracle() -> str:
     KEPT-store's per-cluster occupancy with the min-id representative
     always kept pairing — the same two scopes as the MinHash replay
     oracle, over learned clusters instead of band buckets."""
-    from .similarity import SEMDEDUP_MAX_CLUSTER, SEMDEDUP_T, SQL_DOT, _sql_kmeans_ctes_subset
 
     n = _N_EMB_BATCHES
     cos = f"{SQL_DOT.format(a='x.embedding', b='y.embedding')} / (x.nrm * y.nrm)"
@@ -980,10 +1060,6 @@ kept{f} AS (
     tags=("similarity", "kmeans", "dedup", "streaming", "incremental"),
 )
 def embedding_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..streaming.pipelines import emb_incremental_dedup_app
-
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
         "vec_id", "embedding"
     )
@@ -991,157 +1067,116 @@ def embedding_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gmall_embinc_",
         ods_embeddings=(emb, _N_EMB_BATCHES, ["vec_id"], F.col("vec_id") % _N_EMB_BATCHES),
     )
-    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-    run_to_end(spark, reg, lambda: emb_incremental_dedup_app(spark, reg, ckpt, store))
+    _run_store_app(spark, reg, emb_incremental_dedup_app)
     return reg.read_batch(spark, "dwd_embeddings_unique").select("vec_id")
 
 
-def _register_decon_semantic_stream():
-    from .llmprep import EVAL_MOD
-    from .similarity import SQL_DECON_SEMANTIC
-
-    @register(
-        "decontaminate_semantic_stream",
-        oracle=SQL_DECON_SEMANTIC,
-        doc="The semantic-decontamination screen maintained "
-        "INCREMENTALLY (r14 VERDICT #2): train embeddings arrive as a "
-        "3-batch id-ordered replay while the eval benchmark is the "
-        "static side; streaming/pipelines.decon_screen_app stashes "
-        "pre-fit epochs, bootstrap-fits the quantizer the moment the "
-        "batch fit's exact sample has arrived (adaptive k provisioned "
-        "from the train count — the Bloom-width contract), screens "
-        "the backlog, then screens each later batch against the "
-        "broadcast eval side. The screen is per-train-row independent "
-        "once the quantizer is fixed, so the accumulated epoch-store "
-        "flags ARE the batch flag set — the twin shares "
-        "decontaminate_semantic's oracle VERBATIM; a green row "
-        "certifies fit, assignment and every cosine bit-for-bit "
-        "across build paths. Crash contract: poison-epoch and "
-        "checkpoint-rewind duplicate-delivery tests on the stash, "
-        "fit-marker and flag stores.",
-        tags=("similarity", "kmeans", "llm-prep", "decontamination",
-              "streaming", "incremental"),
+@register(
+    "decontaminate_semantic_stream",
+    oracle=SQL_DECON_SEMANTIC,
+    doc="The semantic-decontamination screen maintained "
+    "INCREMENTALLY (r14 VERDICT #2): train embeddings arrive as a "
+    "3-batch id-ordered replay while the eval benchmark is the "
+    "static side; streaming/pipelines.decon_screen_app stashes "
+    "pre-fit epochs, bootstrap-fits the quantizer the moment the "
+    "batch fit's exact sample has arrived (adaptive k provisioned "
+    "from the train count — the Bloom-width contract), screens "
+    "the backlog, then screens each later batch against the "
+    "broadcast eval side. The screen is per-train-row independent "
+    "once the quantizer is fixed, so the accumulated epoch-store "
+    "flags ARE the batch flag set — the twin shares "
+    "decontaminate_semantic's oracle VERBATIM; a green row "
+    "certifies fit, assignment and every cosine bit-for-bit "
+    "across build paths. Crash contract: poison-epoch and "
+    "checkpoint-rewind duplicate-delivery tests on the stash, "
+    "fit-marker and flag stores.",
+    tags=("similarity", "kmeans", "llm-prep", "decontamination",
+          "streaming", "incremental"),
+)
+def decontaminate_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
+        "vec_id", "embedding"
     )
-    def decontaminate_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..streaming.pipelines import decon_screen_app, merged_decon_flags
-
-        emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
-            "vec_id", "embedding"
-        )
-        train = emb.filter(F.col("vec_id") % EVAL_MOD != 0)
-        ev = emb.filter(F.col("vec_id") % EVAL_MOD == 0)
-        n_train = train.count()
-        reg = replay_registry("gmall_deconstream_", ods_embeddings=(train, 3, ["vec_id"]))
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(
-            spark,
-            reg,
-            lambda: decon_screen_app(spark, reg, ckpt, store, eval_df=ev, expected_train=n_train),
-        )
-        return merged_decon_flags(spark, store)
+    train = emb.filter(F.col("vec_id") % EVAL_MOD != 0)
+    ev = emb.filter(F.col("vec_id") % EVAL_MOD == 0)
+    n_train = train.count()
+    reg = replay_registry("gmall_deconstream_", ods_embeddings=(train, 3, ["vec_id"]))
+    store = _run_store_app(spark, reg, decon_screen_app, eval_df=ev, expected_train=n_train)
+    return merged_decon_flags(spark, store)
 
 
-_register_decon_semantic_stream()
-
-
-def _register_contrastive_triplets_stream():
-    from .similarity import SQL_CONTRASTIVE_TRIPLETS
-
-    @register(
-        "contrastive_triplets_stream",
-        oracle=SQL_CONTRASTIVE_TRIPLETS,
-        doc="The contrastive-training table mined INCREMENTALLY — "
-        "corpus vectors arrive as a 3-batch id-ordered replay; "
-        "streaming/pipelines.triplet_mine_app stashes pre-fit epochs, "
-        "bootstrap-fits the fixed-k quantizer the moment the batch "
-        "fit's exact sample has arrived, pins the assigned PROBE "
-        "frame into the store, scores the backlog, then scores each "
-        "later batch map-side against the broadcast probes. Each "
-        "scored candidate is a pure function of (centroids, probes, "
-        "one corpus vector), so the accumulated epoch store IS the "
-        "batch query's scored frame; the read-side triplet tail "
-        "(triplets_from_scored) is shared with contrastive_triplets "
-        "and the twin shares its oracle VERBATIM — a green row "
-        "certifies fit, probe assignment, every cosine and both "
-        "rankings bit-for-bit across build paths. Crash contract: "
-        "poison-epoch and fit-epoch duplicate-delivery tests on the "
-        "stash/centroid/probe/scored stores. This is the shape that "
-        "keeps a training-data miner CURRENT while the corpus grows: "
-        "per-epoch cost is batch x broadcast-probes, the store is "
-        "append-only and never rescanned by the app.",
-        tags=("similarity", "ann", "llm-prep", "training-data",
-              "streaming", "incremental"),
+@register(
+    "contrastive_triplets_stream",
+    oracle=SQL_CONTRASTIVE_TRIPLETS,
+    doc="The contrastive-training table mined INCREMENTALLY — "
+    "corpus vectors arrive as a 3-batch id-ordered replay; "
+    "streaming/pipelines.triplet_mine_app stashes pre-fit epochs, "
+    "bootstrap-fits the fixed-k quantizer the moment the batch "
+    "fit's exact sample has arrived, pins the assigned PROBE "
+    "frame into the store, scores the backlog, then scores each "
+    "later batch map-side against the broadcast probes. Each "
+    "scored candidate is a pure function of (centroids, probes, "
+    "one corpus vector), so the accumulated epoch store IS the "
+    "batch query's scored frame; the read-side triplet tail "
+    "(triplets_from_scored) is shared with contrastive_triplets "
+    "and the twin shares its oracle VERBATIM — a green row "
+    "certifies fit, probe assignment, every cosine and both "
+    "rankings bit-for-bit across build paths. Crash contract: "
+    "poison-epoch and fit-epoch duplicate-delivery tests on the "
+    "stash/centroid/probe/scored stores. This is the shape that "
+    "keeps a training-data miner CURRENT while the corpus grows: "
+    "per-epoch cost is batch x broadcast-probes, the store is "
+    "append-only and never rescanned by the app.",
+    tags=("similarity", "ann", "llm-prep", "training-data",
+          "streaming", "incremental"),
+)
+def contrastive_triplets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
+        "vec_id", "embedding"
     )
-    def contrastive_triplets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.cache import scoped_persist
-        from ..streaming.pipelines import merged_triplet_scored, triplet_mine_app
-        from .similarity import triplets_from_scored
-
-        emb = load_tables(spark, sf_dir, "embeddings")["embeddings"].select(
-            "vec_id", "embedding"
-        )
-        n_corpus = emb.count()
-        reg = replay_registry("gmall_tripstream_", ods_embeddings=(emb, 3, ["vec_id"]))
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(
-            spark, reg, lambda: triplet_mine_app(spark, reg, ckpt, store, expected_corpus=n_corpus)
-        )
-        scored = scoped_persist(merged_triplet_scored(spark, store))
-        return triplets_from_scored(scored)
-
-
-_register_contrastive_triplets_stream()
-
-
-def _register_quality_perceptron_stream():
-    from .lmquality import SQL_PTRON_FILTER
-
-    @register(
-        "quality_perceptron_stream",
-        oracle=SQL_PTRON_FILTER,
-        doc="The in-engine perceptron quality gate run the way a "
-        "production stream runs it — documents arrive as a 3-batch "
-        "id-ordered replay; streaming/pipelines.ptron_gate_app stashes "
-        "pre-fit epochs, trains the classifier the moment the batch "
-        "fit's exact sample has arrived (centering stats, teacher "
-        "median threshold and the full synchronous-update loop — all "
-        "on the fit-target lowest doc_ids, = the batch sample), "
-        "persists the ONE-ROW model card, scores the backlog, then "
-        "scores each later batch map-side and writes per-language "
-        "(total, kept) count grids. Grids are ADDITIVE (the "
-        "CMS/Bloom/histogram mergeability contract), so the summed "
-        "store equals the batch gate's counts exactly and the twin "
-        "shares quality_perceptron_filter's oracle VERBATIM. Crash "
-        "contract: poison-epoch and fit-epoch duplicate-delivery "
-        "tests on the stash/model/grid stores. Every store write is "
-        "<= n_languages rows + the one-row model card at ANY corpus "
-        "size — the sample-bounded fit is what makes the gate "
-        "runnable continuously at 100 TB.",
-        tags=("llm-prep", "quality", "classifier", "model",
-              "streaming", "incremental"),
+    n_corpus = emb.count()
+    reg = replay_registry("gmall_tripstream_", ods_embeddings=(emb, 3, ["vec_id"]))
+    store = _run_store_app(spark, reg, triplet_mine_app, expected_corpus=n_corpus)
+    # epochs are disjoint corpus slices, so the union IS the batch scored frame
+    scored = scoped_persist(
+        read_store(spark, os.path.join(store, "scored")).select("qid", "cid", "cos_sim")
     )
-    def quality_perceptron_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..streaming.pipelines import merged_ptron_gate, ptron_gate_app
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"].select(
-            "doc_id", "text", "lang"
-        )
-        n_docs = docs.count()
-        reg = replay_registry("gmall_ptronstream_", ods_documents=(docs, 3, ["doc_id"]))
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(
-            spark, reg, lambda: ptron_gate_app(spark, reg, ckpt, store, expected_docs=n_docs)
-        )
-        return merged_ptron_gate(spark, store)
+    return triplets_from_scored(scored)
 
 
-_register_quality_perceptron_stream()
+@register(
+    "quality_perceptron_stream",
+    oracle=SQL_PTRON_FILTER,
+    doc="The in-engine perceptron quality gate run the way a "
+    "production stream runs it — documents arrive as a 3-batch "
+    "id-ordered replay; streaming/pipelines.ptron_gate_app stashes "
+    "pre-fit epochs, trains the classifier the moment the batch "
+    "fit's exact sample has arrived (centering stats, teacher "
+    "median threshold and the full synchronous-update loop — all "
+    "on the fit-target lowest doc_ids, = the batch sample), "
+    "persists the ONE-ROW model card, scores the backlog, then "
+    "scores each later batch map-side and writes per-language "
+    "(total, kept) count grids. Grids are ADDITIVE (the "
+    "CMS/Bloom/histogram mergeability contract), so the summed "
+    "store equals the batch gate's counts exactly and the twin "
+    "shares quality_perceptron_filter's oracle VERBATIM. Crash "
+    "contract: poison-epoch and fit-epoch duplicate-delivery "
+    "tests on the stash/model/grid stores. Every store write is "
+    "<= n_languages rows + the one-row model card at ANY corpus "
+    "size — the sample-bounded fit is what makes the gate "
+    "runnable continuously at 100 TB.",
+    tags=("llm-prep", "quality", "classifier", "model",
+          "streaming", "incremental"),
+)
+def quality_perceptron_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text", "lang"
+    )
+    n_docs = docs.count()
+    reg = replay_registry("gmall_ptronstream_", ods_documents=(docs, 3, ["doc_id"]))
+    return merged_ptron_gate(
+        spark, _run_store_app(spark, reg, ptron_gate_app, expected_docs=n_docs)
+    )
 
 
 @register(
@@ -1181,252 +1216,199 @@ def asof_click_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_tables(spark, sf_dir, "events")["events"]
     ev = events.filter(F.col("event_type").isin("click", "purchase"))
 
-    # Batch boundaries on event-time VALUE, not row count: a row-count
-    # range split could land between two rows sharing one timestamp,
-    # and the as-of tie rule (same-instant build visible to its probe)
-    # is decided in-batch. Three equal time spans from one tiny
-    # min/max agg — monotone in ts, so the replay stays event-ordered.
-    mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
-    ts_type = ev.schema["ts"].dataType.simpleString()
-    cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
-    file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-
     out = replay_stateful(
         spark, ev,
         stateful.temporal_join,
         order_by=["ts", "event_id"],
-        cache_key=f"events_tspan:{sf_dir}", file_of=file_of, n_files=2,
+        cache_key=f"events_tspan:{sf_dir}", file_of=_time_halves(ev), n_files=2,
     )
     return out.select(
         "event_id", "user_id", "probe_ts", "probe_value", "build_ts", "build_value"
     )
 
 
-def _register_funnel_attribution_stream():
-    from .logs import _SQL_FUNNEL_ATTR
-
-    @register(
-        "funnel_attribution_stream",
-        oracle=_SQL_FUNNEL_ATTR,
-        doc="Multi-step funnel attribution as ONE keyed stateful stream "
-        "(streaming/stateful.funnel_chain) — the CEP pattern state the "
-        "reference's flink-cep dependency implies beyond the bounce "
-        "job: a purchase emits its user's latest click, and for THAT "
-        "click the view resolved AT CLICK ARRIVAL (stored with the "
-        "click — the state's single view slot may already hold a "
-        "newer view than the stored click should see, so the link "
-        "binds when the pattern step fires, exactly as a Flink CEP "
-        "chain would). State per key is two O(1) levels: latest view "
-        "ts + latest click (ts, view-at-click). Carries are "
-        "vectorized positional ffills; in-batch order (ts, "
-        "view<click<purchase) gives the chained-ASOF inclusive rule, "
-        "and micro-batch boundaries cut on event-time value so "
-        "same-instant stage pairs never straddle a batch. Oracle: the "
-        "batch funnel_attribution's chained DuckDB ASOF SQL verbatim "
-        "— the stream is value-checked against the two-asof_join "
-        "composition.",
-        tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+@register(
+    "funnel_attribution_stream",
+    oracle=_SQL_FUNNEL_ATTR,
+    doc="Multi-step funnel attribution as ONE keyed stateful stream "
+    "(streaming/stateful.funnel_chain) — the CEP pattern state the "
+    "reference's flink-cep dependency implies beyond the bounce "
+    "job: a purchase emits its user's latest click, and for THAT "
+    "click the view resolved AT CLICK ARRIVAL (stored with the "
+    "click — the state's single view slot may already hold a "
+    "newer view than the stored click should see, so the link "
+    "binds when the pattern step fires, exactly as a Flink CEP "
+    "chain would). State per key is two O(1) levels: latest view "
+    "ts + latest click (ts, view-at-click). Carries are "
+    "vectorized positional ffills; in-batch order (ts, "
+    "view<click<purchase) gives the chained-ASOF inclusive rule, "
+    "and micro-batch boundaries cut on event-time value so "
+    "same-instant stage pairs never straddle a batch. Oracle: the "
+    "batch funnel_attribution's chained DuckDB ASOF SQL verbatim "
+    "— the stream is value-checked against the two-asof_join "
+    "composition.",
+    tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+)
+def funnel_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    ev = events.filter(
+        F.col("event_type").isin("view", "click", "purchase")
+    ).select("event_id", "ts", "user_id", "event_type")
+    # stage ties: the operator contract (like asof_join) wants one
+    # row per (user, ts) per stage; the fixture's stages are
+    # tie-free (asserted cheaply by the oracle match — a tie would
+    # desync) so rows pass through unaggregated
+    out = replay_stateful(
+        spark, ev,
+        stateful.funnel_chain,
+        order_by=["ts", "event_id"],
+        cache_key=f"events_funnel_tspan:{sf_dir}", file_of=_time_halves(ev), n_files=2,
     )
-    def funnel_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_tables(spark, sf_dir, "events")["events"]
-        ev = events.filter(
-            F.col("event_type").isin("view", "click", "purchase")
-        ).select("event_id", "ts", "user_id", "event_type")
-        # stage ties: the operator contract (like asof_join) wants one
-        # row per (user, ts) per stage; the fixture's stages are
-        # tie-free (asserted cheaply by the oracle match — a tie would
-        # desync) so rows pass through unaggregated
-        mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
-        ts_type = ev.schema["ts"].dataType.simpleString()
-        cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
-        file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        out = replay_stateful(
-            spark, ev,
-            stateful.funnel_chain,
-            order_by=["ts", "event_id"],
-            cache_key=f"events_funnel_tspan:{sf_dir}", file_of=file_of, n_files=2,
-        )
-        return out.select(
-            "event_id",
-            "user_id",
-            F.col("probe_ts").alias("purchase_ts"),
-            "click_ts",
-            "view_ts",
-            F.when(F.col("view_ts").isNotNull(), 3)
-            .when(F.col("click_ts").isNotNull(), 2)
-            .otherwise(1)
-            .alias("depth"),
-        )
-
-
-_register_funnel_attribution_stream()
-
-
-def _register_funnel_attribution_4_stream():
-    from .logs import _SQL_FUNNEL_ATTR4
-
-    @register(
-        "funnel_attribution_4_stream",
-        oracle=_SQL_FUNNEL_ATTR4,
-        doc="FOUR-stage funnel attribution as ONE keyed stateful "
-        "stream — the N-stage generalization proven past the shape it "
-        "was built on (streaming/stateful.funnel_chain_n with stages "
-        "signup/view/click, probe purchase; the 3-stage certified "
-        "queries run through the same operator as its M=2 instance). "
-        "State per key is three chain vectors (6 scalars), each link "
-        "bound at its stage's arrival and STORED — the newer-event "
-        "hazard the 3-stage edge test pins applies at every level. "
-        "Oracle: the batch funnel_attribution_4's chained DuckDB ASOF "
-        "SQL verbatim.",
-        tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+    return out.select(
+        "event_id",
+        "user_id",
+        F.col("probe_ts").alias("purchase_ts"),
+        "click_ts",
+        "view_ts",
+        F.when(F.col("view_ts").isNotNull(), 3)
+        .when(F.col("click_ts").isNotNull(), 2)
+        .otherwise(1)
+        .alias("depth"),
     )
-    def funnel_attribution_4_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_tables(spark, sf_dir, "events")["events"]
-        ev = events.filter(
-            F.col("event_type").isin("signup", "view", "click", "purchase")
-        ).select("event_id", "ts", "user_id", "event_type")
-        mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
-        ts_type = ev.schema["ts"].dataType.simpleString()
-        cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
-        file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        out = replay_stateful(
-            spark,
-            ev,
-            lambda df: stateful.funnel_chain_n(
-                df, stages=("signup", "view", "click"), probe_type="purchase"
-            ),
-            order_by=["ts", "event_id"],
-            cache_key=f"events_funnel4_tspan:{sf_dir}",
-            file_of=file_of,
-            n_files=2,
-        )
-        return out.select(
-            "event_id",
-            "user_id",
-            F.col("probe_ts").alias("purchase_ts"),
-            "click_ts",
-            "view_ts",
-            "signup_ts",
-            F.when(F.col("signup_ts").isNotNull(), 4)
-            .when(F.col("view_ts").isNotNull(), 3)
-            .when(F.col("click_ts").isNotNull(), 2)
-            .otherwise(1)
-            .alias("depth"),
-        )
 
 
-_register_funnel_attribution_4_stream()
-
-
-def _register_funnel_attribution_windowed_stream():
-    from .logs import _SQL_FUNNEL_ATTR_WINDOWED, _windowed_funnel_select
-
-    @register(
-        "funnel_attribution_windowed_stream",
-        oracle=_SQL_FUNNEL_ATTR_WINDOWED,
-        doc="The within()-window attribution rule over the LIVE CEP "
-        "chain: the keyed funnel_chain state resolves last-touch "
-        "links exactly as before (the stored-attachment contract is "
-        "window-agnostic — links bind at arrival), and the lookback "
-        "gate is a map-side CASE on the emitted rows, so the "
-        "windowed stream shares the windowed batch oracle verbatim "
-        "and the stream pays nothing extra. This is where the CEP "
-        "state design earns its keep: because every link is STORED "
-        "with its stage, the gate can be applied at emission as a "
-        "native timestamp-interval comparison — a recompute-from-"
-        "state design would have already lost the stale links it "
-        "needs to void.",
-        tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+@register(
+    "funnel_attribution_4_stream",
+    oracle=_SQL_FUNNEL_ATTR4,
+    doc="FOUR-stage funnel attribution as ONE keyed stateful "
+    "stream — the N-stage generalization proven past the shape it "
+    "was built on (streaming/stateful.funnel_chain_n with stages "
+    "signup/view/click, probe purchase; the 3-stage certified "
+    "queries run through the same operator as its M=2 instance). "
+    "State per key is three chain vectors (6 scalars), each link "
+    "bound at its stage's arrival and STORED — the newer-event "
+    "hazard the 3-stage edge test pins applies at every level. "
+    "Oracle: the batch funnel_attribution_4's chained DuckDB ASOF "
+    "SQL verbatim.",
+    tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+)
+def funnel_attribution_4_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    ev = events.filter(
+        F.col("event_type").isin("signup", "view", "click", "purchase")
+    ).select("event_id", "ts", "user_id", "event_type")
+    out = replay_stateful(
+        spark,
+        ev,
+        lambda df: stateful.funnel_chain_n(
+            df, stages=("signup", "view", "click"), probe_type="purchase"
+        ),
+        order_by=["ts", "event_id"],
+        cache_key=f"events_funnel4_tspan:{sf_dir}",
+        file_of=_time_halves(ev),
+        n_files=2,
     )
-    def funnel_attribution_windowed_stream(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        events = load_tables(spark, sf_dir, "events")["events"]
-        ev = events.filter(
-            F.col("event_type").isin("view", "click", "purchase")
-        ).select("event_id", "ts", "user_id", "event_type")
-        mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
-        ts_type = ev.schema["ts"].dataType.simpleString()
-        cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
-        file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        out = replay_stateful(
-            spark, ev,
-            stateful.funnel_chain,
-            order_by=["ts", "event_id"],
-            cache_key=f"events_funnel_tspan:{sf_dir}", file_of=file_of, n_files=2,
-        ).select(
-            "event_id",
-            "user_id",
-            F.col("probe_ts").alias("purchase_ts"),
-            "click_ts",
-            "view_ts",
-        )
-        return _windowed_funnel_select(out)
-
-
-_register_funnel_attribution_windowed_stream()
-
-
-def _register_doc_pagerank_stream():
-    from .dedup import DOC_PR_PARTITIONS, _sql_doc_pagerank
-
-    @register(
-        "doc_pagerank_stream",
-        oracle=_sql_doc_pagerank(),
-        doc="Corpus-vertex PageRank over an INCREMENTALLY discovered "
-        "similarity graph: the real foreachBatch app (streaming/"
-        "pipelines.similarity_graph_app) replays `documents` in 2 "
-        "micro-batches (doc_id % 2 — id order independent of arrival "
-        "order, so pairs straddle the epochs both ways) and discovers "
-        "each batch's exact threshold pairs against everything seen "
-        "so far via the hash-order prefix-filter join (prefixes "
-        "computed once at arrival and stored; a pair surfaces when "
-        "its later doc arrives — the completeness theorem for a "
-        "stable order, hypothesis-pinned). The accumulated pair "
-        "store then feeds the SAME co-partitioned merge-join rank "
-        "loop as doc_pagerank, and the query shares doc_pagerank's "
-        "chained-CTE oracle VERBATIM — the green row certifies the "
-        "stream reconstructed the batch prefix-filter graph "
-        "bit-for-bit before a single rank step ran.",
-        tags=("documents", "graph", "dedup", "streaming", "incremental"),
+    return out.select(
+        "event_id",
+        "user_id",
+        F.col("probe_ts").alias("purchase_ts"),
+        "click_ts",
+        "view_ts",
+        "signup_ts",
+        F.when(F.col("signup_ts").isNotNull(), 4)
+        .when(F.col("view_ts").isNotNull(), 3)
+        .when(F.col("click_ts").isNotNull(), 2)
+        .otherwise(1)
+        .alias("depth"),
     )
-    def doc_pagerank_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.graph import pagerank_partitioned
-        from ..streaming.pipelines import similarity_graph_app
-        from .logs import PAGERANK_D, PAGERANK_ITERS, PAGERANK_RESET
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        reg = replay_registry(
-            "gmall_simgraph_",
-            ods_documents=(docs.select("doc_id", "text"), 2, ["doc_id"], F.col("doc_id") % 2),
-        )
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: similarity_graph_app(spark, reg, ckpt, store))
-        pairs = spark.read.parquet(os.path.join(store, "pairs")).select(
-            "doc_a", "doc_b"
-        )
-        edges = (
-            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            .union(
-                pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-            )
-            .withColumn("w", F.lit(1))
-        )
-        nodes = docs.select(F.col("doc_id").alias("node"))
-        pr = pagerank_partitioned(
-            nodes,
-            edges,
-            iters=PAGERANK_ITERS,
-            d=float(PAGERANK_D),
-            reset=float(PAGERANK_RESET),
-            num_partitions=DOC_PR_PARTITIONS,
-        )
-        return pr.select(F.col("node").alias("doc_id"), "pagerank")
 
 
-_register_doc_pagerank_stream()
+@register(
+    "funnel_attribution_windowed_stream",
+    oracle=_SQL_FUNNEL_ATTR_WINDOWED,
+    doc="The within()-window attribution rule over the LIVE CEP "
+    "chain: the keyed funnel_chain state resolves last-touch "
+    "links exactly as before (the stored-attachment contract is "
+    "window-agnostic — links bind at arrival), and the lookback "
+    "gate is a map-side CASE on the emitted rows, so the "
+    "windowed stream shares the windowed batch oracle verbatim "
+    "and the stream pays nothing extra. This is where the CEP "
+    "state design earns its keep: because every link is STORED "
+    "with its stage, the gate can be applied at emission as a "
+    "native timestamp-interval comparison — a recompute-from-"
+    "state design would have already lost the stale links it "
+    "needs to void.",
+    tags=("state", "streaming", "events", "cep", "asof", "funnel"),
+)
+def funnel_attribution_windowed_stream(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    ev = events.filter(
+        F.col("event_type").isin("view", "click", "purchase")
+    ).select("event_id", "ts", "user_id", "event_type")
+    out = replay_stateful(
+        spark, ev,
+        stateful.funnel_chain,
+        order_by=["ts", "event_id"],
+        cache_key=f"events_funnel_tspan:{sf_dir}", file_of=_time_halves(ev), n_files=2,
+    ).select(
+        "event_id",
+        "user_id",
+        F.col("probe_ts").alias("purchase_ts"),
+        "click_ts",
+        "view_ts",
+    )
+    return _windowed_funnel_select(out)
+
+
+@register(
+    "doc_pagerank_stream",
+    oracle=_sql_doc_pagerank(),
+    doc="Corpus-vertex PageRank over an INCREMENTALLY discovered "
+    "similarity graph: the real foreachBatch app (streaming/"
+    "pipelines.similarity_graph_app) replays `documents` in 2 "
+    "micro-batches (doc_id % 2 — id order independent of arrival "
+    "order, so pairs straddle the epochs both ways) and discovers "
+    "each batch's exact threshold pairs against everything seen "
+    "so far via the hash-order prefix-filter join (prefixes "
+    "computed once at arrival and stored; a pair surfaces when "
+    "its later doc arrives — the completeness theorem for a "
+    "stable order, hypothesis-pinned). The accumulated pair "
+    "store then feeds the SAME co-partitioned merge-join rank "
+    "loop as doc_pagerank, and the query shares doc_pagerank's "
+    "chained-CTE oracle VERBATIM — the green row certifies the "
+    "stream reconstructed the batch prefix-filter graph "
+    "bit-for-bit before a single rank step ran.",
+    tags=("documents", "graph", "dedup", "streaming", "incremental"),
+)
+def doc_pagerank_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    reg = replay_registry(
+        "gmall_simgraph_",
+        ods_documents=(docs.select("doc_id", "text"), 2, ["doc_id"], F.col("doc_id") % 2),
+    )
+    store = _run_store_app(spark, reg, similarity_graph_app)
+    pairs = spark.read.parquet(os.path.join(store, "pairs")).select(
+        "doc_a", "doc_b"
+    )
+    edges = (
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(
+            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+        )
+        .withColumn("w", F.lit(1))
+    )
+    nodes = docs.select(F.col("doc_id").alias("node"))
+    pr = pagerank_partitioned(
+        nodes,
+        edges,
+        iters=PAGERANK_ITERS,
+        d=float(PAGERANK_D),
+        reset=float(PAGERANK_RESET),
+        num_partitions=DOC_PR_PARTITIONS,
+    )
+    return pr.select(F.col("node").alias("doc_id"), "pagerank")
 
 
 _N_SUBSTR_BATCHES = 2
@@ -1440,9 +1422,6 @@ def _sql_substring_incremental(n_epochs: int) -> str:
     only; the shared res tail then cuts every doc with its
     at-arrival starts. An early doc keeping a run that only later
     becomes duplicated is the SEMANTICS, reproduced here — not drift."""
-    from ..operators import dedup as D
-    from .dedup import _sql_substr_res_tail
-    from .text import SQL_TOKS
 
     L = D.SUBSTR_RUN
     per_epoch = []
@@ -1494,10 +1473,6 @@ def _sql_substring_incremental(n_epochs: int) -> str:
     tags=("dedup", "substring", "streaming", "incremental"),
 )
 def substring_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..streaming.pipelines import substring_dedup_app
-
     docs = load_tables(spark, sf_dir, "documents")["documents"].select(
         "doc_id", "text"
     )
@@ -1505,8 +1480,7 @@ def substring_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gmall_substr_",
         ods_documents=(docs, _N_SUBSTR_BATCHES, ["doc_id"], F.col("doc_id") % _N_SUBSTR_BATCHES),
     )
-    ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-    run_to_end(spark, reg, lambda: substring_dedup_app(spark, reg, ckpt, store))
+    _run_store_app(spark, reg, substring_dedup_app)
     return reg.read_batch(spark, "dwd_documents_cut").select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -1516,381 +1490,283 @@ def substring_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_heavy_hitters_stream():
-    from .text import CMS_TOP, _sql_cms_audit
-
-    @register(
-        "heavy_hitters_stream",
-        oracle=_sql_cms_audit(),
-        doc="The CMS heavy-hitter audit with the sketch built by the "
-        "REAL streaming app (streaming/pipelines.cms_sketch_app): the "
-        "documents corpus replays in 2 micro-batches, each batch "
-        "contributes its own counter grid to an epoch-addressed store, "
-        "and the live sketch is the per-(row, bucket) SUM over epochs. "
-        "Because CMS merge is plain addition, the streamed sketch is "
-        "BIT-IDENTICAL to the one-shot batch grid — so this query "
-        "shares heavy_hitters_cms's oracle verbatim, and a green row "
-        "here certifies the mergeability contract itself (plus the "
-        "epoch-overwrite crash rule: a retried batch can never "
-        "double-count). Per-key state nowhere; the sketch is the "
-        "state, depth*width rows forever.",
-        tags=("streaming", "sketch", "replay", "text"),
+@register(
+    "heavy_hitters_stream",
+    oracle=_sql_cms_audit(),
+    doc="The CMS heavy-hitter audit with the sketch built by the "
+    "REAL streaming app (streaming/pipelines.cms_sketch_app): the "
+    "documents corpus replays in 2 micro-batches, each batch "
+    "contributes its own counter grid to an epoch-addressed store, "
+    "and the live sketch is the per-(row, bucket) SUM over epochs. "
+    "Because CMS merge is plain addition, the streamed sketch is "
+    "BIT-IDENTICAL to the one-shot batch grid — so this query "
+    "shares heavy_hitters_cms's oracle verbatim, and a green row "
+    "here certifies the mergeability contract itself (plus the "
+    "epoch-overwrite crash rule: a retried batch can never "
+    "double-count). Per-key state nowhere; the sketch is the "
+    "state, depth*width rows forever.",
+    tags=("streaming", "sketch", "replay", "text"),
+)
+def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    lines = _doc_lines(docs)
+    reg = replay_registry(
+        "gmall_cms_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
     )
-    def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators import textops
-        from ..operators.aggregates import cms_estimate
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import cms_sketch_app, merged_cms_grid
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        lines = spread(docs, "doc_id").withColumn(
-            "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-        )
-        reg = replay_registry(
-            "gmall_cms_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
-        )
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: cms_sketch_app(spark, reg, ckpt, store))
-        grid = merged_cms_grid(spark, store)
-        toks = docs.select(F.explode(textops.tokenize(F.col("text"))).alias("tok"))
-        topk = (
-            toks.groupBy("tok")
-            .agg(F.count("*").alias("exact_ct"))
-            .orderBy(F.col("exact_ct").desc(), "tok")
-            .limit(CMS_TOP)
-        )
-        return cms_estimate(topk, grid, "tok").select(
-            "tok",
-            "exact_ct",
-            "cms_est",
-            (F.col("cms_est") - F.col("exact_ct")).alias("over_ct"),
-        )
-
-
-_register_heavy_hitters_stream()
-
-
-def _register_behavior_pagerank_stream():
-    from .logs import _sql_behavior_pagerank, pagerank_ranks
-
-    @register(
-        "behavior_pagerank_stream",
-        oracle=_sql_behavior_pagerank(),
-        doc="The behavior-graph PageRank with the transition edges "
-        "extracted by a REAL keyed stateful stream "
-        "(streaming/stateful.transition_pairs) instead of the batch "
-        "lag window: state = each user's LAST event type (O(1) per "
-        "key forever), each micro-batch shifts its sorted group rows "
-        "and fills the first predecessor from the carry — so a "
-        "transition whose two events STRADDLE a micro-batch boundary "
-        "is emitted exactly once, by the batch seeing the second "
-        "event. That cross-batch pair is precisely what a batch-local "
-        "lead()/lag() inside foreachBatch would silently drop — the "
-        "hazard that makes this an operator, not a window (cross-"
-        "batch edge test pinned). Edge counts then aggregate and the "
-        "5-step power iteration runs the SAME pagerank_ranks tail as "
-        "the batch query, sharing its chained-CTE oracle verbatim — "
-        "a green row certifies the stream's edge set equals the "
-        "batch window's bit-for-bit. Replay shares the common "
-        "2-batch events channel (no extra fixture write).",
-        tags=("streaming", "state", "replay", "events", "graph", "stats"),
+    grid = merged_store(spark, _run_store_app(spark, reg, cms_sketch_app), "cms_grid")
+    toks = docs.select(F.explode(textops.tokenize(F.col("text"))).alias("tok"))
+    topk = (
+        toks.groupBy("tok")
+        .agg(F.count("*").alias("exact_ct"))
+        .orderBy(F.col("exact_ct").desc(), "tok")
+        .limit(CMS_TOP)
     )
-    def behavior_pagerank_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_tables(spark, sf_dir, "events")["events"]
-        pairs = replay_stateful(
-            spark, events,
-            stateful.transition_pairs,
-            order_by=["ts", "event_id"],
-            cache_key=f"events:{sf_dir}", n_files=2,
-        )
-        edges = pairs.groupBy("src", "dst").agg(F.count("*").alias("w"))
-        nodes = events.select(F.col("event_type").alias("node")).distinct()
-        return pagerank_ranks(nodes, edges)
-
-
-_register_behavior_pagerank_stream()
-
-
-def _register_approx_distinct_hll_stream():
-    from .logs import _sql_hll_audit, hll_audit_from_regs
-
-    @register(
-        "approx_distinct_hll_stream",
-        oracle=_sql_hll_audit(),
-        doc="The HLL cardinality audit with the registers maintained by "
-        "the REAL streaming app (streaming/pipelines.hll_sketch_app): "
-        "the events stream replays in 2 micro-batches, each batch "
-        "contributes its own per-type register grid to an "
-        "epoch-addressed store, and the live sketch is the "
-        "per-(type, j) MAX over epochs. Register merge is MAX — the "
-        "IDEMPOTENT member of the sketch family (CMS adds, Bloom ors, "
-        "the histogram adds): any split, any replay, even an appended "
-        "double-write yields the identical grid — so the streamed "
-        "sketch is BIT-IDENTICAL to the one-shot batch grid and this "
-        "query shares approx_distinct_hll's oracle verbatim; a green "
-        "row certifies the mergeability contract itself. 2 "
-        "micro-batches (split-independent, the r11 replay-floor "
-        "rule); per-key state nowhere — the registers are the state, "
-        "types*m rows forever.",
-        tags=("streaming", "sketch", "replay", "events", "stats"),
+    return cms_estimate(topk, grid, "tok").select(
+        "tok",
+        "exact_ct",
+        "cms_est",
+        (F.col("cms_est") - F.col("exact_ct")).alias("over_ct"),
     )
-    def approx_distinct_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import hll_sketch_app, merged_hll_registers
-
-        ev = load_tables(spark, sf_dir, "events")["events"]
-        lines = spread(ev, "event_id").select("event_id", "ts", "event_type")
-        reg = replay_registry("gmall_hll_", ods_events=(lines, 2, ["ts", "event_id"]))
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: hll_sketch_app(spark, reg, ckpt, store))
-        regs = merged_hll_registers(spark, store)
-        return hll_audit_from_regs(spark, regs)
 
 
-_register_approx_distinct_hll_stream()
-
-
-def _register_decontaminate_bloom_stream():
-    from .llmprep import DECON_NGRAM, EVAL_MOD, decon_bloom_bits, sql_decontaminate_bloom
-
-    @register(
-        "decontaminate_bloom_stream",
-        oracle=sql_decontaminate_bloom(),
-        doc="Bloom decontamination with the filter maintained by the "
-        "REAL streaming app (streaming/pipelines.bloom_filter_app): "
-        "the eval benchmark arrives as 2 micro-batches, each packing "
-        "its OWN grams into an epoch-addressed word grid; the live "
-        "filter is the per-word bit_or over epochs — a fixed-width "
-        "Bloom filter is OR-MERGEABLE, so the streamed filter equals "
-        "the one-shot batch bitset bit-for-bit and the query shares "
-        "`decontaminate_bloom`'s oracle VERBATIM (the heavy_hitters "
-        "pattern, with bit_or for addition). Width is provisioned "
-        "once up front from the benchmark's gram count (the same "
-        "memoized derivation as the batch query) — the Bloom "
-        "operational contract: a saturated filter re-provisions by "
-        "batch rebuild, never by silent widening. Crash rule = "
-        "overwrite-own-epoch, pinned by the poison-epoch/restart "
-        "test; train-side screening and the exact verify join are "
-        "the batch operator unchanged.",
-        tags=("streaming", "sketch", "replay", "llm-prep", "decontamination"),
+@register(
+    "behavior_pagerank_stream",
+    oracle=_sql_behavior_pagerank(),
+    doc="The behavior-graph PageRank with the transition edges "
+    "extracted by a REAL keyed stateful stream "
+    "(streaming/stateful.transition_pairs) instead of the batch "
+    "lag window: state = each user's LAST event type (O(1) per "
+    "key forever), each micro-batch shifts its sorted group rows "
+    "and fills the first predecessor from the carry — so a "
+    "transition whose two events STRADDLE a micro-batch boundary "
+    "is emitted exactly once, by the batch seeing the second "
+    "event. That cross-batch pair is precisely what a batch-local "
+    "lead()/lag() inside foreachBatch would silently drop — the "
+    "hazard that makes this an operator, not a window (cross-"
+    "batch edge test pinned). Edge counts then aggregate and the "
+    "5-step power iteration runs the SAME pagerank_ranks tail as "
+    "the batch query, sharing its chained-CTE oracle verbatim — "
+    "a green row certifies the stream's edge set equals the "
+    "batch window's bit-for-bit. Replay shares the common "
+    "2-batch events channel (no extra fixture write).",
+    tags=("streaming", "state", "replay", "events", "graph", "stats"),
+)
+def behavior_pagerank_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    pairs = replay_stateful(
+        spark, events,
+        stateful.transition_pairs,
+        order_by=["ts", "event_id"],
+        cache_key=f"events:{sf_dir}", n_files=2,
     )
-    def decontaminate_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators import dedup as D
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import bloom_filter_app, merged_bloom_words
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        is_eval = F.col("doc_id") % EVAL_MOD == 0
-        bits = decon_bloom_bits(spark, sf_dir)
-        lines = spread(docs.filter(is_eval), "doc_id").withColumn(
-            "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-        )
-        reg = replay_registry(
-            "gmall_bloom_",
-            ods_eval_docs=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"]),
-        )
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(
-            spark,
-            reg,
-            lambda: bloom_filter_app(spark, reg, ckpt, store, bits=bits, ngram=DECON_NGRAM),
-        )
-        words = merged_bloom_words(spark, store)
-        from .llmprep import corpus_decon_grams
-
-        return D.bloom_decontaminate(
-            docs, is_eval, ngram=DECON_NGRAM, bits=bits, bloom_words=words,
-            grams=corpus_decon_grams(spark, sf_dir),
-        )
+    edges = pairs.groupBy("src", "dst").agg(F.count("*").alias("w"))
+    nodes = events.select(F.col("event_type").alias("node")).distinct()
+    return pagerank_ranks(nodes, edges)
 
 
-_register_decontaminate_bloom_stream()
+@register(
+    "approx_distinct_hll_stream",
+    oracle=_sql_hll_audit(),
+    doc="The HLL cardinality audit with the registers maintained by "
+    "the REAL streaming app (streaming/pipelines.hll_sketch_app): "
+    "the events stream replays in 2 micro-batches, each batch "
+    "contributes its own per-type register grid to an "
+    "epoch-addressed store, and the live sketch is the "
+    "per-(type, j) MAX over epochs. Register merge is MAX — the "
+    "IDEMPOTENT member of the sketch family (CMS adds, Bloom ors, "
+    "the histogram adds): any split, any replay, even an appended "
+    "double-write yields the identical grid — so the streamed "
+    "sketch is BIT-IDENTICAL to the one-shot batch grid and this "
+    "query shares approx_distinct_hll's oracle verbatim; a green "
+    "row certifies the mergeability contract itself. 2 "
+    "micro-batches (split-independent, the r11 replay-floor "
+    "rule); per-key state nowhere — the registers are the state, "
+    "types*m rows forever.",
+    tags=("streaming", "sketch", "replay", "events", "stats"),
+)
+def approx_distinct_hll_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_tables(spark, sf_dir, "events")["events"]
+    lines = spread(ev, "event_id").select("event_id", "ts", "event_type")
+    reg = replay_registry("gmall_hll_", ods_events=(lines, 2, ["ts", "event_id"]))
+    regs = merged_store(spark, _run_store_app(spark, reg, hll_sketch_app), "hll_regs")
+    return hll_audit_from_regs(spark, regs)
 
 
-def _register_perplexity_gate_stream():
-    from .lmquality import SQL_PERPLEXITY_FILTER, _staged_grams, gate_output
-
-    @register(
-        "perplexity_gate_stream",
-        oracle=SQL_PERPLEXITY_FILTER,
-        doc="The bigram-LM quality gate with the model maintained by the "
-        "REAL streaming app (streaming/pipelines.lm_counts_app): the "
-        "corpus replays in 2 micro-batches, each writing its own "
-        "(w1, g, ct) count grid and distinct-token set to an "
-        "epoch-addressed store; the live model SUMs the grids "
-        "(additive merge over exact integers — the CMS member of the "
-        "sketch family applied to a model fit), derives prefix totals "
-        "from the MERGED grid and distincts the token sets, so the "
-        "streamed model is BIT-IDENTICAL to the one-shot batch fit and "
-        "this query shares `perplexity_filter`'s oracle VERBATIM — a "
-        "green row certifies that the quality gate can be maintained "
-        "incrementally at ingest time, never refit from scratch. 2 "
-        "micro-batches (split-independent, the r11 replay-floor rule); "
-        "no per-key state — the count grid IS the state, "
-        "distinct-bigram rows however many docs flow. Same "
-        "overwrite-own-epoch crash rule as the CMS app.",
-        tags=("streaming", "replay", "llm-prep", "quality", "lm"),
+@register(
+    "decontaminate_bloom_stream",
+    oracle=sql_decontaminate_bloom(),
+    doc="Bloom decontamination with the filter maintained by the "
+    "REAL streaming app (streaming/pipelines.bloom_filter_app): "
+    "the eval benchmark arrives as 2 micro-batches, each packing "
+    "its OWN grams into an epoch-addressed word grid; the live "
+    "filter is the per-word bit_or over epochs — a fixed-width "
+    "Bloom filter is OR-MERGEABLE, so the streamed filter equals "
+    "the one-shot batch bitset bit-for-bit and the query shares "
+    "`decontaminate_bloom`'s oracle VERBATIM (the heavy_hitters "
+    "pattern, with bit_or for addition). Width is provisioned "
+    "once up front from the benchmark's gram count (the same "
+    "memoized derivation as the batch query) — the Bloom "
+    "operational contract: a saturated filter re-provisions by "
+    "batch rebuild, never by silent widening. Crash rule = "
+    "overwrite-own-epoch, pinned by the poison-epoch/restart "
+    "test; train-side screening and the exact verify join are "
+    "the batch operator unchanged.",
+    tags=("streaming", "sketch", "replay", "llm-prep", "decontamination"),
+)
+def decontaminate_bloom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    is_eval = F.col("doc_id") % EVAL_MOD == 0
+    bits = decon_bloom_bits(spark, sf_dir)
+    lines = _doc_lines(docs.filter(is_eval))
+    reg = replay_registry(
+        "gmall_bloom_",
+        ods_eval_docs=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"]),
     )
-    def perplexity_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators import lm
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import lm_counts_app, merged_lm_model
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        lines = spread(docs, "doc_id").withColumn(
-            "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-        )
-        reg = replay_registry(
-            "gmall_lm_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
-        )
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: lm_counts_app(spark, reg, ckpt, store))
-        model = merged_lm_model(spark, store)
-        # the batch family's staging, shared — not re-implemented here
-        # (self-review r13): one staged token frame, one gram frame
-        t, _staged, grams = _staged_grams(spark, sf_dir)
-        scores = lm.doc_lm_scores(grams, model)
-        return gate_output(t["documents"], scores)
-
-
-_register_perplexity_gate_stream()
-
-
-def _register_events_gapfill_stream():
-    from .timeseries import SQL_GAPFILL_LOCF, dense_from_rollup, locf_output
-
-    @register(
-        "events_gapfill_stream",
-        oracle=SQL_GAPFILL_LOCF,
-        doc="The locf gap-fill with the hourly rollup maintained by the "
-        "REAL streaming app (streaming/pipelines.events_rollup_app — "
-        "the hypertable continuous-aggregate shape): events replay in "
-        "2 micro-batches, each writing its own (entity, hour) count + "
-        "DECIMAL value-sum grid to an epoch-addressed store; the live "
-        "rollup sums counts as integers and value sums as exact "
-        "decimals (never rounded through a double at an epoch "
-        "boundary), so the merged grid is BIT-IDENTICAL to the "
-        "one-shot batch rollup and this query shares "
-        "`events_gapfill_locf`'s oracle VERBATIM — a green row "
-        "certifies that the downsampled serving layer can be "
-        "maintained incrementally at ingest. 2 micro-batches "
-        "(split-independent additive merge); the grid IS the state, "
-        "entity x hour rows forever; same overwrite-own-epoch crash "
-        "rule as the CMS app.",
-        tags=("streaming", "replay", "events", "timeseries"),
+    store = _run_store_app(spark, reg, bloom_filter_app, bits=bits, ngram=DECON_NGRAM)
+    words = merged_store(spark, store, "bloom_words")
+    return D.bloom_decontaminate(
+        docs, is_eval, ngram=DECON_NGRAM, bits=bits, bloom_words=words,
+        grams=corpus_decon_grams(spark, sf_dir),
     )
-    def events_gapfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import events_rollup_app, merged_events_rollup
-
-        ev = load_tables(spark, sf_dir, "events")["events"]
-        lines = spread(ev, "event_id").select("event_id", "ts", "event_type", "value")
-        reg = replay_registry("gmall_roll_", ods_events=(lines, 2, ["ts", "event_id"]))
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: events_rollup_app(spark, reg, ckpt, store))
-        roll = merged_events_rollup(spark, store)
-        return locf_output(dense_from_rollup(roll))
 
 
-_register_events_gapfill_stream()
-
-
-def _register_dim_enrichment_asof_stream():
-    from .cdc import PIT_T0, PIT_T1, sql_dim_enrichment_asof
-
-    @register(
-        "dim_enrichment_asof_stream",
-        oracle=sql_dim_enrichment_asof(),
-        doc="Point-in-time dim enrichment as a LIVE stream — the "
-        "temporal-table join run as one keyed stateful operator "
-        "(streaming/stateful.temporal_enrich) over a single replayed "
-        "stream carrying BOTH sides: dim VERSION events (insert/update "
-        "with the version's values + its valid_from) and CDC DELETE "
-        "TOMBSTONES (all-NULL values) update each customer's carried "
-        "version; order facts emit enriched with the version live at "
-        "their event-time position. The tombstone is the streaming "
-        "face of the batch plan's closed-interval NULL-ing: the "
-        "positional (not ignore-null) carry REPLACES the version with "
-        "NULLs, so post-delete facts read 'no live version' — and the "
-        "query shares dim_enrichment_asof's oracle VERBATIM. State is "
-        "ONE (ts, values) version per key forever; batch boundaries "
-        "fall on event-TIME cuts so an equal-ts version/fact pair is "
-        "never split (the asof_click_stream contract). version_live "
-        "rides the carried version id: NULL id = tombstone or "
-        "never-built.",
-        tags=("state", "streaming", "cdc", "join", "asof", "dim"),
+@register(
+    "perplexity_gate_stream",
+    oracle=SQL_PERPLEXITY_FILTER,
+    doc="The bigram-LM quality gate with the model maintained by the "
+    "REAL streaming app (streaming/pipelines.lm_counts_app): the "
+    "corpus replays in 2 micro-batches, each writing its own "
+    "(w1, g, ct) count grid and distinct-token set to an "
+    "epoch-addressed store; the live model SUMs the grids "
+    "(additive merge over exact integers — the CMS member of the "
+    "sketch family applied to a model fit), derives prefix totals "
+    "from the MERGED grid and distincts the token sets, so the "
+    "streamed model is BIT-IDENTICAL to the one-shot batch fit and "
+    "this query shares `perplexity_filter`'s oracle VERBATIM — a "
+    "green row certifies that the quality gate can be maintained "
+    "incrementally at ingest time, never refit from scratch. 2 "
+    "micro-batches (split-independent, the r11 replay-floor rule); "
+    "no per-key state — the count grid IS the state, "
+    "distinct-bigram rows however many docs flow. Same "
+    "overwrite-own-epoch crash rule as the CMS app.",
+    tags=("streaming", "replay", "llm-prep", "quality", "lm"),
+)
+def perplexity_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    lines = _doc_lines(docs)
+    reg = replay_registry(
+        "gmall_lm_", ods_documents=(lines.select("doc_id", "text", "ts"), 2, ["ts", "doc_id"])
     )
-    def dim_enrichment_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        t = load_tables(spark, sf_dir, "orders", "customer")
-        cust = t["customer"]
-        orders = t["orders"]
-        t0 = F.lit(PIT_T0).cast("timestamp")
-        t1 = F.lit(PIT_T1).cast("timestamp")
-        nul_d = F.lit(None).cast("double")
-        nul_t = F.lit(None).cast("timestamp")
-
-        def build(pred, ts_col, bal_col, vfrom_col, ver: int):
-            return cust.filter(pred).select(
-                (-(F.col("c_custkey") * 2 + ver)).alias("o_orderkey"),
-                ts_col.alias("ts"),
-                F.col("c_custkey").alias("custkey"),
-                F.lit("dimchange").alias("event_type"),
-                bal_col.alias("acctbal_asof"),
-                vfrom_col.alias("version_from"),
-            )
-
-        k = F.col("c_custkey") % 10
-        builds = (
-            build(F.lit(True), t0, F.col("c_acctbal"), t0, 0)
-            .unionByName(build(k.isin(1, 2), t1, F.col("c_acctbal") * 2, t1, 1))
-            .unionByName(build(k == 0, t1, nul_d, nul_t, 1))  # tombstones
-        )
-        probes = orders.select(
-            "o_orderkey",
-            F.col("o_orderdate").alias("ts"),
-            F.col("o_custkey").alias("custkey"),
-            F.lit("order").alias("event_type"),
-            nul_d.alias("acctbal_asof"),
-            nul_t.alias("version_from"),
-        )
-        ev = builds.unionByName(probes)
-
-        # batch boundaries on event-time VALUE (the asof_click_stream
-        # rule): the dim-change instant PIT_T1 is a legal order date,
-        # so a same-instant version/fact pair must stay co-batched
-        mn, mx = ev.select(F.min("ts"), F.max("ts")).first()
-        ts_type = ev.schema["ts"].dataType.simpleString()
-        cut1 = F.lit(mn + (mx - mn) / 2).cast(ts_type)
-        file_of = F.when(F.col("ts") <= cut1, 0).otherwise(1)
-        op = lambda s: stateful.temporal_enrich(
-            s, key="custkey", ts="ts", id_col="o_orderkey",
-            val_cols=("acctbal_asof", "version_from"),
-        )
-        out = replay_stateful(
-            spark, ev, op, order_by=["ts", "o_orderkey"],
-            cache_key=f"pit_tspan:{sf_dir}", file_of=file_of, n_files=2,
-        )
-        return out.select(
-            "o_orderkey",
-            "custkey",
-            F.col("probe_ts").alias("order_ts"),
-            "acctbal_asof",
-            "version_from",
-            F.col("version_from").isNotNull().alias("version_live"),
-        )
+    model = merged_lm_model(spark, _run_store_app(spark, reg, lm_counts_app))
+    # the batch family's staging, shared — not re-implemented here
+    # (self-review r13): one staged token frame, one gram frame
+    t, _staged, grams = _staged_grams(spark, sf_dir)
+    scores = lm.doc_lm_scores(grams, model)
+    return gate_output(t["documents"], scores)
 
 
-_register_dim_enrichment_asof_stream()
+@register(
+    "events_gapfill_stream",
+    oracle=SQL_GAPFILL_LOCF,
+    doc="The locf gap-fill with the hourly rollup maintained by the "
+    "REAL streaming app (streaming/pipelines.events_rollup_app — "
+    "the hypertable continuous-aggregate shape): events replay in "
+    "2 micro-batches, each writing its own (entity, hour) count + "
+    "DECIMAL value-sum grid to an epoch-addressed store; the live "
+    "rollup sums counts as integers and value sums as exact "
+    "decimals (never rounded through a double at an epoch "
+    "boundary), so the merged grid is BIT-IDENTICAL to the "
+    "one-shot batch rollup and this query shares "
+    "`events_gapfill_locf`'s oracle VERBATIM — a green row "
+    "certifies that the downsampled serving layer can be "
+    "maintained incrementally at ingest. 2 micro-batches "
+    "(split-independent additive merge); the grid IS the state, "
+    "entity x hour rows forever; same overwrite-own-epoch crash "
+    "rule as the CMS app.",
+    tags=("streaming", "replay", "events", "timeseries"),
+)
+def events_gapfill_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_tables(spark, sf_dir, "events")["events"]
+    lines = spread(ev, "event_id").select("event_id", "ts", "event_type", "value")
+    reg = replay_registry("gmall_roll_", ods_events=(lines, 2, ["ts", "event_id"]))
+    roll = merged_events_rollup(spark, _run_store_app(spark, reg, events_rollup_app))
+    return locf_output(dense_from_rollup(roll))
+
+
+@register(
+    "dim_enrichment_asof_stream",
+    oracle=sql_dim_enrichment_asof(),
+    doc="Point-in-time dim enrichment as a LIVE stream — the "
+    "temporal-table join run as one keyed stateful operator "
+    "(streaming/stateful.temporal_enrich) over a single replayed "
+    "stream carrying BOTH sides: dim VERSION events (insert/update "
+    "with the version's values + its valid_from) and CDC DELETE "
+    "TOMBSTONES (all-NULL values) update each customer's carried "
+    "version; order facts emit enriched with the version live at "
+    "their event-time position. The tombstone is the streaming "
+    "face of the batch plan's closed-interval NULL-ing: the "
+    "positional (not ignore-null) carry REPLACES the version with "
+    "NULLs, so post-delete facts read 'no live version' — and the "
+    "query shares dim_enrichment_asof's oracle VERBATIM. State is "
+    "ONE (ts, values) version per key forever; batch boundaries "
+    "fall on event-TIME cuts so an equal-ts version/fact pair is "
+    "never split (the asof_click_stream contract). version_live "
+    "rides the carried version id: NULL id = tombstone or "
+    "never-built.",
+    tags=("state", "streaming", "cdc", "join", "asof", "dim"),
+)
+def dim_enrichment_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = load_tables(spark, sf_dir, "orders", "customer")
+    cust = t["customer"]
+    orders = t["orders"]
+    t0 = F.lit(PIT_T0).cast("timestamp")
+    t1 = F.lit(PIT_T1).cast("timestamp")
+    nul_d = F.lit(None).cast("double")
+    nul_t = F.lit(None).cast("timestamp")
+
+    def build(pred, ts_col, bal_col, vfrom_col, ver: int):
+        return cust.filter(pred).select(
+            (-(F.col("c_custkey") * 2 + ver)).alias("o_orderkey"),
+            ts_col.alias("ts"),
+            F.col("c_custkey").alias("custkey"),
+            F.lit("dimchange").alias("event_type"),
+            bal_col.alias("acctbal_asof"),
+            vfrom_col.alias("version_from"),
+        )
+
+    k = F.col("c_custkey") % 10
+    builds = (
+        build(F.lit(True), t0, F.col("c_acctbal"), t0, 0)
+        .unionByName(build(k.isin(1, 2), t1, F.col("c_acctbal") * 2, t1, 1))
+        .unionByName(build(k == 0, t1, nul_d, nul_t, 1))  # tombstones
+    )
+    probes = orders.select(
+        "o_orderkey",
+        F.col("o_orderdate").alias("ts"),
+        F.col("o_custkey").alias("custkey"),
+        F.lit("order").alias("event_type"),
+        nul_d.alias("acctbal_asof"),
+        nul_t.alias("version_from"),
+    )
+    ev = builds.unionByName(probes)
+    # the dim-change instant PIT_T1 is a legal order date, so a
+    # same-instant version/fact pair must stay co-batched (_time_halves)
+    op = lambda s: stateful.temporal_enrich(
+        s, key="custkey", ts="ts", id_col="o_orderkey",
+        val_cols=("acctbal_asof", "version_from"),
+    )
+    out = replay_stateful(
+        spark, ev, op, order_by=["ts", "o_orderkey"],
+        cache_key=f"pit_tspan:{sf_dir}", file_of=_time_halves(ev), n_files=2,
+    )
+    return out.select(
+        "o_orderkey",
+        "custkey",
+        F.col("probe_ts").alias("order_ts"),
+        "acctbal_asof",
+        "version_from",
+        F.col("version_from").isNotNull().alias("version_live"),
+    )
 
 
 # One epoch-addressed histogram-grid store per corpus, built by the
@@ -1913,12 +1789,6 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
     written by ``streaming/pipelines.hist_sketch_app`` over a
     4-micro-batch replay of events, bounds provisioned up front from
     the corpus (memoized, the Bloom-width contract)."""
-    import os
-
-    from ..operators.cache import corpus_value
-    from ..operators.partitioning import spread
-    from ..streaming.pipelines import hist_sketch_app
-
     ev = load_tables(spark, sf_dir, "events")["events"]
 
     def _bounds() -> list:
@@ -1943,8 +1813,7 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
                 lines, HIST_EPOCHS, ["event_id"], F.pmod(F.col("event_id"), F.lit(HIST_EPOCHS))
             ),
         )
-        ckpt, store = os.path.join(reg.root, "ckpt"), os.path.join(reg.root, "store")
-        run_to_end(spark, reg, lambda: hist_sketch_app(spark, reg, ckpt, store, bounds_rows))
+        _run_store_app(spark, reg, hist_sketch_app, bounds_rows=bounds_rows)
         return reg.root, bounds_rows
 
     # ONE memo holds (root, bounds): they are a unit — the bounds the
@@ -1953,8 +1822,6 @@ def _hist_epoch_store(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _hist_bounds_rows(spark: SparkSession, sf_dir: str) -> list:
-    from ..operators.cache import corpus_value
-
     def _never() -> tuple:
         raise AssertionError("store must be built before reading bounds")
 
@@ -1962,114 +1829,95 @@ def _hist_bounds_rows(spark: SparkSession, sf_dir: str) -> list:
     return corpus_value(spark, "hist_epoch_store", sf_dir, _never)[1]
 
 
-def _register_quantile_sketch_stream():
-    from .logs import _exact_disc_long, sql_quantile_hist_audit
-
-    @register(
-        "quantile_sketch_stream",
-        oracle=sql_quantile_hist_audit(),
-        doc="The histogram-quantile audit with the grid maintained by "
-        "the REAL streaming app (streaming/pipelines.hist_sketch_app): "
-        f"the events stream replays in {HIST_EPOCHS} micro-batches, "
-        "each contributing its own per-type 256-bin count grid to an "
-        "epoch-addressed store over a domain PROVISIONED up front "
-        "(the Bloom-width contract -- fixed bounds are what keep "
-        "per-epoch grids mergeable), and the live sketch is the "
-        "per-(type, bin) SUM over epochs. Histogram merge is plain "
-        "addition, so the streamed grid is BIT-IDENTICAL to the "
-        "one-shot batch grid and this query shares "
-        "quantile_histogram_audit's oracle verbatim -- a green row "
-        "certifies mergeability itself (the CMS/Bloom pattern, third "
-        "member); additivity is also what lets ONE store (built once "
-        "per corpus, explicit event_id-mod epoch split) serve both "
-        "this reader and value_drift_chi2_stream's epoch-range "
-        "reader without either paying a second replay (r11). Crash "
-        "rule = overwrite-own-epoch, pinned by the "
-        "poison-epoch/restart test. Per-key state nowhere; the grid "
-        "is the state, types*bins rows forever.",
-        tags=("streaming", "sketch", "replay", "events", "stats"),
+@register(
+    "quantile_sketch_stream",
+    oracle=sql_quantile_hist_audit(),
+    doc="The histogram-quantile audit with the grid maintained by "
+    "the REAL streaming app (streaming/pipelines.hist_sketch_app): "
+    f"the events stream replays in {HIST_EPOCHS} micro-batches, "
+    "each contributing its own per-type 256-bin count grid to an "
+    "epoch-addressed store over a domain PROVISIONED up front "
+    "(the Bloom-width contract -- fixed bounds are what keep "
+    "per-epoch grids mergeable), and the live sketch is the "
+    "per-(type, bin) SUM over epochs. Histogram merge is plain "
+    "addition, so the streamed grid is BIT-IDENTICAL to the "
+    "one-shot batch grid and this query shares "
+    "quantile_histogram_audit's oracle verbatim -- a green row "
+    "certifies mergeability itself (the CMS/Bloom pattern, third "
+    "member); additivity is also what lets ONE store (built once "
+    "per corpus, explicit event_id-mod epoch split) serve both "
+    "this reader and value_drift_chi2_stream's epoch-range "
+    "reader without either paying a second replay (r11). Crash "
+    "rule = overwrite-own-epoch, pinned by the "
+    "poison-epoch/restart test. Per-key state nowhere; the grid "
+    "is the state, types*bins rows forever.",
+    tags=("streaming", "sketch", "replay", "events", "stats"),
+)
+def quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    root = _hist_epoch_store(spark, sf_dir)
+    bounds_rows = _hist_bounds_rows(spark, sf_dir)
+    grid = merged_store(spark, os.path.join(root, "store"), "hist_grid")
+    bounds = spark.createDataFrame(
+        bounds_rows, "event_type string, vmin double, vmax double"
     )
-    def quantile_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.aggregates import hist_quantiles
-        from ..streaming.pipelines import merged_hist_grid
-
-        root = _hist_epoch_store(spark, sf_dir)
-        bounds_rows = _hist_bounds_rows(spark, sf_dir)
-        grid = merged_hist_grid(spark, os.path.join(root, "store"))
-        bounds = spark.createDataFrame(
-            bounds_rows, "event_type string, vmin double, vmax double"
-        )
-        est = hist_quantiles(grid, bounds)
-        return est.join(_exact_disc_long(spark), ["event_type", "q"]).select(
-            "event_type",
-            "q",
-            "n",
-            "hist_q",
-            "exact_q",
-            (F.col("hist_q") - F.col("exact_q")).alias("err"),
-        )
-
-
-_register_quantile_sketch_stream()
-
-
-def _register_value_drift_chi2_stream():
-    from .logs import _sql_drift_chi2, drift_chi2_from_grid
-
-    @register(
-        "value_drift_chi2_stream",
-        # the stream's two samples are epoch RANGES of the store;
-        # epoch = event_id mod HIST_EPOCHS by the replay's explicit
-        # file_of split, so the range membership is a plain mod-class
-        # predicate the shared oracle body takes as its h expression
-        oracle=_sql_drift_chi2(
-            h_expr=(
-                f"CASE WHEN e.event_id % {HIST_EPOCHS} < {HIST_BASE_EPOCHS} "
-                "THEN 0 ELSE 1 END"
-            )
-        ),
-        doc="The distribution-drift audit run the way the production "
-        "monitor runs it — over the LIVE epoch-addressed histogram "
-        "store instead of two static snapshots: baseline sample = "
-        f"epochs [0, {HIST_BASE_EPOCHS}) of the store this query "
-        "SHARES with quantile_sketch_stream (one replay, one store — "
-        "the grid is additive, so each reader sums its own epoch "
-        "range), live sample = the rest; per (type, bin), c0/c1 are "
-        "plain ct sums over each range and the chi-square tail is "
-        "drift_chi2_from_grid, the identical expression tree as the "
-        "batch query. Oracle = the same parameterized _sql_drift_chi2 "
-        "body with the epoch ranges' mod-class membership as the h "
-        "expression (epoch assignment is EXPLICIT in the replay "
-        "split, so the oracle reconstructs it exactly). At 100 TB the "
-        "monitor reads types*bins*epochs grid rows — corpus-size-"
-        "free; no event rescan, no per-key state. Crash rule "
-        "inherited from the store app (overwrite-own-epoch), pinned "
-        "by the shared-store poison-epoch test.",
-        tags=("streaming", "sketch", "replay", "events", "audit", "stats"),
+    est = hist_quantiles(grid, bounds)
+    return est.join(_exact_disc_long(spark), ["event_type", "q"]).select(
+        "event_type",
+        "q",
+        "n",
+        "hist_q",
+        "exact_q",
+        (F.col("hist_q") - F.col("exact_q")).alias("err"),
     )
-    def value_drift_chi2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
 
-        root = _hist_epoch_store(spark, sf_dir)
-        store = spark.read.parquet(os.path.join(root, "store", "hist_grid"))
-        grid = (
-            store.filter(F.col("b") >= 0)
-            .groupBy("event_type", "b")
-            .agg(
-                F.sum(
-                    F.when(F.col("epoch") < HIST_BASE_EPOCHS, F.col("ct")).otherwise(0)
-                ).alias("c0"),
-                F.sum(
-                    F.when(F.col("epoch") >= HIST_BASE_EPOCHS, F.col("ct")).otherwise(0)
-                ).alias("c1"),
-            )
+
+@register(
+    "value_drift_chi2_stream",
+    # the stream's two samples are epoch RANGES of the store;
+    # epoch = event_id mod HIST_EPOCHS by the replay's explicit
+    # file_of split, so the range membership is a plain mod-class
+    # predicate the shared oracle body takes as its h expression
+    oracle=_sql_drift_chi2(
+        h_expr=(
+            f"CASE WHEN e.event_id % {HIST_EPOCHS} < {HIST_BASE_EPOCHS} "
+            "THEN 0 ELSE 1 END"
         )
-        return drift_chi2_from_grid(grid)
-
-
-_register_value_drift_chi2_stream()
+    ),
+    doc="The distribution-drift audit run the way the production "
+    "monitor runs it — over the LIVE epoch-addressed histogram "
+    "store instead of two static snapshots: baseline sample = "
+    f"epochs [0, {HIST_BASE_EPOCHS}) of the store this query "
+    "SHARES with quantile_sketch_stream (one replay, one store — "
+    "the grid is additive, so each reader sums its own epoch "
+    "range), live sample = the rest; per (type, bin), c0/c1 are "
+    "plain ct sums over each range and the chi-square tail is "
+    "drift_chi2_from_grid, the identical expression tree as the "
+    "batch query. Oracle = the same parameterized _sql_drift_chi2 "
+    "body with the epoch ranges' mod-class membership as the h "
+    "expression (epoch assignment is EXPLICIT in the replay "
+    "split, so the oracle reconstructs it exactly). At 100 TB the "
+    "monitor reads types*bins*epochs grid rows — corpus-size-"
+    "free; no event rescan, no per-key state. Crash rule "
+    "inherited from the store app (overwrite-own-epoch), pinned "
+    "by the shared-store poison-epoch test.",
+    tags=("streaming", "sketch", "replay", "events", "audit", "stats"),
+)
+def value_drift_chi2_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    root = _hist_epoch_store(spark, sf_dir)
+    store = spark.read.parquet(os.path.join(root, "store", "hist_grid"))
+    grid = (
+        store.filter(F.col("b") >= 0)
+        .groupBy("event_type", "b")
+        .agg(
+            F.sum(
+                F.when(F.col("epoch") < HIST_BASE_EPOCHS, F.col("ct")).otherwise(0)
+            ).alias("c0"),
+            F.sum(
+                F.when(F.col("epoch") >= HIST_BASE_EPOCHS, F.col("ct")).otherwise(0)
+            ).alias("c1"),
+        )
+    )
+    return drift_chi2_from_grid(grid)
 
 
 # -- named corpus-scoped setups (bench ledger lines; see catalog.SETUPS)
@@ -2115,13 +1963,6 @@ def _setup_hist_epoch_store(spark: SparkSession, sf_dir: str) -> None:
     tags=("cdc", "routing", "config", "streaming", "merge"),
 )
 def dim_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from ..sources.cdc import envelope_from_table
-    from ..sources.dimstore import DimStore
-    from ..streaming.pipelines import base_db_app
-
     orders = load_tables(spark, sf_dir, "orders")["orders"]
     env = envelope_from_table(orders, "o_orderkey", "gmall", "order_info").withColumn(
         "k",
@@ -2176,168 +2017,101 @@ def dim_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _register_dsir_gate_stream():
-    from .lmquality import (
-        DSIR_TARGET_LANG,
-        SQL_DSIR_SELECT_AUDIT,
-        _staged_grams,
-        dsir_audit_output,
-        dsir_scores_from,
+@register(
+    "dsir_gate_stream",
+    oracle=SQL_DSIR_SELECT_AUDIT,
+    doc="DSIR maintained INCREMENTALLY: the raw-corpus and the "
+    "target-domain bigram models are both kept live by the real "
+    "epoch-store count app (streaming/pipelines.lm_counts_app) — "
+    "two instances of the same app one admission predicate apart "
+    f"(the target admits lang = '{DSIR_TARGET_LANG}'), exactly how "
+    "a deployment maintains its selection models from one "
+    "document stream. The count merges are additive-exact and the "
+    "target-side ingredient frames (seen-bigram counts, prefix "
+    "counts, vocabulary) derive from the MERGED model, so the "
+    "streamed weights — and the per-language gate decision — are "
+    "bit-identical to the batch fit: the twin shares "
+    "dsir_select_audit's oracle VERBATIM. The scoring tail is ONE "
+    "shared definition with the batch query (dsir_scores_from), "
+    "so the formula cannot drift between build paths.",
+    tags=("llm-prep", "quality", "lm", "sampling", "streaming", "incremental"),
+)
+def dsir_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    lines = _doc_lines(docs)
+    reg = replay_registry(
+        "gmall_dsir_",
+        ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
     )
-
-    @register(
-        "dsir_gate_stream",
-        oracle=SQL_DSIR_SELECT_AUDIT,
-        doc="DSIR maintained INCREMENTALLY: the raw-corpus and the "
-        "target-domain bigram models are both kept live by the real "
-        "epoch-store count app (streaming/pipelines.lm_counts_app) — "
-        "two instances of the same app one admission predicate apart "
-        f"(the target admits lang = '{DSIR_TARGET_LANG}'), exactly how "
-        "a deployment maintains its selection models from one "
-        "document stream. The count merges are additive-exact and the "
-        "target-side ingredient frames (seen-bigram counts, prefix "
-        "counts, vocabulary) derive from the MERGED model, so the "
-        "streamed weights — and the per-language gate decision — are "
-        "bit-identical to the batch fit: the twin shares "
-        "dsir_select_audit's oracle VERBATIM. The scoring tail is ONE "
-        "shared definition with the batch query (dsir_scores_from), "
-        "so the formula cannot drift between build paths.",
-        tags=("llm-prep", "quality", "lm", "sampling", "streaming", "incremental"),
+    raw = _run_store_app(spark, reg, lm_counts_app, "raw", "ckpt_raw")
+    tgt = _run_store_app(
+        spark, reg, lm_counts_app, "tgt", "ckpt_tgt",
+        doc_filter=F.col("lang") == DSIR_TARGET_LANG,
     )
-    def dsir_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import lm_counts_app, merged_lm_model
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        lines = spread(docs, "doc_id").withColumn(
-            "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-        )
-        reg = replay_registry(
-            "gmall_dsir_",
-            ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
-        )
-        root = reg.root
-        run_to_end(
-            spark,
-            reg,
-            lambda: lm_counts_app(
-                spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
-            ),
-        )
-        run_to_end(
-            spark,
-            reg,
-            lambda: lm_counts_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt_tgt"),
-                os.path.join(root, "tgt"),
-                doc_filter=F.col("lang") == DSIR_TARGET_LANG,
-            ),
-        )
-        raw_model = merged_lm_model(spark, os.path.join(root, "raw"))
-        tgt_model = merged_lm_model(spark, os.path.join(root, "tgt"))
-        # target ingredient frames from the merged model: seen-bigram
-        # counts, distinct prefix counts, and the vocabulary scalar
-        tc2 = tgt_model.select("g", F.col("c2").alias("tc2"))
-        tc1 = tgt_model.select("w1", "c1").distinct().select(
-            "w1", F.col("c1").alias("tc1")
-        )
-        # coalesce the scalar: an empty target slice leaves the merged
-        # model rowless, where max(v) is NULL and every score would go
-        # silently NULL — the batch path's count_distinct yields 0
-        # there, so match it
-        tv = tgt_model.agg(F.coalesce(F.max("v"), F.lit(0)).alias("v"))
-        t, _staged, grams = _staged_grams(spark, sf_dir)
-        scores = dsir_scores_from(grams, raw_model, tc2, tc1, tv)
-        return dsir_audit_output(t["documents"], scores)
-
-
-_register_dsir_gate_stream()
-
-
-def _register_dsir_hashed_stream():
-    from .lmquality import (
-        DSIR_TARGET_LANG,
-        SQL_DSIR_HASHED_Q,
-        _dsir_hash_bucket,
-        _staged_grams,
-        dsir_hashed_scores_from_grid,
+    raw_model, tgt_model = merged_lm_model(spark, raw), merged_lm_model(spark, tgt)
+    # target ingredient frames from the merged model: seen-bigram
+    # counts, distinct prefix counts, and the vocabulary scalar
+    tc2 = tgt_model.select("g", F.col("c2").alias("tc2"))
+    tc1 = tgt_model.select("w1", "c1").distinct().select(
+        "w1", F.col("c1").alias("tc1")
     )
+    # coalesce the scalar: an empty target slice leaves the merged
+    # model rowless, where max(v) is NULL and every score would go
+    # silently NULL — the batch path's count_distinct yields 0
+    # there, so match it
+    tv = tgt_model.agg(F.coalesce(F.max("v"), F.lit(0)).alias("v"))
+    t, _staged, grams = _staged_grams(spark, sf_dir)
+    scores = dsir_scores_from(grams, raw_model, tc2, tc1, tv)
+    return dsir_audit_output(t["documents"], scores)
 
-    @register(
-        "dsir_hashed_stream",
-        oracle=SQL_DSIR_HASHED_Q,
-        doc="The HASHED (corpus-size-free) DSIR estimator maintained "
-        "INCREMENTALLY: both fixed-width bucket grids are kept live by "
-        "the real epoch-store grid app (streaming/pipelines."
-        "dsir_grid_app) — two instances one admission predicate apart "
-        f"(the target admits lang = '{DSIR_TARGET_LANG}'), the "
-        "dsir_gate_stream deployment shape, but with EVERY per-epoch "
-        "store write bounded at DSIR_HASH_B rows regardless of corpus "
-        "size (lm_counts_app's grids are batch-distinct-bigram-sized) "
-        "— this is the selection model you can actually run "
-        "continuously at 100 TB with open vocabulary. The grid merges "
-        "are additive-exact integers, so the merged grids equal the "
-        "batch fit's bit-for-bit and the twin shares dsir_hashed's "
-        "oracle VERBATIM; the scoring tail is ONE shared definition "
-        "with the batch query (dsir_hashed_scores_from_grid), so the "
-        "formula cannot drift between build paths.",
-        tags=(
-            "llm-prep",
-            "quality",
-            "lm",
-            "sampling",
-            "sketch",
-            "streaming",
-            "incremental",
-        ),
+
+@register(
+    "dsir_hashed_stream",
+    oracle=SQL_DSIR_HASHED_Q,
+    doc="The HASHED (corpus-size-free) DSIR estimator maintained "
+    "INCREMENTALLY: both fixed-width bucket grids are kept live by "
+    "the real epoch-store grid app (streaming/pipelines."
+    "dsir_grid_app) — two instances one admission predicate apart "
+    f"(the target admits lang = '{DSIR_TARGET_LANG}'), the "
+    "dsir_gate_stream deployment shape, but with EVERY per-epoch "
+    "store write bounded at DSIR_HASH_B rows regardless of corpus "
+    "size (lm_counts_app's grids are batch-distinct-bigram-sized) "
+    "— this is the selection model you can actually run "
+    "continuously at 100 TB with open vocabulary. The grid merges "
+    "are additive-exact integers, so the merged grids equal the "
+    "batch fit's bit-for-bit and the twin shares dsir_hashed's "
+    "oracle VERBATIM; the scoring tail is ONE shared definition "
+    "with the batch query (dsir_hashed_scores_from_grid), so the "
+    "formula cannot drift between build paths.",
+    tags=(
+        "llm-prep",
+        "quality",
+        "lm",
+        "sampling",
+        "sketch",
+        "streaming",
+        "incremental",
+    ),
+)
+def dsir_hashed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    lines = _doc_lines(docs)
+    reg = replay_registry(
+        "gmall_dsirh_",
+        ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
     )
-    def dsir_hashed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        from ..operators.partitioning import spread
-        from ..streaming.pipelines import dsir_grid_app, merged_dsir_grid
-
-        docs = load_tables(spark, sf_dir, "documents")["documents"]
-        lines = spread(docs, "doc_id").withColumn(
-            "ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("doc_id"))
-        )
-        reg = replay_registry(
-            "gmall_dsirh_",
-            ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
-        )
-        root = reg.root
-        run_to_end(
-            spark,
-            reg,
-            lambda: dsir_grid_app(
-                spark, reg, os.path.join(root, "ckpt_raw"), os.path.join(root, "raw")
-            ),
-        )
-        run_to_end(
-            spark,
-            reg,
-            lambda: dsir_grid_app(
-                spark,
-                reg,
-                os.path.join(root, "ckpt_tgt"),
-                os.path.join(root, "tgt"),
-                doc_filter=F.col("lang") == DSIR_TARGET_LANG,
-            ),
-        )
-        raw = merged_dsir_grid(spark, os.path.join(root, "raw"))
-        tgt = merged_dsir_grid(spark, os.path.join(root, "tgt")).select(
-            "b", F.col("ct").alias("tct")
-        )
-        grid = raw.join(tgt, "b", "left").withColumn(
-            "tct", F.coalesce(F.col("tct"), F.lit(0))
-        )
-        t, _staged, grams = _staged_grams(spark, sf_dir)
-        hg = grams.select("doc_id", _dsir_hash_bucket(F.col("g")).alias("b"))
-        return dsir_hashed_scores_from_grid(spark, hg, grid)
+    raw = _run_store_app(spark, reg, dsir_grid_app, "raw", "ckpt_raw")
+    tgt = _run_store_app(
+        spark, reg, dsir_grid_app, "tgt", "ckpt_tgt",
+        doc_filter=F.col("lang") == DSIR_TARGET_LANG,
+    )
+    raw = merged_store(spark, raw, "dsir_grid")
+    tgt = merged_store(spark, tgt, "dsir_grid").select("b", F.col("ct").alias("tct"))
+    grid = raw.join(tgt, "b", "left").withColumn(
+        "tct", F.coalesce(F.col("tct"), F.lit(0))
+    )
+    t, _staged, grams = _staged_grams(spark, sf_dir)
+    hg = grams.select("doc_id", _dsir_hash_bucket(F.col("g")).alias("b"))
+    return dsir_hashed_scores_from_grid(spark, hg, grid)
 
 
-_register_dsir_hashed_stream()

@@ -32,9 +32,13 @@ as ``epoch=<id>`` directories: the incremental dedup/similarity apps
 ``emb_incremental_dedup``), the bootstrap-fit apps (``decon_screen``,
 ``triplet_mine``, ``ptron_gate``) and the sketches (``cms_sketch``,
 ``bloom_filter``, ``hll_sketch``, ``lm_counts``, ``dsir_grid``,
-``events_rollup``, ``hist_sketch``). Each ``merged_*`` reader folds a
-store with its family's merge; :func:`compact_signature_store` folds
-old epochs into one base generation. All fourteen keep one contract,
+``events_rollup``, ``hist_sketch``). Each store's merge is written
+once, in :data:`STORE_MERGES` (a store not named there is a set,
+merged by ``distinct()``), and :func:`fold_store` applies it for every
+caller: :func:`merged_store` and the readers that derive from it,
+:func:`compact_signature_store`, which folds old epochs into one base
+generation, and ``substring_dedup``'s in-epoch index fold. All
+fourteen keep one contract,
 the epoch-keyed idempotent sink of exactly-once Structured Streaming,
 implemented once by ``_epoch_query``, :class:`EpochScope` and
 ``_bootstrap_fit``:
@@ -603,7 +607,7 @@ def read_store(sess: SparkSession, path: str) -> DataFrame:
     """Read an epoch-addressed store with manifest-superseded
     generations excluded (an anti ``isin`` on the epoch partition
     column — pruned at planning, the skipped dirs are never opened).
-    Every merged_* view, the incremental apps' pruned reads and the
+    Every merged view, the incremental apps' pruned reads and the
     compactor itself go through this, so all of them observe a
     crashed compaction as if its deletes had completed."""
     df = sess.read.parquet(path)
@@ -619,6 +623,41 @@ def read_epoch_store(sess: SparkSession, path: str, epoch_id: int) -> DataFrame:
     sees its own first-attempt output — the crash contract every
     epoch-store app and the compactor share."""
     return read_store(sess, path).filter(F.col("epoch") < epoch_id).drop("epoch")
+
+
+#: The merge of every mergeable epoch store, keyed by sub-store name:
+#: the cell keys, and per column the aggregate that folds a cell's
+#: partial rows into one. Each merge is associative and keeps each
+#: column's name and type, so a folded base generation and the live
+#: epochs share one parquet directory and fold again with the same
+#: result. A store not named here is a set of facts (signatures,
+#: shingles, vectors, flags): its merge is ``distinct()``.
+STORE_MERGES = {
+    "cms_grid": (("i", "b"), {"ct": F.sum}),
+    "hist_grid": (("event_type", "b"), {"ct": F.sum}),
+    "dsir_grid": (("b",), {"ct": F.sum}),
+    "lm_grams": (("w1", "g"), {"ct": F.sum}),
+    "roll_grid": (("event_type", "h"), {"ct": F.sum, "vsum": F.sum}),
+    "grid": (("lang",), {"total_ct": F.sum, "kept_ct": F.sum}),
+    "bloom_words": (("w",), {"bits": F.bit_or}),
+    "hll_regs": (("event_type", "j"), {"r": F.max}),
+    "win_index": (("gh",), {"lo": F.min, "hi": F.max}),
+}
+
+
+def fold_store(df: DataFrame, sub: str) -> DataFrame:
+    """Fold ``df``, rows of the store ``sub`` without the epoch column,
+    to one row per cell with ``sub``'s :data:`STORE_MERGES` entry."""
+    if sub not in STORE_MERGES:
+        return df.distinct()
+    keys, aggs = STORE_MERGES[sub]
+    return df.groupBy(*keys).agg(*(agg(c).alias(c) for c, agg in aggs.items()))
+
+
+def merged_store(spark: SparkSession, store_root: str, sub: str) -> DataFrame:
+    """The live view of the store ``<store_root>/<sub>``: every epoch
+    and base generation folded by :func:`fold_store`."""
+    return fold_store(read_store(spark, os.path.join(store_root, sub)).drop("epoch"), sub)
 
 
 class EpochScope:
@@ -899,8 +938,7 @@ def substring_dedup_app(
         else:
             merged = grid
         dup = (
-            merged.groupBy("gh")
-            .agg(F.min("lo").alias("lo"), F.max("hi").alias("hi"))
+            fold_store(merged, "win_index")
             .filter(F.col("lo") != F.col("hi"))
             .select("gh")
         )
@@ -1369,16 +1407,6 @@ def triplet_mine_app(
     return _epoch_query(spark, reg, source, ckpt, "triplet_mine", epoch)
 
 
-def merged_triplet_scored(spark: SparkSession, store_root: str) -> DataFrame:
-    """The accumulated candidate frame over the mining app's epoch
-    store: (qid, cid, cos_sim) — epochs are disjoint corpus slices, so
-    the union IS the batch scored frame; the triplet tail
-    (plans.similarity.triplets_from_scored) runs on top at read time."""
-    return read_store(spark, os.path.join(store_root, "scored")).select(
-        "qid", "cid", "cos_sim"
-    )
-
-
 def ptron_gate_app(
     spark: SparkSession,
     reg: ChannelRegistry,
@@ -1458,12 +1486,7 @@ def merged_ptron_gate(spark: SparkSession, store_root: str) -> DataFrame:
     per-language totals summed across epochs, keep_rate derived from
     the merged sums — exactly quality_perceptron_filter's output
     shape, so the twin shares its oracle verbatim."""
-    g = (
-        read_store(spark, os.path.join(store_root, "grid"))
-        .groupBy("lang")
-        .agg(F.sum("total_ct").alias("total_ct"), F.sum("kept_ct").alias("kept_ct"))
-    )
-    return g.select(
+    return merged_store(spark, store_root, "grid").select(
         "lang",
         "total_ct",
         "kept_ct",
@@ -1550,7 +1573,7 @@ def cms_sketch_app(
     every micro-batch builds its own depth x width counter grid (one
     map-side-combinable grouped count over just that batch) and writes
     it to an epoch-addressed store; the live sketch is the
-    per-(row, bucket) SUM over epochs (:func:`merged_cms_grid`) —
+    per-(row, bucket) SUM over epochs (``merged_store(..., "cms_grid")``) —
     plain counter addition, which is exactly why CMS is *the*
     streaming frequency sketch. There is no per-key state anywhere:
     the sketch IS the state, bounded at depth*width rows no matter how
@@ -1582,7 +1605,7 @@ def bloom_filter_app(
     every micro-batch of newly published eval documents shingles,
     hashes, and packs ITS OWN grams into a (w, bits) word grid written
     to an epoch-addressed store; the live filter is the per-word
-    ``bit_or`` over epochs (:func:`merged_bloom_words`) — Bloom
+    ``bit_or`` over epochs (``merged_store(..., "bloom_words")``) — Bloom
     filters of a fixed width are OR-mergeable, exactly as CMS grids
     are additive. No per-key state: the filter IS the state, bounded
     at bits/BLOOM_WORD rows however many eval docs ever arrive.
@@ -1607,35 +1630,20 @@ def bloom_filter_app(
     return _epoch_query(spark, reg, source, ckpt, "bloom_filter", epoch)
 
 
-def merged_bloom_words(spark: SparkSession, store_root: str) -> DataFrame:
-    """The live Bloom filter over an epoch-addressed word store: per-
-    word ``bit_or`` across epochs — at most bits/BLOOM_WORD result
-    rows, however many epochs accumulated. (Old epochs can fold into
-    one generation the way ``compact_signature_store`` does; the
-    read-side or is correct either way.)"""
-    return (
-        read_store(spark, os.path.join(store_root, "bloom_words"))
-        .groupBy("w")
-        .agg(F.expr("bit_or(bits)").alias("bits"))
-    )
-
-
 def hll_sketch_app(
     spark: SparkSession,
     reg: ChannelRegistry,
     ckpt: str,
     store_root: str,
     source: str = "ods_events",
-    group: str = "event_type",
-    key: str = "event_id",
 ):
     """Streaming HLL register maintenance — the CARDINALITY member of
     the epoch-store sketch family (CMS adds, Bloom ors, the histogram
-    adds, HLL MAXES): every micro-batch builds its own (group, j, r)
-    register grid over just that batch (one map-side-combinable
-    grouped max) and writes it to an epoch-addressed store; the live
-    sketch is the per-(group, j) MAX over epochs
-    (:func:`merged_hll_registers`). MAX merge is IDEMPOTENT — the one
+    adds, HLL MAXES): every micro-batch builds its own (event_type, j,
+    r) register grid of its event_ids (one map-side-combinable grouped
+    max) and writes it to an epoch-addressed store; the live sketch is
+    the per-(event_type, j) MAX over epochs
+    (``merged_store(..., "hll_regs")``). MAX merge is IDEMPOTENT — the one
     member of the family where even an appended double-write of an
     epoch could not corrupt the sketch. No per-key state: the
     registers ARE the state, groups*m rows however many distinct keys
@@ -1645,25 +1653,9 @@ def hll_sketch_app(
     grid_path = os.path.join(store_root, "hll_regs")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
-        ep.write((hll_registers(batch, group, key), grid_path))
+        ep.write((hll_registers(batch, "event_type", "event_id"), grid_path))
 
     return _epoch_query(spark, reg, source, ckpt, "hll_sketch", epoch)
-
-
-def merged_hll_registers(
-    spark: SparkSession, store_root: str, group: str = "event_type"
-) -> DataFrame:
-    """The live HLL sketch over an epoch-addressed register store:
-    per-(group, j) MAX across epochs — at most groups*m result rows,
-    however many epochs accumulated (idempotent merge: compaction or
-    even accidental epoch duplication cannot change it). ``group``
-    must match the producing app's (the merged_hist_grid pairing
-    contract)."""
-    return (
-        read_store(spark, os.path.join(store_root, "hll_regs"))
-        .groupBy(group, "j")
-        .agg(F.max("r").alias("r"))
-    )
 
 
 def lm_counts_app(
@@ -1717,11 +1709,7 @@ def merged_lm_model(spark: SparkSession, store_root: str) -> DataFrame:
     is exact and the streamed model equals the batch fit bit-for-bit."""
     from ..operators import lm
 
-    c2 = (
-        read_store(spark, os.path.join(store_root, "lm_grams"))
-        .groupBy("w1", "g")
-        .agg(F.sum("ct").alias("c2"))
-    )
+    c2 = merged_store(spark, store_root, "lm_grams").withColumnRenamed("ct", "c2")
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     v = (
         read_store(spark, os.path.join(store_root, "lm_toks"))
@@ -1748,7 +1736,7 @@ def dsir_grid_app(
     grid (``lm.hash_bucket`` — the same routing expression as the
     batch fit) and writes a (b, ct) count grid to an epoch-addressed
     store; the live model is the per-bucket SUM over epochs
-    (:func:`merged_dsir_grid`) — plain counter addition, the CMS merge
+    (``merged_store(..., "dsir_grid")``) — plain counter addition, the CMS merge
     applied to a model fit. Unlike ``lm_counts_app`` (whose per-epoch
     grids are batch-distinct-bigram-sized), EVERY epoch here is
     bounded at DSIR_HASH_B rows no matter the corpus — this is the
@@ -1773,18 +1761,6 @@ def dsir_grid_app(
         ep.write((grid, grid_path))
 
     return _epoch_query(spark, reg, source, ckpt, "dsir_grid", epoch)
-
-
-def merged_dsir_grid(spark: SparkSession, store_root: str) -> DataFrame:
-    """The live hashed-DSIR bucket grid over an epoch-addressed store:
-    per-bucket count sums — at most DSIR_HASH_B result rows, however
-    many epochs accumulated (additive-exact integers, so the merged
-    grid equals the one-shot batch count bit-for-bit)."""
-    return (
-        read_store(spark, os.path.join(store_root, "dsir_grid"))
-        .groupBy("b")
-        .agg(F.sum("ct").alias("ct"))
-    )
 
 
 def events_rollup_app(
@@ -1829,26 +1805,8 @@ def merged_events_rollup(spark: SparkSession, store_root: str) -> DataFrame:
     (event_type, h, ct, value_sum) with exactly the batch rollup's
     schema and values — integer count sum, decimal value sum cast to
     double ONCE at the read edge."""
-    return (
-        read_store(spark, os.path.join(store_root, "roll_grid"))
-        .groupBy("event_type", "h")
-        .agg(
-            F.sum("ct").alias("ct"),
-            F.sum("vsum").cast("double").alias("value_sum"),
-        )
-    )
-
-
-def merged_cms_grid(spark: SparkSession, store_root: str) -> DataFrame:
-    """The live sketch over an epoch-addressed CMS store: counter sums
-    per (row, bucket) — at most depth*width result rows, however many
-    epochs accumulated. (A maintenance pass can fold old epochs into
-    one the way ``compact_signature_store`` does; the read-side sum is
-    correct either way.)"""
-    return (
-        read_store(spark, os.path.join(store_root, "cms_grid"))
-        .groupBy("i", "b")
-        .agg(F.sum("ct").alias("ct"))
+    return merged_store(spark, store_root, "roll_grid").select(
+        "event_type", "h", "ct", F.col("vsum").cast("double").alias("value_sum")
     )
 
 
@@ -1859,16 +1817,15 @@ def hist_sketch_app(
     store_root: str,
     bounds_rows: list,
     source: str = "ods_events",
-    group: str = "event_type",
-    value_col: str = "value",
 ):
     """Streaming histogram-quantile sketch maintenance — the quantile
     member of the epoch-store sketch trio (CMS adds, Bloom ors, the
-    histogram adds): every micro-batch builds its own per-group
-    256-bin count grid over the PROVISIONED value domain and writes it
-    to an epoch-addressed store; the live sketch is the per-(group, b)
-    SUM over epochs (:func:`merged_hist_grid`). ``bounds_rows`` is the
-    provisioned (group, vmin, vmax) domain — fixed up front like the
+    histogram adds): every micro-batch builds its own per-event_type
+    256-bin count grid over the PROVISIONED ``value`` domain and writes
+    it to an epoch-addressed store; the live sketch is the
+    per-(event_type, b) SUM over epochs
+    (``merged_store(..., "hist_grid")``). ``bounds_rows`` is the
+    provisioned (event_type, vmin, vmax) domain — fixed up front like the
     Bloom width, which is exactly what keeps per-epoch grids
     mergeable; values outside the domain clamp into the edge bins, the
     standard streaming-histogram contract (re-provision by batch
@@ -1881,26 +1838,13 @@ def hist_sketch_app(
     from ..operators.aggregates import hist_counters
 
     grid_path = os.path.join(store_root, "hist_grid")
-    bounds = local_table(spark, bounds_rows, f"{group} string, vmin double, vmax double")
+    bounds = local_table(spark, bounds_rows, "event_type string, vmin double, vmax double")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
-        grid = hist_counters(batch.select(group, value_col), group, value_col, bounds)
+        grid = hist_counters(batch.select("event_type", "value"), "event_type", "value", bounds)
         ep.write((grid, grid_path))
 
     return _epoch_query(spark, reg, source, ckpt, "hist_sketch", epoch)
-
-
-def merged_hist_grid(
-    spark: SparkSession, store_root: str, group: str = "event_type"
-) -> DataFrame:
-    """The live histogram over an epoch-addressed grid store: count
-    sums per (group, bin) — at most groups*bins result rows, however
-    many epochs accumulated."""
-    return (
-        read_store(spark, os.path.join(store_root, "hist_grid"))
-        .groupBy(group, "b")
-        .agg(F.sum("ct").alias("ct"))
-    )
 
 
 def compact_signature_store(
@@ -1908,7 +1852,6 @@ def compact_signature_store(
     store_root: str,
     upto_epoch: int,
     subs: tuple[str, ...] = ("sig_bands", "sig_shingles"),
-    reduce_fn=None,
 ) -> None:
     """Compact the incremental-dedup signature store: merge every
     ``epoch=<id>`` directory with id <= ``upto_epoch`` (plus any
@@ -1939,30 +1882,27 @@ def compact_signature_store(
     through :func:`read_store`, which excludes manifest-superseded
     directories still on disk. The post-rename deletes are therefore
     pure cleanup; the next compaction finishes any the crash skipped.
-    This holds for ADDITIVE merges too (see ``reduce_fn``) — without
-    the manifest, a half-deleted SUM-family store would double-count
-    every compacted cell and the next compaction would bake the
-    duplication in. Run it from the maintenance schedule between
-    micro-batches.
+    This holds for the ADDITIVE merges too — without the manifest, a
+    half-deleted SUM-family store would double-count every compacted
+    cell and the next compaction would bake the duplication in. Run it
+    from the maintenance schedule between micro-batches.
 
     ``subs`` names the store's epoch-addressed tables: the MinHash
     app's (bands + shingles) by default; pass ``("vec_store",)`` for
     the embedding app's kept-vector store — the layout and crash
     contract are identical, so one compactor serves both.
 
-    ``reduce_fn`` (optional) replaces the default ``distinct()`` merge
-    with the store family's OWN merge — the sketch-class stores are
-    mergeable by construction (CMS/histogram grids SUM, Bloom words
-    bit_or, HLL registers MAX, the substring window index MIN/MAX),
-    so compacting them through their merge collapses N epochs to ONE
-    row per cell instead of N distinct rows per cell, and the reader's
-    subsequent merge over the compacted base is unchanged because the
-    merge is associative. The manifest commit above makes this safe
-    even for the ADDITIVE merges: a crash can never leave a state
-    where a reader sums both a base and the epochs it absorbed. The
-    default ``distinct()`` remains right for the SET-like stores
-    (signatures, shingles, vectors), where a row is a fact, not a
-    partial aggregate.
+    Each sub folds through its own merge, looked up by name in
+    :data:`STORE_MERGES` (:func:`fold_store`): the sketch-class stores
+    (CMS, histogram and DSIR grids SUM, Bloom words bit_or, HLL
+    registers MAX, the substring window index MIN/MAX, ...) collapse N
+    epochs to ONE row per cell, and the reader's fold over the
+    compacted base is unchanged because each merge is associative. The
+    manifest commit above makes this safe even for the ADDITIVE merges:
+    a crash can never leave a state where a reader sums both a base
+    and the epochs it absorbed. A sub not in the table is a SET-like
+    store (signatures, shingles, vectors), where a row is a fact, not
+    a partial aggregate, and folds by ``distinct()``.
     """
     for sub in subs:
         path = os.path.join(store_root, sub)
@@ -1983,8 +1923,7 @@ def compact_signature_store(
         picked = df.filter(F.col("epoch").isin([int(g) for g in to_merge])).drop(
             "epoch"
         )
-        merged = reduce_fn(picked) if reduce_fn is not None else picked.distinct()
-        merged.write.mode("overwrite").parquet(tmp)
+        fold_store(picked, sub).write.mode("overwrite").parquet(tmp)
         # the manifest rides the SAME rename as the merged rows: either
         # both are visible (readers skip the old dirs) or neither is
         hfs.write_text(

@@ -10,6 +10,8 @@ join/group with nothing real) whose arrival flushes everything real.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 
 import pytest
@@ -1609,7 +1611,7 @@ def test_cms_sketch_app_merges_to_batch_grid_and_survives_retry(spark, tmp_path)
     exp = {(r["i"], r["b"]): r["ct"] for r in cms_counters(toks, "tok").collect()}
     got = {
         (r["i"], r["b"]): r["ct"]
-        for r in pipelines.merged_cms_grid(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "cms_grid").collect()
     }
     assert got == exp  # poison gone, nothing double-counted, sums exact
 
@@ -1691,7 +1693,7 @@ def test_bloom_filter_app_or_merges_to_batch_bitset_and_survives_retry(spark, tm
     exp = {(r["w"], r["bits"]) for r in D.bloom_word_table(ev, bits).collect()}
     got = {
         (r["w"], r["bits"])
-        for r in pipelines.merged_bloom_words(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "bloom_words").collect()
     }
     assert got == exp  # poison gone, or-merge equals the batch bitset
 
@@ -1766,7 +1768,7 @@ def test_hist_sketch_app_sums_to_batch_grid_and_survives_retry(spark, tmp_path):
     }
     got = {
         (r["event_type"], r["b"]): r["ct"]
-        for r in pipelines.merged_hist_grid(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "hist_grid").collect()
     }
     assert got == exp  # poison gone, per-epoch sums equal the batch grid
 
@@ -2182,8 +2184,8 @@ def test_hll_sketch_app_max_merges_to_batch_grid_and_survives_retry(spark, tmp_p
     }
     got = {
         (r["event_type"], r["j"]): r["r"]
-        for r in pipelines.merged_hll_registers(
-            spark, str(tmp_path / "store")
+        for r in pipelines.merged_store(
+            spark, str(tmp_path / "store"), "hll_regs"
         ).collect()
     }
     assert got == exp  # poison gone, max-merge equals the batch grid
@@ -2416,10 +2418,10 @@ def test_substring_dedup_app_recovers_from_poisoned_epoch(spark, tmp_path):
     assert got == baseline
 
 
-def test_compactor_reduce_fn_collapses_mergeable_stores(spark, tmp_path):
-    """Sketch-class epoch stores compact through their OWN merge
-    (reduce_fn): the substring window index (min/max) and a CMS-style
-    sum grid collapse to one row per cell, readers see identical
+def test_compactor_collapses_mergeable_stores(spark, tmp_path):
+    """Sketch-class epoch stores compact through their OWN merge,
+    looked up by sub name: the substring window index (min/max) and a
+    CMS-style sum grid collapse to one row per cell, readers see identical
     merged values before and after, and the compacted base rides the
     usual negative-generation epoch id."""
     import os
@@ -2451,9 +2453,6 @@ def test_compactor_reduce_fn_collapses_mergeable_stores(spark, tmp_path):
         str(tmp_path / "store"),
         upto_epoch=1,
         subs=("win_index",),
-        reduce_fn=lambda df: df.groupBy("gh").agg(
-            F.min("lo").alias("lo"), F.max("hi").alias("hi")
-        ),
     )
     assert merged_idx() == before  # reader-visible merge unchanged
     gens = sorted(
@@ -2474,7 +2473,6 @@ def test_compactor_reduce_fn_collapses_mergeable_stores(spark, tmp_path):
         str(tmp_path / "store2"),
         upto_epoch=1,
         subs=("cms_grid",),
-        reduce_fn=lambda df: df.groupBy("i", "b").agg(F.sum("ct").alias("ct")),
     )
     got = {
         (r.i, r.b): r.ct
@@ -2503,9 +2501,6 @@ def test_compactor_crash_after_rename_never_double_counts_additive(spark, tmp_pa
             "overwrite"
         ).parquet(os.path.join(grid, f"epoch={ep}"))
 
-    def reduce_fn(df):
-        return df.groupBy("i", "b").agg(F.sum("ct").alias("ct"))
-
     def totals():
         return {
             (r.i, r.b): r.ct
@@ -2521,7 +2516,6 @@ def test_compactor_crash_after_rename_never_double_counts_additive(spark, tmp_pa
     assert totals() == want
     pipelines.compact_signature_store(
         spark, str(tmp_path / "store"), upto_epoch=1, subs=("cms_grid",),
-        reduce_fn=reduce_fn,
     )
     # crash simulation: resurrect the merged epoch dirs as if the
     # post-rename deletes never ran
@@ -2533,7 +2527,6 @@ def test_compactor_crash_after_rename_never_double_counts_additive(spark, tmp_pa
     # next compaction finishes the sweep and folds base + epoch 2
     pipelines.compact_signature_store(
         spark, str(tmp_path / "store"), upto_epoch=2, subs=("cms_grid",),
-        reduce_fn=reduce_fn,
     )
     gens = sorted(
         r.epoch
@@ -2546,6 +2539,53 @@ def test_compactor_crash_after_rename_never_double_counts_additive(spark, tmp_pa
         (r.i, r.b, r.ct)
         for r in pipelines.read_epoch_store(spark, grid, epoch_id=99).collect()
     } == {(0, 1, 12), (0, 2, 1)}
+
+
+# every mergeable epoch store: its schema, and one row of cell ``c``
+# holding the partial value ``v``
+_MERGE_CASES = {
+    "cms_grid": ("i int, b int, ct long", lambda c, v: (0, c, v)),
+    "hist_grid": ("event_type string, b int, ct long", lambda c, v: ("click", c, v)),
+    "dsir_grid": ("b long, ct long", lambda c, v: (c, v)),
+    "lm_grams": ("w1 string, g string, ct long", lambda c, v: ("a", f"a b{c}", v)),
+    "roll_grid": (
+        "event_type string, h timestamp, ct long, vsum decimal(38,6)",
+        lambda c, v: ("view", datetime.datetime(2024, 1, 1, c), v, decimal.Decimal(v) / 4),
+    ),
+    "grid": ("lang string, total_ct long, kept_ct long", lambda c, v: (f"l{c}", v, v - 1)),
+    "bloom_words": ("w long, bits long", lambda c, v: (c, v)),
+    "hll_regs": ("event_type string, j long, r int", lambda c, v: ("click", c, v)),
+    "win_index": ("gh string, lo long, hi long", lambda c, v: (f"g{c}", v, v + c)),
+}
+
+
+@pytest.mark.parametrize("sub", list(_MERGE_CASES))
+def test_compaction_folds_every_store_through_its_merge(spark, tmp_path, sub):
+    """Compacting any mergeable store, with no merge argument, folds it
+    through the store's own merge. Epochs 0 and 1 hold an identical
+    partial row, which a ``distinct()`` fold would collapse: an
+    additive store would then undercount. The live view, the store
+    schema and the folded view's schema are unchanged, and the base
+    generation -1 holds one row per cell."""
+    schema, row = _MERGE_CASES[sub]
+    keys, _aggs = pipelines.STORE_MERGES[sub]
+    path = str(tmp_path / "store" / sub)
+    epochs = {0: [row(1, 3), row(2, 1)], 1: [row(1, 3)], 2: [row(1, 5), row(3, 2)]}
+    spark.createDataFrame(
+        [(*r, ep) for ep, rows in epochs.items() for r in rows], f"{schema}, epoch int"
+    ).write.partitionBy("epoch").parquet(path)
+
+    def live():
+        df = pipelines.merged_store(spark, str(tmp_path / "store"), sub)
+        return df.schema, sorted(df.collect())
+
+    before, store_schema = live(), spark.read.parquet(path).schema
+    pipelines.compact_signature_store(spark, str(tmp_path / "store"), upto_epoch=2, subs=(sub,))
+    assert live() == before
+    assert spark.read.parquet(path).schema == store_schema
+    assert [d for d in os.listdir(path) if d.startswith("epoch=")] == ["epoch=-1"]
+    base = spark.read.parquet(os.path.join(path, "epoch=-1")).collect()
+    assert len(base) == len({tuple(r[k] for k in keys) for r in base}) == 3
 
 
 def test_seed_concat_keeps_ids_exact_above_2_53(spark):
@@ -2951,7 +2991,7 @@ def test_cms_app_duplicate_delivery_no_double_count(spark, tmp_path):
 
     grid = lambda: {  # noqa: E731
         (r["i"], r["b"]): r["ct"]
-        for r in pipelines.merged_cms_grid(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "cms_grid").collect()
     }
     before = grid()
     n_epochs_before = len(
@@ -3255,7 +3295,7 @@ def test_dsir_grid_app_sums_to_batch_grid_and_survives_retry(spark, tmp_path):
     exp = {(r["b"], r["ct"]) for r in batch_grid.collect()}
     got = {
         (r["b"], r["ct"])
-        for r in pipelines.merged_dsir_grid(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "dsir_grid").collect()
     }
     assert got == exp  # poison gone, additive merge equals the batch grid
     assert len(got) <= lm.DSIR_HASH_B  # the model really is grid-bounded
@@ -3292,7 +3332,7 @@ def test_dsir_grid_app_duplicate_delivery_no_double_count(spark, tmp_path):
 
     grid = lambda: {  # noqa: E731
         (r["b"], r["ct"])
-        for r in pipelines.merged_dsir_grid(spark, str(tmp_path / "store")).collect()
+        for r in pipelines.merged_store(spark, str(tmp_path / "store"), "dsir_grid").collect()
     }
     before = grid()
     n_epochs_before = len(

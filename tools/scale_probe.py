@@ -474,7 +474,8 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
     """r12: replay ``sf_dir``'s documents through the REAL incremental
     substring-dedup app in ``n_epochs`` micro-batches (doc_id %
     n_epochs — the boilerplate block split across every epoch), then
-    one compaction cycle THROUGH the min/max reduce_fn. Claims under
+    one compaction cycle, which folds the window index through its own
+    min/max merge (``STORE_MERGES["win_index"]``). Claims under
     test: per-epoch trigger wall stays flat as the window index grows
     (cost ∝ batch windows + index overlap, never corpus²), and the
     reduced compaction collapses the index to one row per still-
@@ -507,15 +508,7 @@ def probe_substring_stream(spark, sf_dir: str, n_epochs: int) -> dict:
         rows_before = idx.count()
         cut_docs = spark.read.parquet(reg.channels["dwd_documents_cut"].path).count()
         t0 = time.time()
-        compact_signature_store(
-            spark,
-            store,
-            upto_epoch=n_epochs - 1,
-            subs=("win_index",),
-            reduce_fn=lambda df: df.groupBy("gh").agg(
-                F.min("lo").alias("lo"), F.max("hi").alias("hi")
-            ),
-        )
+        compact_signature_store(spark, store, upto_epoch=n_epochs - 1, subs=("win_index",))
         compact_s = round(time.time() - t0, 2)
         after = spark.read.parquet(os.path.join(store, "win_index"))
         return {
@@ -1105,8 +1098,8 @@ def main() -> None:
         }
 
         # r12: the incremental substring app's per-epoch wall must stay
-        # flat as the window index grows; compaction runs through the
-        # min/max reduce_fn
+        # flat as the window index grows; compaction folds the index
+        # through its min/max merge
         substr_stream = {
             label: probe_substring_stream(spark, sf_dir, args.stream_epochs)
             for label, sf_dir in (("sf0.1", "/root/testdata/sf0.1"), ("sf1", sf1))
