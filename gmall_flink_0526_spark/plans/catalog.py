@@ -123,8 +123,8 @@ _LOADED = False
 # This round's NEW or semantically CHANGED queries — the set the
 # mid-round pytest sweep must ALWAYS run at sf0.001 (r14 VERDICT #4:
 # the full-catalog sweep moved the battery near 30 min; mid-round runs
-# now take this set plus one third of the rest, chosen by
-# SPARK_GRAFT_SWEEP_OFFSET (default 0), and the closing
+# now take this set plus a fixed and a rotating third of the rest
+# (tests/test_catalog.py), and the closing
 # battery restores the full sweep via SPARK_GRAFT_FULL_SWEEP=1).
 # Maintained each round alongside the _PRIORITY window lead.
 R_NEW_CHANGED = (

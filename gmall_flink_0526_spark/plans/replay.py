@@ -116,7 +116,7 @@ from .text import CMS_TOP, SQL_STOPS, SQL_TOKS, _sql_cms_audit
 from .timeseries import SQL_GAPFILL_LOCF, dense_from_rollup, locf_output
 
 
-def _run_store_app(spark, reg, app, store="store", ckpt="ckpt", **kw) -> str:
+def _run_store_app(spark, reg, app, ckpt="ckpt", store="store", **kw) -> str:
     """Run the epoch-store app ``app`` over ``reg``'s channels to the
     end, with its checkpoint at ``<reg.root>/<ckpt>`` and its store at
     ``<reg.root>/<store>``; returns the store root."""
@@ -2043,9 +2043,9 @@ def dsir_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gmall_dsir_",
         ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
     )
-    raw = _run_store_app(spark, reg, lm_counts_app, "raw", "ckpt_raw")
+    raw = _run_store_app(spark, reg, lm_counts_app, ckpt="ckpt_raw", store="raw")
     tgt = _run_store_app(
-        spark, reg, lm_counts_app, "tgt", "ckpt_tgt",
+        spark, reg, lm_counts_app, ckpt="ckpt_tgt", store="tgt",
         doc_filter=F.col("lang") == DSIR_TARGET_LANG,
     )
     raw_model, tgt_model = merged_lm_model(spark, raw), merged_lm_model(spark, tgt)
@@ -2100,9 +2100,9 @@ def dsir_hashed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "gmall_dsirh_",
         ods_documents=(lines.select("doc_id", "text", "lang", "ts"), 2, ["ts", "doc_id"]),
     )
-    raw = _run_store_app(spark, reg, dsir_grid_app, "raw", "ckpt_raw")
+    raw = _run_store_app(spark, reg, dsir_grid_app, ckpt="ckpt_raw", store="raw")
     tgt = _run_store_app(
-        spark, reg, dsir_grid_app, "tgt", "ckpt_tgt",
+        spark, reg, dsir_grid_app, ckpt="ckpt_tgt", store="tgt",
         doc_filter=F.col("lang") == DSIR_TARGET_LANG,
     )
     raw = merged_store(spark, raw, "dsir_grid")

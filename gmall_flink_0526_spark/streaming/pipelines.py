@@ -631,7 +631,12 @@ def read_epoch_store(sess: SparkSession, path: str, epoch_id: int) -> DataFrame:
 #: column's name and type, so a folded base generation and the live
 #: epochs share one parquet directory and fold again with the same
 #: result. A store not named here is a set of facts (signatures,
-#: shingles, vectors, flags): its merge is ``distinct()``.
+#: shingles, vectors, flags): its merge is ``distinct()``. So a new
+#: store of partial aggregates MUST add its entry here: without one,
+#: :func:`compact_signature_store` would ``distinct()`` it and collapse
+#: equal partial rows of different epochs (two epochs' ``ct=3`` of one
+#: cell would read 3, not 6). The parametrized compaction test in
+#: ``tests/test_pipelines.py`` covers every entry; extend it too.
 STORE_MERGES = {
     "cms_grid": (("i", "b"), {"ct": F.sum}),
     "hist_grid": (("event_type", "b"), {"ct": F.sum}),

@@ -4,14 +4,15 @@ sf0.01). Mirrors the driver's CORRECTNESS gate.
 
 Sweep policy (r14 VERDICT #4 — the full sweep pushed mid-round pytest
 near 30 min): a default run covers this round's NEW/CHANGED queries
-(catalog.R_NEW_CHANGED — always) plus one third of the rest.
-The rotation offset is SPARK_GRAFT_SWEEP_OFFSET when set, else 0: the
-default run collects the same test ids on every day, so a run's coverage
-is reproducible and comparable by test name (a wall-clock-day offset made
-two thirds of the ids vanish on two days out of three). Set
-SPARK_GRAFT_SWEEP_OFFSET=1 or 2 for the other thirds, or
-SPARK_GRAFT_FULL_SWEEP=1 for the full catalog — the closing battery and
-the in-repo vanilla gate still check every query every round."""
+(catalog.R_NEW_CHANGED — always), a fixed third of the rest (offset 0,
+so every run collects the same core of test ids and runs compare by
+name) and a rotating third. The rotating offset is
+SPARK_GRAFT_SWEEP_OFFSET when set (pinned, replayable — the r15 ADVICE
+fix), else the day ordinal mod 3, so the default runs still cover the
+whole catalog every three days; on offset-0 days the two thirds
+coincide. Set SPARK_GRAFT_FULL_SWEEP=1 for the full catalog — the
+closing battery and the in-repo vanilla gate still check every query
+every round."""
 
 from __future__ import annotations
 
@@ -28,12 +29,15 @@ def _names():
     all_names = sorted(plans.queries().keys())
     if os.environ.get("SPARK_GRAFT_FULL_SWEEP") == "1":
         return all_names
+    from datetime import date
+
     from gmall_flink_0526_spark.plans.catalog import R_NEW_CHANGED
 
-    off = int(os.environ.get("SPARK_GRAFT_SWEEP_OFFSET", "0")) % 3
+    off_env = os.environ.get("SPARK_GRAFT_SWEEP_OFFSET")
+    off = int(off_env) % 3 if off_env is not None else date.today().toordinal() % 3
     rest = [n for n in all_names if n not in R_NEW_CHANGED]
     picked = set(R_NEW_CHANGED) & set(all_names)
-    picked.update(n for i, n in enumerate(rest) if i % 3 == off)
+    picked.update(n for i, n in enumerate(rest) if i % 3 in (0, off))
     return sorted(picked)
 
 

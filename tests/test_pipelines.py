@@ -2542,7 +2542,8 @@ def test_compactor_crash_after_rename_never_double_counts_additive(spark, tmp_pa
 
 
 # every mergeable epoch store: its schema, and one row of cell ``c``
-# holding the partial value ``v``
+# holding the partial value ``v`` (the test runs over every
+# STORE_MERGES entry, so a new entry without a case here fails)
 _MERGE_CASES = {
     "cms_grid": ("i int, b int, ct long", lambda c, v: (0, c, v)),
     "hist_grid": ("event_type string, b int, ct long", lambda c, v: ("click", c, v)),
@@ -2559,7 +2560,7 @@ _MERGE_CASES = {
 }
 
 
-@pytest.mark.parametrize("sub", list(_MERGE_CASES))
+@pytest.mark.parametrize("sub", list(pipelines.STORE_MERGES))
 def test_compaction_folds_every_store_through_its_merge(spark, tmp_path, sub):
     """Compacting any mergeable store, with no merge argument, folds it
     through the store's own merge. Epochs 0 and 1 hold an identical
