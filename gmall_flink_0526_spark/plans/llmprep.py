@@ -868,7 +868,11 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- end-to-end corpus build --------------------------------------------
 
+# the corpus gates, shared with the streaming front gate
+# (streaming.pipelines.doc_quality_gate_app): quality score and the
+# stopword ratio at which a doc counts as 'en'
 QUALITY_MIN = 0.5
+STOP_MIN = 0.05
 
 # chunk-level boilerplate gate, composed into corpus_build: a chunk
 # digest shared by more than BOILER_DOC_MIN distinct docs is
@@ -1001,7 +1005,7 @@ def _corpus_build_oracle(sem_hits_sql: str) -> str:
     FROM scored s JOIN survivors USING (doc_id)
     LEFT JOIN boiler b USING (doc_id)
     LEFT JOIN shcov sc USING (doc_id)
-    WHERE s.stop_ratio_v >= 0.05 AND s.quality >= {QUALITY_MIN}
+    WHERE s.stop_ratio_v >= {STOP_MIN} AND s.quality >= {QUALITY_MIN}
       AND COALESCE(b.br, 0.0) < {BOILER_RATIO_MAX}
       AND COALESCE(sc.scov, 0.0) < {DUP_COV_MAX}
       AND s.doc_id % {EVAL_MOD} != 0
@@ -1067,7 +1071,7 @@ def corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(boiler, "doc_id", "left")
         .join(shcov, "doc_id", "left")
         .filter(
-            (F.col("stop_ratio_v") >= 0.05)
+            (F.col("stop_ratio_v") >= STOP_MIN)
             & (F.col("quality") >= QUALITY_MIN)
             & (F.coalesce(F.col("br"), F.lit(0.0)) < BOILER_RATIO_MAX)
             & (F.coalesce(F.col("scov"), F.lit(0.0)) < DUP_COV_MAX)
@@ -1174,7 +1178,7 @@ def corpus_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("_cont").isNotNull(), 1)
         .when(F.col("_sem").isNotNull(), 2)
         .when(F.col("_surv").isNull(), 3)
-        .when(F.col("stop_ratio_v") < 0.05, 4)
+        .when(F.col("stop_ratio_v") < STOP_MIN, 4)
         .when(F.col("quality") < QUALITY_MIN, 5)
         .when(F.coalesce(F.col("br"), F.lit(0.0)) >= BOILER_RATIO_MAX, 6)
         .when(F.coalesce(F.col("scov"), F.lit(0.0)) >= DUP_COV_MAX, 7)
@@ -1222,7 +1226,7 @@ def _register_corpus_queries() -> None:
                   WHEN s.doc_id IN (SELECT doc_id FROM contam) THEN 1
                   WHEN s.doc_id IN (SELECT doc_id FROM contam_sem) THEN 2
                   WHEN s.doc_id NOT IN (SELECT doc_id FROM survivors) THEN 3
-                  WHEN s.stop_ratio_v < 0.05 THEN 4
+                  WHEN s.stop_ratio_v < {STOP_MIN} THEN 4
                   WHEN s.quality < {QUALITY_MIN} THEN 5
                   WHEN COALESCE(b.br, 0.0) >= {BOILER_RATIO_MAX} THEN 6
                   WHEN COALESCE(sc.scov, 0.0) >= {DUP_COV_MAX} THEN 7

@@ -209,10 +209,10 @@ def visitor_stats_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared by the batch query and its streaming twin: Spark's
-# window(ts, "2 hours", "1 hour") assigns each row the two
-# epoch-aligned hour starts covering it — start in
-# {floor_hour(ts) - 1h, floor_hour(ts)} — which the oracle unnests
-# explicitly.
+# window(ts, *VISITOR_SLIDE) assigns each row the two epoch-aligned
+# hour starts covering it — start in {floor_hour(ts) - 1h,
+# floor_hour(ts)} — which the oracle unnests explicitly.
+VISITOR_SLIDE = ("2 hours", "1 hour")
 _SQL_VISITOR_SLIDING = """
     WITH hopped AS (
       SELECT unnest([date_trunc('hour', ts) - INTERVAL 1 HOUR,
@@ -247,7 +247,7 @@ def visitor_stats_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, "events")
     return (
         t["events"]
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts", *VISITOR_SLIDE).alias("w"), "event_type")
         .agg(
             F.count("*").alias("pv_ct"),
             exact_sum(F.col("value")).alias("value_sum"),

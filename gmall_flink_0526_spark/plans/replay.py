@@ -27,6 +27,7 @@ from ..sources.cdc import envelope_from_table
 from ..sources.dimstore import DimStore
 from ..streaming import stateful
 from ..streaming.pipelines import (
+    WINDOW,
     base_db_app,
     bloom_filter_app,
     cms_sketch_app,
@@ -52,8 +53,9 @@ from ..streaming.pipelines import (
     similarity_graph_app,
     substring_dedup_app,
     triplet_mine_app,
+    window_agg,
 )
-from ..streaming.replay import replay_registry, replay_stateful, run_to_end
+from ..streaming.replay import replay_registry, replay_stateful, run_to_end, with_sentinel
 from .catalog import register, register_setup
 from .cdc import PIT_T0, PIT_T1, sql_dim_enrichment_asof
 from .dedup import (
@@ -89,6 +91,7 @@ from .logs import (
     PAGERANK_ITERS,
     PAGERANK_RESET,
     SESSION_GAP_MIN,
+    VISITOR_SLIDE,
     _SQL_FUNNEL_ATTR,
     _SQL_FUNNEL_ATTR4,
     _SQL_FUNNEL_ATTR_WINDOWED,
@@ -379,9 +382,6 @@ def dedup_incremental_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reg.read_batch(spark, "dwd_documents_unique").select("doc_id")
 
 
-SESSION_WM_H = 1  # session replay watermark (hours)
-
-
 @register(
     "session_stats_stream",
     oracle=f"""
@@ -426,18 +426,11 @@ def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = events.select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id", "value"
     )
-    sentinel = src.agg(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.max("ts") + F.expr(f"INTERVAL {2 * SESSION_WM_H} HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit(0.0).alias("value"),
-    )
+    # two watermark delays past the data: every real session closes
     out = replay_stateful(
         spark,
-        src.unionByName(sentinel),
-        lambda s: session_window_agg(
-            s, gap_minutes=SESSION_GAP_MIN, watermark=f"{SESSION_WM_H} hour"
-        ),
+        with_sentinel(src, "2 hours", event_id=-1, user_id=-1, value=0.0),
+        session_window_agg,
         order_by=["ts", "event_id"],
         drain_mode="all_available",
     )
@@ -448,6 +441,38 @@ def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "value_sum",
     )
+
+
+def _visitor_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    events = load_tables(spark, sf_dir, "events")["events"]
+    return events.select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
+    )
+
+
+def _visitor_flushed(src: DataFrame, after: str) -> DataFrame:
+    """``src`` plus a ``_sentinel`` flush row ``after`` past the data."""
+    return with_sentinel(src, after, event_id=-1, event_type="_sentinel", value=0.0)
+
+
+def _visitor_pv(spark: SparkSession, flushed: DataFrame, window=(WINDOW,), **replay) -> DataFrame:
+    """The visitor-stats replays: ``flushed`` through the DWS window
+    aggregate of pv count and exact value sum per event type, then the
+    real windows' ``stt`` rows."""
+    out = replay_stateful(
+        spark,
+        flushed,
+        lambda s: window_agg(
+            s,
+            ["event_type"],
+            F.count("*").alias("pv_ct"),
+            exact_sum(F.col("value")).alias("value_sum"),
+            window=window,
+        ).drop("edt"),
+        drain_mode="all_available",
+        **replay,
+    )
+    return out.filter(F.col("event_type") != "_sentinel")
 
 
 @register(
@@ -472,38 +497,11 @@ def session_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "agg", "window"),
 )
 def visitor_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_tables(spark, sf_dir, "events")["events"]
-    src = events.select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
-    )
-    sentinel = src.agg(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-        F.lit("_sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-
-    def op(s):
-        return (
-            s.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("pv_ct"), exact_sum(F.col("value")).alias("value_sum"))
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                "event_type",
-                "pv_ct",
-                "value_sum",
-            )
-        )
-
-    out = replay_stateful(
+    return _visitor_pv(
         spark,
-        src.unionByName(sentinel),
-        op,
+        _visitor_flushed(_visitor_events(spark, sf_dir), "3 hours"),
         order_by=["ts", "event_id"],
-        drain_mode="all_available",
     )
-    return out.filter(F.col("event_type") != "_sentinel")
 
 
 @register(
@@ -559,10 +557,7 @@ def visitor_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "agg", "window", "watermark"),
 )
 def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_tables(spark, sf_dir, "events")["events"]
-    src = events.select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
-    )
+    src = _visitor_events(spark, sf_dir)
     bounds = src.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
     # documented precondition, enforced loudly (the OHLC null-ts
     # pattern): the replay's late/held/mid split needs the corpus to
@@ -575,10 +570,12 @@ def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"late/held split to be well-defined (got {b['mn']}..{b['mx']})"
         )
     lab = (
-        src.crossJoin(F.broadcast(bounds))
+        _visitor_flushed(src, "3 hours")
+        .crossJoin(F.broadcast(bounds))
         .withColumn(
             "bat",
-            F.when(
+            F.when(F.col("event_type") == "_sentinel", 3)
+            .when(
                 (F.col("ts") < F.col("mn") + F.expr("INTERVAL 1 HOUR"))
                 | (F.col("ts") >= F.col("mx") - F.expr("INTERVAL 1 HOUR")),
                 2,
@@ -588,38 +585,14 @@ def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("event_id", "ts", "event_type", "value", "bat")
     )
-    sentinel = src.agg(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-        F.lit("_sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit(3).alias("bat"),
-    )
-
-    def op(s):
-        return (
-            s.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("pv_ct"), exact_sum(F.col("value")).alias("value_sum"))
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                "event_type",
-                "pv_ct",
-                "value_sum",
-            )
-        )
-
-    out = replay_stateful(
+    return _visitor_pv(
         spark,
-        lab.unionByName(sentinel),
-        op,
+        lab,
         order_by=["bat", "ts", "event_id"],
         n_files=4,
         file_of=F.col("bat"),
         cache_key=f"visitor_late_drop:{sf_dir}",
-        drain_mode="all_available",
     )
-    return out.filter(F.col("event_type") != "_sentinel")
 
 
 @register(
@@ -638,42 +611,13 @@ def visitor_stats_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events", "agg", "window"),
 )
 def visitor_stats_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_tables(spark, sf_dir, "events")["events"]
-    src = events.select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type", "value"
-    )
-    sentinel = src.agg(
-        F.lit(-1).cast("long").alias("event_id"),
-        (F.max("ts") + F.expr("INTERVAL 4 HOURS")).alias("ts"),
-        F.lit("_sentinel").alias("event_type"),
-        F.lit(0.0).alias("value"),
-    )
-
-    def op(s):
-        return (
-            s.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("pv_ct"),
-                exact_sum(F.col("value")).alias("value_sum"),
-            )
-            .select(
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-                "event_type",
-                "pv_ct",
-                "value_sum",
-            )
-        )
-
-    out = replay_stateful(
+    return _visitor_pv(
         spark,
-        src.unionByName(sentinel),
-        op,
+        _visitor_flushed(_visitor_events(spark, sf_dir), "4 hours"),
+        window=VISITOR_SLIDE,
         order_by=["ts", "event_id"],
         n_files=2,
-        drain_mode="all_available",
     )
-    return out.filter(F.col("event_type") != "_sentinel")
 
 
 @register(
@@ -721,18 +665,11 @@ def order_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ts"),
         "value",
     )
-
-    def with_sentinel(df, fills):
-        far = df.agg((F.max("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"))
-        for name, val in fills.items():
-            far = far.withColumn(name, F.lit(val))
-        return df.unionByName(far.select(*df.columns))
-
     reg = replay_registry(
         "gmall_owstream_",
-        dwd_order_info=(with_sentinel(orders, {"order_id": -1}), 2, ["ts", "order_id"]),
+        dwd_order_info=(with_sentinel(orders, "1 hour", order_id=-1), 2, ["ts", "order_id"]),
         dwd_order_detail=(
-            with_sentinel(details, {"detail_order_id": -2, "value": 0.0}),
+            with_sentinel(details, "1 hour", detail_order_id=-2, value=0.0),
             2,
             ["ts", "detail_order_id"],
         ),
@@ -847,19 +784,14 @@ def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(ts + F.expr("INTERVAL 30 MINUTES"))
         .alias("ts"),
     )
-
-    def with_sentinel(df, fills):
-        far = df.agg((F.max("ts") + F.expr("INTERVAL 2 HOURS")).alias("ts"))
-        for name, val in fills.items():
-            far = far.withColumn(name, F.lit(val))
-        return df.unionByName(far.select(*df.columns))
-
     reg = replay_registry(
         "gmall_pwstream_",
         dwd_payment_info=(
-            with_sentinel(payments, {"payment_order_id": -1}), 2, ["ts", "payment_order_id"]
+            with_sentinel(payments, "2 hours", payment_order_id=-1), 2, ["ts", "payment_order_id"]
         ),
-        dwm_order_wide=(with_sentinel(wide, {"order_id": -2, "value": 0.0}), 2, ["ts", "order_id"]),
+        dwm_order_wide=(
+            with_sentinel(wide, "2 hours", order_id=-2, value=0.0), 2, ["ts", "order_id"]
+        ),
     )
     run_to_end(spark, reg, lambda: payment_wide_app(spark, reg, os.path.join(reg.root, "ckpt")))
     return (
@@ -868,7 +800,7 @@ def payment_wide_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "order_id",
             "value",
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("pay_time"),
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("pay_time"),
         )
     )
 

@@ -127,8 +127,11 @@ class ChannelRegistry:
             return reader.json(ch.path)
         return reader.parquet(ch.path)
 
-    def write_stream(self, df: DataFrame, name: str, checkpoint_root: str, **kw):
-        """Start a streaming write to a channel; returns the query.
+    def write_stream(
+        self, df: DataFrame, name: str, checkpoint_root: str, *, available_now: bool = False
+    ):
+        """Start an append-mode streaming write to a channel; returns the
+        query.
 
         ``available_now=True`` uses Trigger.AvailableNow: the query
         consumes everything currently in the source and terminates on
@@ -138,10 +141,8 @@ class ChannelRegistry:
         state an AvailableNow query keeps scheduling timeout batches
         and never terminates."""
         ch = self._get(name)
-        writer = df.writeStream.option(
-            "checkpointLocation", os.path.join(checkpoint_root, name)
-        ).outputMode(kw.pop("output_mode", "append"))
-        if kw.pop("available_now", False):
+        writer = df.writeStream.option("checkpointLocation", os.path.join(checkpoint_root, name))
+        if available_now:
             writer = writer.trigger(availableNow=True)
         if ch.kind == "memory":
             return writer.format("memory").queryName(_mem_name(name)).start()

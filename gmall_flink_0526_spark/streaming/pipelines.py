@@ -22,6 +22,28 @@ which preserves the reference's topic-per-layer decoupling:
 - :func:`doc_dedup_app`, :func:`doc_quality_gate_app` — ingest gates on
   Spark's native watermarked ``dropDuplicates`` state.
 
+Channel apps. These twelve apps take only their channel names (the
+topic IR), a checkpoint root and, where the reference has one, a dim
+list; every other setting is a module constant shared with its batch
+twin where one exists:
+
+- Constants: :data:`JOIN_WATERMARK` bounds the interval joins' state,
+  :data:`WATERMARK` the windows', session windows' and digest dedup's;
+  :data:`WINDOW` is the DWS tumbling window; the join bounds are
+  :data:`ORDER_DETAIL_BOUNDS` and :data:`PAYMENT_ORDER_BOUNDS`; the
+  session gap is ``plans.logs.SESSION_GAP_MIN`` and the front gate's
+  thresholds are ``plans.llmprep.STOP_MIN`` / ``QUALITY_MIN``.
+- Each stream plan is spelled once: ``_interval_join`` (the DWM
+  joins), :func:`window_agg` (the DWS windows and their replay twins),
+  :func:`session_window_agg` and ``_digest_dedup``.
+- Driving-side ``ts``: an interval join keeps its driving side's
+  ``ts`` and renames only the joined side's (``d_ts``, ``w_ts``), so
+  ``dwm_order_wide`` carries the order's ``ts`` and
+  :func:`payment_wide_app` can tail :func:`order_wide_app`'s output.
+- Enrichment: ``dims`` is :func:`~..operators.joins.dim_enrich`'s
+  ``[(dim_df, join_cond, projected_cols), ...]``, each dim broadcast
+  and left-joined.
+
 Checkpointing (X4): every query takes a checkpoint root; Spark resumes
 from it — the analogue of the reference's (commented-out) Flink
 checkpoint config.
@@ -77,16 +99,48 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.exact import _DEC as _EXACT_DEC, exact_sum
+from ..operators import classifier as PC, dedup as D, lm, similarity as S, textops
+from ..operators.aggregates import cms_counters, hist_counters, hll_registers
 from ..operators.cache import cache_scope
 from ..operators.filters import filter_deletes
-from ..operators.joins import interval_join
-from ..operators.parse import parse_json_dead_letter, project_map_columns
+from ..operators.joins import dim_enrich, interval_join
+from ..operators.parse import explode_with_parent, parse_json_dead_letter, project_map_columns
 from ..operators.routing import route_by_config, split_by_sink_type, split_stream
+from ..operators.similarity import kmeans_fit
+from ..operators.textops import tokenize
+from ..plans.llmprep import QUALITY_MIN, STOP_MIN
+from ..plans.logs import SESSION_GAP_MIN
+from ..plans.similarity import (
+    DECON_COS_T,
+    FIT_PER_CLUSTER,
+    KM_FIT_N,
+    KM_ITERS,
+    KM_K,
+    N_PROBES,
+    SEMDEDUP_MAX_CLUSTER,
+    SEMDEDUP_T,
+    _semdedup_k,
+)
+from ..schemas import BEHAVIOR_LOG
 from ..session import local_table
 from ..sources import fs as hfs
 from ..sources.dimstore import DimStore
 from ..sources.registry import ChannelRegistry
 from . import stateful
+
+
+#: Event-time constants of the channel apps. The interval joins hold
+#: each side's rows for their bounds plus JOIN_WATERMARK; the windows,
+#: the session windows and the digest dedup hold state for WATERMARK.
+JOIN_WATERMARK = "10 seconds"
+WATERMARK = "1 hour"
+#: the DWS tumbling window (RT/bean/VisitorStats.java)
+WINDOW = "1 hour"
+#: (lower, upper) interval bounds around the driving side's ``ts``:
+#: OrderWideApp.java:80-89 and PaymentWideApp.java:76-85
+ORDER_DETAIL_BOUNDS = ("5 SECONDS", "5 SECONDS")
+PAYMENT_ORDER_BOUNDS = ("15 MINUTES", "5 SECONDS")
 
 
 def base_log_app(
@@ -95,18 +149,18 @@ def base_log_app(
     ckpt: str,
     source: str = "ods_base_log",
     props_schema=None,
-    log_col: str = "log",
 ):
     """ODS log -> dead-letter + start/page/display channels.
 
     The default path is the AUTHENTIC nested behavior-log shape
     (BaseLogApp.java:99-151 over ``schemas.BEHAVIOR_LOG``): each record
-    is one JSON line; unparseable lines go to the dead letter; records
-    carrying a ``start`` object are start logs; everything else is a
-    page log; and a page record's ``displays[]`` fans out 1->N with the
-    parent (page_id, ts) stamped on every element — the reference's
-    side-output trio, with ``explode_with_parent`` playing the
-    displays loop of BaseLogApp.java:120-140.
+    is one JSON line in the ``log`` column; unparseable lines go to the
+    dead letter; records carrying a ``start`` object are start logs;
+    everything else is a page log; and a page record's ``displays[]``
+    fans out 1->N with the parent (page_id, ts) stamped on every
+    element — the reference's side-output trio, with
+    ``explode_with_parent`` playing the displays loop of
+    BaseLogApp.java:120-140.
 
     ``props_schema`` selects the legacy fixture-shaped split instead
     (flat ``event_type`` predicates over the events fixture, payload in
@@ -118,15 +172,12 @@ def base_log_app(
     side-output semantics — otherwise each sink would re-read the
     source.
     """
-    from ..operators.parse import explode_with_parent
-    from ..schemas import BEHAVIOR_LOG
-
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
 
     def process_nested(batch: DataFrame, epoch_id: int) -> None:
         batch.persist()
         try:
-            clean, dirty = parse_json_dead_letter(batch, log_col, BEHAVIOR_LOG, out="data")
+            clean, dirty = parse_json_dead_letter(batch, "log", BEHAVIOR_LOG, out="data")
             reg.write_batch(dirty, "dirty_log")
             clean = clean.select("data.*").persist()
             start = clean.filter(F.col("start").isNotNull()).select(
@@ -267,6 +318,29 @@ def base_db_app(
     )
 
 
+def _interval_join(
+    spark: SparkSession, reg: ChannelRegistry, drive: str, other: str, ts_as: str, on, bounds
+) -> DataFrame:
+    """The DWM interval join: tail the ``drive`` and ``other`` channels
+    one file per trigger, watermark both by :data:`JOIN_WATERMARK`,
+    rename ``other``'s ``ts`` to ``ts_as`` and keep its rows whose time
+    lies within ``bounds`` = (lower, upper) of the driving ``ts``."""
+    left, right = (
+        reg.read_stream(spark, ch, max_files_per_trigger=1).withWatermark("ts", JOIN_WATERMARK)
+        for ch in (drive, other)
+    )
+    lower, upper = bounds
+    return interval_join(
+        left,
+        right.withColumnRenamed("ts", ts_as),
+        on=on,
+        left_ts=F.col("ts"),
+        right_ts=F.col(ts_as),
+        lower=lower,
+        upper=upper,
+    )
+
+
 def order_wide_app(
     spark: SparkSession,
     reg: ChannelRegistry,
@@ -274,39 +348,22 @@ def order_wide_app(
     order_channel: str = "dwd_order_info",
     detail_channel: str = "dwd_order_detail",
     out_channel: str = "dwm_order_wide",
-    watermark: str = "10 seconds",
-    lower: str = "5 SECONDS",
-    upper: str = "5 SECONDS",
-    dims: list | None = None,
+    dims=(),
 ):
     """Watermarked stream-stream interval join (J1) + broadcast dim
-    enrichment (J3) -> wide channel.
+    enrichment (J3) -> wide channel. A detail joins its order when its
+    ``d_ts`` lies within :data:`ORDER_DETAIL_BOUNDS` of the order's
+    ``ts``; ``dims`` is :func:`~..operators.joins.dim_enrich`'s list.
 
     Both sides carry watermarks so the join state is bounded to the
     interval + watermark delay (W1: the reference uses monotonic
-    watermarks = zero lateness; ours is configurable).
+    watermarks = zero lateness; ours allows :data:`JOIN_WATERMARK`).
     """
-    orders = reg.read_stream(spark, order_channel, max_files_per_trigger=1).withWatermark(
-        "ts", watermark
+    joined = _interval_join(
+        spark, reg, order_channel, detail_channel, "d_ts",
+        F.col("order_id") == F.col("detail_order_id"), ORDER_DETAIL_BOUNDS,
     )
-    details = reg.read_stream(spark, detail_channel, max_files_per_trigger=1).withWatermark(
-        "ts", watermark
-    )
-    o = orders.select(*[F.col(c).alias(f"o_{c}") if c in ("ts",) else F.col(c) for c in orders.columns])
-    d = details.select(*[F.col(c).alias(f"d_{c}") if c in ("ts",) else F.col(c) for c in details.columns])
-    joined = interval_join(
-        o,
-        d,
-        on=F.col("order_id") == F.col("detail_order_id"),
-        left_ts=F.col("o_ts"),
-        right_ts=F.col("d_ts"),
-        lower=lower,
-        upper=upper,
-    )
-    wide = joined
-    for dim_df, cond, cols in dims or []:
-        wide = wide.join(F.broadcast(dim_df.select(*cols)), cond, "left")
-    return reg.write_stream(wide, out_channel, ckpt)
+    return reg.write_stream(dim_enrich(joined, dims), out_channel, ckpt)
 
 
 def unique_visit_app(
@@ -331,16 +388,16 @@ def user_jump_detail_app(
     ckpt: str,
     source: str = "dwd_page_log",
     out_channel: str = "dwm_user_jump_detail",
-    gap_minutes: int = 10,
 ):
     """U2 as a job — the reference's planned CEP bounce job (empty stub
     RT/app/dwm/UserJumpDetailApp.java; flink-cep dep declared): close a
-    session when the gap passes or state times out; 1-event sessions
-    are bounces. Starts under :func:`stateful.state_fanout`."""
+    session when the ``SESSION_GAP_MIN`` gap passes or state times out;
+    1-event sessions are bounces. Starts under
+    :func:`stateful.state_fanout`."""
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
     with stateful.state_fanout(spark):
         return reg.write_stream(
-            stateful.sessionize_bounce(src, gap_minutes=gap_minutes), out_channel, ckpt
+            stateful.sessionize_bounce(src, gap_minutes=SESSION_GAP_MIN), out_channel, ckpt
         )
 
 
@@ -351,33 +408,37 @@ def payment_wide_app(
     payment_channel: str = "dwd_payment_info",
     order_wide_channel: str = "dwm_order_wide",
     out_channel: str = "dwm_payment_wide",
-    watermark: str = "10 seconds",
-    lower: str = "15 MINUTES",
-    upper: str = "5 SECONDS",
 ):
-    """J2 — payment ⋈ order_wide with asymmetric bounds: the order may
-    precede the payment by up to 15 minutes, follow it by at most 5
-    seconds (RT/app/dwm/PaymentWideApp.java:76-85). Reading
-    ``dwm_order_wide`` from its channel keeps the reference's
-    topic-decoupling between the two DWM jobs."""
-    pay = reg.read_stream(spark, payment_channel, max_files_per_trigger=1).withWatermark(
-        "ts", watermark
-    )
-    wide = reg.read_stream(spark, order_wide_channel, max_files_per_trigger=1).withWatermark(
-        "ts", watermark
-    )
-    p = pay.select(*[F.col(c).alias(f"p_{c}") if c == "ts" else F.col(c) for c in pay.columns])
-    w = wide.select(*[F.col(c).alias(f"w_{c}") if c == "ts" else F.col(c) for c in wide.columns])
-    joined = interval_join(
-        p,
-        w,
-        on=F.col("payment_order_id") == F.col("order_id"),
-        left_ts=F.col("p_ts"),
-        right_ts=F.col("w_ts"),
-        lower=lower,
-        upper=upper,
+    """J2 — payment ⋈ order_wide with asymmetric bounds
+    (:data:`PAYMENT_ORDER_BOUNDS`): the order's ``ts``, renamed
+    ``w_ts``, may precede the payment's by up to 15 minutes and follow
+    it by at most 5 seconds (RT/app/dwm/PaymentWideApp.java:76-85).
+    Tailing ``order_wide_app``'s own output channel keeps the
+    reference's topic-decoupling between the two DWM jobs."""
+    joined = _interval_join(
+        spark, reg, payment_channel, order_wide_channel, "w_ts",
+        F.col("payment_order_id") == F.col("order_id"), PAYMENT_ORDER_BOUNDS,
     )
     return reg.write_stream(joined, out_channel, ckpt)
+
+
+def window_agg(df: DataFrame, keys, *aggs, window=(WINDOW,)) -> DataFrame:
+    """The DWS window aggregate: ``ts`` watermarked by
+    :data:`WATERMARK`, ``aggs`` per event-time ``window`` (the
+    ``F.window`` duration[, slide]) x ``keys``, each window's bounds
+    stamped as ``stt`` / ``edt`` strings ahead of the keys and
+    measures. Append mode emits a window once the watermark passes its
+    end."""
+    agg = (
+        df.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", *window).alias("w"), *keys)
+        .agg(*aggs)
+    )
+    return agg.select(
+        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("stt"),
+        F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("edt"),
+        *agg.columns[1:],
+    )
 
 
 def visitor_stats_union_app(
@@ -388,14 +449,12 @@ def visitor_stats_union_app(
     uv_channel: str = "dwm_unique_visit",
     jump_channel: str = "dwm_user_jump_detail",
     out_channel: str = "dws_visitor_stats_union",
-    window: str = "1 hour",
-    watermark: str = "1 hour",
 ):
     """A1 in the reference's exact wiring: several pre-shaped streams
     (page views / deduped unique visitors / bounce flags) are unioned —
     one measure column "hot" per source, the rest zero-filled
     (RT/bean/VisitorStats.java's one-constructor-per-stream pattern) —
-    then reduced in one keyed tumbling window. The union is free at the
+    then reduced in one tumbling window. The union is free at the
     shuffle: every measure partial-aggregates map-side."""
     l0, d0 = F.lit(0).cast("long"), F.lit(0.0)
 
@@ -421,20 +480,13 @@ def visitor_stats_union_app(
         .unionByName(shaped(uvs, "ts", uv=one))
         .unionByName(shaped(jumps.filter(F.col("is_bounce")), "end_ts", uj=one))
     )
-    agg = (
-        unioned.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(
-            F.sum("pv").alias("pv_ct"),
-            F.sum("uv").alias("uv_ct"),
-            F.sum("uj").alias("uj_ct"),
-            F.sum("dur").alias("dur_sum"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("edt"),
-            "pv_ct", "uv_ct", "uj_ct", "dur_sum",
-        )
+    agg = window_agg(
+        unioned,
+        [],
+        F.sum("pv").alias("pv_ct"),
+        F.sum("uv").alias("uv_ct"),
+        F.sum("uj").alias("uj_ct"),
+        F.sum("dur").alias("dur_sum"),
     )
     return reg.write_stream(agg, out_channel, ckpt)
 
@@ -445,29 +497,17 @@ def visitor_stats_app(
     ckpt: str,
     source: str = "dwd_page_log",
     out_channel: str = "dws_visitor_stats",
-    window: str = "1 hour",
-    watermark: str = "1 hour",
 ):
     """DWS windowed aggregation (A1): tumbling event-time window x
     dimension with watermark-bounded state; append mode emits each
     window once finalized — the streaming twin of visitor_stats_hourly."""
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("pv_ct"),
-            F.approx_count_distinct("user_id").alias("uv_ct_approx"),
-            F.sum("value").alias("value_sum"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("edt"),
-            "event_type",
-            "pv_ct",
-            "uv_ct_approx",
-            "value_sum",
-        )
+    agg = window_agg(
+        src,
+        ["event_type"],
+        F.count("*").alias("pv_ct"),
+        F.approx_count_distinct("user_id").alias("uv_ct_approx"),
+        F.sum("value").alias("value_sum"),
     )
     return reg.write_stream(agg, out_channel, ckpt)
 
@@ -476,41 +516,30 @@ def product_stats_app(
     spark: SparkSession,
     reg: ChannelRegistry,
     ckpt: str,
-    dim_df: DataFrame,
-    dim_cond,
+    dims,
     source: str = "dwd_order_detail",
     out_channel: str = "dws_product_stats",
-    window: str = "1 hour",
-    watermark: str = "1 hour",
 ):
     """A2 as a job — ProductStats (RT/bean/ProductStats.java:21-87):
-    tail the order-detail channel, enrich with the (broadcast) product
-    dim, aggregate per tumbling window x brand. The reference's
-    ``Set<order_id>`` accumulator maps to approx_count_distinct —
-    constant state per group (HLL sketch), the only formulation whose
-    streaming state survives unbounded keys; its exact batch twin is
-    the value-checked ``product_stats`` catalog query.
+    tail the order-detail channel, enrich it with the broadcast product
+    dim (``dims``, :func:`~..operators.joins.dim_enrich`'s list, which
+    must supply ``p_brand``), aggregate per tumbling window x brand. The
+    reference's ``Set<order_id>`` accumulator maps to
+    approx_count_distinct — constant state per group (HLL sketch), the
+    only formulation whose streaming state survives unbounded keys; its
+    exact batch twin is the value-checked ``product_stats`` catalog
+    query.
     """
-    from ..functions.exact import exact_sum
-
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    enriched = src.join(F.broadcast(dim_df), dim_cond, "left")
-    agg = (
-        enriched.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "p_brand")
-        .agg(
-            F.approx_count_distinct("order_id").alias("order_ct_approx"),
-            # decimal-accumulated: incremental (per-micro-batch) addition
-            # order then matches any one-shot batch twin bit-for-bit
-            exact_sum(F.col("quantity")).alias("sku_num"),
-            exact_sum(F.col("amount")).alias("order_amount"),
-            F.count("*").alias("line_ct"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("stt"),
-            F.date_format(F.col("w.end"), "yyyy-MM-dd HH:mm:ss").alias("edt"),
-            "p_brand", "order_ct_approx", "sku_num", "order_amount", "line_ct",
-        )
+    agg = window_agg(
+        dim_enrich(src, dims),
+        ["p_brand"],
+        F.approx_count_distinct("order_id").alias("order_ct_approx"),
+        # decimal-accumulated: incremental (per-micro-batch) addition
+        # order then matches any one-shot batch twin bit-for-bit
+        exact_sum(F.col("quantity")).alias("sku_num"),
+        exact_sum(F.col("amount")).alias("order_amount"),
+        F.count("*").alias("line_ct"),
     )
     return reg.write_stream(agg, out_channel, ckpt)
 
@@ -521,42 +550,32 @@ def session_window_app(
     ckpt: str,
     source: str = "dwd_page_log",
     out_channel: str = "dws_session_stats",
-    gap_minutes: int = 10,
-    watermark: str = "1 hour",
 ):
     """Native session-window aggregation — the streaming form of the
     batch ``session_stats`` query (and the windowed generalization of
     the U2 bounce sessionizer): Spark merges events within
-    ``gap_minutes`` of each other into one growing session window per
-    user; the watermark closes a session once no mergeable event can
-    arrive, and append mode emits it exactly once. State per key is one
-    open window — the same bound as the reference's keyed session
+    ``SESSION_GAP_MIN`` of each other into one growing session window
+    per user; the watermark closes a session once no mergeable event
+    can arrive, and append mode emits it exactly once. State per key is
+    one open window — the same bound as the reference's keyed session
     state.
 
-    Boundary semantics: an event arriving exactly ``gap_minutes`` after
-    the previous one starts a NEW session (Spark merges only strictly
+    Boundary semantics: an event arriving exactly the gap after the
+    previous one starts a NEW session (Spark merges only strictly
     overlapping session windows), while the batch ``sessionize`` twin
     keeps it in the same session (gap > threshold splits) — the two
     agree everywhere except that zero-measure boundary."""
     src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    return reg.write_stream(
-        session_window_agg(src, gap_minutes=gap_minutes, watermark=watermark),
-        out_channel,
-        ckpt,
-    )
+    return reg.write_stream(session_window_agg(src), out_channel, ckpt)
 
 
-def session_window_agg(
-    src: DataFrame, gap_minutes: int = 10, watermark: str = "1 hour"
-) -> DataFrame:
+def session_window_agg(src: DataFrame) -> DataFrame:
     """The session-window transformation of :func:`session_window_app`,
     factored out so replay queries can run the identical stream plan."""
-    from ..functions.exact import exact_sum
-
     return (
-        src.withWatermark("ts", watermark)
+        src.withWatermark("ts", WATERMARK)
         .groupBy(
-            F.session_window("ts", f"{gap_minutes} minutes").alias("w"),
+            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("w"),
             "user_id",
         )
         .agg(
@@ -573,6 +592,66 @@ def session_window_agg(
             "value_sum",
         )
     )
+
+
+def _digest_dedup(df: DataFrame) -> DataFrame:
+    """First arrival per ``text`` digest (``text_hash``), kept by
+    Spark's native ``dropDuplicates`` state, which :data:`WATERMARK`
+    bounds."""
+    return (
+        df.withColumn("text_hash", F.md5(F.col("text")))
+        .withWatermark("ts", WATERMARK)
+        .dropDuplicates(["text_hash"])
+    )
+
+
+def doc_dedup_app(
+    spark: SparkSession,
+    reg: ChannelRegistry,
+    ckpt: str,
+    source: str = "ods_documents",
+    out_channel: str = "dwd_documents_unique",
+):
+    """Ingest-time exact dedup of a document stream — the streaming
+    twin of the batch `dedup_exact` keeper selection, built on Spark's
+    NATIVE dedup state: `dropDuplicates` on the content digest with a
+    watermark bounding state retention (duplicates arriving later than
+    the watermark horizon are out of contract, exactly like the
+    reference's TTL'd dedup state). First arrival wins — in a
+    time-ordered replay that is the min-ts record per digest.
+    """
+    src = reg.read_stream(spark, source, max_files_per_trigger=1)
+    return reg.write_stream(_digest_dedup(src), out_channel, ckpt)
+
+
+def doc_quality_gate_app(
+    spark: SparkSession,
+    reg: ChannelRegistry,
+    ckpt: str,
+    source: str = "ods_documents",
+    out_channel: str = "dwd_documents_quality",
+):
+    """Ingest-time corpus gating — the streaming face of the batch
+    ``corpus_build`` gates: language (stopword ratio >= ``STOP_MIN``)
+    and quality (>= ``QUALITY_MIN``) thresholds applied as MAP-ONLY
+    expressions on the stream, then exact content dedup on the digest
+    via Spark's native ``dropDuplicates`` with watermark-bounded state.
+    Near-dup elimination stays in ``doc_incremental_dedup_app`` (the
+    LSH path); this app is the cheap front gate a pipeline runs BEFORE
+    signatures are ever computed, so the expensive stages only ever see
+    documents that could survive. First arrival wins per digest, as in
+    ``doc_dedup_app``.
+    """
+    src = reg.read_stream(spark, source, max_files_per_trigger=1)
+    staged = textops.with_tokens(src)
+    toks = F.col("toks")
+    gated = (
+        staged.withColumn("stop_ratio_v", textops.stop_ratio(toks))
+        .withColumn("quality", textops.quality_score(toks, F.col("text")))
+        .filter((F.col("stop_ratio_v") >= STOP_MIN) & (F.col("quality") >= QUALITY_MIN))
+        .drop("toks", "stop_ratio_v")
+    )
+    return reg.write_stream(_digest_dedup(gated).drop("text_hash"), out_channel, ckpt)
 
 
 _BASE_MANIFEST = "_superseded.json"
@@ -817,9 +896,6 @@ def _fit_centroids(rows: DataFrame, k: int, fit_limit: int, path: str) -> list:
     """Fit the k-means quantizer on ``rows`` (vec_id, embedding) —
     deterministic seeds and sample, so a refit is bit-equal — and store
     the centroids at ``path`` with overwrite."""
-    from ..operators.similarity import kmeans_fit
-    from ..plans.similarity import KM_ITERS
-
     cents = kmeans_fit(rows, "embedding", "vec_id", k=k, iters=KM_ITERS, fit_limit=fit_limit)
     rows.sparkSession.createDataFrame(
         [(c, cv) for c, cv in cents], "c int, cv array<double>"
@@ -853,8 +929,6 @@ def doc_incremental_dedup_app(
     (the module's crash rule); ``kept`` is the lineage cut — its plan
     scans the store paths through the cross-corpus join.
     """
-    from ..operators import dedup as D
-
     bands_path = os.path.join(store_root, "sig_bands")
     sh_path = os.path.join(store_root, "sig_shingles")
 
@@ -926,8 +1000,6 @@ def substring_dedup_app(
     (doc_id, n_tokens, n_removed, n_spans, cut_hash) via the shared
     ``substring_cut_rows`` expression tree.
     """
-    from ..operators import dedup as D
-
     L = run_len or D.SUBSTR_RUN
     idx_path = os.path.join(store_root, "win_index")
 
@@ -1033,8 +1105,6 @@ def similarity_graph_app(
     certifies the incremental discovery reconstructed the batch
     prefix-filter graph bit-for-bit.
     """
-    from ..operators import dedup as D
-
     pref_path = os.path.join(store_root, "pref")
     sh_path = os.path.join(store_root, "sh")
     pairs_path = os.path.join(store_root, "pairs")
@@ -1154,23 +1224,10 @@ def emb_incremental_dedup_app(
     MinHash app. Cost per batch is batch x cluster-overlap; the stored
     corpus is touched only through its cluster-keyed rows, never
     rescanned."""
-    from ..operators import similarity as S
-
     vec_path = os.path.join(store_root, "vec_store")
     cent_path = os.path.join(store_root, "centroids")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
-        # runtime import: plans.similarity owns the SemDeDup constants
-        # and already imports streaming modules transitively
-        from ..operators import dedup as D
-        from ..plans.similarity import (
-            FIT_PER_CLUSTER,
-            KM_FIT_N,
-            SEMDEDUP_MAX_CLUSTER,
-            SEMDEDUP_T,
-            _semdedup_k,
-        )
-
         sess = batch.sparkSession
         batch = ep.persist(batch)
         if hfs.exists(sess, cent_path):
@@ -1259,14 +1316,6 @@ def decon_screen_app(
     (benchmark-sized by contract) assigned eval frame — cost is
     sum_c(batch_ct x eval_ct) per epoch, eval-bounded, the store
     never rescanned."""
-    from ..operators import similarity as S
-    from ..plans.similarity import (
-        DECON_COS_T,
-        FIT_PER_CLUSTER,
-        KM_FIT_N,
-        _semdedup_k,
-    )
-
     cent_path = os.path.join(store_root, "centroids")
     eval_path = os.path.join(store_root, "eval_side")
     eval_asg_path = os.path.join(store_root, "eval_assigned")
@@ -1373,9 +1422,6 @@ def triplet_mine_app(
     cells (probe-bounded, the hard_negative_mining class); the store
     accumulates candidates and is never rescanned by the app itself.
     """
-    from ..operators import similarity as S
-    from ..plans.similarity import KM_FIT_N, KM_K, N_PROBES
-
     cent_path = os.path.join(store_root, "centroids")
     probe_path = os.path.join(store_root, "probes")
     fit_target = min(expected_corpus, KM_FIT_N)
@@ -1444,8 +1490,6 @@ def ptron_gate_app(
     model card, regardless of corpus size — the sample-bounded fit is
     what makes the gate runnable continuously.
     """
-    from ..operators import classifier as PC
-
     model_path = os.path.join(store_root, "model")
     fit_target = min(expected_docs, PC.PTRON_FIT_N)
     stat_keys = ("ns", "s1", "s2", "s3", "thr")
@@ -1499,73 +1543,6 @@ def merged_ptron_gate(spark: SparkSession, store_root: str) -> DataFrame:
     )
 
 
-def doc_dedup_app(
-    spark: SparkSession,
-    reg: ChannelRegistry,
-    ckpt: str,
-    source: str = "ods_documents",
-    out_channel: str = "dwd_documents_unique",
-    watermark: str = "1 hour",
-    text_col: str = "text",
-):
-    """Ingest-time exact dedup of a document stream — the streaming
-    twin of the batch `dedup_exact` keeper selection, built on Spark's
-    NATIVE dedup state: `dropDuplicates` on the content digest with a
-    watermark bounding state retention (duplicates arriving later than
-    the watermark horizon are out of contract, exactly like the
-    reference's TTL'd dedup state). First arrival wins — in a
-    time-ordered replay that is the min-ts record per digest.
-    """
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    deduped = (
-        src.withColumn("text_hash", F.md5(F.col(text_col)))
-        .withWatermark("ts", watermark)
-        .dropDuplicates(["text_hash"])
-    )
-    return reg.write_stream(deduped, out_channel, ckpt)
-
-
-def doc_quality_gate_app(
-    spark: SparkSession,
-    reg: ChannelRegistry,
-    ckpt: str,
-    source: str = "ods_documents",
-    out_channel: str = "dwd_documents_quality",
-    stop_min: float = 0.05,
-    quality_min: float = 0.5,
-    watermark: str = "1 hour",
-):
-    """Ingest-time corpus gating — the streaming face of the batch
-    ``corpus_build`` gates: language (stopword-ratio heuristic) and
-    quality thresholds applied as MAP-ONLY expressions on the stream,
-    then exact content dedup on the digest via Spark's native
-    ``dropDuplicates`` with watermark-bounded state. Near-dup
-    elimination stays in ``doc_incremental_dedup_app`` (the LSH path);
-    this app is the cheap front gate a pipeline runs BEFORE signatures
-    are ever computed, so the expensive stages only ever see documents
-    that could survive. First arrival wins per digest, as in
-    ``doc_dedup_app``.
-    """
-    from ..operators import textops
-
-    src = reg.read_stream(spark, source, max_files_per_trigger=1)
-    staged = textops.with_tokens(src)
-    toks = F.col("toks")
-    gated = (
-        staged.withColumn("stop_ratio_v", textops.stop_ratio(toks))
-        .withColumn("quality", textops.quality_score(toks, F.col("text")))
-        .filter((F.col("stop_ratio_v") >= stop_min) & (F.col("quality") >= quality_min))
-        .drop("toks", "stop_ratio_v")
-    )
-    deduped = (
-        gated.withColumn("text_hash", F.md5(F.col("text")))
-        .withWatermark("ts", watermark)
-        .dropDuplicates(["text_hash"])
-        .drop("text_hash")
-    )
-    return reg.write_stream(deduped, out_channel, ckpt)
-
-
 def cms_sketch_app(
     spark: SparkSession,
     reg: ChannelRegistry,
@@ -1584,9 +1561,6 @@ def cms_sketch_app(
     the sketch IS the state, bounded at depth*width rows no matter how
     many distinct tokens ever flow.
     """
-    from ..operators.aggregates import cms_counters
-    from ..operators.textops import tokenize
-
     grid_path = os.path.join(store_root, "cms_grid")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
@@ -1619,8 +1593,6 @@ def bloom_filter_app(
     re-provisioning a saturated filter is a batch rebuild, the
     standard Bloom operational contract.
     """
-    from ..operators import dedup as D
-
     path = os.path.join(store_root, "bloom_words")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
@@ -1653,8 +1625,6 @@ def hll_sketch_app(
     epoch could not corrupt the sketch. No per-key state: the
     registers ARE the state, groups*m rows however many distinct keys
     ever flow."""
-    from ..operators.aggregates import hll_registers
-
     grid_path = os.path.join(store_root, "hll_regs")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
@@ -1688,8 +1658,6 @@ def lm_counts_app(
     into the model — how a DSIR deployment maintains its TARGET-domain
     model from the same stream that feeds the raw model: two app
     instances, one predicate apart (`dsir_gate_stream`)."""
-    from ..operators import lm, textops
-
     grams_path = os.path.join(store_root, "lm_grams")
     toks_path = os.path.join(store_root, "lm_toks")
 
@@ -1712,8 +1680,6 @@ def merged_lm_model(spark: SparkSession, store_root: str) -> DataFrame:
     c1 derived from the MERGED grid, v = distinct over the epoch token
     sets, s the scaled integer surprisal. All-integer, so additivity
     is exact and the streamed model equals the batch fit bit-for-bit."""
-    from ..operators import lm
-
     c2 = merged_store(spark, store_root, "lm_grams").withColumnRenamed("ct", "c2")
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     v = (
@@ -1750,8 +1716,6 @@ def dsir_grid_app(
     instances one admission predicate apart maintain the raw and the
     TARGET-domain grids from the same stream (`dsir_hashed_stream`),
     exactly the dsir_gate_stream deployment shape."""
-    from ..operators import lm, textops
-
     grid_path = os.path.join(store_root, "dsir_grid")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
@@ -1786,11 +1750,6 @@ def events_rollup_app(
     batch rollup — decimal addition is exact and associative, the
     same argument that makes exact_sum order-insensitive. Per-epoch
     store cost is grid-sized, never row-sized."""
-    # the SAME per-row decimal quantum exact_sum uses — a drifting
-    # literal here would silently break the bit-identical-merge
-    # contract the gapfill stream twin certifies (self-review r13)
-    from ..functions.exact import _DEC as _EXACT_DEC
-
     grid_path = os.path.join(store_root, "roll_grid")
 
     def epoch(batch: DataFrame, ep: EpochScope) -> None:
@@ -1798,6 +1757,9 @@ def events_rollup_app(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         ).agg(
             F.count("*").alias("ct"),
+            # the SAME per-row decimal quantum exact_sum uses: a drifting
+            # literal here would silently break the bit-identical merge
+            # that the gapfill stream twin certifies
             F.sum(F.col("value").cast(_EXACT_DEC)).alias("vsum"),
         )
         ep.write((grid, grid_path))
@@ -1840,8 +1802,6 @@ def hist_sketch_app(
     (the r10 review finding; quantile readers exclude the sentinel).
     No per-key state: the grid IS the state, groups*bins(+1) rows
     forever."""
-    from ..operators.aggregates import hist_counters
-
     grid_path = os.path.join(store_root, "hist_grid")
     bounds = local_table(spark, bounds_rows, "event_type string, vmin double, vmax double")
 

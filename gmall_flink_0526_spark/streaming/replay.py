@@ -50,7 +50,7 @@ import shutil
 import tempfile
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..session import shuffle_partitions
 from ..sources.registry import ChannelRegistry, write_replay
@@ -102,6 +102,27 @@ def replay_registry(prefix: str, **channels) -> ChannelRegistry:
         _remove_root(reg.root)
         raise
     return reg
+
+
+def with_sentinel(df: DataFrame, after: str, **fills) -> DataFrame:
+    """``df`` plus one flush row: ``ts`` is ``max(ts) + INTERVAL after``
+    and every other column takes its value from ``fills``, cast to the
+    column's type.
+
+    Windowed aggregates and stream-stream joins emit a row only once
+    the watermark passes it, and the watermark advances only with data.
+    A replay therefore ends on this far-future row, whose ``fills``
+    (keys that join or group with nothing real) keep it out of the real
+    output while its arrival flushes every real row."""
+    far = df.agg(
+        *[
+            (F.max("ts") + F.expr(f"INTERVAL {after}")).alias("ts")
+            if f.name == "ts"
+            else F.lit(fills[f.name]).cast(f.dataType).alias(f.name)
+            for f in df.schema.fields
+        ]
+    )
+    return df.unionByName(far)
 
 
 def run_to_end(

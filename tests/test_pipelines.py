@@ -24,6 +24,7 @@ from gmall_flink_0526_spark.sources.cdc import envelope_from_table
 from gmall_flink_0526_spark.sources.dimstore import DimStore
 from gmall_flink_0526_spark.sources.registry import ChannelRegistry, write_replay
 from gmall_flink_0526_spark.streaming import pipelines
+from gmall_flink_0526_spark.streaming.replay import with_sentinel
 
 from .conftest import SF_SMOKE, same_bucket_keys
 
@@ -285,14 +286,6 @@ def test_base_db_app_null_sink_columns(spark, reg, tmp_path):
     assert dim.filter(F.col("o_totalprice").isNull()).count() == 0
 
 
-def _with_sentinel(df, ts_shift_cols):
-    """Append one far-future row (non-joining keys) to flush watermarks."""
-    far = df.agg((F.max("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"))
-    for name, val in ts_shift_cols.items():
-        far = far.withColumn(name, F.lit(val))
-    return df.unionByName(far.select(*df.columns))
-
-
 def test_order_wide_app_converges_to_batch(spark, reg, tmp_path):
     ev = events(spark).limit(300)
     orders = ev.select(F.col("event_id").alias("order_id"), "ts")
@@ -307,11 +300,11 @@ def test_order_wide_app_converges_to_batch(spark, reg, tmp_path):
     reg.register("dwd_order_info", schema="order_id long, ts timestamp")
     reg.register("dwd_order_detail", schema="detail_order_id long, ts timestamp, value double")
     write_replay(
-        _with_sentinel(orders, {"order_id": -1}),
+        with_sentinel(orders, "1 hour", order_id=-1),
         reg.channels["dwd_order_info"].path, n_files=3, order_by=["ts", "order_id"],
     )
     write_replay(
-        _with_sentinel(details, {"detail_order_id": -2, "value": 0.0}),
+        with_sentinel(details, "1 hour", detail_order_id=-2, value=0.0),
         reg.channels["dwd_order_detail"].path, n_files=3, order_by=["ts", "detail_order_id"],
     )
     reg.register("dwm_order_wide", kind="memory")
@@ -362,11 +355,11 @@ def test_payment_wide_app_converges_to_batch(spark, reg, tmp_path):
     reg.register("dwd_payment_info", schema="payment_order_id long, ts timestamp")
     reg.register("dwm_order_wide", schema="order_id long, ts timestamp, value double")
     write_replay(
-        _with_sentinel(payment, {"payment_order_id": -1}),
+        with_sentinel(payment, "1 hour", payment_order_id=-1),
         reg.channels["dwd_payment_info"].path, n_files=3, order_by=["ts", "payment_order_id"],
     )
     write_replay(
-        _with_sentinel(wide, {"order_id": -2, "value": 0.0}),
+        with_sentinel(wide, "1 hour", order_id=-2, value=0.0),
         reg.channels["dwm_order_wide"].path, n_files=3, order_by=["ts", "order_id"],
     )
     reg.register("dwm_payment_wide", kind="memory")
@@ -394,23 +387,85 @@ def test_payment_wide_app_converges_to_batch(spark, reg, tmp_path):
     assert len(got) > 0
 
 
+def test_order_wide_feeds_payment_wide(spark, reg, tmp_path):
+    """The DWM chain on real output: order_wide_app writes the
+    dwm_order_wide file channel and payment_wide_app tails it, read
+    with the schema the first app actually wrote. The result must
+    equal the batch composition of the two interval joins. Every event
+    time lies within the 10 s join watermark of every other, so no row
+    is late, whatever order the wide channel's files replay in."""
+    base = F.lit(datetime.datetime(2024, 1, 1))
+    ids = spark.range(120).select(F.col("id").alias("k"))
+    at = lambda secs: base + F.make_interval(secs=secs)  # noqa: E731
+    o_secs = F.col("k") % 4
+    orders = ids.select(F.col("k").alias("order_id"), at(o_secs).alias("ts"))
+    # even ids: detail +2s (inside ±5s); odd ids: +7s, no wide row
+    details = ids.select(
+        F.col("k").alias("detail_order_id"),
+        at(o_secs + F.when(F.col("k") % 2 == 0, 2).otherwise(7)).alias("ts"),
+        (F.col("k") * 1.5).alias("value"),
+    )
+    # k % 3 == 0: paid 3s after the order (inside [-15min, +5s] of the
+    # payment); k % 3 == 1: paid 6s BEFORE it (outside); else unpaid
+    payments = ids.filter(F.col("k") % 3 < 2).select(
+        F.col("k").alias("payment_order_id"),
+        at(o_secs + F.when(F.col("k") % 3 == 0, 3).otherwise(-6)).alias("ts"),
+    )
+    for name, df, key in [
+        ("dwd_order_info", orders, "order_id"),
+        ("dwd_order_detail", details, "detail_order_id"),
+        ("dwd_payment_info", payments, "payment_order_id"),
+    ]:
+        reg.register(name, schema=df.schema)
+        write_replay(df, reg.channels[name].path, n_files=3, order_by=["ts", key])
+
+    q = pipelines.order_wide_app(spark, reg, str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+    reg.register("dwm_order_wide", schema=reg.read_batch(spark, "dwm_order_wide").schema)
+    reg.register("dwm_payment_wide", kind="memory")
+    q = pipelines.payment_wide_app(spark, reg, str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+
+    wide = interval_join(
+        orders,
+        details.withColumnRenamed("ts", "d_ts"),
+        on=F.col("order_id") == F.col("detail_order_id"),
+        left_ts=F.col("ts"),
+        right_ts=F.col("d_ts"),
+        lower="5 SECONDS",
+        upper="5 SECONDS",
+    )
+    expected = interval_join(
+        payments,
+        wide.withColumnRenamed("ts", "w_ts"),
+        on=F.col("payment_order_id") == F.col("order_id"),
+        left_ts=F.col("ts"),
+        right_ts=F.col("w_ts"),
+        lower="15 MINUTES",
+        upper="5 SECONDS",
+    )
+    got = reg.read_batch(spark, "dwm_payment_wide")
+    assert sorted(got.columns) == sorted(expected.columns)
+    cols = sorted(expected.columns)
+    rows = lambda df: sorted(tuple(r) for r in df.select(*cols).collect())  # noqa: E731
+    assert rows(got) == rows(expected)
+    assert {r["payment_order_id"] % 6 for r in got.collect()} == {0}
+    assert got.count() == 20
+
+
 def test_visitor_stats_app_converges_to_batch(spark, reg, tmp_path):
     ev = events(spark)
     reg.register(
         "dwd_page_log",
         schema="event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
-    flush = ev.agg(
-        (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("view").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit("{}").alias("props"),
-    ).select(*ev.columns)
+    flushed = with_sentinel(
+        ev, "3 hours", event_id=-1, user_id=-1, event_type="view", value=0.0, props="{}"
+    )
     write_replay(
-        ev.unionByName(flush),
-        reg.channels["dwd_page_log"].path, n_files=3, order_by=["ts", "event_id"],
+        flushed, reg.channels["dwd_page_log"].path, n_files=3, order_by=["ts", "event_id"]
     )
     reg.register("dws_visitor_stats", kind="memory")
     q = pipelines.visitor_stats_app(spark, reg, str(tmp_path / "ckpt"))
@@ -459,21 +514,15 @@ def test_ods_to_dws_chain(spark, reg, tmp_path):
     far-future 'view' sentinel flows through the DWD split into the page
     channel and flushes the DWS windows."""
     ev = events(spark)
-    flush = ev.agg(
-        (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("view").alias("event_type"),
-        F.lit(0.0).alias("value"),
-        F.lit('{"k": 0}').alias("props"),
-    ).select(*ev.columns)
+    flushed = with_sentinel(
+        ev, "3 hours", event_id=-1, user_id=-1, event_type="view", value=0.0, props='{"k": 0}'
+    )
     reg.register(
         "ods_base_log",
         schema="event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
     write_replay(
-        ev.unionByName(flush), reg.channels["ods_base_log"].path, n_files=3,
-        order_by=["ts", "event_id"],
+        flushed, reg.channels["ods_base_log"].path, n_files=3, order_by=["ts", "event_id"],
     )
     q1 = pipelines.base_log_app(
         spark,
@@ -651,14 +700,7 @@ def test_product_stats_app_converges_to_batch(spark, reg, tmp_path):
     )
     # +3h: the last facts are midnight-aligned, so flushing their
     # [00:00, 01:00) window needs watermark > 02:00 (window end + 1h)
-    far = fact.agg(
-        (F.max("ts") + F.expr("INTERVAL 3 HOURS")).alias("ts"),
-        F.lit(-1).cast("long").alias("order_id"),
-        F.lit(-1).cast("long").alias("part_id"),
-        F.lit(0.0).alias("quantity"),
-        F.lit(0.0).alias("amount"),
-    )
-    fact = fact.unionByName(far.select(*fact.columns))
+    fact = with_sentinel(fact, "3 hours", order_id=-1, part_id=-1, quantity=0.0, amount=0.0)
     reg.register(
         "dwd_order_detail",
         schema="ts timestamp, order_id long, part_id long, quantity double, amount double",
@@ -667,7 +709,10 @@ def test_product_stats_app_converges_to_batch(spark, reg, tmp_path):
     reg.register("dws_product_stats", kind="memory")
     dim = t["part"].select(F.col("p_partkey"), F.col("p_brand"))
     q = pipelines.product_stats_app(
-        spark, reg, str(tmp_path / "ckpt"), dim, F.col("part_id") == F.col("p_partkey")
+        spark,
+        reg,
+        str(tmp_path / "ckpt"),
+        dims=[(dim, F.col("part_id") == F.col("p_partkey"), ["p_partkey", "p_brand"])],
     )
     q.processAllAvailable()
     q.stop()
@@ -745,13 +790,7 @@ def test_session_window_app_converges_to_batch(spark, reg, tmp_path):
     )
     # far-future sentinel pushes the watermark past every real
     # session's close (end + gap + watermark delay)
-    far = events.agg(
-        F.lit(-1).cast("long").alias("user_id"),
-        (F.max("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
-        F.lit(-1).cast("long").alias("event_id"),
-        F.lit(0.0).alias("value"),
-    )
-    stream_in = events.unionByName(far.select(*events.columns))
+    stream_in = with_sentinel(events, "2 days", user_id=-1, event_id=-1, value=0.0)
     reg.register(
         "dwd_page_log", schema="user_id long, ts timestamp, event_id long, value double"
     )
@@ -759,7 +798,7 @@ def test_session_window_app_converges_to_batch(spark, reg, tmp_path):
         stream_in, reg.channels["dwd_page_log"].path, n_files=3, order_by=["ts", "event_id"]
     )
     reg.register("dws_session_stats", kind="memory")
-    q = pipelines.session_window_app(spark, reg, str(tmp_path / "ckpt"), gap_minutes=10)
+    q = pipelines.session_window_app(spark, reg, str(tmp_path / "ckpt"))
     q.processAllAvailable()
     q.stop()
 

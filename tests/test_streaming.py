@@ -521,6 +521,37 @@ def test_epoch_store_contract_only_in_the_family_helpers():
     assert not offending, "hand-rolled epoch-store contract, use EpochScope:\n" + "\n".join(offending)
 
 
+def test_channel_stream_plans_only_in_the_family_helpers():
+    """The channel apps and their replay twins spell the interval join,
+    the event-time window and the digest dedup only in the family
+    helpers (_interval_join, window_agg, _digest_dedup), and build
+    their flush rows only through streaming.replay.with_sentinel."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "gmall_flink_0526_spark"
+    helpers = {"_interval_join", "window_agg", "_digest_dedup"}
+    plan = re.compile(
+        r"\binterval_join\(|F\.window\(|dropDuplicates\(|max\(\"ts\"\)\s*\+\s*F\.expr\(f?\"INTERVAL"
+    )
+    offending = []
+    for path in (pkg / "streaming" / "pipelines.py", pkg / "plans" / "replay.py"):
+        src = path.read_text()
+        owner = {}
+        for node in ast.parse(src).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                owner.update(dict.fromkeys(range(node.lineno, node.end_lineno + 1), node.name))
+        offending += [
+            f"{path.name}:{i} ({owner.get(i, '<module>')}): {line.strip()}"
+            for i, line in enumerate(src.splitlines(), 1)
+            if plan.search(line) and owner.get(i) not in helpers
+        ]
+    assert not offending, "hand-rolled channel stream plan, use the family helpers:\n" + "\n".join(
+        offending
+    )
+
+
 def test_write_replay_publishes_every_chunk_in_order(spark, tmp_path):
     """One file per chunk index, empty chunks included, mtime order =
     chunk order = sort order: with fewer distinct order keys than

@@ -14,10 +14,12 @@ wall seconds plus the median, then each rep's Spark job count. With
 returned DataFrame is written to ``<dir>/<query>.txt`` (captured from
 the FIRST rep, before its noop write). Jobs are labelled (guide §1.5).
 
-A rep's job count is every job of its job group, every job of the
-streaming runs started during the rep (a micro-batch's jobs carry its
-query's run id as group), and every new ungrouped job (writer-pool
-threads carry no group).
+A rep's job count is the DAG scheduler's job total after the rep minus
+the total before it. That counts every job the rep started on any
+thread: the query's own, its streaming micro-batches' and foreachBatch
+bodies' (run on each stream's own thread) and its writer-pool
+threads'. Nothing else runs jobs in the profiler's session meanwhile,
+since it runs its queries one at a time.
 """
 
 from __future__ import annotations
@@ -31,45 +33,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 class _JobCounter:
-    """Counts the Spark jobs of one rep from ``statusTracker`` job groups."""
+    """Counts the Spark jobs of one rep from the DAG scheduler's job
+    total (``DAGScheduler.numTotalJobs``, the next job id)."""
 
     def __init__(self, spark):
-        from pyspark.sql.streaming import StreamingQueryListener
-
         self.sc = spark.sparkContext
-        self.tracker = self.sc.statusTracker()
-        self.run_ids: list[str] = []
-        runs = self.run_ids
+        self.dag = self.sc._jsc.sc().dagScheduler()
 
-        class _Started(StreamingQueryListener):
-            # query-started events reach listeners before start() returns
-            def onQueryStarted(self, event):
-                runs.append(str(event.runId))
-
-            def onQueryProgress(self, event):
-                pass
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        spark.streams.addListener(_Started())
-
-    def start(self, group: str, label: str) -> None:
-        self.group = group
-        self.ungrouped = set(self.tracker.getJobIdsForGroup(None))
-        self.first_run = len(self.run_ids)
-        self.sc.setJobGroup(group, label)
+    def start(self, label: str) -> None:
+        self.before = self.dag.numTotalJobs()
+        self.sc.setJobDescription(label)
 
     def stop(self) -> int:
-        self.sc.setJobGroup(None, None)
-        ids = set(self.tracker.getJobIdsForGroup(self.group))
-        ids |= set(self.tracker.getJobIdsForGroup(None)) - self.ungrouped
-        for run in self.run_ids[self.first_run :]:
-            ids |= set(self.tracker.getJobIdsForGroup(run))
-        return len(ids)
+        self.sc.setJobDescription(None)
+        return self.dag.numTotalJobs() - self.before
 
 
 def main() -> None:
@@ -124,7 +101,7 @@ def main() -> None:
     for name in args.queries:
         reps, jobs = [], []
         for i in range(args.reps):
-            counter.start(f"profile-{name}-{i}", f"profile:{name}#{i}")
+            counter.start(f"profile:{name}#{i}")
             t0 = time.perf_counter()
             df = qs[name](spark, args.sf)
             if i == 0 and args.explain_dir:
