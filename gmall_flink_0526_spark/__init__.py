@@ -21,6 +21,12 @@ Layout:
     functions/     scalar/expr helpers (portable hashing, tokenizer, time)
     plans/         the query catalog consumed by __spark_entry__.py
     streaming/     streaming pipelines + stateful operators
+
+Importing the package first installs :mod:`._zipimport_cache`, which
+spares every later Python task on a Spark worker the re-read of each
+zip archive on its path.
 """
+
+from . import _zipimport_cache  # noqa: F401  (installs on import)
 
 __version__ = "0.1.0"

@@ -120,36 +120,6 @@ _LOADED = False
 # (`tools/vanilla_gate.py`, result recorded in BASELINE.md) — so no
 # query ever stands on an unchecked stale row, even past the window.
 
-# This round's NEW or semantically CHANGED queries — the set the
-# mid-round pytest sweep must ALWAYS run at sf0.001 (r14 VERDICT #4:
-# the full-catalog sweep moved the battery near 30 min; mid-round runs
-# now take this set plus a fixed and a rotating third of the rest
-# (tests/test_catalog.py), and the closing
-# battery restores the full sweep via SPARK_GRAFT_FULL_SWEEP=1).
-# Maintained each round alongside the _PRIORITY window lead.
-R_NEW_CHANGED = (
-    # -- r16 new --
-    "dsir_hashed_stream",
-    "dsir_hashed_select_audit",
-    "ann_recall_matryoshka_rerank",
-    "hard_negative_mining_nprobe",
-    "hard_negative_rungs",
-    "contrastive_triplets",
-    "contrastive_triplets_stream",
-    "quality_perceptron_train",
-    "quality_perceptron_filter",
-    "quality_perceptron_agreement",
-    "quality_perceptron_stream",
-    # -- r16 changed --
-    "dsir_hashed",              # grid-scorer refactor (shared with stream)
-    "dsir_hashed_agreement",    # global_row_number ranks (r15 VERDICT #1)
-    "doc_pagerank_stream",      # write_text_atomic delete-dest (r15 ADVICE)
-    "decontaminate_semantic_stream",  # same marker-write path
-    "simhash_fingerprint",      # fingerprint chain spread (r15 VERDICT #2)
-    "simhash_near_dup",         # same — the adjudicated bench drift
-    "dedup_method_agreement",   # rides the spread fingerprint
-)
-
 _PRIORITY = (
     # -- r16 rotation. NEW first: the hashed-DSIR streaming twin
     #    (fixed-width grids kept live by dsir_grid_app, batch oracle
@@ -234,7 +204,7 @@ _PRIORITY = (
     # -- r16 overflow: the r15 window's entries, displaced this round
     #    (all driver-green r15); they lead the r17 window per
     #    contract. Everything below the cut is covered this round by
-    #    the full-sweep pytest gate (SPARK_GRAFT_FULL_SWEEP=1) and the
+    #    the full-catalog pytest sweep (tests/test_catalog.py) and the
     #    in-repo full-catalog vanilla gate at sf0.01. ---------------------
     "lsh_bucket_audit",
     "decontaminate_fuzzy",

@@ -222,10 +222,11 @@ def replay_stateful(
     ``order_by`` (event time first), so keyed state observes rows in
     the same order the batch twin assumes. The query runs at
     :func:`~.stateful.state_partitions`, one wave of state tasks: each
-    state partition is a Python task with a fixed worker set-up cost,
-    while an epoch makes at most ``STATE_BUCKETS`` group calls in all.
-    Measured on a 4-core host (``is_new_fix_stream``, 30k events,
-    median of 10 runs): 7.2 s at 16 state partitions, 3.7 s at 4.
+    state partition is a Python task with a fixed set-up cost, while
+    an epoch makes at most ``STATE_BUCKETS`` group calls in all.
+    Measured on a 4-core host (``is_new_fix_stream`` at sf0.1,
+    ``tools/profile_query.py --reps 5``, two runs): 2.48/2.21 s at 4
+    state partitions, 2.66/3.22 s at 8.
 
     ``drain_mode="all_available"`` is for windowed aggregations: they
     emit watermark-flushed rows in a batch AFTER the last data batch

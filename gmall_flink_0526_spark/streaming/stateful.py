@@ -86,14 +86,17 @@ def state_fanout(spark: SparkSession):
     caller's value on exit, also when the block raises.
 
     Every state partition is a Python task, and each pays a fixed
-    worker set-up before its first row (0.25-0.5 s measured on a
-    4-core host, mostly PySpark's per-task
-    ``importlib.invalidate_caches()`` over the zipped worker path),
-    while an epoch makes at most ``STATE_BUCKETS`` group calls in all.
-    Partitions beyond the worker slots only add waves of that fixed
-    cost. A query reads the count when it starts and keeps it in its
-    checkpoint, so restoring the session value does not touch a
-    running query."""
+    set-up before its first row, while an epoch makes at most
+    ``STATE_BUCKETS`` group calls in all. On a worker that has
+    imported the package the set-up is ~20 ms (its zipimport cache
+    spares the task PySpark's re-read of every zip archive on the
+    worker path, 0.3-0.5 s without it); a fresh worker pays the
+    re-reads once. Partitions beyond the worker slots still add a
+    wave: on a 4-core host ``is_new_fix_stream`` (sf0.1, median of 5
+    reps, two runs) took 2.48/2.21 s at 4 state partitions and
+    2.66/3.22 s at 8. A query reads the count when it starts and keeps
+    it in its checkpoint, so restoring the session value does not
+    touch a running query."""
     with shuffle_partitions(spark, state_partitions(spark)):
         yield
 

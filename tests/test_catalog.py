@@ -2,21 +2,12 @@
 DuckDB exactly at sf0.001 (fast inner loop; the driver re-checks at
 sf0.01). Mirrors the driver's CORRECTNESS gate.
 
-Sweep policy (r14 VERDICT #4 — the full sweep pushed mid-round pytest
-near 30 min): a default run covers this round's NEW/CHANGED queries
-(catalog.R_NEW_CHANGED — always), a fixed third of the rest (offset 0,
-so every run collects the same core of test ids and runs compare by
-name) and a rotating third. The rotating offset is
-SPARK_GRAFT_SWEEP_OFFSET when set (pinned, replayable — the r15 ADVICE
-fix), else the day ordinal mod 3, so the default runs still cover the
-whole catalog every three days; on offset-0 days the two thirds
-coincide. Set SPARK_GRAFT_FULL_SWEEP=1 for the full catalog — the
-closing battery and the in-repo vanilla gate still check every query
-every round."""
+Every run sweeps the whole catalog (about 9 min of the tier-1 run on a
+4-core host). An earlier policy ran a subset picked by the day ordinal
+mod 3, so the set of collected test ids changed with the calendar and
+runs on different days could not be compared by name."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -25,28 +16,12 @@ from gmall_flink_0526_spark import plans
 from .conftest import SF_SMOKE, assert_matches_oracle, duck_con
 
 
-def _names():
-    all_names = sorted(plans.queries().keys())
-    if os.environ.get("SPARK_GRAFT_FULL_SWEEP") == "1":
-        return all_names
-    from datetime import date
-
-    from gmall_flink_0526_spark.plans.catalog import R_NEW_CHANGED
-
-    off_env = os.environ.get("SPARK_GRAFT_SWEEP_OFFSET")
-    off = int(off_env) % 3 if off_env is not None else date.today().toordinal() % 3
-    rest = [n for n in all_names if n not in R_NEW_CHANGED]
-    picked = set(R_NEW_CHANGED) & set(all_names)
-    picked.update(n for i, n in enumerate(rest) if i % 3 in (0, off))
-    return sorted(picked)
-
-
 @pytest.fixture(scope="module")
 def con():
     return duck_con(SF_SMOKE)
 
 
-@pytest.mark.parametrize("name", _names())
+@pytest.mark.parametrize("name", sorted(plans.queries().keys()))
 def test_query_matches_oracle(spark, con, name):
     spec = plans.CATALOG[name]
     df = spec.fn(spark, SF_SMOKE)
